@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge
 
 /** Parallelism helper for CPU-heavy operators fed by small scans.
   *
@@ -8,43 +9,39 @@ import org.apache.spark.sql.DataFrame
   * serializes everything downstream of it — fatal when the next step
   * multiplies work per row (n-gram explode, pairwise cosine, k-hash
   * signatures). `fanOut` spreads such inputs across the cluster's cores
-  * first; on genuinely large inputs it is a no-op, so operators can call
-  * it unconditionally — at 100 TB the scan already has thousands of
+  * first; on inputs that already scan wide it is a no-op, so operators can
+  * call it unconditionally — at 100 TB the scan already has thousands of
   * splits and no extra shuffle happens.
   *
-  * The small/large decision reads the OPTIMIZER's size estimate
-  * (`optimizedPlan.stats.sizeInBytes` — file sizes for scans, row×width
-  * for local data) instead of `df.rdd.getNumPartitions`: the old probe
-  * forced a full extra physical planning + RDD instantiation of every
-  * frame it touched, and that throwaway plan was never reused by the real
-  * execution. Stats sit on the logical plan the later execution reuses,
-  * so the no-op path now costs nothing extra. Frames with UNKNOWN size
-  * (the conservative Long.Max default, e.g. localCheckpoint scans) are
-  * treated as large — exactly the inputs that already have real
-  * partitioning.
+  * The rule is the scan's own: repartition to `defaultParallelism` when
+  * the input will plan fewer than half that many partitions. For frames
+  * that reach only non-bucketed file relations, through projections,
+  * filters, generators and unions, the count is exact —
+  * `Bridge.plannedScanPartitions` packs the cached file listing with
+  * Spark's `FilePartition` logic (file sizes, `maxPartitionBytes`,
+  * `openCostInBytes`, splittability), so a multi-GB single `.jsonl.gz`
+  * counts as the one split it scans as, and eight small gzip shards count
+  * as the few partitions they pack into (on 4 slots: 4, so no round-robin
+  * exchange is paid). No RDD is instantiated: the old
+  * `df.rdd.getNumPartitions` probe forced a throwaway physical planning of
+  * every frame it touched.
   *
-  * Bytes alone can't see splittability: a multi-GB single `.jsonl.gz`
-  * file estimates "large" yet scans as ONE partition. When the byte
-  * estimate says no-op, `Bridge.unsplittableScanFiles` checks whether
-  * every leaf is an unsplittable file scan and caps the estimate at the
-  * file count — so single-split gzip corpora still fan out (the
-  * motivating case at Pipeline.scala:179) without ever instantiating an
-  * RDD. All arithmetic stays in BigInt: an unknown-size frame
-  * (sizeInBytes = Long.Max) divided by a tiny maxPartitionBytes must not
-  * overflow into a spurious repartition.
+  * Other frames (a shuffle above the scan, local data, RDDs, caches,
+  * bucketed tables) have no listing that alone decides their
+  * partitioning, so they fall back to the optimizer's size estimate
+  * divided by `maxPartitionBytes`. Frames with UNKNOWN size (the conservative
+  * Long.Max default, e.g. localCheckpoint scans) are treated as large —
+  * exactly the inputs that already have real partitioning. The arithmetic
+  * stays in BigInt: Long.Max divided by a tiny `maxPartitionBytes` must
+  * not overflow into a spurious repartition.
   */
 object Par {
   def fanOut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = BigInt(spark.sparkContext.defaultParallelism)
-    val bytesPerSplit =
-      org.apache.spark.sql.graft.Bridge.filesMaxPartitionBytes(spark).max(1L)
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val approxSplits: BigInt = size / bytesPerSplit + 1
-    val capped: BigInt =
-      if (approxSplits * 2 < target) approxSplits
-      else org.apache.spark.sql.graft.Bridge.unsplittableScanFiles(df)
-        .map(BigInt(_)).map(_.min(approxSplits)).getOrElse(approxSplits)
-    if (capped * 2 < target) df.repartition(target.toInt) else df
+    val target = BigInt(df.sparkSession.sparkContext.defaultParallelism)
+    val planned: BigInt = Bridge.plannedScanPartitions(df).map(BigInt(_)).getOrElse {
+      val bytesPerSplit = Bridge.filesMaxPartitionBytes(df.sparkSession).max(1L)
+      df.queryExecution.optimizedPlan.stats.sizeInBytes / bytesPerSplit + 1
+    }
+    if (planned * 2 < target) df.repartition(target.toInt) else df
   }
 }

@@ -40,8 +40,10 @@ object FeatureHash {
       else split(col(textCol), " ")
     val emb = Bridge.column(HashedEmbedding(Bridge.expression(toks), dim,
       md5Parity))
-    graft.Par.fanOut(docs)
+    // the kernel is null exactly on null tokens, i.e. null text: filtering
+    // on the input keeps Catalyst from pushing an `emb IS NOT NULL` filter
+    // below the projection, where it would run the kernel a second time
+    graft.Par.fanOut(docs.where(col(textCol).isNotNull))
       .select(col(idCol).as("id"), emb.as("emb"))
-      .where(col("emb").isNotNull)
   }
 }

@@ -79,8 +79,12 @@ object MinHash {
     val sig = org.apache.spark.sql.graft.Bridge.column(
       graft.functions.expressions.MinHashSignature(
         org.apache.spark.sql.graft.Bridge.expression(toks), w, k, md5Parity))
+    // the signature leaves through a one-row Generate: Catalyst would push
+    // a `sig IS NOT NULL` filter through a projection by inlining the
+    // kernel (running it, and the tokenizer, twice), but keeps a filter on
+    // generator output above the Generate
     graft.Par.fanOut(docs)
-      .select(col(idCol).as("id"), sig.as("sig"))
+      .select(col(idCol).as("id"), explode(array(sig)).as("sig"))
       .where(col("sig").isNotNull)
       .select(col("id") +: (0 until k).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*)
   }
@@ -189,7 +193,10 @@ object MinHash {
   def shingleArrays(docs: DataFrame, idCol: String, textCol: String, w: Int,
                     uax29: Boolean = false): DataFrame = {
     val toks = if (uax29) TextFunctions.tokenize(col(textCol)) else split(col(textCol), " ")
-    docs.select(col(idCol).as("id"), array_distinct(TextFunctions.ngrams(toks, w)).as("sh"))
+    // a one-row Generate keeps the `size(sh) > 0` filter above the
+    // shingle build instead of pushed below it with the build inlined
+    docs.select(col(idCol).as("id"),
+        explode(array(array_distinct(TextFunctions.ngrams(toks, w)))).as("sh"))
       .where(size(col("sh")) > 0)
   }
 

@@ -23,10 +23,39 @@ object NgramOps {
   def tokens(text: Column, uax29: Boolean = true): Column =
     if (uax29) tokenize(text) else splitTokens(text)
 
-  private def ngramCounts(docs: DataFrame, textCol: String, n: Int, uax29: Boolean): DataFrame =
+  /** One `ngram` row per n-gram occurrence in `docs`. */
+  private def gramRows(docs: DataFrame, textCol: String, n: Int, uax29: Boolean): DataFrame =
     graft.Par.fanOut(docs)
       .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
-      .groupBy("ngram").agg(count(lit(1)).as("cnt"))
+
+  /** [[gramRows]] hash-partitioned on the n-gram into `defaultParallelism`
+    * partitions when `docs` is smaller than `defaultParallelism` × AQE's
+    * advisory partition size — the only size range where AQE coalesces
+    * the aggregation's string-key shuffle into fewer reducers than there
+    * are slots (on 8 small shards: ONE reducer while 3 of 4 slots idle,
+    * and that reducer's merge was half of topk's wall). A repartition with
+    * an explicit count is never coalesced, and the aggregation above it
+    * reuses its partitioning, so the plan still has one exchange. It gives
+    * up the map-side partial aggregation: 3-gram shuffle bytes grow about
+    * 3x, but the partial hash map over mostly distinct keys costs more than
+    * it saves. On 4 local slots (2 GB heap) topk and unique ran 1.8x
+    * faster at half the cut-off and tied just below it
+    * (plans/ngram_threshold_ab.txt); the margin shrinks with size, so
+    * larger inputs keep the plain groupBy plan, whose reducers AQE sizes
+    * to the data.
+    */
+  private def gramsByKey(docs: DataFrame, textCol: String, n: Int, uax29: Boolean): DataFrame = {
+    val grams = gramRows(docs, textCol, n, uax29)
+    val spark = docs.sparkSession
+    val slots = spark.sparkContext.defaultParallelism
+    val small = BigInt(slots) * org.apache.spark.sql.graft.Bridge.advisoryPartitionBytes(spark)
+    if (docs.queryExecution.optimizedPlan.stats.sizeInBytes < small)
+      grams.repartition(slots, col("ngram"))
+    else grams
+  }
+
+  private def ngramCounts(docs: DataFrame, textCol: String, n: Int, uax29: Boolean): DataFrame =
+    gramsByKey(docs, textCol, n, uax29).groupBy("ngram").agg(count(lit(1)).as("cnt"))
 
   /** `wimbd topk` exact mode (reference src/cmd/topk.rs:106-343). Determinism:
     * ties broken by n-gram ascending. Stays the single-shuffle STRING
@@ -39,6 +68,13 @@ object NgramOps {
     * plan. [[topKHashFirst]] is the same contract on hash-first
     * execution for network-bound cluster runs where shuffle BYTES, not
     * local fixed costs, dominate.
+    *
+    * That one shuffle is keyed on the n-gram string. Below
+    * `defaultParallelism` × `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * of input it is an explicit `hashpartitioning(ngram, defaultParallelism)`
+    * that AQE does not coalesce, so every slot merges a share of the
+    * counts ([[gramsByKey]]); larger inputs keep the aggregation's own
+    * exchange with map-side partial counts, sized by AQE.
     */
   def topK(docs: DataFrame, textCol: String, n: Int, k: Int, uax29: Boolean = true): DataFrame =
     topKStrings(docs, textCol, n, k, uax29)
@@ -64,8 +100,7 @@ object NgramOps {
     */
   def topKHashFirst(docs: DataFrame, textCol: String, n: Int, k: Int,
                     uax29: Boolean = true): DataFrame = {
-    val grams = graft.Par.fanOut(docs)
-      .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
+    val grams = gramRows(docs, textCol, n, uax29)
     val slack = math.max(64, 4 * k)
     val top = grams.select(xxhash64(col("ngram")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("cnt"))
@@ -134,8 +169,7 @@ object NgramOps {
   def topKHashed(docs: DataFrame, textCol: String, n: Int, k: Int,
                  uax29: Boolean = true,
                  hash: Column => Column = c => xxhash64(c)): DataFrame = {
-    val grams = graft.Par.fanOut(docs)
-      .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
+    val grams = gramRows(docs, textCol, n, uax29)
     val winners = grams.select(hash(col("ngram")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("h")).limit(k)
@@ -149,9 +183,7 @@ object NgramOps {
     * Bloom estimate; exact distinct is the batch-native answer).
     */
   def uniqueExact(docs: DataFrame, textCol: String, n: Int, uax29: Boolean = true): DataFrame =
-    graft.Par.fanOut(docs)
-      .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
-      .agg(count_distinct(col("ngram")).as("n_unique"))
+    gramsByKey(docs, textCol, n, uax29).agg(count_distinct(col("ngram")).as("n_unique"))
 
   /** `wimbd unique` approximate — HLL++, a strictly better estimator than the
     * reference's collision-biased Bloom cell count.
@@ -172,8 +204,7 @@ object NgramOps {
                  threshold: Long = 1L, uax29: Boolean = true): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val grams = graft.Par.fanOut(docs)
-      .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
+    val grams = gramRows(docs, textCol, n, uax29)
     val agg = new graft.functions.sketch.Sketches.CountMinAggregator(width, depth, seed)
     val cms = grams.as[String].select(agg.toColumn).head()
     val bc = spark.sparkContext.broadcast(cms)
@@ -234,8 +265,7 @@ object NgramOps {
 
   def uniqueApprox(docs: DataFrame, textCol: String, n: Int, rsd: Double = 0.01,
                    uax29: Boolean = true): DataFrame =
-    graft.Par.fanOut(docs)
-      .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
+    gramRows(docs, textCol, n, uax29)
       .agg(approx_count_distinct(col("ngram"), rsd).as("n_unique"))
 
   /** `wimbd count` — total (overlapping) occurrences of each exact token

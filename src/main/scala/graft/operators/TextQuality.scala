@@ -385,13 +385,21 @@ object TextQuality {
         org.apache.spark.sql.graft.Bridge.expression(col(textCol))))
     val toks = split(col(textCol), " ")
     val stopArr = array(stopwords.map(lit): _*)
-    val staged = df.select(col(idCol) +: extra.map(col) :+
-      size(toks).cast("long").as("n_words") :+
-      round(length(col(textCol)).cast("double") / size(toks), 6).as("mean_word_len") :+
+    val features = Seq(
+      size(toks).cast("long").as("n_words"),
+      round(length(col(textCol)).cast("double") / size(toks), 6).as("mean_word_len"),
       round(size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("double") / size(toks), 6)
-        .as("alpha_word_ratio") :+
-      size(filter(toks, t => array_contains(stopArr, t))).cast("long").as("n_stopwords") :+
-      sig.as("__sig"): _*)
+        .as("alpha_word_ratio"),
+      size(filter(toks, t => array_contains(stopArr, t))).cast("long").as("n_stopwords"),
+      sig.as("__sig"))
+    // The features leave their projection through a one-row-per-row
+    // Generate. Catalyst pushes a Filter through any deterministic Project
+    // by inlining the aliases it references, so a caller's `where(keep)`
+    // would otherwise run the repetition kernel once per signal (11x) and
+    // the word split 7x more per document; a Filter on generator output
+    // stays above the Generate.
+    val staged = df.select(col(idCol) +: extra.map(col) :+ struct(features: _*).as("__f"): _*)
+      .select(col(idCol) +: extra.map(col) :+ inline(array(col("__f"))): _*)
     val repNames = Seq("dup_line_frac", "dup_line_char_frac",
       "top2gram_char_frac", "top3gram_char_frac", "top4gram_char_frac") ++
       (5 to 10).map(n => s"dup${n}gram_char_frac")

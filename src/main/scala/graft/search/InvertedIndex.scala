@@ -58,9 +58,14 @@ object InvertedIndex {
       else split(col(textCol), " ")
     import org.apache.spark.sql.graft.Bridge
     val perDoc = Bridge.column(graft.functions.expressions.TermPostings(
-      Bridge.expression(toks)))
-    docs.select(col(idCol).as("doc_id"), size(toks).cast("long").as("dl"),
-        explode(perDoc).as("p"))
+      Bridge.expression(col("__toks"))))
+    // dl is projected per DOCUMENT, below the explode: an expression next
+    // to the generator would be evaluated above it, once per posting row
+    // (CollapseProject keeps the tokens projection separate because it is
+    // referenced twice)
+    docs.select(col(idCol).as("doc_id"), toks.as("__toks"))
+      .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"), col("__toks"))
+      .select(col("doc_id"), col("dl"), explode(perDoc).as("p"))
       .select(col("p.term").as("term"), col("doc_id"),
         col("p.positions").as("positions"),
         size(col("p.positions")).cast("long").as("tf"), col("dl"))

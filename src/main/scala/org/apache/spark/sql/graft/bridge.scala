@@ -38,34 +38,76 @@ object Bridge {
   def filesMaxPartitionBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.sessionState.conf.filesMaxPartitionBytes
 
-  /** Provable cap on the scan-split count of `df`'s leaves, from the file
-    * listing alone. Unsplittable inputs (gzip/zstd JSONL et al.) scan as
-    * ONE partition per file however large their byte size, so the
-    * optimizer's `sizeInBytes` wildly over-estimates their parallelism —
-    * the exact case a pure byte heuristic gets wrong. Returns
-    * Some(totalFileCount) when EVERY leaf is a file scan whose files are
-    * all unsplittable; None otherwise (splittable or non-file leaves ⇒ no
-    * useful bound, fall back to the byte estimate). Planning-only: reads
-    * the FileIndex's already-cached listing, instantiates no RDDs.
+  /** `spark.sql.adaptive.advisoryPartitionSizeInBytes`: the size AQE
+    * coalesces small shuffle partitions up to.
     */
-  def unsplittableScanFiles(df: org.apache.spark.sql.DataFrame): Option[Long] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+  def advisoryPartitionBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  /** The partition count `df` will have, planned from file listings
+    * alone: Some(n) when every path from the root reaches a non-bucketed
+    * file relation through partition-preserving operators only
+    * (projections, filters, generators, unions), None otherwise — a
+    * shuffle in between decides the count instead, and local data, RDDs
+    * and caches have no listing to plan from. Each file leaf is packed the
+    * way `FileSourceScanExec` packs it: the listing (partition-pruned by
+    * the deterministic filters over partition columns above the relation)
+    * is split by `FilePartition.maxSplitBytes` where the format allows it,
+    * then binned by `FilePartition.getFilePartitions` under
+    * `maxPartitionBytes` and `openCostInBytes`. Unsplittable inputs (gzip
+    * JSONL) thus count one split per file at most, and many small files
+    * count as the few partitions they pack into. Bucketed relations give
+    * None: their scan is one partition per bucket only while every bucket
+    * column survives column pruning, and packed like any listing
+    * otherwise, which the logical plan does not settle. Planning-only:
+    * reads the FileIndex's cached listing and instantiates no RDDs.
+    */
+  def plannedScanPartitions(df: org.apache.spark.sql.DataFrame): Option[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project, Union}
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     val spark = df.sparkSession
-    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
-    var total = 0L
-    val allCapped = leaves.nonEmpty && leaves.forall {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          val files = fs.location.inputFiles
-          files.nonEmpty &&
-            files.forall(f => !fs.fileFormat.isSplitable(
-              spark, fs.options, new org.apache.hadoop.fs.Path(f))) &&
-            { total += files.length; true }
-        case _ => false
-      }
-      case _ => false
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
     }
-    if (allCapped) Some(total) else None
+    def planned(lr: LogicalRelation, fs: HadoopFsRelation, filters: Seq[Expression]): Long = {
+      val resolver = spark.sessionState.conf.resolver
+      val partCols = lr.output.filter(a =>
+        fs.partitionSchema.fieldNames.exists(resolver(_, a.name)))
+      val partFilters = filters.filter(f => f.deterministic && f.references.nonEmpty &&
+        f.references.forall(r => partCols.exists(_.exprId == r.exprId)))
+      val dirs = fs.location.listFiles(partFilters, Nil)
+      val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+      val splits = dirs.flatMap { d =>
+        d.files.flatMap { f =>
+          val path = f.getPath
+          PartitionedFileUtil.splitFiles(f, path,
+            fs.fileFormat.isSplitable(spark, fs.options, path), maxSplit, d.values)
+        }
+      }.sortBy(_.length)(Ordering[Long].reverse)
+      FilePartition.getFilePartitions(spark, splits, maxSplit).size.toLong
+    }
+    // filters above a relation (through projections) may prune its
+    // partitions
+    def walk(p: LogicalPlan, filters: Seq[Expression]): Option[Long] = p match {
+      case Filter(cond, child) => walk(child, filters ++ conjuncts(cond))
+      case Project(_, child) => walk(child, filters)
+      case g: Generate => walk(g.child, Nil)
+      case u: Union =>
+        val parts = u.children.map(walk(_, Nil))
+        if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation
+            if fs.bucketSpec.isEmpty || !spark.sessionState.conf.bucketingEnabled =>
+          Some(planned(lr, fs, filters))
+        case _ => None
+      }
+      case _ => None
+    }
+    walk(df.queryExecution.optimizedPlan, Nil)
   }
 
   def releaseLocalCheckpoint(ds: org.apache.spark.sql.Dataset[_]): Boolean =

@@ -652,4 +652,103 @@ class PlanPropertySpec extends SparkTestBase {
       assert(p.contains("TakeOrderedAndProject"), p)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
+
+  test("small-input n-gram aggregations key-partition into defaultParallelism uncoalesced reducers") {
+    val slots = spark.sparkContext.defaultParallelism
+    val text = docs.select("text")
+    // the same rows behind an RDD leaf: unknown size, so above the
+    // defaultParallelism x advisory-size threshold — today's plain plan
+    val unknownSize = spark.createDataFrame(text.rdd, text.schema)
+    val keyed = s"hashpartitioning\\(ngram#\\d+, $slots\\), REPARTITION_BY_NUM".r
+    def aggs(d: org.apache.spark.sql.DataFrame) = Seq(
+      "topK" -> NgramOps.topK(d, "text", n = 3, k = 10, uax29 = false),
+      "botK" -> NgramOps.botK(d, "text", n = 3, k = 10, uax29 = false),
+      "uniqueExact" -> NgramOps.uniqueExact(d, "text", n = 3, uax29 = false))
+    aggs(text).zip(aggs(unknownSize)).foreach { case ((name, small), (_, large)) =>
+      val rows = small.collect().toSeq
+      // after execution: the final adaptive plan (its string also
+      // carries the initial plan, cut off here)
+      val fin = plan(small).split("== Initial Plan ==").head
+      assert(fin.contains("isFinalPlan=true"), fin)
+      assert(keyed.findAllIn(fin).length === 1, s"$name: $fin")
+      assert("Exchange hashpartitioning".r.findAllIn(fin).length === 1, s"$name: $fin")
+      assert(!fin.contains("coalesced"), s"$name: AQE coalesced the n-gram reducers\n$fin")
+      val p = plan(large)
+      assert(keyed.findAllIn(p).isEmpty && shuffles(large) === 1, s"$name: $p")
+      assert(large.collect().toSeq === rows, s"$name output differs between the two plans")
+    }
+  }
+
+  test("kernel census: each graft_* kernel runs once, pushed-down filters included") {
+    import graft.operators.{FeatureHash, TextQuality}
+    import graft.search.InvertedIndex
+    val cases = Seq(
+      "gopherFilter.where(keep)" ->
+        TextQuality.gopherFilter(docs, "doc_id", "text").where(col("keep")),
+      "hashedEmbeddings" -> FeatureHash.hashedEmbeddings(docs, "doc_id", "text", 64),
+      "signaturesInline" ->
+        MinHash.signaturesInline(docs, "doc_id", "text", 5, 8, md5Parity = false),
+      "shingleArrays" -> MinHash.shingleArrays(docs, "doc_id", "text", 5),
+      // the UAX-29 paths add the tokenizer, which must run once too
+      "signaturesInline uax29" -> MinHash.signaturesInline(docs, "doc_id", "text", 5, 8,
+        md5Parity = false, uax29 = true),
+      "shingleArrays uax29" -> MinHash.shingleArrays(docs, "doc_id", "text", 5, uax29 = true),
+      "hashedEmbeddings uax29" ->
+        FeatureHash.hashedEmbeddings(docs, "doc_id", "text", 64, uax29 = true),
+      "postings" -> InvertedIndex.postings(docs, "doc_id", "text"))
+    cases.foreach { case (name, df) =>
+      val p = plan(df)
+      val counts = "graft_[a-z0-9_]+".r.findAllIn(p).toSeq.groupBy(identity)
+        .map { case (k, v) => k -> v.size }
+      assert(counts.nonEmpty && counts.values.forall(_ == 1), s"$name: $counts\n$p")
+    }
+  }
+
+  test("kernel-once formulations keep their outputs: nulls, short and empty docs") {
+    import graft.operators.{FeatureHash, TextQuality}
+    import graft.search.InvertedIndex
+    import spark.implicits._
+    val edge = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "one two"),
+        (4L, "a b c d e"), (5L, "x  y z w v u"))
+      .toDF("doc_id", "text")
+      .union(docs.select("doc_id", "text").limit(200))
+    def same(name: String, got: org.apache.spark.sql.DataFrame,
+             want: org.apache.spark.sql.DataFrame): Unit = {
+      val (g, w) = (got.collect().map(_.toString).sorted.toSeq,
+        want.collect().map(_.toString).sorted.toSeq)
+      assert(g.nonEmpty && g === w, name)
+    }
+    val toks = split(col("text"), " ")
+    same("hashedEmbeddings", FeatureHash.hashedEmbeddings(edge, "doc_id", "text", 16),
+      edge.select(col("doc_id").as("id"), org.apache.spark.sql.graft.Bridge.column(
+          graft.functions.expressions.HashedEmbedding(
+            org.apache.spark.sql.graft.Bridge.expression(toks), 16, false)).as("emb"))
+        .where(col("emb").isNotNull))
+    val utoks = graft.functions.TextFunctions.tokenize(col("text"))
+    for ((uax29, t) <- Seq(false -> toks, true -> utoks)) {
+      for (md5 <- Seq(false, true))
+        same(s"signaturesInline md5=$md5 uax29=$uax29",
+          MinHash.signaturesInline(edge, "doc_id", "text", 5, 4, md5Parity = md5, uax29 = uax29),
+          edge.select(col("doc_id").as("id"), MinHash.sigArrayCol(t, 5, 4, md5).as("sig"))
+            .where(col("sig").isNotNull)
+            .select(col("id") +: (0 until 4).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*))
+      same(s"shingleArrays uax29=$uax29", MinHash.shingleArrays(edge, "doc_id", "text", 5, uax29),
+        edge.select(col("doc_id").as("id"),
+            array_distinct(graft.functions.TextFunctions.ngrams(t, 5)).as("sh"))
+          .where(size(col("sh")) > 0))
+    }
+    same("postings", InvertedIndex.postings(edge, "doc_id", "text"),
+      edge.select(col("doc_id"), size(utoks).cast("long").as("dl"),
+          explode(org.apache.spark.sql.graft.Bridge.column(
+            graft.functions.expressions.TermPostings(
+              org.apache.spark.sql.graft.Bridge.expression(utoks)))).as("p"))
+        .select(col("p.term").as("term"), col("doc_id"), col("p.positions").as("positions"),
+          size(col("p.positions")).cast("long").as("tf"), col("dl")))
+    // the gate's filter must select exactly the rows its keep column marks
+    val gated = TextQuality.gopherFilter(edge, "doc_id", "text")
+    val kept = gated.collect().filter(r => !r.isNullAt(r.fieldIndex("keep")) &&
+      r.getAs[Boolean]("keep"))
+    same("gopherFilter.where(keep)", gated.where(col("keep")),
+      spark.createDataFrame(java.util.Arrays.asList(kept: _*), gated.schema))
+  }
 }
