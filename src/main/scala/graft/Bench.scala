@@ -273,22 +273,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size-based AQE coalescing (not parallelism-floored) + repartitioning
-      // of cached plans: tiny shuffles collapse to one task instead of
-      // launching `cpus` no-op tasks per stage — and at 100 TB these are the
-      // recommended production settings (64 MB advisory partitions win over
-      // a fixed partition count on both ends of the scale).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark)
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet reader, codegen, shuffle machinery) so the
     // first measured query isn't charged for JVM startup, and touch every

@@ -375,13 +375,7 @@ object Cli {
 
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty, "usage: graft.Cli <topk|botk|count|search|stats|unique|dedup|decontaminate|contaminate|diff|report|domains|grep|langid|index|vocab|sample|consolidate|ingest|fetch|help> PATH... [flags] — `help` documents the --conf session dials (recall/speed)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark)
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     try run(spark, argv) finally spark.stop()
   }
@@ -497,7 +491,8 @@ object Cli {
             |                          centroids, probes=4 gave 5.7-6x
             |                          assignment speedup at 91.6% bucket
             |                          agreement on planted clusters
-            |                          (tools.CoarseProbe). Affects ann
+            |                          (SCALE.md, two-level IVF assignment
+            |                          row). Affects ann
             |                          index builds/queries, dedup
             |                          --semantic, sample --cluster.
             |  graft.ann.maxGatheredCentroids

@@ -12,12 +12,13 @@ import graft.functions.expressions._
   * `spark.sql(...)` as well as the Column API:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)          // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * ...
+  * val spark = graft.Sessions.local()   // installs these extensions
   * spark.sql("SELECT graft_ngrams(graft_tokenize(text), 3) FROM docs")
   * }}}
+  *
+  * Outside `Sessions.local`, name the class in `spark.sql.extensions`
+  * (`graft.GraftExtensions`), or call [[GraftExtensions.register]] on a
+  * session that is already built.
   *
   * Literal-argument helpers fail analysis (not execution) on non-literal
   * static parameters like minhash k — same contract as Spark's own

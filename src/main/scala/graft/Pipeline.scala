@@ -104,7 +104,8 @@ object Pipeline {
       operators.MinHash.nearDuplicates(docs, idCol, textCol, threshold))
 
   /** SemDeDup over an embedding column; raise `tables` for recall on
-    * structure-poor embeddings (see tools.SemRecall).
+    * structure-poor embeddings (recall per table count is recorded on
+    * [[graft.operators.Similarity.semanticNearDuplicates]]).
     *
     * `exactFirst` (default ON — the dedup-ladder discipline): collapse
     * EXACT-duplicate vectors to their min-`idCol` row with one narrow

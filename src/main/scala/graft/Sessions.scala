@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level optimizer tuning for the engine's workload shape.
+/** The engine's session: `local`, the one builder, and
+  * [[tune]], the session-level optimizer tuning for the engine's
+  * workload shape that `local` applies.
   *
   * Every generator in this library explodes a COMPUTED array (n-grams,
   * MinHash signatures, winnowing fingerprints, bigram structs) — never a
@@ -22,6 +24,45 @@ import org.apache.spark.sql.SparkSession
   * exclusions are preserved.
   */
 object Sessions {
+
+  /** Task slots of every local session: `SPARK_GRAFT_CPUS` when set, else
+    * the JVM's processor count. The one read of that variable.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `local(cpus, conf: _*)` at [[cpus]] slots (Scala 2 allows no default
+    * argument in a parameter list that ends in varargs).
+    */
+  def local(conf: (String, String)*): SparkSession = local(cpus, conf: _*)
+
+  /** The engine's session — the one builder of every entry point, tool and
+    * test, so all of them plan alike. `local[cpus]` with `cpus` shuffle
+    * partitions as AQE's ceiling; size-based reducer coalescing
+    * (`parallelismFirst=false`) and repartitioning of cached plans, so tiny
+    * shuffles collapse to one task and 64 MB advisory partitions serve
+    * sf0.001 and 100 TB alike; UTC timestamps; parquet INT64 nanos read as
+    * longs; no UI; [[GraftExtensions]] installed; then [[tune]]. `conf`
+    * entries go last and override.
+    *
+    * Idempotent: on an existing session `getOrCreate` re-applies every
+    * runtime SQL conf (static ones, the master and the extensions bind
+    * only at first build — use [[GraftExtensions.register]] on a session
+    * built elsewhere) and `tune` re-sets its own.
+    */
+  def local(cpus: Int, conf: (String, String)*): SparkSession = {
+    val confs = Seq(
+      "spark.ui.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ conf
+    val builder = SparkSession.builder().master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
+    tune(confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate())
+  }
 
   private val ExcludedRules = Seq(
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")

@@ -322,7 +322,7 @@ private[graft] final class BatteryIndex(
     * duplicates share a terminal). The first-token candidate lists above
     * degrade to O(colliding candidates × len) per anchor when many
     * phrases share a prefix (a 64k battery of shared-prefix variants:
-    * WideBatteryProbe measured 12 s where 4k took 0.6 s); the trie walks
+    * 12 s where 4k took 0.6 s, SCALE.md's wide-battery row); the trie walks
     * the SHARED prefix once, so per-anchor cost is bounded by the
     * deepest matching path — P-independent even under full-prefix
     * collision. Used by the slop=0 paths of the walker's walk/walkCounts;

@@ -59,8 +59,8 @@ object NgramOps {
 
   /** `wimbd topk` exact mode (reference src/cmd/topk.rs:106-343). Determinism:
     * ties broken by n-gram ascending. Stays the single-shuffle STRING
-    * plan: the r13-verdict adoption probe re-ran BOTH ways (tools
-    * .TopkProbe) — r13 under host load measured hashed 1.3× faster
+    * plan: the r13-verdict adoption probe re-ran BOTH ways (NOTES.md,
+    * round-14 additions) — r13 under host load measured hashed 1.3× faster
     * (1.29 vs 1.70 s), the r14 quiet-host re-measure inverts it (strings
     * 0.56 vs hash-first 0.75 s min-of-5: at sf0.1 the second gram pass's
     * fixed costs outweigh the shuffle-byte saving) — so the ≥1.3×
@@ -156,7 +156,7 @@ object NgramOps {
     * the n-gram string, then recover the winning strings with a second
     * cheap aggregation filtered to the k winning hashes (broadcast).
     *
-    * Measured (tools.TopkProbe, sf0.1, n=3): r13 under host load had the
+    * Measured (sf0.1, n=3; NOTES.md, round-14 additions): r13 under host load had the
     * hashed path ~25% faster than [[topK]] (1.29 vs 1.70 s steady); the
     * r14 quiet-host re-measure INVERTS it (hashed 0.72 vs strings
     * 0.56 s min-of-5) — at single-node sf0.1 the second gram pass's

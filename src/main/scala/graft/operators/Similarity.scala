@@ -386,9 +386,9 @@ object Similarity {
     * `tables` > 1 unions pairs from independent centroid samples (offsets
     * into the id space) — the same recall-vs-cost dial as LSH's nTables.
     * On clusterable embeddings one table suffices (pairs live inside
-    * clusters); on structure-poor data `tools.SemRecall` measures the
-    * trade (sf0.01 synthetic uniform vectors: 0.32/0.52/0.73 recall at 1/2/4
-    * tables, one extra corpus assignment each).
+    * clusters); on structure-poor data the trade was measured once, at
+    * sf0.01 synthetic uniform vectors: 0.32/0.52/0.73 recall at 1/2/4
+    * tables, one extra corpus assignment each.
     */
   def semanticNearDuplicates(df: DataFrame, idCol: String, vecCol: String,
                              threshold: Double, step: Int,
@@ -662,7 +662,8 @@ object Similarity {
     * kernel at any centroid count (spec-pinned), so engaging the gate
     * never changes results until the caller explicitly trades recall;
     * small positive values (4 is the measured 5.7–6× point at 12.5k
-    * centroids, tools.CoarseProbe) buy the √C speedup.
+    * centroids, SCALE.md's two-level IVF assignment row) buy the √C
+    * speedup.
     */
   private[graft] val CoarseGateConf = "graft.ann.coarseGate"
   private[graft] val CoarseProbesConf = "graft.ann.coarseProbes"

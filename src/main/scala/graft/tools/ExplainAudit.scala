@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Prints the formatted physical plan of selected queries and a quick scan
@@ -16,11 +14,7 @@ object ExplainAudit {
       else Seq("q3_join", "a6_topk_3gram", "ann_topk_cosine", "j3_decontaminate",
         "p14_sample", "d_minhash_neardup", "ann_lsh_topk", "ann_ivf_topk",
         "j4_overlap_pairs", "e3_per_phrase", "p4_psl_full", "d_cc_clusters")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

@@ -1,39 +1,39 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{Sessions, SparkEntry}
 
-/** Repeat-timing probe for named SparkEntry queries — separates real
-  * regressions from per-run noise before chasing a bench number.
+/** Repeat-timing and cost probe for named SparkEntry queries — separates
+  * real regressions from per-run noise before chasing a bench number, and
+  * shows what each query reads and shuffles: a query whose shuffle bytes
+  * rival its input bytes is restructuring the corpus, and at 100 TB that
+  * is the first number to fix.
   *
-  * Usage: runMain graft.tools.QueryProbe <sfDir> <reps> <name> [<name>...]
+  * Per query: each rep's wall seconds, their minimum, and the minimum over
+  * reps of jobs, tasks, input/shuffle-write/shuffle-read/spill MB, plus
+  * the shuffle-write/input ratio. A leading '+' on a name re-enables
+  * InferFiltersFromGenerate for that query (the explode-regression A/B
+  * lever). Without names it audits a default set of corpus-shaped queries.
+  *
+  * Usage: runMain graft.tools.QueryProbe <sfDir> <reps> [<name>...]
   */
 object QueryProbe {
+  private val AuditSet = Seq("a6_topk_3gram", "a7_botk_2gram",
+    "a8_unique_ngrams", "d_minhash_neardup", "d_cc_clusters", "j2_keep_first",
+    "j4_overlap_pairs", "q3_join", "p4_psl_full", "ann_topk_cosine",
+    "w_tumble_hour", "e3_per_phrase", "d_dup_spans", "d_span_removal",
+    "d_semantic_dedup", "t_unigram_lm", "a14_ngram_contamination",
+    "t_gopher_filter")
+
+  private def mb(x: Long): String = f"${x / 1048576.0}%.2f"
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val names = args.drop(2).toSeq
-    val spark = Sessions.tune(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate())
+    val names = if (args.length > 2) args.drop(2).toSeq else AuditSet
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
-    // per-rep Spark-job counter: job counts are the host-noise-immune
-    // companion to the wall columns on this multi-tenant box (r18)
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet()
-      })
+    val probe = ProbeListener.attach(spark.sparkContext)
     spark.read.parquet(s"$sfDir/documents.parquet").count() // warm
-    // a leading '+' re-enables InferFiltersFromGenerate for that run —
-    // the A/B lever for explode-regression bisection
     names.foreach { name0 =>
       val (name, rules) =
         if (name0.startsWith("+")) (name0.drop(1), "")
@@ -41,17 +41,16 @@ object QueryProbe {
           "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       spark.conf.set("spark.sql.optimizer.excludedRules", rules)
       val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val j0 = jobCount.get()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200) // listener bus is async
-        (dt, jobCount.get() - j0)
-      }
-      println(f"$name0%-28s ${times.map(t => f"${t._1}%6.2f").mkString(" ")}" +
-        f"  min=${times.map(_._1).min}%6.2f" +
-        f"  jobs=${times.map(_._2).min}%4d")
+      val runs = (1 to reps).map(_ => probe.measure(fn(spark, sfDir).count()))
+      val walls = runs.map(_._2)
+      def least(f: ProbeCounts => Long): Long = runs.map(r => f(r._3)).min
+      val (in, shufW) = (least(_.inputBytes), least(_.shuffleWrite))
+      val ratio = if (in > 0) f"${shufW.toDouble / in}%.3f" else "-"
+      println(f"$name0%-28s ${walls.map(w => f"$w%6.2f").mkString(" ")}" +
+        f"  min=${walls.min}%6.2f  jobs=${least(_.jobs)}%4d" +
+        f" tasks=${least(_.tasks)}%6d  MB: in=${mb(in)} shufW=${mb(shufW)}" +
+        f" shufR=${mb(least(_.shuffleRead))} spill=${mb(least(_.spill))}" +
+        s"  ratio=$ratio")
     }
     spark.stop()
   }

@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-command scale rehearsal: replicate the sf0.1 tables 10× on disk
@@ -18,26 +15,6 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.tools.ScaleRehearsal [sfDir] [replicas] [workDir] [path,path,...]"
   */
 object ScaleRehearsal {
-
-  private final class Acc extends SparkListener {
-    val inputBytes = new LongAdder
-    val shuffleRead = new LongAdder
-    val shuffleWrite = new LongAdder
-    val spill = new LongAdder
-    val tasks = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        inputBytes.add(m.inputMetrics.bytesRead)
-        shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        spill.add(m.diskBytesSpilled)
-        tasks.increment()
-      }
-    }
-    def reset(): Unit = Seq(inputBytes, shuffleRead, shuffleWrite, spill, tasks)
-      .foreach(_.reset())
-  }
 
   private def gb(x: Long): String = f"${x / 1073741824.0}%7.3f"
 
@@ -54,20 +31,9 @@ object ScaleRehearsal {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val work = args.lift(2).getOrElse("/tmp/scale_rehearsal")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.Sessions.tune(spark)
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
+    val probe = ProbeListener.attach(spark.sparkContext)
 
     // ---- materialize the replicated corpus (id-shifted per replica) ----
     def replicate(table: String, idCol: String): String = {
@@ -135,16 +101,12 @@ object ScaleRehearsal {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       System.gc()
-      acc.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      val (rows, sec, c) = probe.measure(body)
       val heap = java.lang.management.ManagementFactory.getMemoryMXBean
         .getHeapMemoryUsage.getUsed
-      println(f"$name%-28s $sec%8.2f s  rows=$rows%-9d in=${gb(acc.inputBytes.sum)} GB " +
-        f"shufW=${gb(acc.shuffleWrite.sum)} GB spill=${gb(acc.spill.sum)} GB " +
-        f"tasks=${acc.tasks.sum}%-6d heapUsed=${gb(heap)} GB " +
+      println(f"$name%-28s $sec%8.2f s  rows=$rows%-9d in=${gb(c.inputBytes)} GB " +
+        f"shufW=${gb(c.shuffleWrite)} GB spill=${gb(c.spill)} GB " +
+        f"tasks=${c.tasks}%-6d heapUsed=${gb(heap)} GB " +
         f"docs_per_sec=${nDocs / sec}%.0f")
     }
 
@@ -181,8 +143,8 @@ object ScaleRehearsal {
     // plus unseen fillers, the realistic benchmark-suite mix — counted in
     // ONE document walk per row; the only shuffle is (idx, count). The
     // per-column shape this replaces is O(P) per row AND per plan
-    // (WideBatteryProbe: 70x at P=4096 on the UNreplicated corpus; at 8k
-    // it would not finish a rehearsal).
+    // (70x at P=4096 on the UNreplicated corpus, SCALE.md's search-surface
+    // row; at 8k it would not finish a rehearsal).
     run("wide_battery_8k") {
       val toksOf = split(col("text"), " ")
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -202,9 +164,10 @@ object ScaleRehearsal {
     }
     // the same arm at 64k phrases (r15: the trie walker makes the
     // per-anchor cost prefix-shared, so even a battery of shared-prefix
-    // variants — the WideBatteryProbe adversarial construction that cost
-    // 12 s pre-trie — stays at single-battery cost; broadcast payload
-    // O(P·len) ≈ 2 MB, trie heap ~250 MB driver-measured at 64k)
+    // variants — the adversarial construction that cost 12 s pre-trie,
+    // SCALE.md's wide-battery row — stays at single-battery cost;
+    // broadcast payload O(P·len) ≈ 2 MB, trie heap ~250 MB
+    // driver-measured at 64k)
     run("wide_battery_64k") {
       val toksOf = split(col("text"), " ")
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -308,8 +271,8 @@ object ScaleRehearsal {
     // the current replica count. Three rows record the dial the same way
     // every other operator is recorded: gate DISABLED (flat kernel — the
     // r13 baseline), gate engaged at the default full-recall probe width
-    // (results-neutral), gate engaged at probes=4 (CoarseProbe's
-    // measured 5.7–6× point).
+    // (results-neutral), gate engaged at probes=4 (the 5.7–6× point of
+    // SCALE.md's two-level IVF assignment row).
     locally {
       val stepC = math.max(1, (nVecs / 12500L).toInt)
       val gateConf = graft.operators.Similarity.CoarseGateConf

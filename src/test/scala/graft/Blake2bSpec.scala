@@ -58,7 +58,6 @@ class Blake2bSpec extends SparkTestBase {
     assert(got(1) ===
       "ba80a53f981c4d0d6a2797b69f12f6e94c212f14685ac4b74b12bb6fdbffa2d17d87c5392aab792dc252d5de4533cc9518d38aa8dbf1925ab92386edd4009923")
     assert(!ids.queryExecution.executedPlan.toString.contains("Exchange"))
-    graft.GraftExtensions.register(spark)
     df.createOrReplaceTempView("blake_urls")
     val viaSql = spark.sql(
       "SELECT graft_blake2b_es_id(url) AS id FROM blake_urls WHERE doc_id = 2")

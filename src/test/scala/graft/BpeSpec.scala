@@ -51,7 +51,6 @@ class BpeSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(viaColumn(1L) === Seq("s", "low", "f", "low"))
     assert(viaColumn(2L) === Seq.empty)
-    GraftExtensions.register(spark)
     df.createOrReplaceTempView("bpe_in")
     val viaSql = spark.sql(
       "SELECT id, graft_bpe_encode(text, array('l o', 'lo w')) AS toks FROM bpe_in")

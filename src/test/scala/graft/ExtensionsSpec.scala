@@ -1,12 +1,21 @@
 package graft
 
-/** The SQL-function surface of [[GraftExtensions]], registered into the
-  * shared test session via the post-build path (the build-time path is the
-  * same builder list).
+/** The SQL-function surface of [[GraftExtensions]], installed into the
+  * shared test session at build by `Sessions.local`; one case exercises
+  * the post-build [[GraftExtensions.register]] path (same builder list).
   */
 class ExtensionsSpec extends SparkTestBase {
 
-  GraftExtensions.register(spark)
+  test("register on an already-built session: functions resolve, rule added once") {
+    val fresh = spark.newSession() // no post-build rules of its own
+    GraftExtensions.register(fresh)
+    GraftExtensions.register(fresh)
+    assert(fresh.experimental.extraOptimizations
+      .count(_ == functions.expressions.IntersectSizeRewrite) === 1)
+    assert(fresh.sql(
+      "SELECT graft_intersect_size(array('a', 'b', 'b'), array('b', 'c')) AS n")
+      .head().getInt(0) === 1)
+  }
 
   test("custom expressions are callable from spark.sql") {
     import spark.implicits._
@@ -79,7 +88,6 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("graft_multi_phrases: literal battery from SQL, both modes") {
-    GraftExtensions.register(spark)
     val got = spark.sql(
       """SELECT graft_multi_phrases(array('a','b','c'),
         |  array(array('a','b'), array('zz'), array('b','c'), array())) AS m""".stripMargin)

@@ -134,7 +134,6 @@ class FeatureHashSpec extends SparkTestBase {
     // with string_split('', ' ')), so L1 mass is 1
     assert(out(1L).map(math.abs).sum === 1.0)
     assert(out(3L).map(math.abs).sum === 3.0 || out(3L).map(math.abs).sum === 1.0)
-    GraftExtensions.register(spark)
     f.createOrReplaceTempView("fh_docs")
     val sql = spark.sql(
       "SELECT graft_feature_hash(split(text, ' '), 8, true) AS e FROM fh_docs WHERE doc_id = 3")

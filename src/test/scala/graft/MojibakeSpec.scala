@@ -141,7 +141,6 @@ class MojibakeSpec extends SparkTestBase {
   }
 
   test("column API and SQL function agree with the kernel") {
-    GraftExtensions.register(spark)
     val raw = Seq(mangle("it’s café", "windows-1252"), "plain",
       mangle("— €9 🙂", "ISO-8859-1"))
     val df = raw.toDF("t")

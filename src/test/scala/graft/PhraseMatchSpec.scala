@@ -160,7 +160,6 @@ class PhraseMatchSpec extends SparkTestBase {
   }
 
   test("lucene mode registered as SQL function") {
-    graft.GraftExtensions.register(spark)
     val n = spark.sql(
       """SELECT graft_phrase_match_lucene(array('x','b','a'), array('a','b'), 2) AS m""")
       .collect().head.getBoolean(0)

@@ -87,7 +87,6 @@ class SentimentSpec extends SparkTestBase {
   }
 
   test("graft_valence SQL function agrees") {
-    GraftExtensions.register(spark)
     val p = spark.sql(
       "SELECT graft_valence(array('not', 'very', 'good'))[1] AS p")
       .head.getDouble(0)

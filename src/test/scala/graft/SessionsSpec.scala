@@ -1,0 +1,58 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.functions.expressions.IntersectionSize
+
+/** `Sessions.local` is the one session builder: every entry point, tool
+  * and test plans under the same confs, rules and extensions.
+  */
+class SessionsSpec extends SparkTestBase {
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  private def offenders(roots: Seq[String], pattern: scala.util.matching.Regex,
+                        allowed: String): Seq[String] =
+    roots.flatMap(scalaFiles)
+      .filter(p => p.getFileName.toString != allowed &&
+        pattern.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).nonEmpty)
+      .map(_.toString)
+
+  test("local is idempotent: same session back, runtime confs re-applied") {
+    val tz = "spark.sql.session.timeZone"
+    val pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    spark.conf.unset(tz)
+    spark.conf.unset(pf)
+    assert(spark.conf.get(pf) === "true") // Spark's default
+    val again = Sessions.local(4)
+    assert(again eq spark)
+    assert(spark.conf.get(tz) === "UTC")
+    assert(spark.conf.get(pf) === "false")
+  }
+
+  test("extensions bind at build: a fresh session plans the intersect rewrite") {
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraOptimizations.isEmpty)
+    val plan = fresh.range(1).selectExpr("size(array_intersect(" +
+      "array(cast(id AS STRING), 'b', 'b'), array('b', 'c'))) AS n")
+      .queryExecution.optimizedPlan
+    assert(plan.expressions.exists(_.exists(_.isInstanceOf[IntersectionSize])), plan)
+  }
+
+  test("no session builder outside Sessions.scala") {
+    val builder = """SparkSession\s*\.\s*builder""".r
+    assert(offenders(Seq("src/main", "src/test"), builder, "Sessions.scala") === Nil)
+  }
+
+  test("no SparkListener in graft.tools outside the shared ProbeListener") {
+    val listener = """(extends|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""".r
+    assert(offenders(Seq("src/main/scala/graft/tools"), listener,
+      "ProbeListener.scala") === Nil)
+  }
+}

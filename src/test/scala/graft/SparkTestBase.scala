@@ -15,15 +15,8 @@ object SparkTestBase {
     dir
   }
 
-  lazy val spark: SparkSession = Sessions.tune(SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate())
+  lazy val spark: SparkSession =
+    Sessions.local(4, "spark.sql.warehouse.dir" -> warehouse.getAbsolutePath)
 }
 
 trait SparkTestBase extends AnyFunSuite {

@@ -43,7 +43,6 @@ class TextNormSpec extends SparkTestBase {
   }
 
   test("column API and SQL function agree with the kernel") {
-    GraftExtensions.register(spark)
     val raw = Seq("Cafe\u0301\r\nx\u00A0y\u200Bz", "plain", "\uFF13 three")
     val df = raw.toDF("t")
     val viaCol = df.select(TextQuality.normalizeText($"t")).as[String].collect()
