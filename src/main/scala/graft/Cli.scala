@@ -305,49 +305,13 @@ object Cli {
 
   /** Heal index-table crash state BEFORE deciding whether an index exists:
     * after a crash mid-swap plus a JVM restart, the live postings sit
-    * under the __compacting/__old warehouse dirs with no catalog entry,
-    * and treating that as "first run" would overwrite the table. Returns
+    * under the swap's debris directories with no catalog entry, and
+    * treating that as "first run" would overwrite the table. Returns
     * whether a live index exists after recovery.
     */
-  private def healIndexTable(spark: SparkSession, t: String, buckets: Int): Boolean = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    def path(name: String) = new org.apache.hadoop.fs.Path(warehouse, name)
-    def dirExists(name: String): Boolean =
-      path(name).getFileSystem(hconf).exists(path(name))
-    // _SUCCESS proves the staging CTAS COMPLETED (the committer writes it
-    // last) — without it the dir may be a half-written table and recovery
-    // must roll back to __old instead
-    def isComplete(name: String): Boolean = {
-      val s = new org.apache.hadoop.fs.Path(path(name), "_SUCCESS")
-      s.getFileSystem(hconf).exists(s)
-    }
-    // Try: a half-written CTAS dir has no readable footers — callers keep
-    // their own refuse-to-overwrite guards
-    def reRegister(name: String): Unit =
-      if (!spark.catalog.tableExists(name) && dirExists(name))
-        scala.util.Try(
-          search.InvertedIndex.registerIndex(spark, name, buckets))
-    reRegister(t)
-    if (!spark.catalog.tableExists(t)) {
-      reRegister(t + "__old")
-      if (dirExists(t + "__compacting") && isComplete(t + "__compacting"))
-        reRegister(t + "__compacting")
-      search.InvertedIndex.recoverCompaction(spark, t)
-    }
-    // a table healed from a debris-named dir (__old/__compacting) must be
-    // moved HOME — swapTable clears those names as debris on the next
-    // upsert, which would delete the healed table's data out from under it
-    search.InvertedIndex.normalizeTableLocation(spark, t)
-    // nothing healed but a live-named dir remains WITHOUT the committer's
-    // _SUCCESS marker: a half-written CTAS from a crash mid-first-build
-    // (a completed build always has the marker, and any real index sat
-    // under __old/__compacting). Left in place it blocks every
-    // first-build replay with a non-empty-location CTAS error.
-    if (!spark.catalog.tableExists(t) && dirExists(t) && !isComplete(t))
-      path(t).getFileSystem(hconf).delete(path(t), true)
-    spark.catalog.tableExists(t)
-  }
+  private def healIndex(spark: SparkSession, t: String, buckets: Int): Boolean =
+    search.Swap.heal(spark, t,
+      search.InvertedIndex.registerIndex(spark, _, buckets))
 
   /** The pipeline's TEXT projections in their contractual order: mojibake
     * repair FIRST (analysis would strip the C1 evidence the latin-1
@@ -706,13 +670,11 @@ object Cli {
             val keyed = Corpus.withFileLineId(docs, "__id")
             val b = Corpus.withFileLineId(bench, "__bid")
             if (a.flags.contains("--rebuild-index"))
-              graft.queries.Tables.reset(spark, table, s"${table}__meta")
-            else
-              // a previous CLI invocation's index survives only as
-              // warehouse dirs — re-register before the existence check
-              try search.MinHashIndex.registerMinHashIndex(spark, table)
-              catch { case _: Exception => () }
-            if (!spark.catalog.tableExists(table)) {
+              search.Swap.drop(spark, table, s"${table}__meta")
+            // a previous CLI invocation's index survives only as
+            // warehouse dirs — re-register (and heal) before the
+            // existence check
+            if (!search.MinHashIndex.registerMinHashIndex(spark, table)) {
               search.MinHashIndex.writeMinHashIndex(keyed, "__id", "text",
                 table, uax29 = uax, force = true)
               System.err.println(s"minhash index signed into table $table")
@@ -1097,17 +1059,13 @@ object Cli {
           if (!df.where(col("id").isNotNull).isEmpty) (df, "id")
           else (Corpus.withFileLineId(df, "__id"), "__id")
         // the local in-memory catalog forgets managed tables across CLI
-        // invocations while the warehouse dir survives — re-register a
-        // stranded index before declaring it absent (metastore
+        // invocations while the warehouse dir survives — re-register (and
+        // heal) a stranded index before declaring it absent (metastore
         // deployments never hit this path)
         def ensureIndexTable(t: String, hint: String): Unit =
-          if (!spark.catalog.tableExists(t)) {
-            try search.InvertedIndex.registerIndex(spark, t,
-              intFlag("--buckets", 64))
-            catch { case _: Exception => sys.error(
-              s"index table '$t' does not exist — build it first with " +
-                s"`$hint` (same --buckets)") }
-          }
+          if (!healIndex(spark, t, intFlag("--buckets", 64))) sys.error(
+            s"index table '$t' does not exist — build it first with " +
+              s"`$hint` (same --buckets)")
         // every query flag delivered against one postings frame — shared
         // by the query branch, the post-refresh re-query, and --follow
         // (which passes its PINNED tokenizer/analyzer)
@@ -1216,7 +1174,7 @@ object Cli {
           val seen: Set[String] =
             readStateLines(fs, manifest).getOrElse(Nil).filter(_.nonEmpty).toSet
           val fresh = all.filterNot(seen)
-          val haveIndex = healIndexTable(spark, t, buckets)
+          val haveIndex = healIndex(spark, t, buckets)
           // the idmode pin is written the first time a NON-EMPTY batch is
           // indexed — an empty first shard extends the manifest without
           // building anything, and must not brick the state dir
@@ -1224,7 +1182,7 @@ object Cli {
               new org.apache.hadoop.fs.Path(stateDir, "idmode"))) sys.error(
             s"index --follow: manifest at $stateDir records ${seen.size} " +
               s"ingested shard(s) but no index survives under '$t' (checked " +
-              "live/__old/__compacting in " +
+              s"live, ${search.Swap.backup(t)} and ${search.Swap.staging(t)} in " +
               s"${spark.conf.get("spark.sql.warehouse.dir")}) — refusing to " +
               "start fresh over a manifest that would skip them; delete the " +
               "manifest to re-ingest from scratch")
@@ -1493,7 +1451,7 @@ object Cli {
               l.lift(1).foreach(b => require(b == s"buckets=$buckets",
                 s"ingest state at $stateDir pinned to $b, got buckets=$buckets"))
             }
-            val haveIndex = healIndexTable(spark, t, buckets)
+            val haveIndex = healIndex(spark, t, buckets)
             // no live index (first --table use, or the table was lost):
             // build over EVERY durable batch — the state dir retains the
             // whole clean corpus, so the index is always reconstructible
@@ -1787,7 +1745,7 @@ object Cli {
                   hashedIds = true), ranked = false)
               case _ =>
                 if (a.flags.contains("--force"))
-                  graft.queries.Tables.reset(spark, table, s"${table}__centroids")
+                  search.Swap.drop(spark, table, s"${table}__centroids")
                 search.AnnIndex.writeIvfIndex(emb, "id", "emb",
                   step = intFlag("--step", 100), table = table,
                   buckets = intFlag("--buckets", 16), hashedIds = true)

@@ -41,12 +41,16 @@ object GraftExtensions {
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     Sessions.tune(spark)
+    // a session that already resolves the functions got the rule too:
+    // injected at build (Sessions.local) or added by an earlier register
+    val installed = spark.sessionState.functionRegistry
+      .functionExists(FunctionIdentifier(functions.head._1))
     functions.foreach { case (name, usage, builder) =>
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), info(name, usage), builder)
     }
     // optimizer rules can't be injected post-build; experimental methods can
-    if (!spark.experimental.extraOptimizations.contains(IntersectSizeRewrite))
+    if (!installed)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ IntersectSizeRewrite
   }

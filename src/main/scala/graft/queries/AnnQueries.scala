@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.search.Swap
 
 /** Similarity search over the embeddings table: exact brute-force top-k
   * (oracle-checked) and threshold near-dup pairs; the IVF approximate path
@@ -41,7 +42,7 @@ object AnnQueries extends QueryPack {
     "ann_ivf_indexed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivf_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       StageTimer.start("ann_ivf_indexed")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true)
@@ -60,7 +61,7 @@ object AnnQueries extends QueryPack {
     "ann_ivf_filtered" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivf_fidx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true,
         keep = Seq("label"))
@@ -107,7 +108,7 @@ object AnnQueries extends QueryPack {
     "d_cluster_profile_indexed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_prof_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true)
       graft.search.AnnIndex.clusterProfileIndexed(s, table)
@@ -131,7 +132,7 @@ object AnnQueries extends QueryPack {
     "d_semantic_dedup_indexed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings").where(col("vec_id") % 2 === 0)
       val table = "ann_sem_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true)
       graft.search.AnnIndex.semanticDedupIndexed(s, table, threshold = 0.35)
@@ -186,7 +187,7 @@ object AnnQueries extends QueryPack {
     "ann_ivfpq_indexed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivfpq_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__codebook", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__codebook", s"${table}__meta")
       StageTimer.start("ann_ivfpq_indexed")
       graft.search.AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding",
         step = 50, m = 8, table = table, buckets = 8, codeStep = 50,
@@ -205,7 +206,7 @@ object AnnQueries extends QueryPack {
     "ann_ivfpq_rerank_indexed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivfpq_rridx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__codebook",
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__codebook",
         s"${table}__meta")
       graft.search.AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding",
         step = 50, m = 8, table = table, buckets = 8, codeStep = 50,
@@ -221,7 +222,7 @@ object AnnQueries extends QueryPack {
     "ann_ivfpq_filtered" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivfpq_fidx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__codebook",
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__codebook",
         s"${table}__meta")
       graft.search.AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding",
         step = 50, m = 8, table = table, buckets = 8, codeStep = 50,
@@ -247,7 +248,7 @@ object AnnQueries extends QueryPack {
     "ann_ivf_filtered_rare" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivf_ridx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true,
         keep = Seq("label"))
@@ -272,7 +273,7 @@ object AnnQueries extends QueryPack {
     "ann_ivf_upsert" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivf_uidx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       StageTimer.start("ann_ivf_upsert")
       graft.search.AnnIndex.writeIvfIndex(
         emb.where(col("vec_id") % 3 =!= 1), "vec_id", "embedding",
@@ -300,7 +301,7 @@ object AnnQueries extends QueryPack {
     "ann_stream_compact" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_stream_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       val tmp = java.nio.file.Files.createTempDirectory("ann_stream").toString
       StageTimer.start("ann_stream_compact")
       graft.search.AnnIndex.writeIvfIndex(
@@ -353,7 +354,7 @@ object AnnQueries extends QueryPack {
     "ann_ivfpq_upsert" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivfpq_uidx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__codebook",
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__codebook",
         s"${table}__meta")
       graft.search.AnnIndex.writeIvfPqIndex(
         emb.where(col("vec_id") % 3 =!= 1), "vec_id", "embedding",
@@ -375,7 +376,7 @@ object AnnQueries extends QueryPack {
     "ann_ivfpq_filtered_rare" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivfpq_ridx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__codebook",
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__codebook",
         s"${table}__meta")
       graft.search.AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding",
         step = 50, m = 8, table = table, buckets = 8, codeStep = 50,
@@ -400,7 +401,7 @@ object AnnQueries extends QueryPack {
     "ann_calibrate" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_cal_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true)
       // query sample OFF the centroid lattice (% 100 === 1, not 0):
@@ -425,7 +426,7 @@ object AnnQueries extends QueryPack {
     "ann_calibrate_widen" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_calw_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true,
         keep = Seq("label"))
@@ -480,9 +481,8 @@ object AnnQueries extends QueryPack {
       val emb = Tables(s, dir, "embeddings")
       val ti = "e40_text_idx"
       val vt = "e40_vec_idx"
-      Tables.reset(s, ti, s"${ti}__norms", s"${ti}__compacting",
-        s"${ti}__old")
-      Tables.reset(s, vt, s"${vt}__centroids", s"${vt}__meta")
+      Swap.drop(s, ti, s"${ti}__norms")
+      Swap.drop(s, vt, s"${vt}__centroids", s"${vt}__meta")
       InvertedIndex.writeIndex(
         InvertedIndex.postings(d, "doc_id", "text", uax29 = false),
         ti, buckets = 8, force = true)
@@ -524,7 +524,7 @@ object AnnQueries extends QueryPack {
     "d_cluster_sample_indexed" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_csamp_idx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__meta")
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50, table = table, buckets = 8, force = true)
       graft.search.AnnIndex.clusterBalancedSampleIndexed(s, table,
@@ -555,7 +555,7 @@ object AnnQueries extends QueryPack {
     "ann_recall_ivfpq_resid" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val table = "ann_ivfpq_residx"
-      Tables.reset(s, table, s"${table}__centroids", s"${table}__codebook",
+      Swap.drop(s, table, s"${table}__centroids", s"${table}__codebook",
         s"${table}__meta")
       graft.search.AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding",
         step = 50, m = 8, table = table, buckets = 8, codeStep = 50,

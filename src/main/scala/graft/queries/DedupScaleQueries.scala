@@ -184,7 +184,7 @@ object DedupScaleQueries extends QueryPack {
     "j16_decontaminate_indexed" -> ((s, dir) => {
       val d = docs(s, dir)
       val table = "j16_minhash_idx"
-      Tables.reset(s, table, s"${table}__meta")
+      graft.search.Swap.drop(s, table, s"${table}__meta")
       StageTimer.start("j16_decontaminate_indexed")
       graft.search.MinHashIndex.writeMinHashIndex(d, "doc_id", "text", table,
         w = W, k = K, bands = BANDS, md5Parity = true, buckets = 8,

@@ -23,18 +23,4 @@ trait QueryPack {
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Drop a fixture table AND its warehouse directory: the in-memory
-    * catalog forgets managed tables across JVM runs while the directory
-    * survives, so a bare DROP IF EXISTS no-ops and the next saveAsTable
-    * fails with LOCATION_ALREADY_EXISTS.
-    */
-  def reset(spark: SparkSession, tables: String*): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
 }

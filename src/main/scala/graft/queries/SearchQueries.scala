@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.search.Searcher
+import graft.search.{Searcher, Swap}
 
 /** ES search surface (SURVEY §2.7 E1-E4, E6 is in EventQueries; §2.3 A12).
   * Spark side goes through the PhraseMatch custom expression (slop-aware);
@@ -254,7 +254,7 @@ object SearchQueries extends QueryPack {
       import graft.search.InvertedIndex
       val d = Tables(s, dir, "documents")
       val table = "e18_stream_idx"
-      resetIndexTable(s, table)
+      Swap.drop(s, table, s"${table}__norms")
       val tmp = java.nio.file.Files.createTempDirectory("e18_stream").toString
       StageTimer.start("e18_stream_compact")
       InvertedIndex.writeIndex(
@@ -294,7 +294,7 @@ object SearchQueries extends QueryPack {
       import graft.search.InvertedIndex
       val d = Tables(s, dir, "documents")
       val table = "e19_refresh_idx"
-      resetIndexTable(s, table)
+      Swap.drop(s, table, s"${table}__norms")
       val old = d.where(col("doc_id") % 11 =!= 0).select("doc_id", "text")
       val nw = d.where(col("doc_id") % 13 =!= 0)
         .select(col("doc_id"),
@@ -508,21 +508,6 @@ object SearchQueries extends QueryPack {
         .orderBy("phrase")
     })
   )
-
-  /** Drop an index table's catalog entries AND stale warehouse
-    * directories: the in-memory catalog forgets managed tables across
-    * JVMs but their location survives, and CREATE refuses an existing
-    * location. Covers the live name plus the compaction-swap aliases.
-    */
-  private def resetIndexTable(s: SparkSession, table: String): Unit =
-    Seq(table, s"${table}__compacting", s"${table}__old",
-        s"${table}__norms").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS `$t`")
-      val p = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
 
   private def padHit(phrase: String): String =
     s"contains(' ' || text || ' ', ' $phrase ')"

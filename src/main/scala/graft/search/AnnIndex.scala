@@ -50,20 +50,17 @@ object AnnIndex {
     */
   private[graft] val PartCol = "pbucket"
 
-  /** Resolved filesystem location of a cataloged table (NOT assumed to
-    * be `warehouse/<name>` — a re-registered external index lives where
-    * its debris was found).
+  /** The live table of a per-list index. Tables written before the
+    * per-list layout carry no [[PartCol]] and are not maintained or
+    * queried any more.
     */
-  private def tableLoc(spark: SparkSession,
-                       name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)).location)
-
-  private def warehousePath(spark: SparkSession,
-                            name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name)
+  private def perListTable(spark: SparkSession, table: String): DataFrame = {
+    val live = spark.table(table)
+    require(live.columns.contains(PartCol), s"$table predates the per-list " +
+      s"($PartCol-partitioned) ANN layout — rebuild it with " +
+      "writeIvfIndex/writeIvfPqIndex")
+    live
+  }
 
   /** The persisted-layout writer shared by both tiers' builds, the
     * balance-guard rewrites, and the maintenance fold's staging write:
@@ -202,15 +199,11 @@ object AnnIndex {
     * the list is bounded by |queries| × nprobe by construction.
     */
   private def prunedIndex(spark: SparkSession, table: String,
-                          probeBuckets: Array[Long]): DataFrame = {
-    val idx = spark.table(table).where(col("bucket").isin(probeBuckets: _*))
-    // per-list layout: the same literal list prunes PARTITION directories
-    // (the probed lists are the only paths listed/read); legacy bucketed-
-    // only tables skip the clause and keep their file-bucket pruning
-    if (idx.columns.contains(PartCol))
-      idx.where(col(PartCol).isin(probeBuckets: _*))
-    else idx
-  }
+                          probeBuckets: Array[Long]): DataFrame =
+    // the same literal list prunes PARTITION directories: the probed
+    // lists are the only paths listed/read
+    perListTable(spark, table).where(col("bucket").isin(probeBuckets: _*))
+      .where(col(PartCol).isin(probeBuckets: _*))
 
   /** Per-query top-k over (query_id, id, cos) candidates — self-match
     * excluded upstream; ties break neighbor-id-ascending, cos round(4)
@@ -334,8 +327,8 @@ object AnnIndex {
     * than stale (silent mismatch).
     */
   private def dropSideTables(spark: SparkSession, table: String): Unit =
-    Seq("__meta", "__centroids", "__codebook").foreach(suffix =>
-      InvertedIndex.dropTableAndDir(spark, table + suffix))
+    Swap.drop(spark, Seq("__meta", "__centroids", "__codebook")
+      .map(table + _): _*)
 
   // ---- build ----
 
@@ -535,7 +528,7 @@ object AnnIndex {
           // because requireQueryDim tolerates a missing __meta (pre-meta
           // indices) and the query path never reads it otherwise, that
           // index would be silently QUERYABLE and wrong, not unfinished.
-          InvertedIndex.dropTableAndDir(spark, s"${table}__centroids")
+          Swap.drop(spark, s"${table}__centroids")
           writeIndexRows(assignUnit(b, cents2, keep), buckets, table,
             SaveMode.Overwrite)
           cents2.write.mode(SaveMode.Overwrite).format("parquet")
@@ -763,9 +756,8 @@ object AnnIndex {
           // stale sample against refined buckets. Residual mode also
           // drops __codebook here — its contents are assignment-coupled
           // and about to be retrained (see the guard comment above).
-          InvertedIndex.dropTableAndDir(spark, s"${table}__centroids")
-          if (encodeResidual)
-            InvertedIndex.dropTableAndDir(spark, s"${table}__codebook")
+          Swap.drop(spark, s"${table}__centroids")
+          if (encodeResidual) Swap.drop(spark, s"${table}__codebook")
           val reassigned = Similarity.assignWithCentroidFrame(
             assigned.select(col(idCol).as("id") +: col("bv") +:
               keep.map(col): _*),
@@ -814,56 +806,14 @@ object AnnIndex {
 
   /** Re-register a saved ANN index whose catalog entries were lost (the
     * in-memory catalog forgets managed tables across JVM restarts while
-    * the warehouse directories survive) — the [[InvertedIndex.registerIndex]]
-    * recipe for this tier. The bucket count comes from the index's own
-    * `__meta` table (registered first), NOT a caller flag — a wrong count
-    * would silently break file-bucket pruning and lose neighbors.
-    * A metastore deployment never needs this.
+    * the warehouse directories survive), healing any crashed maintenance
+    * on the way ([[recoverIvfIndex]]); fails when no completed index
+    * survives under `table`. A metastore deployment never needs this.
     */
-  def registerIvfIndex(spark: SparkSession, table: String): Unit = {
-    def loc(name: String) = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name).toString
-    def registerPlain(name: String): Unit =
-      if (!spark.catalog.tableExists(name)) {
-        val schema = spark.read.parquet(loc(name)).schema.toDDL
-        spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-          s"LOCATION '${loc(name)}'")
-      }
-    registerPlain(s"${table}__meta")
-    val buckets = spark.table(s"${table}__meta").head().getAs[Int]("buckets")
-    if (!spark.catalog.tableExists(table)) {
-      val inferred = spark.read.parquet(loc(table)).schema
-      if (inferred.fieldNames.contains(PartCol)) {
-        // per-list layout: the partition column's type must be pinned to
-        // BIGINT explicitly — directory-name inference types small values
-        // INT, and an INT pbucket under LONG probe literals would wrap
-        // every partition filter in a Cast (and unionByName maintenance
-        // frames in a coercion)
-        val schema = org.apache.spark.sql.types.StructType(
-          inferred.filterNot(_.name == PartCol) :+
-            org.apache.spark.sql.types.StructField(PartCol,
-              org.apache.spark.sql.types.LongType)).toDDL
-        spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +
-          s"PARTITIONED BY ($PartCol) " +
-          s"CLUSTERED BY (bucket) SORTED BY (bucket) INTO $buckets BUCKETS " +
-          s"LOCATION '${loc(table)}'")
-        // a freshly created partitioned catalog table has NO partition
-        // entries — without recovery every read returns empty
-        spark.catalog.recoverPartitions(table)
-      } else {
-        val schema = inferred.toDDL
-        spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +
-          s"CLUSTERED BY (bucket) SORTED BY (bucket) INTO $buckets BUCKETS " +
-          s"LOCATION '${loc(table)}'")
-      }
-    }
-    registerPlain(s"${table}__centroids")
-    val cb = s"${table}__codebook"
-    if (new org.apache.hadoop.fs.Path(loc(cb))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(loc(cb))))
-      registerPlain(cb)
-  }
+  def registerIvfIndex(spark: SparkSession, table: String): Unit =
+    require(recoverIvfIndex(spark, table),
+      s"no completed IVF index survives under '$table' (its __meta or " +
+        "live table is missing) — build it with writeIvfIndex/writeIvfPqIndex")
 
   // ---- maintenance ----
 
@@ -1202,17 +1152,16 @@ object AnnIndex {
     * touches are rewritten — live∩touched ∪ appends lands in a staging
     * table (one shuffle of the TOUCHED rows, never the table) and each
     * staged partition directory is swapped in rename-aside
-    * ([[finishPartitionSwap]]). Maintenance cost therefore scales with
+    * ([[Swap.replaceParts]]). Maintenance cost therefore scales with
     * the batch's bucket footprint, not the table: absorbing 2k arrivals
     * into 1e9 rows rewrites the 2k arrivals' lists. The centroid side
-    * table is untouched (appends were assigned against it). Legacy
-    * (pre-per-list) tables keep the old whole-table swap.
+    * table is untouched (appends were assigned against it).
     *
     * Crash contract: the live TABLE never moves. Renames begin only
     * after the staging write commits, so any crash before that leaves
     * live whole (heal rolls the staging debris back — the batch did NOT
     * land); a crash mid-renames leaves every touched list available in
-    * exactly one of live/staging and [[recoverPartitionSwap]] rolls
+    * exactly one of live/staging and [[Swap.heal]] rolls
     * FORWARD (staging is the newer version of every directory it still
     * holds — the batch DID land). The heal always converges the
     * in-flight fold, but compact itself is APPEND-ONLY: a caller that
@@ -1233,16 +1182,8 @@ object AnnIndex {
     require(buckets == -1 || buckets == metaBuckets,
       s"compactIvfIndex: buckets=$buckets but $table was built with " +
         s"$metaBuckets (recorded in ${table}__meta) — omit the parameter")
-    if (!spark.table(table).columns.contains(PartCol)) {
-      // legacy bucketed-only layout: whole-table rename-aside swap
-      InvertedIndex.swapTable(spark, table)((live, staging) =>
-        live.unionByName(appends)
-          .write.mode(SaveMode.ErrorIfExists).format("parquet")
-          .bucketBy(metaBuckets, "bucket").sortBy("bucket")
-          .saveAsTable(staging))
-      return
-    }
-    recoverPartitionSwap(spark, table) // heal any prior half-swap first
+    Swap.heal(spark, table) // heal any prior half-swap first
+    val live = perListTable(spark, table)
     // checkpoint: the appends frame feeds both the touched-list collect
     // and the staging write (batch-sized by contract)
     val appendsP = appends.withColumn(PartCol, col("bucket"))
@@ -1250,11 +1191,9 @@ object AnnIndex {
     try {
       val touched = appendsP.select(col(PartCol)).distinct().collect()
         .map(r => if (r.isNullAt(0)) null else r.getLong(0))
-      val merged = spark.table(table)
-        .where(touchedCond(touched))
-        .unionByName(appendsP)
-      foldTouchedPartitions(spark, table, merged, metaBuckets,
-        touched.toSeq)
+      val merged = live.where(touchedCond(touched)).unionByName(appendsP)
+      Swap.replaceParts(spark, table, touched.toSeq)(
+        writeIndexRows(merged, metaBuckets, _, SaveMode.ErrorIfExists))
     } finally
       org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(appendsP)
   }
@@ -1295,19 +1234,9 @@ object AnnIndex {
       .localCheckpoint(eager = true)
     try {
       val incoming = appends.select(col("id")).distinct()
-      if (!spark.table(table).columns.contains(PartCol)) {
-        // legacy layout: whole-table swap
-        InvertedIndex.swapTable(spark, table)((live, staging) =>
-          live.join(broadcast(incoming), Seq("id"), "left_anti")
-            .unionByName(appends)
-            .write.mode(SaveMode.ErrorIfExists).format("parquet")
-            .bucketBy(buckets, "bucket").sortBy("bucket")
-            .saveAsTable(staging))
-        return
-      }
-      recoverPartitionSwap(spark, table)
+      Swap.heal(spark, table)
       val appendsP = appends.withColumn(PartCol, col("bucket"))
-      val live = spark.table(table)
+      val live = perListTable(spark, table)
       // lists holding rows the batch REPLACES (id column + partition
       // value only — column-pruned, output bounded by the batch) UNIONED
       // with the lists receiving new rows: ONE distinct-collect job where
@@ -1321,231 +1250,27 @@ object AnnIndex {
       val merged = live.where(touchedCond(touched))
         .join(broadcast(incoming), Seq("id"), "left_anti")
         .unionByName(appendsP)
-      foldTouchedPartitions(spark, table, merged, buckets, touched.toSeq)
+      Swap.replaceParts(spark, table, touched.toSeq)(
+        writeIndexRows(merged, buckets, _, SaveMode.ErrorIfExists))
     } finally
       org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(appends)
   }
 
-  /** Write the touched partitions' replacement rows to the staging table
-    * and swap them in. Staging is a full table write (ErrorIfExists —
-    * debris was healed by the caller) but sized by the TOUCHED lists.
-    *
-    * `touched` closes the DRAINED-list hole: a touched partition whose
-    * replacement row set is EMPTY (an upsert anti-join removed every
-    * live row and the new rows landed elsewhere) writes no staging
-    * directory, and the rename pass — which iterates staging — would
-    * leave the stale live directory in place (replaced ids surviving
-    * next to their new rows). Every touched partition therefore gets a
-    * staging directory, an empty one if the write produced none: the
-    * swap then supersedes the stale live dir with zero files (an empty
-    * partition reads as zero rows and its catalog entry stays valid),
-    * and the heal needs no special case. One window remains: a crash
-    * between the staging commit and the empty-dir creation rolls
-    * forward WITHOUT the drained list's supersede — covered by the
-    * upsert replay contract (the id probe re-detects the stale rows and
-    * the retry drains them; only upsert can drain, and upsert replay is
-    * idempotent).
-    */
-  private def foldTouchedPartitions(spark: SparkSession, table: String,
-                                    merged: DataFrame, buckets: Int,
-                                    touched: Seq[Any]): Unit = {
-    val staging = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-    InvertedIndex.deleteIfUncataloged(spark, staging)
-    writeIndexRows(merged, buckets, staging, SaveMode.ErrorIfExists)
-    val stagingLoc = tableLoc(spark, staging)
-    val fs = stagingLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach { t =>
-      val dir = new org.apache.hadoop.fs.Path(stagingLoc,
-        PartCol + "=" + (if (t == null) "__HIVE_DEFAULT_PARTITION__"
-          else t.toString))
-      if (!fs.exists(dir)) fs.mkdirs(dir)
-    }
-    finishPartitionSwap(spark, table)
-  }
-
-  /** The rename half of the bucket-local fold, shared with the heal's
-    * roll-forward: every `pbucket=` directory still under the staging
-    * table moves into the live table's location, the superseded live
-    * directory (if any) moving aside to `<table>__old/` first. Only
-    * called when the staging write is COMPLETE (catalog entry or
-    * _SUCCESS), so staging is the newer version of every directory it
-    * holds — re-running after a crash converges (already-moved
-    * directories are simply no longer in staging). Lists the live table
-    * had no directory for yet (arrivals into a previously-empty bucket)
-    * are registered with the catalog afterwards; existing partitions
-    * keep their locations, so only a refresh is needed.
-    */
-  private def finishPartitionSwap(spark: SparkSession, table: String): Unit = {
-    val staging = table + "__compacting"
-    val backup = table + "__old"
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagingLoc =
-      if (spark.catalog.tableExists(staging)) tableLoc(spark, staging)
-      else warehousePath(spark, staging)
-    val liveLoc = tableLoc(spark, table)
-    val fs = stagingLoc.getFileSystem(hconf)
-    val backupLoc = warehousePath(spark, backup)
-    var newParts = false
-    val partDirs =
-      if (fs.exists(stagingLoc))
-        fs.listStatus(stagingLoc).filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(PartCol + "="))
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    if (partDirs.nonEmpty && !fs.exists(backupLoc)) fs.mkdirs(backupLoc)
-    partDirs.foreach { p =>
-      val name = p.getPath.getName
-      val livePart = new org.apache.hadoop.fs.Path(liveLoc, name)
-      if (fs.exists(livePart)) {
-        if (!fs.rename(livePart,
-            new org.apache.hadoop.fs.Path(backupLoc, name)))
-          sys.error(s"compactIvfIndex: could not move $livePart aside")
-      } else newParts = true
-      if (!fs.rename(p.getPath, livePart))
-        sys.error(s"compactIvfIndex: could not move $name into $table")
-    }
-    spark.catalog.refreshTable(table)
-    // partitions the live table lacked are invisible to the catalog's
-    // partition listing until registered — recover re-lists the tree
-    // and ADDS missing entries (touched only when the batch opened a
-    // previously-empty list, so the listing cost is off the hot path)
-    if (newParts) spark.catalog.recoverPartitions(table)
-    spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-    InvertedIndex.deleteIfUncataloged(spark, staging)
-    if (fs.exists(backupLoc)) fs.delete(backupLoc, true)
-  }
-
-  /** Heal a crashed bucket-local fold — idempotent, safe any time. The
-    * live table never moves in this protocol, so recovery is decided by
-    * the STAGING state alone: a COMPLETE staging write (catalog entry,
-    * or a directory with _SUCCESS) rolls FORWARD — finish the renames;
-    * an incomplete one rolls BACK — delete the debris, live is whole
-    * (renames only start after the staging commit). `<table>__old`
-    * holds superseded copies only and is cleared either way. After a
-    * roll-forward the moved-before-crash partition set is unknown, so
-    * the catalog's partition list is recovered from the tree.
-    */
-  private[graft] def recoverPartitionSwap(spark: SparkSession,
-                                          table: String): Unit = {
-    if (!spark.catalog.tableExists(table)) return
-    val staging = table + "__compacting"
-    val backup = table + "__old"
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagingLoc =
-      if (spark.catalog.tableExists(staging)) tableLoc(spark, staging)
-      else warehousePath(spark, staging)
-    val fs = stagingLoc.getFileSystem(hconf)
-    val stagingThere = spark.catalog.tableExists(staging) ||
-      fs.exists(stagingLoc)
-    if (stagingThere) {
-      val complete = spark.catalog.tableExists(staging) ||
-        fs.exists(new org.apache.hadoop.fs.Path(stagingLoc, "_SUCCESS"))
-      val hasPartDirs = fs.exists(stagingLoc) &&
-        fs.listStatus(stagingLoc).exists(s => s.isDirectory &&
-          s.getPath.getName.startsWith(PartCol + "="))
-      val backupThere = !spark.catalog.tableExists(backup) &&
-        fs.exists(warehousePath(spark, backup))
-      if (complete && (hasPartDirs || backupThere)) {
-        finishPartitionSwap(spark, table)
-        spark.catalog.recoverPartitions(table)
-        spark.catalog.refreshTable(table)
-      } else {
-        // incomplete staging write (or a complete one never swapped and
-        // holding nothing) — roll back; live was never touched
-        spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-        if (fs.exists(stagingLoc)) fs.delete(stagingLoc, true)
-      }
-    }
-    // leftover backup dir from a crash after all renames: superseded
-    // copies only — but never delete it out from under a catalog entry
-    if (!spark.catalog.tableExists(backup)) {
-      val b = warehousePath(spark, backup)
-      if (fs.exists(b)) fs.delete(b, true)
-    }
-  }
-
-  /** Heal ANN-index crash state across JVM restarts — re-register
-    * stranded side tables, then recover a half-finished swap exactly like
-    * the text index's heal (live absent + __compacting/__old dirs →
-    * finish or roll back the rename). `__meta` anchors the bucket count;
-    * without it nothing is recoverable (it is written once at build and
-    * never swapped). Returns whether a live index exists after recovery.
+  /** Heal ANN-index crash state, in this JVM or after a restart: the
+    * side tables (`__meta`, `__centroids`, `__codebook`) are re-registered
+    * if stranded, then [[Swap.heal]] recovers the live table. `__meta`
+    * anchors the bucket count; without it nothing is recoverable (it is
+    * written once at build and never swapped), and it is read only when
+    * a table actually needs re-registering. Returns whether a live index
+    * exists after recovery.
     */
   def recoverIvfIndex(spark: SparkSession, table: String): Boolean = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    def loc(name: String) = new org.apache.hadoop.fs.Path(warehouse, name)
-    def dirExists(name: String): Boolean =
-      loc(name).getFileSystem(hconf).exists(loc(name))
-    def isComplete(name: String): Boolean = {
-      val s = new org.apache.hadoop.fs.Path(loc(name), "_SUCCESS")
-      s.getFileSystem(hconf).exists(s)
-    }
-    // registerIvfIndex throws at the (absent) live-table read BEFORE
-    // reaching the later side tables, so register each side table
-    // independently — the heal below needs __centroids regardless of the
-    // main table's state (a half-written dir has no footers, hence Try)
-    def registerPlain(name: String): Unit =
-      if (!spark.catalog.tableExists(name) && dirExists(name))
-        scala.util.Try {
-          val schema = spark.read.parquet(loc(name).toString).schema.toDDL
-          spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-            s"LOCATION '${loc(name)}'")
-        }
-    registerPlain(s"${table}__meta")
-    if (!spark.catalog.tableExists(s"${table}__meta")) return false
-    registerPlain(s"${table}__centroids")
-    registerPlain(s"${table}__codebook")
-    val buckets = spark.table(s"${table}__meta").head().getAs[Int]("buckets")
-    def registerBucketed(name: String): Unit =
-      if (!spark.catalog.tableExists(name) && dirExists(name))
-        scala.util.Try {
-          val inferred = spark.read.parquet(loc(name).toString).schema
-          if (inferred.fieldNames.contains(PartCol)) {
-            // per-list layout: same pinned-BIGINT partition DDL as
-            // [[registerIvfIndex]], partitions recovered from the tree
-            val schema = org.apache.spark.sql.types.StructType(
-              inferred.filterNot(_.name == PartCol) :+
-                org.apache.spark.sql.types.StructField(PartCol,
-                  org.apache.spark.sql.types.LongType)).toDDL
-            spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-              s"PARTITIONED BY ($PartCol) " +
-              s"CLUSTERED BY (bucket) SORTED BY (bucket) " +
-              s"INTO $buckets BUCKETS LOCATION '${loc(name)}'")
-            spark.catalog.recoverPartitions(name)
-          } else {
-            val schema = inferred.toDDL
-            spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-              s"CLUSTERED BY (bucket) SORTED BY (bucket) " +
-              s"INTO $buckets BUCKETS LOCATION '${loc(name)}'")
-          }
-        }
-    registerBucketed(table)
-    if (!spark.catalog.tableExists(table)) {
-      registerBucketed(table + "__old")
-      // _SUCCESS proves the staging CTAS completed — without it the dir
-      // may be half-written and recovery must roll back to __old
-      if (dirExists(table + "__compacting") &&
-          isComplete(table + "__compacting"))
-        registerBucketed(table + "__compacting")
-      InvertedIndex.recoverCompaction(spark, table)
-    }
-    // a table healed from a debris-named dir must be moved home before
-    // the next swap clears that name (see normalizeTableLocation)
-    InvertedIndex.normalizeTableLocation(spark, table)
-    // nothing healed but a live-named dir without _SUCCESS remains: a
-    // half-written first-build CTAS that would block every replay with a
-    // non-empty-location error (see the text-index heal)
-    if (!spark.catalog.tableExists(table) && dirExists(table) &&
-        !isComplete(table))
-      loc(table).getFileSystem(hconf).delete(loc(table), true)
-    // bucket-local fold debris (per-list layout): the live table exists
-    // throughout that protocol, so its heal runs AFTER registration —
-    // roll a complete staging forward, an incomplete one back
-    if (spark.catalog.tableExists(table) &&
-        spark.table(table).columns.contains(PartCol))
-      recoverPartitionSwap(spark, table)
-    spark.catalog.tableExists(table)
+    val meta = s"${table}__meta"
+    Seq(meta, s"${table}__centroids", s"${table}__codebook")
+      .foreach(n => Swap.heal(spark, n, Swap.register(spark, _, None)))
+    lazy val buckets = spark.table(meta).head().getAs[Int]("buckets")
+    spark.catalog.tableExists(meta) &&
+      Swap.heal(spark, table, Swap.register(spark, _, Some("bucket" -> buckets)))
   }
 
   // ---- calibration ----

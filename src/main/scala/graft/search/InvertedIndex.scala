@@ -102,7 +102,7 @@ object InvertedIndex {
     */
   def writeIndex(postings: DataFrame, table: String, buckets: Int,
                  force: Boolean = false): Unit = {
-    if (force) dropNorms(postings.sparkSession, table)
+    if (force) Swap.drop(postings.sparkSession, s"${table}__norms")
     postings.write.mode(if (force) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .format("parquet")
       .bucketBy(buckets, "term")
@@ -127,14 +127,8 @@ object InvertedIndex {
     * deployment (production) never needs this.
     */
   def registerIndex(spark: SparkSession, table: String, buckets: Int,
-                    location: Option[String] = None): Unit = {
-    val loc = location.getOrElse(new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table).toString)
-    val schema = spark.read.parquet(loc).schema.toDDL
-    spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +
-      s"CLUSTERED BY (term) SORTED BY (term) INTO $buckets BUCKETS " +
-      s"LOCATION '$loc'")
-  }
+                    location: Option[String] = None): Unit =
+    Swap.register(spark, table, Some("term" -> buckets), location)
 
   /** Fold streaming appends back into the bucketed layout: the query
     * surface stays correct reading `table ∪ appends` directly, but after
@@ -148,15 +142,10 @@ object InvertedIndex {
     * InvertedIndexSpec) and the caller can delete the consumed append
     * files.
     *
-    * The swap is rename-aside, never drop-then-rename: live →
-    * `table__old`, staging → live, drop `table__old`. Both renames are
-    * metadata-only, so the table-absent window shrinks to a single
-    * catalog op, and a crash at ANY point leaves a recoverable state —
-    * the index data survives under one of the three names.
-    * [[recoverCompaction]] (also run on entry here) heals a half-finished
-    * swap: live absent + staging present → finish the rename; live absent
-    * + only backup present → roll back; live present + backup present →
-    * drop the leftover backup.
+    * The swap is [[Swap.replaceTable]]'s rename-aside, never
+    * drop-then-rename: a crash at ANY point leaves the index data under
+    * one of live/staging/backup, and [[Swap.heal]] (also run on entry
+    * here) finishes or rolls back a half-finished swap.
     */
   def compactIndex(spark: SparkSession, table: String, appends: DataFrame,
                    buckets: Int): Unit =
@@ -246,137 +235,10 @@ object InvertedIndex {
       val (p, fs) = normsSidePath(spark, table)
       fs.exists(p)
     }
-    if (hadNorms) dropNorms(spark, table)
-    swapTable(spark, table)((live, staging) =>
+    if (hadNorms) Swap.drop(spark, s"${table}__norms")
+    Swap.replaceTable(spark, table)((live, staging) =>
       writeIndex(build(live), staging, buckets))
     if (hadNorms) persistNorms(spark, table)
-  }
-
-  /** The crash-safe rename-aside swap, independent of the staging table's
-    * layout: heal any half-finished prior swap, let `writeStaging` write
-    * the replacement under `<table>__compacting`, then live → `__old`,
-    * staging → live, drop `__old`. Shared by the text index's compaction
-    * and refresh and by [[AnnIndex.compactIvfIndex]].
-    */
-  private[search] def swapTable(spark: SparkSession, table: String)
-      (writeStaging: (DataFrame, String) => Unit): Unit = {
-    val staging = table + "__compacting"
-    val backup = table + "__old"
-    recoverCompaction(spark, table) // heal any half-finished prior swap
-    spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-    // a staging DIRECTORY with no catalog entry is debris from a crashed
-    // run in a previous JVM (the in-memory catalog forgot it); clear it or
-    // the managed staging write fails with LOCATION_ALREADY_EXISTS
-    deleteIfUncataloged(spark, staging)
-    writeStaging(spark.table(table), staging)
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$backup`")
-    // an EXTERNAL live table (e.g. re-registered by [[registerIndex]] over
-    // a stranded warehouse dir) keeps its directory on rename, which would
-    // block the managed staging table from taking the name+location. The
-    // staging table already holds the complete new index, so the
-    // superseded files are safe to clear (recovery from any later crash
-    // goes through staging).
-    if (!spark.catalog.tableExists(table)) deleteIfUncataloged(spark, table)
-    spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$backup`")
-    // an EXTERNAL backup (a recovered index re-registered over
-    // `warehouse/<backup>`) keeps its files on DROP; clear them so a
-    // LATER crash recovery can't resurrect a stale index from the debris
-    deleteIfUncataloged(spark, backup)
-  }
-
-  /** Re-home a healed EXTERNAL table whose data sits in a swap-debris
-    * directory (`warehouse/<t>__old` or `warehouse/<t>__compacting`,
-    * where cross-JVM recovery re-registers it): [[swapTable]] treats
-    * those NAMES as clearable debris, so a healed table left there would
-    * have its data deleted by the very next upsert. Moves the files to
-    * `warehouse/<t>` and re-creates the catalog entry with the original
-    * schema and bucket spec. No-op when the location is already
-    * canonical. Callers run this at heal time, before any reader exists.
-    */
-  private[graft] def normalizeTableLocation(spark: SparkSession, table: String): Unit = {
-    if (!spark.catalog.tableExists(table)) return
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val canonicalP = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = canonicalP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.makeQualified(canonicalP).toUri == meta.location) return
-    val srcP = new org.apache.hadoop.fs.Path(meta.location)
-    spark.sql(s"DROP TABLE `$table`") // external: files stay at srcP
-    // the canonical dir can only be uncataloged debris here — the table
-    // we just dropped was the name's sole claimant and pointed elsewhere
-    if (fs.exists(canonicalP)) fs.delete(canonicalP, true)
-    if (!fs.rename(srcP, canonicalP)) sys.error(
-      s"normalizeTableLocation: could not move $srcP to $canonicalP")
-    val bucketClause = meta.bucketSpec.map { bs =>
-      val cols = bs.bucketColumnNames.map(c => s"`$c`").mkString(", ")
-      val sorted =
-        if (bs.sortColumnNames.isEmpty) ""
-        else s"SORTED BY (${bs.sortColumnNames.map(c => s"`$c`").mkString(", ")}) "
-      s"CLUSTERED BY ($cols) ${sorted}INTO ${bs.numBuckets} BUCKETS "
-    }.getOrElse("")
-    spark.sql(s"CREATE TABLE `$table` (${meta.schema.toDDL}) USING parquet " +
-      s"$bucketClause LOCATION '$canonicalP'")
-  }
-
-  /** Delete `warehouse/<name>` iff no catalog entry claims the name — the
-    * in-memory catalog is the source of truth, so such a directory is
-    * either swap debris from a crashed prior JVM or a superseded external
-    * location; never touches a cataloged table's data.
-    */
-  private[search] def deleteIfUncataloged(spark: SparkSession, name: String): Unit =
-    if (!spark.catalog.tableExists(name)) {
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-
-  /** Recovery half of [[compactIndex]]'s rename-aside swap — idempotent,
-    * safe to run any time. If a compaction crashed mid-swap, the live
-    * name may be vacant while the data sits under `table__compacting`
-    * (preferred: it holds the NEWER, fully-written compacted postings —
-    * the staging→live rename only runs after [[writeIndex]] returned) or
-    * `table__old` (roll back to the pre-compaction index, still fully
-    * correct for queries — the appends remain queryable as
-    * `table ∪ appends`). A leftover backup next to a healthy live table
-    * is simply dropped.
-    */
-  def recoverCompaction(spark: SparkSession, table: String): Unit = {
-    val staging = table + "__compacting"
-    val backup = table + "__old"
-    val cat = spark.catalog
-    if (!cat.tableExists(table)) {
-      if (cat.tableExists(staging)) {
-        // staging in the catalog + live absent ⇒ the swap got past the
-        // live→backup rename, so any files still under the live name are
-        // a superseded EXTERNAL backup's (its directory does not move on
-        // rename) — clear them or the staging rename cannot take the
-        // location. A stranded-but-valid index (catalog lost, files
-        // present) never reaches here: staging would be absent too.
-        deleteIfUncataloged(spark, table)
-        spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
-      } else if (cat.tableExists(backup))
-        spark.sql(s"ALTER TABLE `$backup` RENAME TO `$table`")
-    }
-    if (cat.tableExists(table) && cat.tableExists(backup))
-      spark.sql(s"DROP TABLE `$backup`")
-    // external-backup debris (see swapTable) — but ONLY when a live
-    // catalog entry proves the backup dir is superseded, and never when
-    // the live table ITSELF points there (an external backup recovered by
-    // rename keeps `warehouse/<backup>` as its location); in a fresh JVM
-    // with nothing cataloged that dir may be the sole surviving index,
-    // waiting for the caller to re-register it
-    if (cat.tableExists(table)) {
-      val liveLoc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-      val bp = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), backup)
-      val bq = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(bp).toUri
-      if (bq != liveLoc) deleteIfUncataloged(spark, backup)
-    }
   }
 
   /** Per-term document frequency and total term frequency — the ES
@@ -729,8 +591,7 @@ object InvertedIndex {
     */
   private def normsSidePath(spark: SparkSession, table: String)
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
-    val p = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"${table}__norms")
+    val p = Swap.dir(spark, s"${table}__norms")
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
@@ -745,30 +606,6 @@ object InvertedIndex {
     }
     corpusNormsFromPostings(spark.table(table))
       .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(nt)
-  }
-
-  /** Drop a managed table AND its warehouse directory — the in-memory
-    * catalog can have forgotten a dir that would otherwise resurrect
-    * stale state after a JVM restart. The directory is the catalog's
-    * LOWERCASED form of the name (Spark lowercases managed-table
-    * identifiers; a verbatim mixed-case delete would miss the real dir
-    * and leave exactly the stale state this helper exists to remove).
-    * Shared by every force-rebuild path that retires side tables.
-    */
-  private[search] def dropTableAndDir(spark: SparkSession,
-                                      name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val p = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      name.toLowerCase(java.util.Locale.ROOT))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def dropNorms(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `${table}__norms`")
-    val (p, fs) = normsSidePath(spark, table)
-    if (fs.exists(p)) fs.delete(p, true)
   }
 
   /** The norms row for a SAVED index: the persisted `<table>__norms` when

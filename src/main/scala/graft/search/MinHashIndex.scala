@@ -63,7 +63,7 @@ object MinHashIndex {
     // never a new-band index silently queried under the OLD parameters,
     // which would sign every benchmark into keys that match nothing.
     // Re-running the same build converges.
-    if (force) InvertedIndex.dropTableAndDir(spark, s"${table}__meta")
+    if (force) Swap.drop(spark, s"${table}__meta")
     MinHash.bandRows(sig, k, bands)
       .write.mode(if (force) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .format("parquet").bucketBy(buckets, "band_key").sortBy("band_key")
@@ -94,38 +94,28 @@ object MinHashIndex {
         p.md5Parity, p.uax29), p.k, p.bands)
 
   /** Fold accumulated appends back into the bucketed layout via the
-    * shared crash-safe rename-aside swap ([[InvertedIndex.swapTable]]).
+    * shared crash-safe rename-aside swap ([[Swap.replaceTable]]).
     */
   def compactMinHashIndex(spark: SparkSession, table: String,
                           appends: DataFrame): Unit = {
     val buckets = params(spark, table).buckets
-    InvertedIndex.swapTable(spark, table)((live, staging) =>
+    Swap.replaceTable(spark, table)((live, staging) =>
       live.unionByName(appends)
         .write.mode(SaveMode.ErrorIfExists).format("parquet")
         .bucketBy(buckets, "band_key").sortBy("band_key")
         .saveAsTable(staging))
   }
 
-  /** Re-register a saved index across JVM restarts (in-memory catalog):
-    * meta first, then the band table with the bucket spec read from meta —
+  /** Re-register a saved index across JVM restarts (in-memory catalog)
+    * and heal a crashed compaction: meta first, then the band table with
+    * the bucket spec read from meta (only when it needs re-registering) —
     * a wrong bucket count would silently break file-bucket pruning.
+    * Returns whether a complete index (meta and band table) exists.
     */
-  def registerMinHashIndex(spark: SparkSession, table: String): Unit = {
-    def loc(name: String) = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name).toString
-    if (!spark.catalog.tableExists(s"${table}__meta")) {
-      val schema = spark.read.parquet(loc(s"${table}__meta")).schema.toDDL
-      spark.sql(s"CREATE TABLE `${table}__meta` ($schema) USING parquet " +
-        s"LOCATION '${loc(s"${table}__meta")}'")
-    }
-    val buckets = params(spark, table).buckets
-    if (!spark.catalog.tableExists(table)) {
-      val schema = spark.read.parquet(loc(table)).schema.toDDL
-      spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +
-        s"CLUSTERED BY (band_key) SORTED BY (band_key) INTO $buckets BUCKETS " +
-        s"LOCATION '${loc(table)}'")
-    }
-  }
+  def registerMinHashIndex(spark: SparkSession, table: String): Boolean =
+    Swap.heal(spark, s"${table}__meta", Swap.register(spark, _, None)) &&
+      Swap.heal(spark, table, Swap.register(spark, _,
+        Some("band_key" -> params(spark, table).buckets)))
 
   /** Candidate (corpus id, bench id) pairs off the saved index: the
     * benchmark is signed under the index's parameters, its band keys

@@ -424,7 +424,7 @@ object ScaleRehearsal {
       // window sort — a fixture degeneracy, but exactly what a REAL
       // corpus with a degenerate centroid sample would do; bucket balance
       // is the IVF query-cost guard, kmeansCentroids the upgrade)
-      graft.queries.Tables.reset(spark, "scale_ann_idx",
+      graft.search.Swap.drop(spark, "scale_ann_idx",
         "scale_ann_idx__centroids", "scale_ann_idx__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50 * replicas + 1, table = "scale_ann_idx", buckets = 32,
@@ -446,7 +446,7 @@ object ScaleRehearsal {
     // recover (one bucket-column agg, salted-hash reseed, 2 Lloyd scans,
     // rewrite); the query row after it must be healthy, not the cliff
     run("ann_index_build_degenerate") {
-      graft.queries.Tables.reset(spark, "scale_ann_degen",
+      graft.search.Swap.drop(spark, "scale_ann_degen",
         "scale_ann_degen__centroids", "scale_ann_degen__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50 * replicas, table = "scale_ann_degen", buckets = 32,
@@ -465,12 +465,11 @@ object ScaleRehearsal {
     // changes) instead of warning. The query row after it must be
     // healthy, not the corpus-sized-bucket cliff.
     def tableBytes(name: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name)
+      val p = graft.search.Swap.dir(spark, name)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
     }
-    def resetPq(t: String): Unit = graft.queries.Tables.reset(spark, t,
+    def resetPq(t: String): Unit = graft.search.Swap.drop(spark, t,
       s"${t}__centroids", s"${t}__codebook", s"${t}__meta")
     run("ann_pq_index_build") {
       resetPq("scale_annpq_idx")
@@ -506,7 +505,7 @@ object ScaleRehearsal {
     // one extra pruned scan the starved queries pay for full-k recall
     val rare = col("label") === 3 && col("id") % 9973 === 0
     run("ann_index_build_keep") {
-      graft.queries.Tables.reset(spark, "scale_ann_kidx",
+      graft.search.Swap.drop(spark, "scale_ann_kidx",
         "scale_ann_kidx__centroids", "scale_ann_kidx__meta")
       graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
         step = 50 * replicas + 1, table = "scale_ann_kidx", buckets = 32,
@@ -582,8 +581,8 @@ object ScaleRehearsal {
       "ann_upsert_2k_clustered", "ann_calibrate_sweep")
     if (only.isEmpty || only.exists(maintNames)) {
       def buildMaint(): Long = {
-        graft.queries.Tables.reset(spark, maintT, s"${maintT}__centroids",
-          s"${maintT}__meta", s"${maintT}__compacting", s"${maintT}__old")
+        graft.search.Swap.drop(spark, maintT, s"${maintT}__centroids",
+          s"${maintT}__meta")
         graft.search.AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
           step = 1001, table = maintT, buckets = 32, force = true)
         spark.table(maintT).count()
@@ -655,8 +654,8 @@ object ScaleRehearsal {
             f"cand_rows=${r.getLong(2)} pick=${r.getBoolean(3)}"))
         cal.length.toLong
       }
-      graft.queries.Tables.reset(spark, maintT, s"${maintT}__centroids",
-        s"${maintT}__meta", s"${maintT}__compacting", s"${maintT}__old")
+      graft.search.Swap.drop(spark, maintT, s"${maintT}__centroids",
+        s"${maintT}__meta")
     }
     run("hashed_embedding") {
       // text→vector bridge at production hash: one scan-fused kernel pass
@@ -672,7 +671,7 @@ object ScaleRehearsal {
     run("minhash_index_build") {
       // sign the corpus ONCE: inline signature kernel + bucketed band-row
       // layout write — the cost later benchmarks never pay again
-      graft.queries.Tables.reset(spark, "scale_mh_idx", "scale_mh_idx__meta")
+      graft.search.Swap.drop(spark, "scale_mh_idx", "scale_mh_idx__meta")
       graft.search.MinHashIndex.writeMinHashIndex(docs, "doc_id", "text",
         "scale_mh_idx", buckets = 32, force = true)
       spark.table("scale_mh_idx").count()

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
-import graft.queries.Tables
-import graft.search.{AnnIndex, InvertedIndex, Searcher}
+import graft.search.{AnnIndex, InvertedIndex, Searcher, Swap}
 
 /** Step-level wall + Spark-job probe for the multi-job lifecycles whose
   * per-query bench totals hide where the jobs go. Each mode warms once,
@@ -58,7 +57,7 @@ object StepProbe {
 
     // warm one full build+query so JIT/codegen costs don't land on the
     // measured iteration (the bench warms every query at sf0.001 first)
-    Tables.reset(spark, "probe_warm", "probe_warm__centroids",
+    Swap.drop(spark, "probe_warm", "probe_warm__centroids",
       "probe_warm__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
       step = 50, table = "probe_warm", buckets = 8, force = true)
@@ -69,7 +68,7 @@ object StepProbe {
     (1 to 2).foreach { round =>
       println(s"--- round $round ---")
       t("reset") {
-        Tables.reset(spark, "probe_ivf",
+        Swap.drop(spark, "probe_ivf",
           "probe_ivf__centroids", "probe_ivf__meta")
       }
       t("writeIvfIndex TOTAL") {
@@ -82,7 +81,7 @@ object StepProbe {
           "vec_id", "embedding", k = 5, nprobe = 3).count()
       }
       t("reset pq") {
-        Tables.reset(spark, "probe_pq",
+        Swap.drop(spark, "probe_pq",
           "probe_pq__centroids", "probe_pq__codebook", "probe_pq__meta")
       }
       t("writeIvfPqIndex TOTAL") {
@@ -120,9 +119,8 @@ object StepProbe {
       val ti = "e40_text_idx"
       val vt = "e40_vec_idx"
       t("e40 reset") {
-        Tables.reset(spark, ti, s"${ti}__norms",
-          s"${ti}__compacting", s"${ti}__old")
-        Tables.reset(spark, vt, s"${vt}__centroids",
+        Swap.drop(spark, ti, s"${ti}__norms")
+        Swap.drop(spark, vt, s"${vt}__centroids",
           s"${vt}__meta")
       }
       t("e40 text writeIndex") {
@@ -157,8 +155,7 @@ object StepProbe {
       // --- e19_index_refresh segments ---
       val table = "e19_refresh_idx"
       t("e19 reset") {
-        Tables.reset(spark, table, s"${table}__norms",
-          s"${table}__compacting", s"${table}__old")
+        Swap.drop(spark, table, s"${table}__norms")
       }
       val old = d.where(col("doc_id") % 11 =!= 0).select("doc_id", "text")
       val nw = d.where(col("doc_id") % 13 =!= 0)
@@ -207,7 +204,7 @@ object StepProbe {
       println(s"--- round $round ---")
       val table = "slp_idx"
       t("reset") {
-        Tables.reset(spark, table, s"${table}__centroids",
+        Swap.drop(spark, table, s"${table}__centroids",
           s"${table}__meta")
       }
       val tmp = java.nio.file.Files.createTempDirectory("slp").toString

@@ -15,7 +15,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("ivfKnnIndexed == ivfKnn row for row; probed read bucket-prunes") {
     val table = "annidx_spec"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
       table = table, buckets = 4, force = true)
@@ -42,7 +42,7 @@ class AnnIndexSpec extends SparkTestBase {
       val paths = "InMemoryFileIndex\\((\\d+) paths\\)".r
         .findAllMatchIn(plan).map(_.group(1).toInt).toList
       assert(paths.nonEmpty && paths.min <= 3, plan.take(3000))
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
@@ -53,7 +53,7 @@ class AnnIndexSpec extends SparkTestBase {
     // build row for row
     val tFlat = "annidx_gate_flat"
     val tGate = "annidx_gate_nested"
-    Seq(tFlat, tGate).foreach(t => graft.queries.Tables.reset(spark, t,
+    Seq(tFlat, tGate).foreach(t => graft.search.Swap.drop(spark, t,
       s"${t}__centroids", s"${t}__meta"))
     try {
       AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
@@ -69,7 +69,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(rows(tGate).nonEmpty)
     } finally {
       spark.conf.unset(Similarity.CoarseGateConf)
-      Seq(tFlat, tGate).foreach(t => graft.queries.Tables.reset(spark, t,
+      Seq(tFlat, tGate).foreach(t => graft.search.Swap.drop(spark, t,
         s"${t}__centroids", s"${t}__meta"))
     }
   }
@@ -81,7 +81,7 @@ class AnnIndexSpec extends SparkTestBase {
     // row_number probe selection, which the kernel replays exactly — so
     // forcing the cap below the centroid count must not change results
     val table = "annidx_overcap"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
       table = table, buckets = 4, force = true)
@@ -99,7 +99,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(fallback.nonEmpty)
     } finally {
       spark.conf.unset(Similarity.MaxGatheredCentroidsConf)
-      graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+      graft.search.Swap.drop(spark, table, s"${table}__centroids",
         s"${table}__meta")
     }
   }
@@ -110,7 +110,7 @@ class AnnIndexSpec extends SparkTestBase {
     // last but is still emitted as a probe bucket once nprobe exceeds the
     // non-null centroid count
     val table = "annidx_nullcv"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
       table = table, buckets = 4, force = true)
@@ -137,7 +137,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(probed.nonEmpty)
     } finally {
       spark.conf.unset(Similarity.MaxGatheredCentroidsConf)
-      graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+      graft.search.Swap.drop(spark, table, s"${table}__centroids",
         s"${table}__meta")
     }
   }
@@ -145,7 +145,7 @@ class AnnIndexSpec extends SparkTestBase {
   test("string-keyed queries against a numeric-id index return candidates (type-safe self-exclusion)") {
     import spark.implicits._
     val table = "annidx_strq"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
       table = table, buckets = 4, force = true)
@@ -170,13 +170,13 @@ class AnnIndexSpec extends SparkTestBase {
           k = 5, nprobe = 3)
       }
       assert(e.getMessage.contains("dimensional"))
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
   test("append + compact == full rebuild (continuous maintenance roundtrip)") {
     val table = "annidx_app"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta", s"${table}__compacting", s"${table}__old")
     val first = emb.where(col("vec_id") % 5 =!= 4)
     val late = emb.where(col("vec_id") % 5 === 4)
@@ -202,13 +202,13 @@ class AnnIndexSpec extends SparkTestBase {
         emb.where(col("vec_id") === 0), "vec_id", "embedding", k = 5)
       assert(one.queryExecution.executedPlan.toString
         .contains("PartitionFilters"))
-    } finally graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    } finally graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta", s"${table}__compacting", s"${table}__old")
   }
 
   test("ivfPqKnnIndexed == ivfPqKnn row for row off m-byte codes") {
     val table = "annidx_pq"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__codebook", s"${table}__meta")
     AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 50, m = 8,
       table = table, buckets = 4, codeStep = 50, force = true)
@@ -226,13 +226,13 @@ class AnnIndexSpec extends SparkTestBase {
       // = the per-list partition column, mirroring `bucket`)
       val cols = spark.table(table).columns.toList
       assert(cols === List("id", "bucket", "codes", "pbucket"), cols)
-    } finally graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    } finally graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__codebook", s"${table}__meta")
   }
 
   test("centroid side table holds the id-mod-step unit vectors") {
     val table = "annidx_cent"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 100,
       table = table, buckets = 4, force = true)
@@ -246,13 +246,13 @@ class AnnIndexSpec extends SparkTestBase {
       val n2 = cents.select(graft.operators.Similarity.dot(col("cv"), col("cv")))
         .collect().map(_.getDouble(0))
       n2.foreach(x => assert(math.abs(x - 1.0) < 1e-9))
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
   test("filtered ANN: keep columns persist, filter is exact and runs at the pruned scan") {
     val table = "annidx_filt"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     try {
       AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
@@ -314,7 +314,7 @@ class AnnIndexSpec extends SparkTestBase {
       // scan, every neighbor satisfies the predicate and equals the
       // unfiltered ADC ranking with non-matching rows removed
       val pq = "annidx_filt_pq"
-      graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
       try {
         AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 50,
@@ -334,9 +334,9 @@ class AnnIndexSpec extends SparkTestBase {
           .map(r => (r.getLong(1), r.getDouble(2))).toSeq
         assert(pqRows.sortBy(_.getLong(3))
           .map(r => (r.getLong(1), r.getDouble(2))).toSeq === expectPq)
-      } finally graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      } finally graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
@@ -345,7 +345,7 @@ class AnnIndexSpec extends SparkTestBase {
     // writes no codebook, so a surviving one from the table's PQ past
     // would be re-registered by registerIvfIndex against bv-carrying rows
     val table = "annidx_recode"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta", s"${table}__codebook")
     try {
       AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 50,
@@ -364,7 +364,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(AnnIndex.ivfKnnIndexed(spark, table,
         emb.where(col("vec_id") === 0), "vec_id", "embedding",
         k = 3, nprobe = 3).count() === 3L)
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta", s"${table}__codebook")
   }
 
@@ -388,7 +388,7 @@ class AnnIndexSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
     val table = "annidx_guard"
     val ctrl = "annidx_guard_off"
-    Seq(table, ctrl).foreach(t => graft.queries.Tables.reset(spark, t,
+    Seq(table, ctrl).foreach(t => graft.search.Swap.drop(spark, t,
       s"${t}__centroids", s"${t}__meta"))
     try {
       // control: guard disabled — the degeneracy persists (proves the
@@ -420,7 +420,7 @@ class AnnIndexSpec extends SparkTestBase {
       // driver's ann_* oracles replay the id-mod-step assignment, so a
       // guard rewrite there would be an oracle break (pinned here)
       val fx = "annidx_guard_fixture"
-      graft.queries.Tables.reset(spark, fx, s"${fx}__centroids",
+      graft.search.Swap.drop(spark, fx, s"${fx}__centroids",
         s"${fx}__meta")
       try {
         AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
@@ -433,11 +433,11 @@ class AnnIndexSpec extends SparkTestBase {
           .select("vec_id").collect().map(_.getLong(0)).sorted
         assert(ids.toList === expect.toList,
           "guard must not rewrite a balanced fixture's centroids")
-      } finally graft.queries.Tables.reset(spark, fx, s"${fx}__centroids",
+      } finally graft.search.Swap.drop(spark, fx, s"${fx}__centroids",
         s"${fx}__meta")
     } finally {
       spark.conf.unset(AnnIndex.BalanceGuardRatioConf)
-      Seq(table, ctrl).foreach(t => graft.queries.Tables.reset(spark, t,
+      Seq(table, ctrl).foreach(t => graft.search.Swap.drop(spark, t,
         s"${t}__centroids", s"${t}__meta"))
     }
   }
@@ -467,7 +467,7 @@ class AnnIndexSpec extends SparkTestBase {
     def side(t: String) = Seq(t, s"${t}__centroids", s"${t}__codebook",
       s"${t}__meta")
     (side(table) ++ side(ctrl)).grouped(4).foreach(g =>
-      graft.queries.Tables.reset(spark, g: _*))
+      graft.search.Swap.drop(spark, g: _*))
     try {
       // control: guard disabled -> the degeneracy persists in the PQ
       // table too (the fixture exhibits the failure the guard fixes)
@@ -509,7 +509,7 @@ class AnnIndexSpec extends SparkTestBase {
       // ...and a HEALTHY PQ build is untouched: centroids stay the raw
       // id-mod-step sample (the driver's ann_ivfpq_* oracles replay it)
       val fx = "annidx_pq_guard_fixture"
-      graft.queries.Tables.reset(spark, fx, s"${fx}__centroids",
+      graft.search.Swap.drop(spark, fx, s"${fx}__centroids",
         s"${fx}__codebook", s"${fx}__meta")
       try {
         AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 50,
@@ -521,12 +521,12 @@ class AnnIndexSpec extends SparkTestBase {
           .select("vec_id").collect().map(_.getLong(0)).sorted
         assert(ids.toList === expect.toList,
           "PQ guard must not rewrite a balanced fixture's centroids")
-      } finally graft.queries.Tables.reset(spark, fx, s"${fx}__centroids",
+      } finally graft.search.Swap.drop(spark, fx, s"${fx}__centroids",
         s"${fx}__codebook", s"${fx}__meta")
     } finally {
       spark.conf.unset(AnnIndex.BalanceGuardRatioConf)
       (side(table) ++ side(ctrl)).grouped(4).foreach(g =>
-        graft.queries.Tables.reset(spark, g: _*))
+        graft.search.Swap.drop(spark, g: _*))
     }
   }
 
@@ -549,7 +549,7 @@ class AnnIndexSpec extends SparkTestBase {
       .toDF("vec_id", "embedding", "label")
     val queries = base.where(col("vec_id") % 50 === 1)
     val table = "annidx_widen"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     try {
       AnnIndex.writeIvfIndex(base, "vec_id", "embedding", step = 40,
@@ -590,7 +590,7 @@ class AnnIndexSpec extends SparkTestBase {
       // the PQ tier: same widen contract, pinned against its own
       // exhaustive-probe run restricted to the starved queries
       val pq = "annidx_widen_pq"
-      graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
       try {
         AnnIndex.writeIvfPqIndex(base, "vec_id", "embedding", step = 40,
@@ -614,9 +614,9 @@ class AnnIndexSpec extends SparkTestBase {
           === pqExhaust.map(key).toSet)
         assert(pqWide.filter(r => !pqStarved(r.getLong(0))).map(key).toSet
           === pqNarrow.filter(r => !pqStarved(r.getLong(0))).map(key).toSet)
-      } finally graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      } finally graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
@@ -654,7 +654,7 @@ class AnnIndexSpec extends SparkTestBase {
     val buildSide = emb.where(col("vec_id") % 3 =!= 1)
     val arrivals = emb.where(col("vec_id") % 3 === 1 || col("vec_id") % 6 === 0)
     val pq = "annidx_pq_upsert"
-    graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+    graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
       s"${pq}__codebook", s"${pq}__meta")
     try {
       AnnIndex.writeIvfPqIndex(buildSide, "vec_id", "embedding", step = 50,
@@ -683,7 +683,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(AnnIndex.ivfPqKnnIndexed(spark, pq,
         emb.where(col("vec_id") === 0), "vec_id", "embedding",
         k = 3, nprobe = 3).count() === 3L)
-    } finally graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+    } finally graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
       s"${pq}__codebook", s"${pq}__meta")
   }
 
@@ -694,7 +694,7 @@ class AnnIndexSpec extends SparkTestBase {
     // mtimes), which is what makes maintenance cost batch-shaped instead
     // of table-shaped at 1e9 rows
     val table = "annidx_local"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta", s"${table}__compacting", s"${table}__old")
     val first = emb.where(col("vec_id") % 5 =!= 4)
     AnnIndex.writeIvfIndex(first, "vec_id", "embedding", step = 50,
@@ -744,14 +744,14 @@ class AnnIndexSpec extends SparkTestBase {
       assert(AnnIndex.ivfKnnIndexed(spark, table,
         emb.where(col("vec_id") === 0), "vec_id", "embedding",
         k = 5, nprobe = 3).count() === 5L)
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
   }
 
   test("bucket-local fold crash windows: complete staging rolls forward, incomplete rolls back") {
     val table = "annidx_crash"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta", s"${table}__compacting", s"${table}__old")
     val first = emb.where(col("vec_id") % 5 =!= 4)
     AnnIndex.writeIvfIndex(first, "vec_id", "embedding", step = 50,
@@ -798,7 +798,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(AnnIndex.recoverIvfIndex(spark, table))
       assert(!fs.exists(whPath(staging)), "incomplete staging not cleared")
       assert(spark.table(table).count() === expect, "roll-back touched live")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
   }
@@ -817,7 +817,7 @@ class AnnIndexSpec extends SparkTestBase {
     val base = ((0L until 10L).map(i => (i, unitAt(0))) ++
       (10L until 20L).map(i => (i, unitAt(1)))).toDF("vec_id", "embedding")
     val table = "annidx_drain"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta", s"${table}__compacting", s"${table}__old")
     try {
       // step=10 samples centroids {0, 10} = the two cluster directions
@@ -844,7 +844,7 @@ class AnnIndexSpec extends SparkTestBase {
       // replaying the same batch converges (idempotent contract intact)
       AnnIndex.upsertIvfIndex(spark, table, moved, "vec_id", "embedding")
       assert(spark.table(table).count() === 20L)
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
   }
@@ -852,7 +852,7 @@ class AnnIndexSpec extends SparkTestBase {
   test("registerIvfIndex re-registers a stranded per-list index (partitioned DDL)") {
     val table = "annidx_register"
     val names = Seq(table, s"${table}__centroids", s"${table}__meta")
-    graft.queries.Tables.reset(spark, names: _*)
+    graft.search.Swap.drop(spark, names: _*)
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
       table = table, buckets = 4, force = true)
     val queries = emb.where(col("vec_id") % 100 === 0)
@@ -896,12 +896,12 @@ class AnnIndexSpec extends SparkTestBase {
           .withColumn("vec_id", col("vec_id") + 777000L),
         "vec_id", "embedding")
       assert(spark.table(table).count() === n0 + 1)
-    } finally graft.queries.Tables.reset(spark, names: _*)
+    } finally graft.search.Swap.drop(spark, names: _*)
   }
 
   test("calibrateProbes: monotone recall/cost curve, cheapest-meeting pick") {
     val table = "annidx_cal"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
       table = table, buckets = 4, force = true)
@@ -929,7 +929,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(none.length === 2 && none.forall(!_.getBoolean(3)))
       // a PQ codes table fails loudly (no stored ground truth)
       val pq = "annidx_cal_pq"
-      graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
       try {
         AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 50,
@@ -939,9 +939,9 @@ class AnnIndexSpec extends SparkTestBase {
             k = 5, targetRecall = 0.5)
         }
         assert(e.getMessage.contains("plain IVF"))
-      } finally graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      } finally graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
@@ -958,7 +958,7 @@ class AnnIndexSpec extends SparkTestBase {
       .map(id => (id, spread(id), if (id % 100 == 7) 1 else 0))
       .toDF("vec_id", "embedding", "label")
     val table = "annidx_calw"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     try {
       AnnIndex.writeIvfIndex(base, "vec_id", "embedding", step = 40,
@@ -993,7 +993,7 @@ class AnnIndexSpec extends SparkTestBase {
       }
       // PQ codes table fails loudly like calibrateProbes
       val pq = "annidx_calw_pq"
-      graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
       try {
         AnnIndex.writeIvfPqIndex(base, "vec_id", "embedding", step = 40,
@@ -1004,9 +1004,9 @@ class AnnIndexSpec extends SparkTestBase {
             widenTos = Seq(0, 64), filter = col("bucket").isNotNull)
         }
         assert(e.getMessage.contains("plain IVF"))
-      } finally graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      } finally graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
@@ -1016,7 +1016,7 @@ class AnnIndexSpec extends SparkTestBase {
     def side(t: String) = Seq(t, s"${t}__centroids", s"${t}__codebook",
       s"${t}__meta")
     (side(resid) ++ side(ctrl)).grouped(4).foreach(g =>
-      graft.queries.Tables.reset(spark, g: _*))
+      graft.search.Swap.drop(spark, g: _*))
     try {
       val buildSide = emb.where(col("vec_id") % 3 =!= 1)
       AnnIndex.writeIvfPqIndex(buildSide, "vec_id", "embedding", step = 50,
@@ -1052,7 +1052,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(diff === 0L,
         "residual upsert must equal a frozen-side recompute")
     } finally (side(resid) ++ side(ctrl)).grouped(4).foreach(g =>
-      graft.queries.Tables.reset(spark, g: _*))
+      graft.search.Swap.drop(spark, g: _*))
   }
 
   test("residual PQ composes with keep filters and widenTo (exhaustive arm carries the centroid)") {
@@ -1074,7 +1074,7 @@ class AnnIndexSpec extends SparkTestBase {
       .toDF("vec_id", "embedding", "label")
     val queries = base.where(col("vec_id") % 50 === 1)
     val table = "annidx_resid_widen"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__codebook", s"${table}__meta")
     try {
       AnnIndex.writeIvfPqIndex(base, "vec_id", "embedding", step = 40,
@@ -1107,7 +1107,7 @@ class AnnIndexSpec extends SparkTestBase {
       // satisfied queries keep their narrow rows untouched
       assert(wide.filter(r => !starved(r.getLong(0))).map(key).toSet
         === narrow.filter(r => !starved(r.getLong(0))).map(key).toSet)
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__codebook", s"${table}__meta")
   }
 
@@ -1125,7 +1125,7 @@ class AnnIndexSpec extends SparkTestBase {
       else (id, spread(id))
     }.toDF("vec_id", "embedding")
     val table = "annidx_resid_guard"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__codebook", s"${table}__meta")
     try {
       AnnIndex.writeIvfPqIndex(degenerate, "vec_id", "embedding",
@@ -1153,14 +1153,14 @@ class AnnIndexSpec extends SparkTestBase {
         .count()
       assert(diff === 0L,
         "recovered residual index must equal a frozen-side recompute")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__codebook", s"${table}__meta")
   }
 
   test("semanticDedupIndexed == per-call semanticDedup; corpus side pays zero exchanges") {
     val half = emb.where(col("vec_id") % 2 === 0)
     val table = "annidx_semdedup"
-    graft.queries.Tables.reset(spark, table, s"${table}__centroids",
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
       s"${table}__meta")
     try {
       AnnIndex.writeIvfIndex(half, "vec_id", "embedding", step = 50,
@@ -1191,7 +1191,7 @@ class AnnIndexSpec extends SparkTestBase {
       // a PQ codes table fails loudly instead of decode-and-scoring a
       // different pair set
       val pq = "annidx_semdedup_pq"
-      graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
       try {
         AnnIndex.writeIvfPqIndex(half, "vec_id", "embedding", step = 50,
@@ -1200,9 +1200,9 @@ class AnnIndexSpec extends SparkTestBase {
           AnnIndex.semanticDedupIndexed(spark, pq, threshold = 0.35)
         }
         assert(e.getMessage.contains("lossy"))
-      } finally graft.queries.Tables.reset(spark, pq, s"${pq}__centroids",
+      } finally graft.search.Swap.drop(spark, pq, s"${pq}__centroids",
         s"${pq}__codebook", s"${pq}__meta")
-    } finally graft.queries.Tables.reset(spark, table,
+    } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta")
   }
 
@@ -1216,7 +1216,7 @@ class AnnIndexSpec extends SparkTestBase {
     def side(t: String) = Seq(t, s"${t}__centroids", s"${t}__codebook",
       s"${t}__meta")
     (side(plain) ++ side(pq) ++ side(resid)).grouped(4).foreach(g =>
-      graft.queries.Tables.reset(spark, g: _*))
+      graft.search.Swap.drop(spark, g: _*))
     try {
       val buildSide = emb.where(col("vec_id") % 3 =!= 1)
       val batch = emb.where(col("vec_id") % 3 === 1)
@@ -1248,6 +1248,6 @@ class AnnIndexSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("dimensional"))
     } finally (side(plain) ++ side(pq) ++ side(resid)).grouped(4).foreach(g =>
-      graft.queries.Tables.reset(spark, g: _*))
+      graft.search.Swap.drop(spark, g: _*))
   }
 }

@@ -265,6 +265,52 @@ class CliFollowSpec extends SparkTestBase {
     } finally dropAll(t)
   }
 
+  /** Strand `names` the way a JVM restart does: the catalog forgets them,
+    * their warehouse directories (as Spark names them) survive.
+    */
+  private def strand(names: String*): Unit = names.foreach { n =>
+    val p = graft.search.Swap.dir(spark, n)
+    val fs = p.getFileSystem(hconf)
+    val aside = new org.apache.hadoop.fs.Path(
+      Files.createTempDirectory("cli_strand").toString, p.getName)
+    org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, aside, false, hconf)
+    spark.sql(s"DROP TABLE `$n`") // managed: deletes the directory
+    org.apache.hadoop.fs.FileUtil.copy(fs, aside, fs, p, false, hconf)
+  }
+
+  test("follow: a mixed-case --table heals across a restart") {
+    // Spark writes warehouse/mixfollowidx; the heal must look there
+    val t = "MixFollowIdx"
+    val (drop, state) = freshDirs()
+    graft.search.Swap.drop(spark, t)
+    try {
+      writeShard(s"$drop/day1", "a.jsonl", Seq("alpha bravo"))
+      follow(t, drop, state)
+      strand(t)
+      writeShard(s"$drop/day2", "b.jsonl", Seq("charlie delta"))
+      follow(t, drop, state)
+      assert(hits(t, "alpha bravo") === 1L)
+      assert(hits(t, "charlie delta") === 1L)
+    } finally graft.search.Swap.drop(spark, t, s"${t}__norms")
+  }
+
+  test("ann --follow: a mixed-case --table heals across a restart") {
+    val t = "MixFollowAnn"
+    val (drop, state) = freshDirs()
+    val names = Seq(t, s"${t}__centroids", s"${t}__meta")
+    graft.search.Swap.drop(spark, names: _*)
+    def run(): Unit = Cli.run(spark, Array("ann", s"$drop/*", "--table", t,
+      "--follow", state, "--step", "1", "--buckets", "4"))
+    try {
+      writeShard(s"$drop/day1", "a.jsonl", Seq("alpha bravo charlie delta"))
+      run()
+      strand(names: _*)
+      writeShard(s"$drop/day2", "b.jsonl", Seq("echo foxtrot golf hotel"))
+      run()
+      assert(spark.table(t).count() === 2L)
+    } finally graft.search.Swap.drop(spark, names: _*)
+  }
+
   private def annTables(t: String): Seq[String] =
     Seq(t, s"${t}__centroids", s"${t}__meta", s"${t}__compacting", s"${t}__old")
 
@@ -528,7 +574,7 @@ class CliFollowSpec extends SparkTestBase {
     try {
       dropAll(t)
       Seq(s"${t}__centroids", s"${t}__meta").foreach(n =>
-        graft.queries.Tables.reset(spark, n))
+        graft.search.Swap.drop(spark, n))
       Cli.run(spark, Array("ann", s"$drop/*", "--table", t,
         "--dim", "16", "--step", "5", "--buckets", "4"))
       // --profile: per-bucket mass + coherence off the saved table
@@ -575,7 +621,7 @@ class CliFollowSpec extends SparkTestBase {
     } finally {
       dropAll(t)
       Seq(s"${t}__centroids", s"${t}__meta").foreach(n =>
-        graft.queries.Tables.reset(spark, n))
+        graft.search.Swap.drop(spark, n))
     }
   }
 }

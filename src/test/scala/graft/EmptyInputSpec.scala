@@ -218,7 +218,7 @@ class EmptyInputSpec extends SparkTestBase {
     assert(Searcher.rrfFuse(Seq(noRank, noRank), topK = 5).count() === 0)
     // an empty corpus selects zero centroids — the build FAILS FAST
     // instead of persisting an empty index without a word
-    graft.queries.Tables.reset(spark, "empty_ann_idx",
+    graft.search.Swap.drop(spark, "empty_ann_idx",
       "empty_ann_idx__centroids", "empty_ann_idx__meta")
     intercept[IllegalArgumentException] {
       AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 10,
@@ -232,7 +232,7 @@ class EmptyInputSpec extends SparkTestBase {
     assert(AnnIndex.ivfKnnIndexed(spark, "empty_ann_idx",
       two.where(col("vec_id") < 0), "vec_id", "embedding", k = 3)
       .count() === 0)
-    graft.queries.Tables.reset(spark, "empty_ann_idx",
+    graft.search.Swap.drop(spark, "empty_ann_idx",
       "empty_ann_idx__centroids", "empty_ann_idx__meta")
   }
 
@@ -253,7 +253,7 @@ class EmptyInputSpec extends SparkTestBase {
       noCand, k = 3).count() === 0)
     // minhash index over an EMPTY corpus builds an empty (but queryable)
     // band table — unlike ANN there is no centroid selection to fail on
-    graft.queries.Tables.reset(spark, "empty_mh_idx", "empty_mh_idx__meta")
+    graft.search.Swap.drop(spark, "empty_mh_idx", "empty_mh_idx__meta")
     graft.search.MinHashIndex.writeMinHashIndex(docs, "doc_id", "text",
       "empty_mh_idx", md5Parity = true, force = true)
     val bench = Seq((9L, "a b c d e f")).toDF("bid", "btext")
@@ -268,7 +268,7 @@ class EmptyInputSpec extends SparkTestBase {
     assert(graft.search.MinHashIndex.decontaminateIndexed(spark,
       "empty_mh_idx", corpus, "doc_id", "text", noBench, "bid", "btext",
       threshold = 0.5).count() === 2)
-    graft.queries.Tables.reset(spark, "empty_mh_idx", "empty_mh_idx__meta")
+    graft.search.Swap.drop(spark, "empty_mh_idx", "empty_mh_idx__meta")
   }
 
   test("span decontamination on empty train and empty benchmark") {
@@ -316,7 +316,7 @@ class EmptyInputSpec extends SparkTestBase {
     import java.nio.file.{Files, Paths}
     val root = Files.createTempDirectory("empty_ann_follow").toString
     Files.createDirectories(Paths.get(s"$root/drop"))
-    graft.queries.Tables.reset(spark, "empty_ann_follow_t",
+    graft.search.Swap.drop(spark, "empty_ann_follow_t",
       "empty_ann_follow_t__centroids", "empty_ann_follow_t__meta")
     // empty glob: no new shards, no index, no throw — and the state dir
     // is NOT bricked for the later first real batch
@@ -335,7 +335,7 @@ class EmptyInputSpec extends SparkTestBase {
       "empty_ann_follow_t", "--follow", s"$root/state", "--step", "1",
       "--buckets", "4"))
     assert(spark.table("empty_ann_follow_t").count() === 1L)
-    graft.queries.Tables.reset(spark, "empty_ann_follow_t",
+    graft.search.Swap.drop(spark, "empty_ann_follow_t",
       "empty_ann_follow_t__centroids", "empty_ann_follow_t__meta")
   }
 

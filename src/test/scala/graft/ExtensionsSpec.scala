@@ -7,11 +7,26 @@ package graft
 class ExtensionsSpec extends SparkTestBase {
 
   test("register on an already-built session: functions resolve, rule added once") {
-    val fresh = spark.newSession() // no post-build rules of its own
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    // extensions bound at build, as on every Sessions.local session
+    val fresh = spark.newSession()
+    val rule = functions.expressions.IntersectSizeRewrite
+    // the rule's runs while optimizing one plan that it rewrites
+    def ruleRuns(): Long = {
+      RuleExecutor.resetMetrics()
+      fresh.range(2).selectExpr("array(cast(id AS string), 'b') AS xs")
+        .selectExpr("size(array_intersect(xs, array('b', 'c'))) AS n")
+        .queryExecution.optimizedPlan
+      RuleExecutor.dumpTimeSpent().linesIterator.map(_.trim)
+        .find(_.startsWith(rule.ruleName + " "))
+        .map(_.split("\\s+").last.toLong).getOrElse(0L)
+    }
+    val atBuild = ruleRuns()
+    assert(atBuild > 0)
     GraftExtensions.register(fresh)
     GraftExtensions.register(fresh)
-    assert(fresh.experimental.extraOptimizations
-      .count(_ == functions.expressions.IntersectSizeRewrite) === 1)
+    assert(!fresh.experimental.extraOptimizations.contains(rule))
+    assert(ruleRuns() === atBuild)
     assert(fresh.sql(
       "SELECT graft_intersect_size(array('a', 'b', 'b'), array('b', 'c')) AS n")
       .head().getInt(0) === 1)

@@ -942,7 +942,7 @@ class InvertedIndexSpec extends SparkTestBase {
       InvertedIndex.writeIndex(full, staging, buckets = 4, force = true)
       spark.sql(s"ALTER TABLE `$table` RENAME TO `$backup`")
       assert(!spark.catalog.tableExists(table))
-      InvertedIndex.recoverCompaction(spark, table)
+      graft.search.Swap.heal(spark, table)
       assert(spark.catalog.tableExists(table))
       assert(!spark.catalog.tableExists(staging) && !spark.catalog.tableExists(backup))
       assert(liveRows === fullRows, "recovery must surface the compacted postings")
@@ -952,7 +952,7 @@ class InvertedIndexSpec extends SparkTestBase {
       // recovery just clears the leftover
       InvertedIndex.writeIndex(full, table, buckets = 4, force = true)
       InvertedIndex.writeIndex(half, backup, buckets = 4, force = true)
-      InvertedIndex.recoverCompaction(spark, table)
+      graft.search.Swap.heal(spark, table)
       assert(spark.catalog.tableExists(table) && !spark.catalog.tableExists(backup))
       assert(liveRows === fullRows)
       dropAll()
@@ -962,7 +962,7 @@ class InvertedIndexSpec extends SparkTestBase {
       // dropping the stale staging
       InvertedIndex.writeIndex(half, table, buckets = 4, force = true)
       InvertedIndex.writeIndex(half, staging, buckets = 4, force = true)
-      InvertedIndex.recoverCompaction(spark, table)
+      graft.search.Swap.heal(spark, table)
       assert(spark.catalog.tableExists(table))
       val appends = InvertedIndex.postings(docs.where(col("doc_id") > 2),
         "doc_id", "text", uax29 = false)

@@ -21,7 +21,7 @@ class MinHashIndexSpec extends SparkTestBase {
 
   test("decontaminateIndexed == decontaminateFuzzy row for row; pruned read") {
     val table = "mhidx_spec"
-    graft.queries.Tables.reset(spark, table, s"${table}__meta")
+    graft.search.Swap.drop(spark, table, s"${table}__meta")
     MinHashIndex.writeMinHashIndex(docs, "doc_id", "text", table,
       w = 5, k = 8, bands = 4, md5Parity = true, buckets = 8, force = true)
     try {
@@ -45,12 +45,12 @@ class MinHashIndexSpec extends SparkTestBase {
       val sel = "SelectedBucketsCount: (\\d+) out of 8".r
         .findFirstMatchIn(plan).map(_.group(1).toInt)
       assert(sel.exists(_ < 8), plan.take(3000))
-    } finally graft.queries.Tables.reset(spark, table, s"${table}__meta")
+    } finally graft.search.Swap.drop(spark, table, s"${table}__meta")
   }
 
   test("append + compact == full rebuild; register survives catalog loss") {
     val table = "mhidx_app"
-    graft.queries.Tables.reset(spark, table, s"${table}__meta",
+    graft.search.Swap.drop(spark, table, s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
     val first = docs.where(col("doc_id") % 5 =!= 4)
     val late = docs.where(col("doc_id") % 5 === 4)
@@ -91,7 +91,7 @@ class MinHashIndexSpec extends SparkTestBase {
           "doc_id", "text", b, "bid", "btext", threshold = 0.5)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(again === want)
-    } finally graft.queries.Tables.reset(spark, table, s"${table}__meta",
+    } finally graft.search.Swap.drop(spark, table, s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
   }
 
@@ -100,7 +100,7 @@ class MinHashIndexSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val table = "mhidx_stream"
-    graft.queries.Tables.reset(spark, table, s"${table}__meta",
+    graft.search.Swap.drop(spark, table, s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
     val first = docs.where(col("doc_id") % 5 =!= 4)
     val late = docs.where(col("doc_id") % 5 === 4)
@@ -135,7 +135,7 @@ class MinHashIndexSpec extends SparkTestBase {
           MinHash.md5Strategy)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(got === want)
-    } finally graft.queries.Tables.reset(spark, table, s"${table}__meta",
+    } finally graft.search.Swap.drop(spark, table, s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
   }
 }
