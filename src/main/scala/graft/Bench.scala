@@ -273,7 +273,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local()
+    val spark = Sessions.local(Sessions.tempWarehouse)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet reader, codegen, shuffle machinery) so the
     // first measured query isn't charged for JVM startup, and touch every

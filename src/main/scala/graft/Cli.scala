@@ -268,6 +268,15 @@ object Cli {
     eff.toMap
   }
 
+  /** [[pinnedIdMode]]'s `allHaveIds` for `df`: None when it has no rows,
+    * else whether every row carries a non-null `id`. One job answers both
+    * questions a batch needs: a top-1 with null ids sorted first (a
+    * global aggregate would add a shuffle stage, i.e. a second job).
+    */
+  private def idPresence(df: DataFrame): Option[Boolean] =
+    df.select(col("id").isNull.as("missing")).orderBy(col("missing").desc)
+      .head(1).headOption.map(!_.getBoolean(0))
+
   /** Read-or-pin the posting id mode ("id" = the corpus's own id field,
     * "path-line" = the full-path synthetic {md5(path)}-{line} id) for a
     * drop-directory state dir. The mode is decided on the FIRST non-empty
@@ -1195,10 +1204,9 @@ object Cli {
             // shards sharing a basename must not collide.
             val df = readProjected(spark, fresh,
               cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val empty = df.isEmpty
-            val mode = pinnedIdMode(fs, stateDir,
-              if (empty) None else Some(df.where(col("id").isNull).isEmpty),
-              "index --follow")
+            val ids = idPresence(df)
+            val empty = ids.isEmpty
+            val mode = pinnedIdMode(fs, stateDir, ids, "index --follow")
             val (keyed, idc) =
               if (mode == "id") (df, "id")
               else (Corpus.withFileLineId(df, "__id", fullPath = true), "__id")
@@ -1439,7 +1447,8 @@ object Cli {
               Corpus.readJsonl(spark, Seq(batchDir)), "__plid", fullPath = true)
             .localCheckpoint(eager = true)
           try {
-          val wEmpty = written.isEmpty
+          val wIds = idPresence(written)
+          val wEmpty = wIds.isEmpty
           if (!wEmpty)
             operators.Dedup.appendHashState(written, md5(col("text")), hashState)
           table.foreach { t =>
@@ -1474,10 +1483,9 @@ object Cli {
                       .cast("int")),
                   "__plid", fullPath = true)
               }
-            val srcEmpty = if (haveIndex) wEmpty else src.isEmpty
-            val mode = pinnedIdMode(fs, stateDir,
-              if (srcEmpty) None
-              else Some(src.where(col("id").isNull).isEmpty), "ingest")
+            val srcIds = if (haveIndex) wIds else idPresence(src)
+            val srcEmpty = srcIds.isEmpty
+            val mode = pinnedIdMode(fs, stateDir, srcIds, "ingest")
             // rebuilds in id mode must keep only the LATEST batch's row
             // per corpus id: an id re-dropped with corrected text passed
             // exact dedup, and the lost upsert-maintained index held only
@@ -1649,10 +1657,9 @@ object Cli {
             // batch must embed identically-normalized text
             val df = readProjected(spark, fresh,
               cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val empty = df.isEmpty
-            val mode = pinnedIdMode(fs, stateDir,
-              if (empty) None else Some(df.where(col("id").isNull).isEmpty),
-              "ann --follow")
+            val ids = idPresence(df)
+            val empty = ids.isEmpty
+            val mode = pinnedIdMode(fs, stateDir, ids, "ann --follow")
             val (keyed, idc) =
               if (mode == "id") (df, "id")
               else (Corpus.withFileLineId(df, "__id", fullPath = true), "__id")

@@ -11,7 +11,7 @@ object Verify {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val spark = Sessions.local()
+    val spark = Sessions.local(Sessions.tempWarehouse)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1092,13 +1092,21 @@ object Dedup {
     * [[ingestIncremental]] for the read-then-extend cycle. AQE broadcasts
     * small state and shuffle-joins large state on the 16-byte keys; at
     * Bloom scale swap the anti join for [[decontaminateApprox]] over the
-    * same state frame.
+    * same state frame. The state is read under the schema
+    * [[appendHashState]] writes (`h`, typed as `key`), so a call pays no
+    * schema-inference job over the state files.
     */
   def dedupIncremental(newDocs: DataFrame, key: Column, order: Seq[Column],
                        statePath: String): DataFrame = {
     val fresh = keepFirst(newDocs, key, order)
-    if (!stateExists(newDocs.sparkSession, statePath)) fresh
-    else decontaminate(fresh, key, newDocs.sparkSession.read.parquet(statePath), col("h"))
+    val spark = newDocs.sparkSession
+    if (!stateExists(spark, statePath)) fresh
+    else {
+      val h = newDocs.select(key.as("h")).schema.head.copy(nullable = true)
+      decontaminate(fresh, key,
+        spark.read.schema(org.apache.spark.sql.types.StructType(Seq(h)))
+          .parquet(statePath), col("h"))
+    }
   }
 
   /** Append the (distinct) keys of `docs` to the state table. */

@@ -14,7 +14,7 @@ object ExplainAudit {
       else Seq("q3_join", "a6_topk_3gram", "ann_topk_cosine", "j3_decontaminate",
         "p14_sample", "d_minhash_neardup", "ann_lsh_topk", "ann_ivf_topk",
         "j4_overlap_pairs", "e3_per_phrase", "p4_psl_full", "d_cc_clusters")
-    val spark = graft.Sessions.local()
+    val spark = graft.Sessions.local(graft.Sessions.tempWarehouse)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

@@ -9,8 +9,10 @@ import graft.{Sessions, SparkEntry}
   * is the first number to fix.
   *
   * Per query: each rep's wall seconds, their minimum, and the minimum over
-  * reps of jobs, tasks, input/shuffle-write/shuffle-read/spill MB, plus
-  * the shuffle-write/input ratio. A leading '+' on a name re-enables
+  * reps of jobs, generated classes compiled (non-zero: every rep misses
+  * Spark's generated-class cache), tasks, input (the size of the files its
+  * scans selected)/shuffle-write/shuffle-read/spill MB, plus the
+  * shuffle-write/input ratio. A leading '+' on a name re-enables
   * InferFiltersFromGenerate for that query (the explode-regression A/B
   * lever). Without names it audits a default set of corpus-shaped queries.
   *
@@ -30,9 +32,9 @@ object QueryProbe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = if (args.length > 2) args.drop(2).toSeq else AuditSet
-    val spark = Sessions.local()
+    val spark = Sessions.local(Sessions.tempWarehouse)
     spark.sparkContext.setLogLevel("WARN")
-    val probe = ProbeListener.attach(spark.sparkContext)
+    val probe = ProbeListener.attach(spark)
     spark.read.parquet(s"$sfDir/documents.parquet").count() // warm
     names.foreach { name0 =>
       val (name, rules) =
@@ -48,6 +50,7 @@ object QueryProbe {
       val ratio = if (in > 0) f"${shufW.toDouble / in}%.3f" else "-"
       println(f"$name0%-28s ${walls.map(w => f"$w%6.2f").mkString(" ")}" +
         f"  min=${walls.min}%6.2f  jobs=${least(_.jobs)}%4d" +
+        f" compiles=${least(_.compiles)}%4d" +
         f" tasks=${least(_.tasks)}%6d  MB: in=${mb(in)} shufW=${mb(shufW)}" +
         f" shufR=${mb(least(_.shuffleRead))} spill=${mb(least(_.spill))}" +
         s"  ratio=$ratio")

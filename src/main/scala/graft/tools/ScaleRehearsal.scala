@@ -31,9 +31,9 @@ object ScaleRehearsal {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(10)
     val work = args.lift(2).getOrElse("/tmp/scale_rehearsal")
-    val spark = graft.Sessions.local()
+    val spark = graft.Sessions.local(graft.Sessions.tempWarehouse)
     spark.sparkContext.setLogLevel("ERROR")
-    val probe = ProbeListener.attach(spark.sparkContext)
+    val probe = ProbeListener.attach(spark)
 
     // ---- materialize the replicated corpus (id-shifted per replica) ----
     def replicate(table: String, idCol: String): String = {

@@ -8,9 +8,11 @@ import graft.search.{AnnIndex, InvertedIndex, Searcher, Swap}
 
 /** Step-level wall + Spark-job probe for the multi-job lifecycles whose
   * per-query bench totals hide where the jobs go. Each mode warms once,
-  * then runs two rounds and prints `STEP <name> <wall> s jobs=<n>` per
-  * step; job counts are the host-noise-immune before/after metric (each
-  * removed job is a removed scan/collect/commit round-trip).
+  * then runs two rounds and prints `STEP <name> <wall> s jobs=<n>
+  * compiles=<n>` per step; job and compile counts are the host-noise-immune
+  * before/after metrics (each removed job is a removed scan/collect/commit
+  * round-trip; a second-round step that still compiles is missing Spark's
+  * generated-class cache).
   *
   *  - `ann`: persisted-ANN build/query/upsert/calibrate (writeIvfIndex,
   *    writeIvfPqIndex, ivfKnnIndexed, ivfPqKnnIndexed, upsertIvfIndex,
@@ -33,7 +35,7 @@ object StepProbe {
   private final class Steps(probe: ProbeListener) {
     def apply[A](name: String)(f: => A): A = {
       val (r, sec, c) = probe.measure(f)
-      println(f"STEP $name%-40s $sec%8.3f s  jobs=${c.jobs}%3d")
+      println(f"STEP $name%-40s $sec%8.3f s  jobs=${c.jobs}%3d compiles=${c.compiles}%4d")
       r
     }
   }
@@ -43,9 +45,9 @@ object StepProbe {
       "ann" -> (ann _), "text" -> (text _), "stream" -> (stream _))
     require(args.length == 2 && modes.contains(args(0)),
       "usage: graft.tools.StepProbe ann|text|stream <sfDir>")
-    val spark = Sessions.local()
+    val spark = Sessions.local(Sessions.tempWarehouse)
     spark.sparkContext.setLogLevel("WARN")
-    val probe = ProbeListener.attach(spark.sparkContext,
+    val probe = ProbeListener.attach(spark,
       traceJobs = sys.env.get("GRAFT_PROBE_JOBS").contains("1"))
     modes(args(0))(spark, args(1), new Steps(probe))
     spark.stop()

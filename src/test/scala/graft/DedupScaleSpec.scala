@@ -786,6 +786,13 @@ class DedupScaleSpec extends SparkTestBase {
     val b2 = Seq((4L, "a b c"), (5L, "g h i"), (6L, "g h i")).toDF("id", "text")
     val s2 = Dedup.ingestIncremental(b2, key, Seq(col("id")), dir)
     assert(s2.select("id").as[Long].collect().toSet === Set(5L))
+    // the state is read under its known schema: planning runs no job
+    val group = "dedup-incremental-plan"
+    spark.sparkContext.setJobGroup(group, group)
+    try Dedup.dedupIncremental(b2, key, Seq(col("id")), dir)
+    finally spark.sparkContext.clearJobGroup()
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty)
     // replaying an already-ingested snapshot is a no-op
     assert(Dedup.ingestIncremental(b2, key, Seq(col("id")), dir).count() === 0L)
     // state holds exactly the distinct ingested hashes

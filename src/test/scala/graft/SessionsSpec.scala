@@ -4,10 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.functions.expressions.IntersectionSize
 
 /** `Sessions.local` is the one session builder: every entry point, tool
-  * and test plans under the same confs, rules and extensions.
+  * and test plans under the same confs, rules and extensions, and reuses
+  * its generated classes.
   */
 class SessionsSpec extends SparkTestBase {
 
@@ -43,6 +46,34 @@ class SessionsSpec extends SparkTestBase {
       "array(cast(id AS STRING), 'b', 'b'), array('b', 'c'))) AS n")
       .queryExecution.optimizedPlan
     assert(plan.expressions.exists(_.exists(_.isInstanceOf[IntersectionSize])), plan)
+  }
+
+  private def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a repeated working set of generated classes compiles only once") {
+    // each literal is inlined into its plan's generated code, so every i is
+    // a distinct class; 150 plans outnumber Spark's default 100-entry cache
+    def pass(): Long = {
+      val before = compiled()
+      (1 to 150).foreach { i =>
+        spark.range(8).selectExpr(s"id * ${i}L + ${i}L AS v").collect()
+      }
+      compiled() - before
+    }
+    assert(pass() >= 150)
+    assert(pass() === 0L)
+  }
+
+  test("tune leaves the codegen cache size alone once anything compiled") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    spark.range(1).selectExpr("id + 1").collect()
+    assert(compiled() > 0)
+    val s = spark.newSession()
+    s.sessionState.conf.setConfString(key, "100")
+    Sessions.tune(s)
+    assert(s.sessionState.conf.getConfString(key) === "100")
+    assert(spark.sessionState.conf.getConfString(key) ===
+      Sessions.CodegenCacheEntries.toString)
   }
 
   test("no session builder outside Sessions.scala") {
