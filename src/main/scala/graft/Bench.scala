@@ -557,27 +557,16 @@ object Bench {
     // the driver's log capture keeps only a tail of stdout, which loses
     // most per-query times — persist the full line to a file as well
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    // tmp + ATOMIC_MOVE for both persisted artifacts: a crash mid-write
-    // would otherwise leave a truncated file that parsePrevQueries
-    // silently degrades to empty — for the trend file that ERASES the
-    // accumulated best-known history the elevation gate depends on
-    // (the _shards writeStateFileAtomic discipline)
-    def writeAtomic(path: String, content: String): Unit = {
-      val target = java.nio.file.Paths.get(path)
-      val dir = Option(target.toAbsolutePath.getParent)
-        .getOrElse(java.nio.file.Paths.get("."))
-      val tmp = dir.resolve(target.getFileName.toString + ".tmp")
-      java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-      try java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch {
-        case _: java.nio.file.AtomicMoveNotSupportedException =>
-          java.nio.file.Files.move(tmp, target,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    try writeAtomic(outPath, line + "\n")
+    // both persisted artifacts commit through Swap.writeState: a crash
+    // mid-write would otherwise leave a truncated file that
+    // parsePrevQueries silently degrades to empty — for the trend file
+    // that ERASES the accumulated best-known history the elevation gate
+    // depends on. The raw local file system writes no .crc siblings.
+    val localFs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration).getRaw
+    def local(path: String) =
+      localFs.makeQualified(new org.apache.hadoop.fs.Path(path))
+    try search.Swap.writeState(localFs, local(outPath), Seq(line))
     catch {
       // stdout already carries the line; losing the file copy must not
       // fail the bench, but it must not be silent either
@@ -631,7 +620,7 @@ object Bench {
         bestOut.toSeq.sortBy(_._1)
           .map { case (k, v) => "\"" + k + "\":" + v }
           .mkString("{", ",", "}") + "}"
-      try writeAtomic(trendPath, trendJson + "\n")
+      try search.Swap.writeState(localFs, local(trendPath), Seq(trendJson))
       catch {
         case e: java.io.IOException =>
           System.err.println(s"bench: failed to persist $trendPath: $e")

@@ -155,76 +155,6 @@ object Cli {
       }.map(f => pfs.makeQualified(f).toString)
     }.sorted
 
-  /** Lines of a small state file (manifest, pin), or None if absent. */
-  private def readStateLines(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Option[Seq[String]] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
-      finally in.close()
-    }
-
-  private def writeStateFile(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val os = fs.create(p, true)
-    try os.write(content.getBytes("UTF-8"))
-    finally os.close()
-  }
-
-  /** [[writeStateFile]] via tmp + rename — for state files that REWRITE
-    * existing content (the config pin merge): a crash between create's
-    * truncation and the write must not leave an empty/partial file whose
-    * next read silently re-derives defaults.
-    */
-  private def writeStateFileAtomic(fs: org.apache.hadoop.fs.FileSystem,
-                                   p: org.apache.hadoop.fs.Path,
-                                   content: String): Unit = {
-    // attempt-unique tmp: concurrent invocations must not clobber each
-    // other's in-flight tmp (a shared name let writer B's rename publish
-    // writer A's half-written bytes)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      p.getName + ".__tmp." + java.util.UUID.randomUUID().toString)
-    // unique tmp names can ORPHAN on hard kills (nothing self-overwrites
-    // like the old fixed name did) — sweep stale siblings first, bounded
-    // to tmps older than an hour so a CONCURRENT writer's in-flight tmp
-    // (lives milliseconds) is never clobbered
-    try {
-      val prefix = p.getName + ".__tmp."
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      fs.listStatus(p.getParent).foreach { st =>
-        if (st.getPath.getName.startsWith(prefix) &&
-          st.getModificationTime < cutoff) fs.delete(st.getPath, false)
-      }
-    } catch { case _: java.io.IOException => () } // sweep is best-effort
-    var renamed = false
-    try {
-      writeStateFile(fs, tmp, content)
-      // overwrite-capable rename: ONE atomic step, so no crash window where
-      // the pin file is absent (delete-then-rename left a gap in which the
-      // next invocation would silently re-pin defaults — index drift, the
-      // exact failure this file exists to prevent)
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
-          fs.getConf)
-        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        renamed = true
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // FS without a FileContext binding: fall back to delete+rename
-          // (narrow non-atomic window, disclosed) rather than failing the run
-          fs.delete(p, false)
-          if (!fs.rename(tmp, p)) sys.error(s"state-file rename failed at $p")
-          renamed = true
-      }
-    } finally {
-      // failed attempts must not leak their tmp (JVM-crash orphans are
-      // caught by the sweep above on the next write)
-      if (!renamed)
-        try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
-    }
-  }
-
   /** Index-wide settings pinned in the state dir on first use — batches
     * processed under drifting flags (tokenizer, analyzer, bucket count,
     * embedding dim) would silently mix incompatible postings/vectors in
@@ -239,7 +169,7 @@ object Cli {
       : Map[String, String] = {
     val p = new org.apache.hadoop.fs.Path(stateDir, "config")
     val pinMap: Map[String, String] =
-      readStateLines(fs, p).map(_.filter(_.contains('=')).map { l =>
+      search.Swap.readState(fs, p).map(_.filter(_.contains('=')).map { l =>
         val i = l.indexOf('=')
         l.take(i) -> l.drop(i + 1).trim
       }.toMap).getOrElse(Map.empty)
@@ -257,13 +187,8 @@ object Cli {
     // index-wide drift the pin exists to prevent. Existing pins are
     // preserved verbatim (unknown keys included).
     if (entries.exists { case (k, _, _) => !pinMap.contains(k) }) {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(stateDir))
       val extra = (pinMap -- entries.map(_._1)).toSeq.sortBy(_._1)
-      // atomic: this path REWRITES an existing pin file when merging — a
-      // crash mid-truncate would otherwise destroy the pins and let the
-      // next invocation silently re-pin defaults
-      writeStateFileAtomic(fs, p,
-        (eff ++ extra).map { case (k, v) => s"$k=$v" }.mkString("\n") + "\n")
+      search.Swap.writeState(fs, p, (eff ++ extra).map { case (k, v) => s"$k=$v" })
     }
     eff.toMap
   }
@@ -289,7 +214,8 @@ object Cli {
                            stateDir: String, allHaveIds: Option[Boolean],
                            cmd: String): String = {
     val modeFile = new org.apache.hadoop.fs.Path(stateDir, "idmode")
-    val stored = readStateLines(fs, modeFile).flatMap(_.headOption).map(_.trim)
+    val stored =
+      search.Swap.readState(fs, modeFile).flatMap(_.headOption).map(_.trim)
     val mode = stored.getOrElse(
       if (allHaveIds.contains(true)) "id" else "path-line")
     if (mode == "id" && allHaveIds.contains(false)) sys.error(
@@ -297,19 +223,8 @@ object Cli {
         "this batch has docs with null ids — fix the shards or start a " +
         "new state dir")
     if (stored.isEmpty && allHaveIds.nonEmpty)
-      writeStateFile(fs, modeFile, mode + "\n")
+      search.Swap.writeState(fs, modeFile, Seq(mode))
     mode
-  }
-
-  /** Rewrite `stateDir/manifest` atomically (tmp + rename). */
-  private def extendManifest(fs: org.apache.hadoop.fs.FileSystem,
-                             stateDir: String, entries: Seq[String]): Unit = {
-    val manifest = new org.apache.hadoop.fs.Path(stateDir, "manifest")
-    val tmpM = new org.apache.hadoop.fs.Path(stateDir, "manifest.__tmp")
-    writeStateFile(fs, tmpM, entries.sorted.mkString("\n") + "\n")
-    fs.delete(manifest, false)
-    if (!fs.rename(tmpM, manifest)) sys.error(
-      s"manifest rename failed at $manifest")
   }
 
   /** Heal index-table crash state BEFORE deciding whether an index exists:
@@ -552,8 +467,8 @@ object Cli {
             val markP = new org.apache.hadoop.fs.Path(state + "__outmarks",
               java.security.MessageDigest.getInstance("MD5")
                 .digest(outDir.getBytes("UTF-8")).map("%02x".format(_)).mkString)
-            val marker = readStateLines(sfs, markP).flatMap(_.headOption)
-              .map(_.trim)
+            val marker = search.Swap.readState(sfs, markP)
+              .flatMap(_.headOption).map(_.trim)
             marker.foreach { prev =>
               if (prev != snapshotId) sys.error(
                 s"dedup --state: --out $outDir was written by a DIFFERENT " +
@@ -573,8 +488,7 @@ object Cli {
                   "no snapshot marker claims it for this state dir — pass " +
                   "--force to overwrite")
             }
-            sfs.mkdirs(markP.getParent)
-            writeStateFile(sfs, markP, snapshotId + "\n")
+            search.Swap.writeState(sfs, markP, Seq(snapshotId))
             val survivors =
               operators.Dedup.dedupIncremental(withPos, md5(col("text")),
                 Seq(col("__file"), col("__line")), state)
@@ -878,7 +792,7 @@ object Cli {
                   st.getPath.getName.startsWith("batch="))
             val batchShards: Map[String, Seq[String]] =
               batchDirs.flatMap { st =>
-                readStateLines(fs,
+                search.Swap.readState(fs,
                   new org.apache.hadoop.fs.Path(st.getPath, "_shards"))
                   .map(ls => st.getPath.getName -> ls.filter(_.nonEmpty))
               }.toMap
@@ -900,11 +814,12 @@ object Cli {
                   s"${st.getPath.getName} (counts without a _shards " +
                   "record — crash debris; its shards will be recounted)")
               }
-            val seen: Set[String] =
-              readStateLines(fs, manifestP).getOrElse(Nil)
-                .filter(_.nonEmpty).toSet ++ batchShards.values.flatten
+            val manifested: Set[String] = search.Swap.readState(fs, manifestP)
+              .getOrElse(Nil).filter(_.nonEmpty).toSet
+            val seen = manifested ++ batchShards.values.flatten
             val fresh = expandShardPaths(hconf, a.paths).filterNot(seen)
-            if (fresh.nonEmpty && battery.nonEmpty) {
+            val counting = fresh.nonEmpty && battery.nonEmpty
+            if (counting) {
               val batchId = {
                 val md = java.security.MessageDigest.getInstance("MD5")
                 fresh.sorted.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
@@ -925,19 +840,20 @@ object Cli {
               // any point leaves a state the next run converges from
               batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(
                 s"$stateDir/counts/batch=$batchId")
-              // atomic (tmp + rename): the orphan sweep's invariant is
-              // "a _shards record present ⇒ complete" — a plain create
-              // could crash mid-write and leave a PARTIAL shard list,
-              // whose unlisted shards would be recounted under a new
-              // batch id while this batch's counts stay in the totals
-              // (exactly the double-count the sweep exists to prevent)
-              writeStateFileAtomic(fs, new org.apache.hadoop.fs.Path(
-                s"$stateDir/counts/batch=$batchId", "_shards"),
-                fresh.sorted.mkString("\n") + "\n")
-              extendManifest(fs, stateDir, (seen.toSeq ++ fresh).sorted)
+              // the orphan sweep's invariant is "a _shards record
+              // present ⇒ complete": a PARTIAL shard list would let its
+              // unlisted shards be recounted under a new batch id while
+              // this batch's counts stay in the totals
+              search.Swap.writeState(fs, new org.apache.hadoop.fs.Path(
+                s"$stateDir/counts/batch=$batchId", "_shards"), fresh.sorted)
               System.err.println(s"contaminate --follow: ${fresh.size} new " +
                 s"shard(s) counted into $stateDir (batch $batchId)")
             }
+            // the manifest catches up with every recorded batch, also when
+            // a crash after a batch's _shards record left it behind
+            val counted = if (counting) seen ++ fresh else seen
+            if (counted != manifested)
+              search.Swap.writeState(fs, manifestP, counted.toSeq.sorted)
             // the durable report: totals over every batch dir (zero-hit
             // battery entries appear in EVERY batch, so the sum keeps them)
             import spark.implicits._
@@ -1180,8 +1096,8 @@ object Cli {
             ("buckets", flag("--buckets"), "64")))
           val uaxF = cfg("tokenizer") == "unicode"
           val buckets = cfg("buckets").toInt
-          val seen: Set[String] =
-            readStateLines(fs, manifest).getOrElse(Nil).filter(_.nonEmpty).toSet
+          val seen: Set[String] = search.Swap.readState(fs, manifest)
+            .getOrElse(Nil).filter(_.nonEmpty).toSet
           val fresh = all.filterNot(seen)
           val haveIndex = healIndex(spark, t, buckets)
           // the idmode pin is written the first time a NON-EMPTY batch is
@@ -1222,8 +1138,8 @@ object Cli {
                 t, buckets, force = true)
               search.InvertedIndex.persistNorms(spark, t)
             }
-            // extend the manifest atomically (tmp + rename) AFTER the swap
-            extendManifest(fs, stateDir, (seen.toSeq ++ fresh).sorted)
+            // extend the manifest AFTER the swap
+            search.Swap.writeState(fs, manifest, (seen.toSeq ++ fresh).sorted)
             System.err.println(
               s"index --follow: ${fresh.size} new shard(s) upserted into $t")
           }
@@ -1322,7 +1238,7 @@ object Cli {
           s"analyzed=$analyzed",
           s"fixMojibake=$fixMoji",
           s"tokenizer=${if (uax) "unicode" else "whitespace"}").mkString("\n")
-        readStateLines(fs, pinP).map(_.mkString("\n").trim) match {
+        search.Swap.readState(fs, pinP).map(_.mkString("\n").trim) match {
           case Some(prev) if prev != pinNow => sys.error(
             s"ingest --follow: pipeline config pinned at $pinP does not match " +
               s"this invocation — delete the pin ONLY if the change is " +
@@ -1330,12 +1246,12 @@ object Cli {
           // pin BEFORE processing: a crash after the batch lands but
           // before a late pin write would let a replay under different
           // flags silently adopt (and re-pin) the new config
-          case None => writeStateFile(fs, pinP, pinNow + "\n")
+          case None => search.Swap.writeState(fs, pinP, Seq(pinNow))
           case _ => ()
         }
         val manifestP = new org.apache.hadoop.fs.Path(stateDir, "manifest")
-        val seen: Set[String] =
-          readStateLines(fs, manifestP).getOrElse(Nil).filter(_.nonEmpty).toSet
+        val seen: Set[String] = search.Swap.readState(fs, manifestP)
+          .getOrElse(Nil).filter(_.nonEmpty).toSet
         // a drop glob that reaches into the state dir would re-ingest the
         // pipeline's own output as input (shards are assumed immutable, so
         // the feedback loop would silently grow the corpus every pass)
@@ -1353,12 +1269,15 @@ object Cli {
         // its docs (duplicates) or skip its index step entirely
         val pendingP = new org.apache.hadoop.fs.Path(stateDir, "pending")
         val claimed: Option[(Int, Seq[String])] =
-          readStateLines(fs, pendingP).map(_.filter(_.nonEmpty)).flatMap { l =>
+          search.Swap.readState(fs, pendingP).map(_.filter(_.nonEmpty)).flatMap { l =>
             l.headOption.filter(_.startsWith("seq=")).flatMap { h =>
               val shards = l.tail
               // stale claim: the whole batch already manifested (crash
               // between the manifest extension and the pending delete)
-              if (shards.isEmpty || shards.forall(seen)) { fs.delete(pendingP, false); None }
+              if (shards.isEmpty || shards.forall(seen)) {
+                search.Swap.clearState(fs, pendingP)
+                None
+              }
               else Some((h.stripPrefix("seq=").toInt, shards))
             }
           }
@@ -1369,14 +1288,9 @@ object Cli {
         }
         if (fresh.isEmpty) System.err.println("ingest: no new shards")
         else {
-          if (claimed.isEmpty) {
-            val tmpP = new org.apache.hadoop.fs.Path(stateDir, "pending.__tmp")
-            writeStateFile(fs, tmpP,
-              (s"seq=$seq" +: fresh).mkString("\n") + "\n")
-            fs.delete(pendingP, false)
-            if (!fs.rename(tmpP, pendingP)) sys.error(
-              s"ingest: pending-claim rename failed at $pendingP")
-          } else System.err.println(
+          if (claimed.isEmpty)
+            search.Swap.writeState(fs, pendingP, s"seq=$seq" +: fresh)
+          else System.err.println(
             s"ingest: resuming claimed batch of ${fresh.size} shard(s)")
           val digest = java.security.MessageDigest.getInstance("MD5")
             .digest(fresh.mkString("\n").getBytes("UTF-8"))
@@ -1453,7 +1367,9 @@ object Cli {
             operators.Dedup.appendHashState(written, md5(col("text")), hashState)
           table.foreach { t =>
             val tablePinP = new org.apache.hadoop.fs.Path(stateDir, "indextable")
-            readStateLines(fs, tablePinP).map(_.filter(_.nonEmpty)).foreach { l =>
+            val tablePin =
+              search.Swap.readState(fs, tablePinP).map(_.filter(_.nonEmpty))
+            tablePin.foreach { l =>
               require(l.headOption.contains(t),
                 s"ingest state at $stateDir pinned to index table " +
                   s"'${l.headOption.getOrElse("")}', got '$t'")
@@ -1512,10 +1428,12 @@ object Cli {
                 search.InvertedIndex.persistNorms(spark, t)
               }
             }
-            writeStateFile(fs, tablePinP, s"$t\nbuckets=$buckets\n")
+            // pinned once (a pin from before the buckets line gains it)
+            if (tablePin.forall(_.size < 2))
+              search.Swap.writeState(fs, tablePinP, Seq(t, s"buckets=$buckets"))
           }
-          extendManifest(fs, stateDir, (seen.toSeq ++ fresh).sorted)
-          fs.delete(pendingP, false) // claim consumed
+          search.Swap.writeState(fs, manifestP, (seen.toSeq ++ fresh).sorted)
+          search.Swap.clearState(fs, pendingP) // claim consumed
           System.err.println(
             s"ingest: ${fresh.size} shard(s) → $batchDir" +
               table.map(t => s", index '$t' updated").getOrElse(""))
@@ -1639,8 +1557,8 @@ object Cli {
             ("buckets", flag("--buckets"), "16")))
           val uaxF = cfg("tokenizer") == "unicode"
           val dimF = cfg("dim").toInt
-          val seen: Set[String] =
-            readStateLines(fs, manifestP).getOrElse(Nil).filter(_.nonEmpty).toSet
+          val seen: Set[String] = search.Swap.readState(fs, manifestP)
+            .getOrElse(Nil).filter(_.nonEmpty).toSet
           val fresh = expandShardPaths(hconf, a.paths).filterNot(seen)
           val haveIndex = search.AnnIndex.recoverIvfIndex(spark, table)
           // keyed on the idmode pin: an empty first shard extends the
@@ -1674,7 +1592,7 @@ object Cli {
                 step = cfg("step").toInt, table = table,
                 buckets = cfg("buckets").toInt, force = true,
                 hashedIds = true)
-            extendManifest(fs, stateDir, (seen.toSeq ++ fresh).sorted)
+            search.Swap.writeState(fs, manifestP, (seen.toSeq ++ fresh).sorted)
             System.err.println(
               s"ann --follow: ${fresh.size} new shard(s) embedded into $table")
           }

@@ -1,6 +1,7 @@
 package graft.search
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path,
+  UnsupportedFileSystemException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -27,6 +28,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * managed tables while their warehouse directories survive). A staging
   * write counts as complete only with a catalog entry or the committer's
   * `_SUCCESS` marker, which the committer writes last.
+  *
+  * The small state files of the incremental modes (manifests, pins, the
+  * pending batch claim, `_shards` records, snapshot markers, the bench
+  * artifacts) commit through here too: [[readState]], [[writeState]] (one
+  * overwrite-rename, so a reader sees the old or the new content, never a
+  * gap or a truncated file) and [[clearState]].
   */
 object Swap {
 
@@ -290,6 +297,63 @@ object Swap {
       home)
   }
 
+  /** Lines of a state file, or None if it is absent. */
+  def readState(fs: FileSystem, p: Path): Option[Seq[String]] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
+      finally in.close()
+    }
+
+  /** Replace a state file with `lines` in one step: the content goes to an
+    * attempt-unique sibling tmp, which is renamed over the target. A crash
+    * at any point leaves the old or the new file, never none and never a
+    * truncated one; a failed attempt deletes its tmp. On a file system
+    * without a `FileContext` binding the rename falls back to delete then
+    * rename, which leaves the target absent for the moment between them.
+    */
+  def writeState(fs: FileSystem, p: Path, lines: Seq[String]): Unit = {
+    // attempt-unique: concurrent writers must not publish each other's
+    // half-written tmp
+    val prefix = p.getName + ".__tmp."
+    val tmp = new Path(p.getParent, prefix + java.util.UUID.randomUUID())
+    // a killed process orphans its tmp; sweep those older than an hour,
+    // which a concurrent writer's in-flight tmp (milliseconds) never is
+    try {
+      val cutoff = System.currentTimeMillis() - 3600L * 1000
+      fs.listStatus(p.getParent).foreach { st =>
+        if (st.getPath.getName.startsWith(prefix) &&
+          st.getModificationTime < cutoff) fs.delete(st.getPath, false)
+      }
+    } catch { case _: java.io.IOException => () } // best-effort
+    var renamed = false
+    try {
+      val os = fs.create(tmp, true)
+      try os.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+      finally os.close()
+      reach(Point.StateStaged)
+      try FileContext.getFileContext(fs.getUri, fs.getConf)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+      catch {
+        case _: UnsupportedFileSystemException =>
+          fs.delete(p, false)
+          if (!fs.rename(tmp, p)) sys.error(s"state-file rename failed at $p")
+      }
+      renamed = true
+      reach(Point.StateCommitted)
+    } finally {
+      if (!renamed)
+        try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
+    }
+  }
+
+  /** Delete a state file (absent is fine). */
+  def clearState(fs: FileSystem, p: Path): Unit = {
+    fs.delete(p, false)
+    reach(Point.StateCleared)
+  }
+
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -310,9 +374,10 @@ object Swap {
     else fs.listStatus(p).toSeq.filter(s => s.isDirectory &&
       s.getPath.getName.startsWith(AnnIndex.PartCol + "=")).map(_.getPath)
 
-  /** Every commit point of the two protocols, in protocol order: the
-    * states a crash can leave between two catalog or filesystem
-    * mutations. The crash test enumerates this closed list.
+  /** Every commit point of the two table protocols and of the state
+    * files, in protocol order: the states a crash can leave between two
+    * catalog or filesystem mutations. The crash tests enumerate this
+    * closed list.
     */
   sealed abstract class Point
   object Point {
@@ -336,26 +401,36 @@ object Swap {
     case object ListsRegistered extends Point
     /** Staging's entry dropped; its directory and backup's remain. */
     case object StagingDropped extends Point
+    /** A state file's tmp written; the target untouched. */
+    case object StateStaged extends Point
+    /** The tmp renamed over the target. */
+    case object StateCommitted extends Point
+    /** A state file deleted. */
+    case object StateCleared extends Point
 
-    val values: Seq[Point] = Seq(TableStaged, LiveAside, LiveCleared,
+    /** The points of [[replaceTable]] and [[replaceParts]]. */
+    val table: Seq[Point] = Seq(TableStaged, LiveAside, LiveCleared,
       StagingLive, BackupDropped, PartsStaged, ListAside, ListMoved,
       ListsRegistered, StagingDropped)
+    /** The points of [[writeState]] and [[clearState]]. */
+    val state: Seq[Point] = Seq(StateStaged, StateCommitted, StateCleared)
+    val values: Seq[Point] = table ++ state
   }
 
   /** Test seam, confined to the calling thread: [[Faults.hits]] counts
     * every point reached, and reaching the `at` point for the given
     * (1-based) time throws [[Crash]] there. Nothing outside the crash
-    * test installs one.
+    * tests installs one.
     */
-  private[search] final class Faults(val at: Option[(Point, Int)]) {
+  private[graft] final class Faults(val at: Option[(Point, Int)]) {
     val hits = scala.collection.mutable.LinkedHashMap.empty[Point, Int]
   }
-  private[search] final class Crash(at: Point, n: Int)
+  private[graft] final class Crash(at: Point, n: Int)
       extends RuntimeException(s"injected crash at $at #$n")
 
   private val faults = new ThreadLocal[Faults]
 
-  private[search] def withFaults[T](f: Faults)(body: => T): T = {
+  private[graft] def withFaults[T](f: Faults)(body: => T): T = {
     faults.set(f)
     try body finally faults.remove()
   }

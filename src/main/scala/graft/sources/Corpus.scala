@@ -315,7 +315,8 @@ object Corpus {
     * shards land in ONE write job as `shard=N/` gzip JSONL partitions
     * under dynamic-partition overwrite, so a crashed run's partial shards
     * are replaced wholesale on retry instead of duplicated. The manifest
-    * (`_ingest_manifest.txt`) is extended only after the write commits:
+    * (`_ingest_manifest.txt`) is replaced through `Swap.writeState` only
+    * after the write commits, so it always holds the old or the new list:
     * crash before = those shards rewritten identically next run; crash
     * after = clean resume. `textField` renames to the canonical `text`
     * like the reference's `_update_example`.
@@ -365,7 +366,8 @@ object Corpus {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
-      writeIngestManifest(spark, outDir, completed ++ writtenShards)
+      writeManifest(spark, manifestPath(outDir),
+        (completed ++ writtenShards).toSeq.sorted.map(_.toString))
     }
     writtenShards
   }
@@ -473,7 +475,7 @@ object Corpus {
     require(dup.isEmpty,
       s"ingestFromManifest: duplicate target basenames would clobber: " +
         dup.keys.toSeq.sorted.take(5).mkString(", "))
-    val done = readFetchManifest(spark, outDir)
+    val done = manifestLines(spark, fetchManifestPath(outDir)).toSet
     val skipped = named.count { case (_, n) => done(n) }.toLong
     val todo = named.filterNot { case (_, n) => done(n) }
     if (todo.isEmpty)
@@ -505,7 +507,8 @@ object Corpus {
     }.collect()
     val okUrls = results.collect { case (u, _, None) => u }.toSeq
     val okNames = results.collect { case (_, n, None) => n }.toSeq
-    if (okNames.nonEmpty) writeFetchManifest(spark, outDir, done ++ okNames)
+    if (okNames.nonEmpty) writeManifest(spark, fetchManifestPath(outDir),
+      (done ++ okNames).toSeq.sorted)
     FetchReport(okUrls, skipped,
       results.collect { case (u, _, Some(e)) => (u, e) }.toSeq)
   }
@@ -532,57 +535,23 @@ object Corpus {
   private def fetchManifestPath(outDir: String) =
     new org.apache.hadoop.fs.Path(outDir, "_fetch_manifest.txt")
 
-  private def readFetchManifest(spark: SparkSession, outDir: String): Set[String] = {
-    val p = fetchManifestPath(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toSet
-      finally in.close()
-    }
-  }
-
-  private def writeFetchManifest(spark: SparkSession, outDir: String,
-                                 urls: Set[String]): Unit = {
-    val p = fetchManifestPath(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(outDir, "_fetch_manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(urls.toSeq.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p)) sys.error(s"fetch-manifest rename failed at $p")
-  }
-
   private def manifestPath(outDir: String) =
     new org.apache.hadoop.fs.Path(outDir, "_ingest_manifest.txt")
 
-  /** Completed shard ids recorded for `outDir` (empty when none). */
-  def readIngestManifest(spark: SparkSession, outDir: String): Set[Long] = {
-    val p = manifestPath(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.toLong).toSet
-      finally in.close()
-    }
-  }
+  private def manifestLines(spark: SparkSession,
+                            p: org.apache.hadoop.fs.Path): Seq[String] =
+    graft.search.Swap.readState(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .getOrElse(Nil).filter(_.nonEmpty)
 
-  private def writeIngestManifest(spark: SparkSession, outDir: String,
-                                  shards: Set[Long]): Unit = {
-    val p = manifestPath(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(outDir, "_ingest_manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(shards.toSeq.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+  private def writeManifest(spark: SparkSession, p: org.apache.hadoop.fs.Path,
+                            lines: Seq[String]): Unit =
+    graft.search.Swap.writeState(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, lines)
+
+  /** Completed shard ids recorded for `outDir` (empty when none). */
+  def readIngestManifest(spark: SparkSession, outDir: String): Set[Long] =
+    manifestLines(spark, manifestPath(outDir)).map(_.toLong).toSet
 
   /** S9's replacement at Spark scale: persist a corpus as a BUCKETED,
     * sorted Parquet table — the "index tier" the reference delegates to

@@ -10,7 +10,9 @@ import graft.functions.expressions.IntersectionSize
 
 /** `Sessions.local` is the one session builder: every entry point, tool
   * and test plans under the same confs, rules and extensions, and reuses
-  * its generated classes.
+  * its generated classes. The source guards beside it keep the other
+  * one-place rules: one builder, one probe listener, one state-file
+  * commit.
   */
 class SessionsSpec extends SparkTestBase {
 
@@ -79,6 +81,30 @@ class SessionsSpec extends SparkTestBase {
   test("no session builder outside Sessions.scala") {
     val builder = """SparkSession\s*\.\s*builder""".r
     assert(offenders(Seq("src/main", "src/test"), builder, "Sessions.scala") === Nil)
+  }
+
+  test("no tmp+rename commit outside Swap and Corpus's executor-side shard commits") {
+    // code lines only: a comment naming the idiom is no copy of it
+    val commit = """rename\(|Files\.move|\.__tmp""".r
+    // a member of a top-level object starts at two spaces
+    val member =
+      """^  (?:[\w\[\]]+ )*(?:def|val|var|class|object|trait|type) (\w+)""".r.unanchored
+    val shardCommits = Set("consolidateShards", "ingestFromManifest")
+    val found = scalaFiles("src/main")
+      .filter(_.getFileName.toString != "Swap.scala").flatMap { p =>
+        var current = ""
+        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (l, i) =>
+          l match { case member(name) => current = name; case _ => () }
+          val t = l.trim
+          val comment = t.startsWith("//") || t.startsWith("*") ||
+            t.startsWith("/*")
+          val allowed = p.getFileName.toString == "Corpus.scala" &&
+            shardCommits(current)
+          if (comment || allowed || commit.findFirstIn(l).isEmpty) None
+          else Some(s"$p:${i + 1}: $t")
+        }
+      }
+    assert(found === Nil, "commit state files through Swap.writeState")
   }
 
   test("no SparkListener in graft.tools outside the shared ProbeListener") {

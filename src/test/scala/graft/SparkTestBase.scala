@@ -18,4 +18,20 @@ trait SparkTestBase extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A JVM restart under the in-memory catalog: every entry of the tables
+    * whose names start with `prefix` is gone, every directory stays.
+    */
+  def forget(prefix: String): Unit =
+    spark.catalog.listTables().collect()
+      .filter(x => !x.isTemporary && x.name.startsWith(prefix)).foreach { x =>
+        val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+            x.name)).location)
+        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val aside = loc.suffix(".aside")
+        assert(fs.rename(loc, aside))
+        spark.sql(s"DROP TABLE `${x.name}`")
+        assert(fs.rename(aside, loc))
+      }
 }

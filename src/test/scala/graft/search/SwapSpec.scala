@@ -12,18 +12,28 @@ import org.apache.spark.sql.functions._
   * must give rows computed independently of the swap; after the heal the
   * table must read exactly the pre-op or exactly those post-op rows with
   * no debris left, and re-running a rolled-back op must give the post-op
-  * rows.
+  * rows. An upsert that drains a list may heal to neither (a crash before
+  * the drained list's padding); its replay must give the post-op rows.
+  * The state-file points are crash-tested by `graft.StateSpec`.
   */
 class SwapSpec extends graft.SparkTestBase {
 
   private def hconf = spark.sparkContext.hadoopConfiguration
 
   /** `expected`: the post-op rows, computed after `setup` without
-    * running the op.
+    * running the op. `drains`: the op empties a list, and a crash between
+    * the staging commit and the empty-directory padding heals to neither
+    * table; only the op's replay (an upsert's at-least-once contract)
+    * supersedes the drained list.
     */
   private case class Op(name: String, table: String, setup: () => Unit,
                         expected: () => DataFrame, run: () => Unit,
-                        heal: () => Boolean)
+                        heal: () => Boolean, drains: Boolean = false)
+
+  /** (op, point) pairs whose heal gave neither the pre- nor the post-op
+    * rows; only a draining op may have any.
+    */
+  private val partial = scala.collection.mutable.Set.empty[(String, Swap.Point)]
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -36,22 +46,6 @@ class SwapSpec extends graft.SparkTestBase {
       val d = Swap.dir(spark, n)
       assert(!d.getFileSystem(hconf).exists(d), s"$where: dir $d left")
     }
-
-  /** A JVM restart under the in-memory catalog: every entry of `t`'s
-    * tables is gone, every directory stays.
-    */
-  private def forget(t: String): Unit =
-    spark.catalog.listTables().collect()
-      .filter(x => !x.isTemporary && x.name.startsWith(t)).foreach { x =>
-        val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-            x.name)).location)
-        val fs = loc.getFileSystem(hconf)
-        val aside = loc.suffix(".aside")
-        assert(fs.rename(loc, aside))
-        spark.sql(s"DROP TABLE `${x.name}`")
-        assert(fs.rename(aside, loc))
-      }
 
   private def crashTest(op: Op): Set[Swap.Point] = {
     op.setup()
@@ -75,12 +69,13 @@ class SwapSpec extends graft.SparkTestBase {
       if (restart) forget(op.table)
       assert(op.heal(), s"$where: no live table after heal")
       val got = rows(op.table)
-      assert(got == pre || got == post,
+      assert(got == pre || got == post || op.drains,
         s"$where: healed table is neither the pre- nor the post-op table")
       assertNoDebris(op.table, where)
-      if (got == pre) {
+      if (got != pre && got != post) partial += op.name -> point
+      if (got != post) {
         op.run()
-        assert(rows(op.table) == post, s"$where: re-run after roll-back")
+        assert(rows(op.table) == post, s"$where: re-run after the heal")
         assertNoDebris(op.table, s"$where re-run")
       }
     }
@@ -167,7 +162,8 @@ class SwapSpec extends graft.SparkTestBase {
       live.join(fresh.select("id"), Seq("id"), "left_anti")
         .select(live.columns.map(col): _*).unionByName(fresh)
     }
-    def annOp(name: String, vs: DataFrame, run: String => Unit): Op = {
+    def annOp(name: String, vs: => DataFrame, run: String => Unit,
+              drains: Boolean = false): Op = {
       val t = s"swap_$name"
       Op(name, t,
         setup = () => {
@@ -177,24 +173,44 @@ class SwapSpec extends graft.SparkTestBase {
         },
         expected = () => annAfter(t, vs),
         run = () => run(t),
-        heal = () => AnnIndex.recoverIvfIndex(spark, t))
+        heal = () => AnnIndex.recoverIvfIndex(spark, t), drains = drains)
     }
     // re-embedded old ids (some change lists) plus new ids
     val moved = vecs.where(col("vec_id") % 12 === 1)
       .withColumn("embedding", reverse(col("embedding")))
       .unionByName(vecs.where(col("vec_id") >= 54))
     val arrivals = vecs.where(col("vec_id") >= 48)
+    // every id of the smallest list re-embedded as a vector of another
+    // list, so the upsert drains that list; read off the first setup's
+    // build, which every later setup repeats
+    lazy val drainBatch: DataFrame = {
+      val live = spark.table("swap_ann_drain")
+      val part = col(AnnIndex.PartCol)
+      val small = live.groupBy(part).count().orderBy(col("count"), part)
+        .head().getLong(0)
+      val donor = live.where(part =!= small).orderBy("id").head()
+        .getAs[Long]("id")
+      val emb = vecs.where(col("vec_id") === donor).head().getSeq[Double](1)
+      live.where(part === small).select("id").collect()
+        .map(r => (r.getLong(0), emb.toArray)).toSeq.toDF("vec_id", "embedding")
+    }
     val annOps = Seq(
       annOp("ann_upsert", moved, t =>
         AnnIndex.upsertIvfIndex(spark, t, moved, "vec_id", "embedding")),
       annOp("ann_compact", arrivals, t => AnnIndex.compactIvfIndex(spark, t,
-        AnnIndex.assignNew(spark, t, arrivals, "vec_id", "embedding"))))
+        AnnIndex.assignNew(spark, t, arrivals, "vec_id", "embedding"))),
+      annOp("ann_drain", drainBatch, t =>
+        AnnIndex.upsertIvfIndex(spark, t, drainBatch, "vec_id", "embedding"),
+        drains = true))
 
     val ops = textOps ++ (mhOp +: annOps)
     try {
       val covered = ops.flatMap(crashTest).toSet
-      assert(covered === Swap.Point.values.toSet,
+      assert(covered === Swap.Point.table.toSet,
         "a commit point no op reaches is not crash-tested")
+      // the drained-list padding window: staged, not yet padded
+      assert(partial.contains("ann_drain" -> Swap.Point.PartsStaged),
+        "no crash fell between the staging commit and the padding")
     } finally ops.foreach(op => Swap.drop(spark, op.table,
       s"${op.table}__norms", s"${op.table}__meta",
       s"${op.table}__centroids"))
