@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +32,7 @@ import graft.sources.Corpus
   *                                      // off the persisted band-row index
   *     [--follow DIR [--threshold J]]   // incremental: each invocation
   *                                      // decontaminates only NEW shards
-  *                                      // (checkpoint DIR/ckpt → DIR/data)
+  *                                      // (manifest → DIR/data/batch-*)
   *   runMain graft.Cli contaminate PATH... --bench PATH [--out DIR]
   *     [--field COL]                    // phrase column (default text)
   *     [--per-phrase]                   // per-phrase count rows, not the card
@@ -134,108 +135,15 @@ object Cli {
       println(s"""{"tokens":$toks,"string":"${jsonEscape(s)}","count":$c,"rank":${i + 1}}""")
     }
 
-  // ---- drop-directory state helpers (index --follow, ingest --follow) ----
-
-  /** Expand globs/dirs to FILE paths, each qualified against ITS OWN
-    * filesystem (file:// and s3:// shards may mix, and neither need match
-    * fs.defaultFS) — manifest entries built from these compare stably
-    * across invocations.
-    */
-  private def expandShardPaths(hconf: org.apache.hadoop.conf.Configuration,
-                               paths: Seq[String]): Seq[String] =
-    paths.flatMap { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val pfs = hp.getFileSystem(hconf)
-      val glob = pfs.globStatus(hp)
-      if (glob == null) Seq.empty[String]
-      else glob.toSeq.flatMap { st =>
-        if (st.isDirectory)
-          pfs.listStatus(st.getPath).filter(_.isFile).map(_.getPath).toSeq
-        else Seq(st.getPath)
-      }.map(f => pfs.makeQualified(f).toString)
-    }.sorted
-
-  /** Index-wide settings pinned in the state dir on first use — batches
-    * processed under drifting flags (tokenizer, analyzer, bucket count,
-    * embedding dim) would silently mix incompatible postings/vectors in
-    * one index. Each entry is (key, explicitly-passed value, default): a
-    * PASSED value must match any pin (loud error otherwise); an omitted
-    * flag adopts the pinned value, so maintenance invocations don't have
-    * to repeat the build dials. Returns the effective settings.
-    */
-  private def pinnedSettings(fs: org.apache.hadoop.fs.FileSystem,
-                             stateDir: String, cmd: String,
-                             entries: Seq[(String, Option[String], String)])
-      : Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir, "config")
-    val pinMap: Map[String, String] =
-      search.Swap.readState(fs, p).map(_.filter(_.contains('=')).map { l =>
-        val i = l.indexOf('=')
-        l.take(i) -> l.drop(i + 1).trim
-      }.toMap).getOrElse(Map.empty)
-    val eff = entries.map { case (k, passed, default) =>
-      passed.foreach(v => pinMap.get(k).filter(_ != v).foreach(pv =>
-        sys.error(s"$cmd: '$k' pinned to '$pv' at $p but this invocation " +
-          s"passed '$v' — delete the pin ONLY if the change is intentional")))
-      k -> passed.orElse(pinMap.get(k)).getOrElse(default)
-    }
-    // merge-write whenever ANY entry key is unpinned (not only when the
-    // whole file is absent): a key added to `entries` in a later release —
-    // or dropped from a hand-edited file — would otherwise resolve to its
-    // default forever without being pinned, so a subsequent invocation
-    // could pass a different value without clashing — exactly the silent
-    // index-wide drift the pin exists to prevent. Existing pins are
-    // preserved verbatim (unknown keys included).
-    if (entries.exists { case (k, _, _) => !pinMap.contains(k) }) {
-      val extra = (pinMap -- entries.map(_._1)).toSeq.sortBy(_._1)
-      search.Swap.writeState(fs, p, (eff ++ extra).map { case (k, v) => s"$k=$v" })
-    }
-    eff.toMap
-  }
-
-  /** [[pinnedIdMode]]'s `allHaveIds` for `df`: None when it has no rows,
-    * else whether every row carries a non-null `id`. One job answers both
-    * questions a batch needs: a top-1 with null ids sorted first (a
-    * global aggregate would add a shuffle stage, i.e. a second job).
+  /** [[search.Follow.idMode]]'s `allHaveIds` for `df`: None when it has
+    * no rows, else whether every row carries a non-null `id`. One job
+    * answers both questions a batch needs: a top-1 with null ids sorted
+    * first (a global aggregate would add a shuffle stage, i.e. a second
+    * job).
     */
   private def idPresence(df: DataFrame): Option[Boolean] =
     df.select(col("id").isNull.as("missing")).orderBy(col("missing").desc)
       .head(1).headOption.map(!_.getBoolean(0))
-
-  /** Read-or-pin the posting id mode ("id" = the corpus's own id field,
-    * "path-line" = the full-path synthetic {md5(path)}-{line} id) for a
-    * drop-directory state dir. The mode is decided on the FIRST non-empty
-    * batch and pinned: withFileLineId keys change meaning if a later
-    * batch suddenly carries corpus ids (or stops), and an upsert's
-    * anti-join would then silently miss or clobber. `allHaveIds` is None
-    * for an empty batch — the decision (and the pin) defers.
-    */
-  private def pinnedIdMode(fs: org.apache.hadoop.fs.FileSystem,
-                           stateDir: String, allHaveIds: Option[Boolean],
-                           cmd: String): String = {
-    val modeFile = new org.apache.hadoop.fs.Path(stateDir, "idmode")
-    val stored =
-      search.Swap.readState(fs, modeFile).flatMap(_.headOption).map(_.trim)
-    val mode = stored.getOrElse(
-      if (allHaveIds.contains(true)) "id" else "path-line")
-    if (mode == "id" && allHaveIds.contains(false)) sys.error(
-      s"$cmd: state at $stateDir is keyed by the corpus `id` field but " +
-        "this batch has docs with null ids — fix the shards or start a " +
-        "new state dir")
-    if (stored.isEmpty && allHaveIds.nonEmpty)
-      search.Swap.writeState(fs, modeFile, Seq(mode))
-    mode
-  }
-
-  /** Heal index-table crash state BEFORE deciding whether an index exists:
-    * after a crash mid-swap plus a JVM restart, the live postings sit
-    * under the swap's debris directories with no catalog entry, and
-    * treating that as "first run" would overwrite the table. Returns
-    * whether a live index exists after recovery.
-    */
-  private def healIndex(spark: SparkSession, t: String, buckets: Int): Boolean =
-    search.Swap.heal(spark, t,
-      search.InvertedIndex.registerIndex(spark, _, buckets))
 
   /** The pipeline's TEXT projections in their contractual order: mojibake
     * repair FIRST (analysis would strip the C1 evidence the latin-1
@@ -260,6 +168,99 @@ object Cli {
   private def readProjected(spark: SparkSession, paths: Seq[String],
                             fixMojibake: Boolean, analyze: Boolean): DataFrame =
     textProjections(Corpus.readJsonl(spark, paths), fixMojibake, analyze)
+
+  /** A claimed batch of `index|ann --follow`, read under the pinned
+    * projections and keyed by the state dir's pinned id mode: the corpus
+    * `id`, or the `{md5(full path)}-{line}` id (two drop-dir shards
+    * sharing a basename must not collide). None for a batch without rows,
+    * which pins nothing and must not pay an upsert's corpus-scale live
+    * rewrite to append zero documents.
+    */
+  private def keyedBatch(spark: SparkSession, stateDir: String,
+                         shards: Seq[String], cfg: Map[String, String],
+                         cmd: String): Option[(DataFrame, String)] = {
+    val df = readProjected(spark, shards,
+      cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
+    val ids = idPresence(df)
+    ids.map { _ =>
+      val fs = search.Follow.stateFs(spark, stateDir)
+      if (search.Follow.idMode(fs, stateDir, ids, cmd) == "id") (df, "id")
+      else (Corpus.withFileLineId(df, "__id", fullPath = true), "__id")
+    }
+  }
+
+  private def dataBatches(fs: FileSystem, stateDir: String): Seq[FileStatus] =
+    Option(fs.globStatus(new Path(s"$stateDir/data", "batch-*"))).toSeq.flatten
+
+  /** Write one claimed batch of clean corpus to
+    * `data/batch-<seq>-<digest of its shards>` under the state dir and
+    * return the dir: the batch stage `ingest` and `decontaminate --follow`
+    * share. The shards are read under the pinned projections; `ingest`
+    * quality-gates them and drops docs whose text hash is in `hashState`;
+    * both then drop docs of the `benchPaths` benchmark, exactly (md5 of
+    * the text) or, with `fuzzyT`, by MinHash Jaccard. The write is
+    * overwrite-mode and gated on `_SUCCESS`: a replay of the claim
+    * recomputes an unfinished dir against unchanged hash state and skips a
+    * durable one, so its part files (and ids derived from their paths)
+    * stay stable.
+    */
+  private def writeCleanBatch(spark: SparkSession, b: search.Follow.Batch,
+                              stateDir: String, cmd: String, fixMojibake: Boolean,
+                              analyzed: Boolean, uax: Boolean, quality: String,
+                              hashState: Option[String], benchPaths: Seq[String],
+                              fuzzyT: Option[Double]): String = {
+    val digest = search.Follow.md5Hex(b.shards.mkString("\n")).take(16)
+    val batchDir = f"$stateDir/data/batch-${b.seq}%06d-$digest"
+    if (search.Follow.stateFs(spark, stateDir).exists(new Path(batchDir, "_SUCCESS")))
+      System.err.println(s"$cmd: batch already durable at $batchDir — " +
+        "resuming its remaining steps")
+    else {
+      val dfA = readProjected(spark, b.shards, fixMojibake, analyzed)
+      val corpusCols = dfA.columns.toSeq
+      // text-less docs are dropped before dedup — a training pipeline has
+      // no use for them, and null text would collapse to one hash-state
+      // key; decontamination alone keeps them, as one-shot
+      // `decontaminate` does
+      val docs = if (hashState.isEmpty) dfA else dfA.where(col("text").isNotNull)
+      // full-path synthetic row key: stable across replays, no basename
+      // collisions across drop-dir batches
+      val keyed =
+        if (quality == "none" && hashState.isEmpty && fuzzyT.isEmpty) docs
+        else Corpus.withFileLineId(docs, "__iid", fullPath = true)
+      val gated =
+        if (quality == "none") keyed
+        else (if (quality == "gopher") operators.TextQuality.gopherFilter(
+            keyed, "__iid", "text", passthrough = corpusCols)
+          else operators.TextQuality.fineWebFilter(
+            keyed, "__iid", "text", passthrough = corpusCols))
+          .where(col("keep")).select(("__iid" +: corpusCols).map(col): _*)
+      val deduped = hashState.fold(gated)(h => operators.Dedup
+        .dedupIncremental(gated, md5(col("text")), Seq(col("__iid")), h))
+      var benchCkpt: Option[DataFrame] = None
+      val cleaned =
+        if (benchPaths.isEmpty) deduped
+        else {
+          val bench = readProjected(spark, benchPaths, fixMojibake, analyzed)
+          fuzzyT match {
+            case Some(t) =>
+              // benchmark-sized localCheckpoint: the synthetic file-line
+              // id must not rebuild per consumer — released after the
+              // batch write consumes it
+              val bk = Corpus.withFileLineId(bench, "__bid").localCheckpoint(true)
+              benchCkpt = Some(bk)
+              operators.Dedup.decontaminateFuzzy(deduped, bk,
+                "__iid", "__bid", "text", "text", t, uax29 = uax)
+            case None => operators.Dedup.decontaminate(deduped,
+              md5(col("text")), bench, md5(col("text")))
+          }
+        }
+      try Corpus.writeJsonl(cleaned.select(corpusCols.map(col): _*),
+        batchDir, force = true)
+      finally benchCkpt.foreach(
+        org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint)
+    }
+    batchDir
+  }
 
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty, "usage: graft.Cli <topk|botk|count|search|stats|unique|dedup|decontaminate|contaminate|diff|report|domains|grep|langid|index|vocab|sample|consolidate|ingest|fetch|help> PATH... [flags] — `help` documents the --conf session dials (recall/speed)")
@@ -311,6 +312,11 @@ object Cli {
       }
     }
 
+    // the incremental modes claim and record whole shards: a shard read
+    // in part would be recorded as processed
+    require(!a.flags.contains("--follow") ||
+      (flag("--limit").isEmpty && flag("--file-limit").isEmpty),
+      s"$cmd --follow reads whole shards (no --limit/--file-limit)")
     // LAZY: the --follow commands (ingest, ann/index --follow) read fresh
     // shards themselves and must not crash on an empty drop glob — the
     // routine empty-poll case — just because this shared read resolves
@@ -330,18 +336,32 @@ object Cli {
     lazy val docs = textProjections(readDocs, fixMoji, analyzed)
     def foldQuery(s: String): String =
       if (analyzed) search.Searcher.analyzePhrase(s) else s
-    def searchStrings(n: String): Seq[String] = flagAll(n).map(foldQuery)
     // secondary corpora (--bench / --old / --refresh-old) fold through the
     // SAME analyzer as the primary — comparing analyzed text against raw
     // text would silently match nothing (hashes/diffs keyed on text)
     def readSecondary(paths: Seq[String]): DataFrame =
       textProjections(Corpus.readJsonl(spark, paths), fixMoji, analyzed)
 
+    // key docs by the corpus's own `id` field when it has one (stable
+    // across snapshots — what index --refresh-old's diff pairs on),
+    // falling back to the `{file}-{line}` synthetic id
+    def keyedById(df: DataFrame): (DataFrame, String) =
+      if (!df.where(col("id").isNotNull).isEmpty) (df, "id")
+      else (Corpus.withFileLineId(df, "__id"), "__id")
+
     val out = flag("--out")
     def deliver(df: DataFrame, ranked: Boolean): Unit = out match {
       case Some(path) => Corpus.writeJsonl(df, path, force = a.flags.contains("--force"))
       case None => if (ranked) printRanked(df) else df.show(1000, truncate = false)
     }
+
+    // the text dials every --follow state dir pins: an omitted
+    // presence-only flag ADOPTS the pin (the maintenance workflow);
+    // passing it against a false pin clashes
+    val textPins = Seq(
+      ("tokenizer", flag("--tokenizer"), "unicode"),
+      ("analyzed", if (analyzed) Some("true") else None, "false"),
+      ("fixMojibake", if (fixMoji) Some("true") else None, "false"))
 
     // reference -t/--tokenizer: "unicode" (default, UAX-29) or
     // "whitespace"; HF-pretrained names have no offline equivalent here —
@@ -420,7 +440,7 @@ object Cli {
         deliver(NgramOps.botK(docs, "text", intFlag("--ngram", 3), intFlag("--topk", 20),
           uax29 = uax), ranked = true)
       case "count" =>
-        deliver(NgramOps.countPhrases(docs, "text", searchStrings("--search"), uax29 = uax),
+        deliver(NgramOps.countPhrases(docs, "text", flagAll("--search").map(foldQuery), uax29 = uax),
           ranked = false)
       case "search" =>
         if (a.flags.contains("--with-locations"))
@@ -456,17 +476,11 @@ object Cli {
               sys.error("dedup --state needs --out DIR (durable survivors " +
                 "must land before the state extends)"))
             val hconf = spark.sparkContext.hadoopConfiguration
-            val statePb = new org.apache.hadoop.fs.Path(state)
-            val sfs = statePb.getFileSystem(hconf)
-            val snapshotId = java.security.MessageDigest.getInstance("MD5")
-              .digest((expandShardPaths(hconf, a.paths) :+ outDir)
-                .mkString("\n").getBytes("UTF-8"))
-              .map("%02x".format(_)).mkString.take(16)
+            val sfs = new Path(state).getFileSystem(hconf)
+            val snapshotId = search.Follow.snapshotId(hconf, a.paths, outDir)
             // sibling dir: the state path itself is the hash PARQUET
             // table — a foreign subdir would break its schema inference
-            val markP = new org.apache.hadoop.fs.Path(state + "__outmarks",
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(outDir.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+            val markP = new Path(state + "__outmarks", search.Follow.md5Hex(outDir))
             val marker = search.Swap.readState(sfs, markP)
               .flatMap(_.headOption).map(_.trim)
             marker.foreach { prev =>
@@ -481,7 +495,7 @@ object Cli {
             // dir — destroying it needs the same explicit --force the
             // plain --out path requires
             if (marker.isEmpty && !a.flags.contains("--force")) {
-              val outP = new org.apache.hadoop.fs.Path(outDir)
+              val outP = new Path(outDir)
               val ofs = outP.getFileSystem(hconf)
               if (ofs.exists(outP) && ofs.listStatus(outP).nonEmpty) sys.error(
                 s"dedup --state: --out $outDir exists and is not empty, and " +
@@ -539,50 +553,37 @@ object Cli {
         // (signed here on first use, reused — and band-key-pruned — by
         // every later benchmark; --rebuild-index forces a re-sign)
         // --follow DIR: INCREMENTAL mode — the input paths are a watched
-        // drop directory; each invocation processes only shards that
-        // arrived since the last one (file-source checkpoint at DIR/ckpt)
-        // and appends survivors as gzip JSONL under DIR/data. Exact by
-        // default (hash blocklist, stream-static anti join); --threshold J
-        // switches to fuzzy (stateless MinHash band-key joins — the J8
-        // decision, one micro-batch at a time). The ingest-time guard a
-        // training pipeline runs on every crawl drop.
+        // drop directory; each invocation decontaminates only shards that
+        // arrived since the last one (the resume loop of search.Follow)
+        // into DIR/data/batch-*, ingest's batch layout. Exact by default
+        // (md5 blocklist anti join); --threshold J switches to fuzzy
+        // (MinHash band-key joins — the J8 decision, one batch at a time).
+        // The ingest-time guard a training pipeline runs on every crawl
+        // drop.
         flag("--follow") match { case Some(stateDir) =>
+          val cmdF = "decontaminate --follow"
           require(flag("--spans").isEmpty && flag("--minhash-table").isEmpty,
             "--follow composes with --threshold only (not --spans/--minhash-table)")
-          require(flag("--limit").isEmpty && flag("--file-limit").isEmpty,
-            "--follow reads whole shards (no --limit/--file-limit)")
-          val raw = a.paths.map(p =>
-              spark.readStream.schema(Corpus.schema).json(p))
-            .reduce(_.unionByName(_))
-          val moji = if (fixMoji) raw.withColumn("text",
-            operators.TextQuality.fixMojibake(col("text"))) else raw
-          val in = if (analyzed) moji.withColumn("text",
-            graft.functions.TextFunctions.esAnalyzeText(col("text"))) else moji
-          val cleaned = flag("--threshold") match {
-            case Some(t) =>
-              // materialized eagerly: the synthetic file-line id uses
-              // monotonically_increasing_id/input_file_name, which the
-              // streaming unsupported-ops check rejects even on the
-              // STATIC side of a stream-static join — a LogicalRDD
-              // (benchmark-sized) carries no such expressions, and the
-              // per-micro-batch bench re-evaluation goes away with it
-              val b = Corpus.withFileLineId(bench, "__bid").localCheckpoint(true)
-              streaming.StreamOps.decontaminateFuzzyStream(in, "text",
-                b, "__bid", "text", t.toDouble, uax29 = uax)
-            case None =>
-              streaming.StreamOps.decontaminateStream(in, "text",
-                bench.select(md5(col("text")).as("h")))
+          val fs = search.Follow.stateFs(spark, stateDir)
+          // the earlier layout resumed through a Structured Streaming
+          // checkpoint; its data/ holds no batch dirs or manifest, so the
+          // loop would decontaminate every shard a second time
+          if (fs.exists(new Path(stateDir, "ckpt")))
+            sys.error(s"$cmdF: $stateDir holds ckpt/, a streaming " +
+              "checkpoint of the old state layout, which this version " +
+              "does not resume — give --follow a new state dir")
+          val cfg = search.Follow.pins(fs, stateDir, cmdF,
+            textPins :+ ("threshold", flag("--threshold"), "none"))
+          search.Follow.run(spark, cmdF, stateDir, a.paths,
+              nextSeq = dataBatches(fs, stateDir).size) { b =>
+            val dir = writeCleanBatch(spark, b, stateDir, cmdF,
+              cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean,
+              cfg("tokenizer") == "unicode", quality = "none",
+              hashState = None, flagAll("--bench"),
+              Some(cfg("threshold")).filter(_ != "none").map(_.toDouble))
+            System.err.println(
+              s"$cmdF: ${b.shards.size} new shard(s) decontaminated into $dir")
           }
-          val q = cleaned.writeStream.format("json")
-            .option("path", s"$stateDir/data")
-            .option("compression", "gzip")
-            .option("checkpointLocation", s"$stateDir/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          System.err.println(
-            s"follow pass complete: new shards decontaminated into $stateDir/data")
         case None =>
         (flag("--spans"), flag("--minhash-table")) match {
           case (Some(k), _) =>
@@ -668,8 +669,18 @@ object Cli {
         val benchRaw = spark.read.json(flagAll("--bench"): _*)
         val bench = if (benchRaw.columns.contains("text"))
           textProjections(benchRaw, fixMoji, analyzed) else benchRaw
-        def contaminateFold(s: String): String =
-          foldQuery(if (fixMoji) graft.functions.Mojibake.fix(s) else s)
+        def phraseFold(fix: Boolean, analyze: Boolean)(s: String): String = {
+          val repaired = if (fix) graft.functions.Mojibake.fix(s) else s
+          if (analyze) search.Searcher.analyzePhrase(repaired) else repaired
+        }
+        def contaminateFold(s: String): String = phraseFold(fixMoji, analyzed)(s)
+        // --fields a,b[,c...]: PAIRED examples
+        val fieldsFlag: Option[Seq[String]] = flag("--fields").map { fsv =>
+          val names = fsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+          require(names.length >= 2,
+            "--fields wants 2+ comma-separated benchmark columns")
+          names
+        }
         val slop = intFlag("--slop", 0)
         // --lucene-slop: ES `match_phrase` move-distance semantics (slop 2
         // buys transpositions) instead of the docstring insertion budget —
@@ -708,92 +719,63 @@ object Cli {
         // --follow STATE: INCREMENTAL contamination tracking over a drop
         // directory — each invocation counts only shards that arrived
         // since the last and folds them into durable per-phrase totals
-        // under STATE/counts. Crash-safe by BATCH IDEMPOTENCE rather than
-        // ordering: a batch's partial counts land under
-        // counts/batch=<md5 of the sorted fresh-shard set> (an Overwrite
-        // write), so replay after a crash between the counts write and
-        // the manifest extension recomputes the SAME batch id and
-        // overwrites instead of double-counting; the report is the sum
-        // over batch dirs. The benchmark battery (post-fold, sorted,
-        // md5-keyed), fold dials, tokenizer, slop and dialect all PIN on
-        // first use — a drifting battery would silently make totals
-        // incomparable across invocations.
+        // under STATE/counts, through the resume loop of search.Follow. A
+        // batch's partial counts land under counts/batch=<md5 of the
+        // sorted claimed shards> (an Overwrite write), so a replay of the
+        // claim recomputes the SAME batch id and overwrites instead of
+        // double-counting; the report is the sum over batch dirs. The
+        // benchmark battery (post-fold, sorted, md5-keyed), fold dials,
+        // tokenizer, slop and dialect all PIN on first use — a drifting
+        // battery would silently make totals incomparable across
+        // invocations.
         flag("--follow") match {
           case Some(stateDir) =>
             require(flag("--templates").isEmpty, "contaminate --follow " +
               "does not support --templates — render once, write the " +
               "prompts as a benchmark column, and pass --field")
-            require(flag("--limit").isEmpty && flag("--file-limit").isEmpty,
-              "--follow reads whole shards (no --limit/--file-limit)")
             // single-writer per state dir, like every --follow mode: two
             // concurrent invocations can observe overlapping fresh sets
             // and commit the same shard under two different batch ids
-            val hconf = spark.sparkContext.hadoopConfiguration
-            val stateP = new org.apache.hadoop.fs.Path(stateDir)
-            val fs = stateP.getFileSystem(hconf)
-            fs.mkdirs(stateP)
-            val fieldNames: Seq[String] = flag("--fields") match {
-              case Some(fsv) =>
-                val names = fsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-                require(names.length >= 2,
-                  "--fields wants 2+ comma-separated benchmark columns")
-                names
-              case None => Seq(flag("--field").getOrElse("text"))
-            }
+            val fs = search.Follow.stateFs(spark, stateDir)
+            val fieldNames =
+              fieldsFlag.getOrElse(Seq(flag("--field").getOrElse("text")))
             // the fold dials pin FIRST: a maintenance invocation that
             // omits --analyzed/--fix-mojibake must fold the battery under
             // the PINNED values (the documented adopt-the-pin contract) —
             // folding with session flags would shift batteryKey and blame
             // "benchmark drift" for an unchanged benchmark
-            val cfg0 = pinnedSettings(fs, stateDir, "contaminate --follow", Seq(
-              ("tokenizer", flag("--tokenizer"), "unicode"),
-              ("analyzed", if (analyzed) Some("true") else None, "false"),
-              ("fixMojibake", if (fixMoji) Some("true") else None, "false"),
+            val cfg0 = search.Follow.pins(fs, stateDir, "contaminate --follow", textPins ++ Seq(
               ("slop", flag("--slop"), "0"),
               ("luceneSlop", if (luceneSlop) Some("true") else None, "false"),
               ("mode", Some(fieldNames.mkString(",")), fieldNames.mkString(","))))
-            def foldPinned(v: String): String = {
-              val repaired =
-                if (cfg0("fixMojibake").toBoolean)
-                  graft.functions.Mojibake.fix(v)
-                else v
-              if (cfg0("analyzed").toBoolean)
-                search.Searcher.analyzePhrase(repaired) else repaired
-            }
             // sorted + distinct: example_id/phrase identity must mean the
             // SAME battery entry in every batch, whatever order the
             // benchmark rows collect in
             val battery: Seq[Seq[String]] =
-              gatherBench(fieldNames, foldPinned).map(_.toList).distinct
+              gatherBench(fieldNames, phraseFold(cfg0("fixMojibake").toBoolean,
+                cfg0("analyzed").toBoolean)).map(_.toList).distinct
                 .sortBy(_.mkString("\u0000"))
-            val batteryKey = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              battery.foreach(ex =>
-                md.update((ex.mkString("\u0000") + "\n").getBytes("UTF-8")))
-              md.digest().map("%02x".format(_)).mkString
-            }
-            val cfg = pinnedSettings(fs, stateDir, "contaminate --follow",
+            val batteryKey = search.Follow.md5Hex(
+              battery.map(_.mkString("\u0000") + "\n").mkString)
+            val cfg = search.Follow.pins(fs, stateDir, "contaminate --follow",
               Seq(("benchKey", Some(batteryKey), batteryKey))) ++ cfg0
             val uaxF = cfg("tokenizer") == "unicode"
             val slopF = cfg("slop").toInt
             val luceneF = cfg("luceneSlop").toBoolean
             val paired = fieldNames.length >= 2
-            val manifestP = new org.apache.hadoop.fs.Path(stateDir, "manifest")
-            val countsP0 = new org.apache.hadoop.fs.Path(stateDir, "counts")
+            val countsP = new Path(stateDir, "counts")
+            def batchDirs(): Seq[FileStatus] =
+              if (!fs.exists(countsP)) Seq.empty
+              else fs.listStatus(countsP).toSeq.filter(st =>
+                st.isDirectory && st.getPath.getName.startsWith("batch="))
             // seen = manifest ∪ every committed batch's recorded shard
             // list: a batch whose counts landed but whose manifest
             // extension was lost (crash, or a deleted manifest) must not
             // be recounted under a REGROUPED fresh set — that would mint
             // a new batch id holding the same shards and double-count
-            val batchDirs =
-              if (!fs.exists(countsP0)) Seq.empty
-              else fs.listStatus(countsP0).toSeq
-                .filter(st => st.isDirectory &&
-                  st.getPath.getName.startsWith("batch="))
             val batchShards: Map[String, Seq[String]] =
-              batchDirs.flatMap { st =>
-                search.Swap.readState(fs,
-                  new org.apache.hadoop.fs.Path(st.getPath, "_shards"))
+              batchDirs().flatMap { st =>
+                search.Swap.readState(fs, new Path(st.getPath, "_shards"))
                   .map(ls => st.getPath.getName -> ls.filter(_.nonEmpty))
               }.toMap
             // orphan sweep: a batch dir WITHOUT a _shards record is a
@@ -806,7 +788,7 @@ object Cli {
             // double-counting. Delete-and-recount converges: the orphan's
             // shards are absent from `seen`, so they re-enter `fresh` and
             // are recounted exactly once (single writer per state dir).
-            batchDirs
+            batchDirs()
               .filterNot(st => batchShards.contains(st.getPath.getName))
               .foreach { st =>
                 fs.delete(st.getPath, true)
@@ -814,18 +796,13 @@ object Cli {
                   s"${st.getPath.getName} (counts without a _shards " +
                   "record — crash debris; its shards will be recounted)")
               }
-            val manifested: Set[String] = search.Swap.readState(fs, manifestP)
-              .getOrElse(Nil).filter(_.nonEmpty).toSet
-            val seen = manifested ++ batchShards.values.flatten
-            val fresh = expandShardPaths(hconf, a.paths).filterNot(seen)
-            val counting = fresh.nonEmpty && battery.nonEmpty
-            if (counting) {
-              val batchId = {
-                val md = java.security.MessageDigest.getInstance("MD5")
-                fresh.sorted.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
-                md.digest().map("%02x".format(_)).mkString
-              }
-              val freshDocs = readProjected(spark, fresh,
+            // an empty battery counts nothing: its shards stay unclaimed
+            search.Follow.run(spark, "contaminate --follow", stateDir,
+                if (battery.isEmpty) Nil else a.paths,
+                recorded = batchShards.values.flatten.toSet) { b =>
+              val batchId = search.Follow.md5Hex(
+                b.shards.sorted.map(_ + "\n").mkString)
+              val freshDocs = readProjected(spark, b.shards,
                 cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
               val batch =
                 if (paired)
@@ -836,38 +813,29 @@ object Cli {
                     battery.map(_.head), slopF, uax29 = uaxF,
                     luceneSlop = luceneF)
               // order: parquet Overwrite (clears any half-written replay),
-              // THEN the _shards record, THEN the manifest — a crash at
-              // any point leaves a state the next run converges from
+              // THEN the _shards record — a crash at any point leaves a
+              // state the next run converges from
               batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(
                 s"$stateDir/counts/batch=$batchId")
               // the orphan sweep's invariant is "a _shards record
               // present ⇒ complete": a PARTIAL shard list would let its
               // unlisted shards be recounted under a new batch id while
               // this batch's counts stay in the totals
-              search.Swap.writeState(fs, new org.apache.hadoop.fs.Path(
-                s"$stateDir/counts/batch=$batchId", "_shards"), fresh.sorted)
-              System.err.println(s"contaminate --follow: ${fresh.size} new " +
+              search.Swap.writeState(fs,
+                new Path(countsP, s"batch=$batchId/_shards"), b.shards.sorted)
+              System.err.println(s"contaminate --follow: ${b.shards.size} new " +
                 s"shard(s) counted into $stateDir (batch $batchId)")
             }
-            // the manifest catches up with every recorded batch, also when
-            // a crash after a batch's _shards record left it behind
-            val counted = if (counting) seen ++ fresh else seen
-            if (counted != manifested)
-              search.Swap.writeState(fs, manifestP, counted.toSeq.sorted)
             // the durable report: totals over every batch dir (zero-hit
             // battery entries appear in EVERY batch, so the sum keeps them)
             import spark.implicits._
-            val countsP = new org.apache.hadoop.fs.Path(stateDir, "counts")
             val keyCol = if (paired) "example_id" else "phrase"
             // existence is re-listed AFTER the sweep/write above: when the
             // sweep deleted the only (orphaned) batch dir and nothing
             // fresh arrived, counts/ exists but is batch-less — a read
             // would throw schema-inference instead of reporting zeros
-            val hasBatches = fs.exists(countsP) &&
-              fs.listStatus(countsP).exists(st => st.isDirectory &&
-                st.getPath.getName.startsWith("batch="))
             val totals =
-              if (!hasBatches)
+              if (batchDirs().isEmpty)
                 (if (paired) Seq.empty[(Long, Long)].toDF(keyCol, "n_docs")
                  else Seq.empty[(String, Long)].toDF(keyCol, "n_docs"))
               else spark.read.parquet(countsP.toString)
@@ -894,11 +862,8 @@ object Cli {
               foldPhrase = contaminateFold,
               dropBlankPrompts = true,
               luceneSlop = luceneSlop).orderBy("benchmark")
-          case None => flag("--fields") match {
-            case Some(fs) =>
-              val names = fs.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-              require(names.length >= 2,
-                "--fields wants 2+ comma-separated benchmark columns")
+          case None => fieldsFlag match {
+            case Some(names) =>
               val examples = gatherBench(names)
               if (examples.isEmpty) {
                 // the LIBRARY contract is an empty frame on both tiers
@@ -945,11 +910,6 @@ object Cli {
       // with BOTH --table and --search the query reads the saved table
       // (pruned posting reads), the "index once, query many" posture
       case "index" =>
-        val phrases = searchStrings("--search")
-        // --follow pins the tokenizer/analyzer index-wide; the query path
-        // must fold and tokenize under the PINNED values, not the session
-        // flags, or a maintenance invocation that omits them would probe
-        // a whitespace-tokenized index with UAX-29 query terms
         // dictionary-level queries: --regexp / --wildcard (Lucene
         // full-term match → per-term df/ttf) and --search-prefix
         // (match_phrase_prefix: trailing token is a prefix)
@@ -961,14 +921,9 @@ object Cli {
         val wcPat = flag("--wildcard")
         val fuzzyTerm = flag("--fuzzy")
         val mltDoc = flag("--more-like-doc")
-        val mltText = flag("--more-like-text").map(foldQuery)
-        val prefixPhrases = searchStrings("--search-prefix")
-        // ES significant_terms: foreground = docs containing the phrase
-        // (analyzed like any phrase query), background = the whole index
-        val sigPhrase = flag("--significant-for").map(foldQuery)
-        val hasQuery = phrases.nonEmpty || rePat.nonEmpty ||
-          wcPat.nonEmpty || prefixPhrases.nonEmpty || fuzzyTerm.nonEmpty ||
-          mltDoc.nonEmpty || mltText.nonEmpty || sigPhrase.nonEmpty
+        val hasQuery = Seq("--search", "--search-prefix", "--regexp",
+          "--wildcard", "--fuzzy", "--more-like-doc", "--more-like-text",
+          "--significant-for").exists(a.flags.contains)
         val table = flag("--table")
         // --refresh-old OLDPATH...: diff-driven maintenance of a saved
         // index table — postings rebuilt only for docs added/changed
@@ -977,23 +932,20 @@ object Cli {
         // pair on the corpus `id` field when both carry one, else on the
         // `{file}-{line}` synthetic id (same keying as `diff`).
         val refreshOld = flagAll("--refresh-old")
-        // key postings by the corpus's own `id` field when it has one
-        // (stable across snapshots — what --refresh-old's diff pairs on),
-        // falling back to the `{file}-{line}` synthetic id
-        def keyedById(df: DataFrame): (DataFrame, String) =
-          if (!df.where(col("id").isNotNull).isEmpty) (df, "id")
-          else (Corpus.withFileLineId(df, "__id"), "__id")
         // the local in-memory catalog forgets managed tables across CLI
         // invocations while the warehouse dir survives — re-register (and
         // heal) a stranded index before declaring it absent (metastore
         // deployments never hit this path)
         def ensureIndexTable(t: String, hint: String): Unit =
-          if (!healIndex(spark, t, intFlag("--buckets", 64))) sys.error(
+          if (!search.InvertedIndex.heal(spark, t, intFlag("--buckets", 64))) sys.error(
             s"index table '$t' does not exist — build it first with " +
               s"`$hint` (same --buckets)")
         // every query flag delivered against one postings frame — shared
-        // by the query branch, the post-refresh re-query, and --follow
-        // (which passes its PINNED tokenizer/analyzer)
+        // by the query branch, the post-refresh re-query, and --follow,
+        // which pins the tokenizer/analyzer index-wide: there the query
+        // must fold and tokenize under the PINNED values, not the session
+        // flags, or a maintenance invocation that omits them would probe
+        // a whitespace-tokenized index with UAX-29 query terms
         def runIndexQueries(post: DataFrame, uaxQ: Boolean = uax,
                             analyzedQ: Boolean = analyzed): Unit = {
           def foldQ(q: String): String =
@@ -1001,6 +953,8 @@ object Cli {
           val phrases = flagAll("--search").map(foldQ)
           val prefixPhrases = flagAll("--search-prefix").map(foldQ)
           val mltText = flag("--more-like-text").map(foldQ)
+          // ES significant_terms: foreground = docs containing the phrase
+          // (analyzed like any phrase query), background = the whole index
           val sigPhrase = flag("--significant-for").map(foldQ)
           val slop = intFlag("--slop", 0)
           if (phrases.nonEmpty) deliver(
@@ -1070,78 +1024,33 @@ object Cli {
         }
         // --follow DIR: incremental indexing of a drop directory — each
         // invocation tokenizes ONLY shards that arrived since the last one
-        // (processed-file manifest at DIR/manifest) and upserts their
-        // postings into the --table index. Crash-safe end to end: the
-        // upsert is the rename-aside swap, and because upsertIndex is
-        // idempotent per document, a crash between the swap and the
-        // manifest extension just replays the same shards on the next run.
+        // (the resume loop of search.Follow) and upserts their postings
+        // into the --table index. Crash-safe end to end: the upsert is the
+        // rename-aside swap, and because upsertIndex is idempotent per
+        // document, a replay of the claimed shards converges.
         val follow = flag("--follow")
         if (follow.nonEmpty) {
           val stateDir = follow.get
           val t = table.getOrElse(sys.error("index --follow needs --table"))
-          val hconf = spark.sparkContext.hadoopConfiguration
-          val all = expandShardPaths(hconf, a.paths)
-          val manifest = new org.apache.hadoop.fs.Path(stateDir, "manifest")
-          val fs = manifest.getFileSystem(hconf)
+          val fs = search.Follow.stateFs(spark, stateDir)
           // text normalization and the bucket count are index-wide: a
           // batch tokenized differently (or a heal re-registering with
           // the wrong bucket count — pruning silently breaks) adopts the
           // pinned values when flags are omitted, refuses when they clash
-          // presence-only booleans: an omitted flag ADOPTS the pin (the
-          // maintenance workflow); passing it against a false pin clashes
-          val cfg = pinnedSettings(fs, stateDir, "index --follow", Seq(
-            ("tokenizer", flag("--tokenizer"), "unicode"),
-            ("analyzed", if (analyzed) Some("true") else None, "false"),
-            ("fixMojibake", if (fixMoji) Some("true") else None, "false"),
-            ("buckets", flag("--buckets"), "64")))
+          val cfg = search.Follow.pins(fs, stateDir, "index --follow",
+            textPins :+ ("buckets", flag("--buckets"), "64"))
           val uaxF = cfg("tokenizer") == "unicode"
           val buckets = cfg("buckets").toInt
-          val seen: Set[String] = search.Swap.readState(fs, manifest)
-            .getOrElse(Nil).filter(_.nonEmpty).toSet
-          val fresh = all.filterNot(seen)
-          val haveIndex = healIndex(spark, t, buckets)
-          // the idmode pin is written the first time a NON-EMPTY batch is
-          // indexed — an empty first shard extends the manifest without
-          // building anything, and must not brick the state dir
-          if (!haveIndex && fs.exists(
-              new org.apache.hadoop.fs.Path(stateDir, "idmode"))) sys.error(
-            s"index --follow: manifest at $stateDir records ${seen.size} " +
-              s"ingested shard(s) but no index survives under '$t' (checked " +
-              s"live, ${search.Swap.backup(t)} and ${search.Swap.staging(t)} in " +
-              s"${spark.conf.get("spark.sql.warehouse.dir")}) — refusing to " +
-              "start fresh over a manifest that would skip them; delete the " +
-              "manifest to re-ingest from scratch")
-          if (fresh.isEmpty) System.err.println("index --follow: no new shards")
-          else {
-            // the fresh read gets the SAME text projections (mojibake
-            // repair, ES analysis) as the one-shot build path — under the
-            // pinned values, so every batch normalizes identically.
-            // Synthetic ids hash the FULL shard path — two drop-dir
-            // shards sharing a basename must not collide.
-            val df = readProjected(spark, fresh,
-              cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val ids = idPresence(df)
-            val empty = ids.isEmpty
-            val mode = pinnedIdMode(fs, stateDir, ids, "index --follow")
-            val (keyed, idc) =
-              if (mode == "id") (df, "id")
-              else (Corpus.withFileLineId(df, "__id", fullPath = true), "__id")
-            // an all-empty batch must not pay the upsert's corpus-scale
-            // live rewrite to append zero documents
-            if (empty) ()
-            else if (haveIndex)
-              search.InvertedIndex.upsertIndex(spark, t, keyed, idc, "text",
-                buckets, uax29 = uaxF)
-            else {
-              search.InvertedIndex.writeIndex(
-                search.InvertedIndex.postings(keyed, idc, "text", uax29 = uaxF),
-                t, buckets, force = true)
-              search.InvertedIndex.persistNorms(spark, t)
-            }
-            // extend the manifest AFTER the swap
-            search.Swap.writeState(fs, manifest, (seen.toSeq ++ fresh).sorted)
+          val haveIndex = search.InvertedIndex.heal(spark, t, buckets)
+          search.Follow.run(spark, "index --follow", stateDir, a.paths,
+              lostTable = Option.when(!haveIndex)(t)) { b =>
+            keyedBatch(spark, stateDir, b.shards, cfg, "index --follow")
+              .foreach { case (keyed, idc) =>
+                search.InvertedIndex.updateIndex(spark, t, keyed, idc, "text",
+                  buckets, uax29 = uaxF, live = haveIndex)
+              }
             System.err.println(
-              s"index --follow: ${fresh.size} new shard(s) upserted into $t")
+              s"index --follow: ${b.shards.size} new shard(s) upserted into $t")
           }
           if (hasQuery) {
             // a no-new-shards invocation in a fresh JVM still has to answer
@@ -1172,10 +1081,9 @@ object Cli {
           val t = table.getOrElse(sys.error(
             "index needs --search phrases and/or --table to persist to"))
           val (keyed, idc) = keyedById(docs)
-          search.InvertedIndex.writeIndex(
-            search.InvertedIndex.postings(keyed, idc, "text", uax29 = uax),
-            t, intFlag("--buckets", 64), force = a.flags.contains("--force"))
-          search.InvertedIndex.persistNorms(spark, t)
+          search.InvertedIndex.updateIndex(spark, t, keyed, idc, "text",
+            intFlag("--buckets", 64), uax29 = uax, live = false,
+            force = a.flags.contains("--force"))
           System.err.println(s"index written to table $t")
         } else {
           val post = table match {
@@ -1191,27 +1099,21 @@ object Cli {
       // extension: the COMPOSED incremental training-data pipeline over a
       // watched drop directory — quality gate → exact dedup vs durable
       // hash state → decontamination vs a benchmark → durable gzip-JSONL
-      // batch dir → optional inverted-index upsert, one manifest-driven
-      // batch per invocation. The state dir is self-contained: manifest
-      // (processed shards), pipeline (pinned config — later invocations
-      // must match), hashes (dedup state), data/batch-* (the accumulated
-      // clean corpus), idmode/indextable (index keying pins).
+      // batch dir → optional inverted-index upsert, one batch per
+      // invocation through the resume loop of search.Follow. The state dir
+      // is self-contained: manifest and pending (the loop's processed
+      // shards and batch claim), pipeline (pinned config — later
+      // invocations must match), hashes (dedup state), data/batch-* (the
+      // accumulated clean corpus), idmode/indextable (index keying pins).
       //
-      // Crash-safety: the batch dir is keyed by a digest of the shard
-      // set, written overwrite-mode, and gated on _SUCCESS — a replay
-      // recomputes an unfinished batch against UNCHANGED hash state (the
-      // state append derives from the files as written, after they are
-      // durable) and skips recompute once the output is durable, so part
-      // files (and the synthetic index ids derived from their paths) stay
-      // stable across the append/upsert/manifest window. The hash-state
-      // append may repeat on replay — duplicate state keys are harmless
-      // to the anti join. Because data/batch-* retains everything, a lost
-      // index table is REBUILT from the state dir rather than refused.
+      // Crash-safety: a replay runs the claimed batch again. Its batch
+      // dir is durable or recomputed (writeCleanBatch), and the hash-state
+      // append may repeat — duplicate state keys are harmless to the anti
+      // join. Because data/batch-* retains everything, a lost index table
+      // is REBUILT from the state dir rather than refused.
       case "ingest" =>
         val stateDir = flag("--follow").getOrElse(
           sys.error("ingest needs --follow STATE_DIR (the pipeline's durable state)"))
-        require(flag("--limit").isEmpty && flag("--file-limit").isEmpty,
-          "ingest reads whole shards (no --limit/--file-limit)")
         val quality = flag("--quality").getOrElse("gopher")
         require(Set("gopher", "fineweb", "none")(quality),
           s"--quality gopher|fineweb|none, got '$quality'")
@@ -1220,17 +1122,14 @@ object Cli {
         require(fuzzyT.isEmpty || benchPaths.nonEmpty, "--threshold needs --bench")
         val table = flag("--table")
         val buckets = intFlag("--buckets", 64)
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val stateP = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = stateP.getFileSystem(hconf)
-        fs.mkdirs(stateP)
+        val fs = search.Follow.stateFs(spark, stateDir)
         // pin the pipeline SHAPE on first run: a batch quality-gated or
         // decontaminated differently from its siblings would silently
         // poison the accumulated corpus (benchmark CONTENT may evolve —
         // only the stage composition is pinned; the index table pins
         // separately, since adding --table later is supported via the
         // backfill path below)
-        val pinP = new org.apache.hadoop.fs.Path(stateDir, "pipeline")
+        val pinP = new Path(stateDir, "pipeline")
         val pinNow = Seq(
           s"quality=$quality",
           s"bench=${benchPaths.nonEmpty}",
@@ -1249,107 +1148,11 @@ object Cli {
           case None => search.Swap.writeState(fs, pinP, Seq(pinNow))
           case _ => ()
         }
-        val manifestP = new org.apache.hadoop.fs.Path(stateDir, "manifest")
-        val seen: Set[String] = search.Swap.readState(fs, manifestP)
-          .getOrElse(Nil).filter(_.nonEmpty).toSet
-        // a drop glob that reaches into the state dir would re-ingest the
-        // pipeline's own output as input (shards are assumed immutable, so
-        // the feedback loop would silently grow the corpus every pass)
-        val statePrefix = fs.makeQualified(stateP).toString.stripSuffix("/") + "/"
-        val expanded = expandShardPaths(hconf, a.paths)
-        require(!expanded.exists(_.startsWith(statePrefix)),
-          s"ingest: drop paths overlap the state dir $stateDir — the " +
-            "pipeline would re-ingest its own output; point --follow " +
-            "somewhere outside the watched glob")
-        // two-phase batch claim: the shard set (and its sequence number)
-        // is made durable in `pending` BEFORE processing, so a replay
-        // after ANY crash resumes the SAME batch — without the claim, a
-        // new shard arriving between crash and replay would change the
-        // batch digest, strand the half-finished batch dir, and re-admit
-        // its docs (duplicates) or skip its index step entirely
-        val pendingP = new org.apache.hadoop.fs.Path(stateDir, "pending")
-        val claimed: Option[(Int, Seq[String])] =
-          search.Swap.readState(fs, pendingP).map(_.filter(_.nonEmpty)).flatMap { l =>
-            l.headOption.filter(_.startsWith("seq=")).flatMap { h =>
-              val shards = l.tail
-              // stale claim: the whole batch already manifested (crash
-              // between the manifest extension and the pending delete)
-              if (shards.isEmpty || shards.forall(seen)) {
-                search.Swap.clearState(fs, pendingP)
-                None
-              }
-              else Some((h.stripPrefix("seq=").toInt, shards))
-            }
-          }
-        val (seq, fresh) = claimed.getOrElse {
-          val g = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$stateDir/data", "batch-*"))
-          ((if (g == null) 0 else g.length), expanded.filterNot(seen))
-        }
-        if (fresh.isEmpty) System.err.println("ingest: no new shards")
-        else {
-          if (claimed.isEmpty)
-            search.Swap.writeState(fs, pendingP, s"seq=$seq" +: fresh)
-          else System.err.println(
-            s"ingest: resuming claimed batch of ${fresh.size} shard(s)")
-          val digest = java.security.MessageDigest.getInstance("MD5")
-            .digest(fresh.mkString("\n").getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString.take(16)
-          val batchDir = f"$stateDir/data/batch-$seq%06d-$digest"
-          val hashState = s"$stateDir/hashes"
-          val durable = fs.exists(
-            new org.apache.hadoop.fs.Path(batchDir, "_SUCCESS"))
-          if (durable) System.err.println(
-            s"ingest: batch already durable at $batchDir — resuming its " +
-              "state/index/manifest steps")
-          else {
-            // readSecondary/docs-style projections rebuilt over ONLY the
-            // fresh shards
-            val dfA = readProjected(spark, fresh, fixMoji, analyzed)
-            val corpusCols = dfA.columns.toSeq
-            // full-path synthetic row key: stable across replays, no
-            // basename collisions across drop-dir batches. Text-less docs
-            // are dropped in every mode — a training pipeline has no use
-            // for them, and null text would collapse to one hash-state key
-            val keyed = Corpus.withFileLineId(
-              dfA.where(col("text").isNotNull), "__iid", fullPath = true)
-            val gated = quality match {
-              case "none" => keyed
-              case "gopher" => operators.TextQuality.gopherFilter(
-                  keyed, "__iid", "text", passthrough = corpusCols)
-                .where(col("keep"))
-                .select(("__iid" +: corpusCols).map(col): _*)
-              case "fineweb" => operators.TextQuality.fineWebFilter(
-                  keyed, "__iid", "text", passthrough = corpusCols)
-                .where(col("keep"))
-                .select(("__iid" +: corpusCols).map(col): _*)
-            }
-            val deduped = operators.Dedup.dedupIncremental(gated,
-              md5(col("text")), Seq(col("__iid")), hashState)
-            var benchCkpt: Option[DataFrame] = None
-            val cleaned =
-              if (benchPaths.isEmpty) deduped
-              else {
-                val bench = readSecondary(benchPaths.map(p => p: String))
-                fuzzyT match {
-                  case Some(t) =>
-                    // benchmark-sized localCheckpoint: the synthetic
-                    // file-line id must not rebuild per consumer —
-                    // released after the batch write consumes it
-                    val b = Corpus.withFileLineId(bench, "__bid")
-                      .localCheckpoint(true)
-                    benchCkpt = Some(b)
-                    operators.Dedup.decontaminateFuzzy(deduped, b,
-                      "__iid", "__bid", "text", "text", t, uax29 = uax)
-                  case None => operators.Dedup.decontaminate(deduped,
-                    md5(col("text")), bench, md5(col("text")))
-                }
-              }
-            try Corpus.writeJsonl(cleaned.select(corpusCols.map(col): _*),
-              batchDir, force = true)
-            finally benchCkpt.foreach(
-              org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint)
-          }
+        val hashState = s"$stateDir/hashes"
+        search.Follow.run(spark, "ingest", stateDir, a.paths,
+            nextSeq = dataBatches(fs, stateDir).size) { b =>
+          val batchDir = writeCleanBatch(spark, b, stateDir, "ingest", fixMoji,
+            analyzed, uax, quality, Some(hashState), benchPaths, fuzzyT)
           // ONE read of the gzip batch dir, keyed (the synthetic id must
           // capture file paths BEFORE any shuffle/checkpoint) and
           // checkpointed — the hash-state append and the index upsert
@@ -1362,11 +1165,10 @@ object Cli {
             .localCheckpoint(eager = true)
           try {
           val wIds = idPresence(written)
-          val wEmpty = wIds.isEmpty
-          if (!wEmpty)
+          if (wIds.nonEmpty)
             operators.Dedup.appendHashState(written, md5(col("text")), hashState)
           table.foreach { t =>
-            val tablePinP = new org.apache.hadoop.fs.Path(stateDir, "indextable")
+            val tablePinP = new Path(stateDir, "indextable")
             val tablePin =
               search.Swap.readState(fs, tablePinP).map(_.filter(_.nonEmpty))
             tablePin.foreach { l =>
@@ -1376,19 +1178,15 @@ object Cli {
               l.lift(1).foreach(b => require(b == s"buckets=$buckets",
                 s"ingest state at $stateDir pinned to $b, got buckets=$buckets"))
             }
-            val haveIndex = healIndex(spark, t, buckets)
+            val haveIndex = search.InvertedIndex.heal(spark, t, buckets)
             // no live index (first --table use, or the table was lost):
             // build over EVERY durable batch — the state dir retains the
             // whole clean corpus, so the index is always reconstructible
             val src: DataFrame =
               if (haveIndex) written
               else {
-                val g = fs.globStatus(
-                  new org.apache.hadoop.fs.Path(s"$stateDir/data", "batch-*"))
-                val dirs = (if (g == null) Seq(batchDir)
-                  else g.toSeq.filter(st => fs.exists(
-                      new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-                    .map(_.getPath.toString)).distinct
+                val dirs = dataBatches(fs, stateDir).map(_.getPath)
+                  .filter(d => fs.exists(new Path(d, "_SUCCESS"))).map(_.toString)
                 // batch sequence captured per row BEFORE the id window's
                 // shuffle (input_file_name is lost after an exchange)
                 // anchored on the directory separator: a state-dir PATH
@@ -1400,8 +1198,7 @@ object Cli {
                   "__plid", fullPath = true)
               }
             val srcIds = if (haveIndex) wIds else idPresence(src)
-            val srcEmpty = srcIds.isEmpty
-            val mode = pinnedIdMode(fs, stateDir, srcIds, "ingest")
+            val mode = search.Follow.idMode(fs, stateDir, srcIds, "ingest")
             // rebuilds in id mode must keep only the LATEST batch's row
             // per corpus id: an id re-dropped with corrected text passed
             // exact dedup, and the lost upsert-maintained index held only
@@ -1409,33 +1206,22 @@ object Cli {
             // within-batch tie on md5(text) desc — the SAME winner
             // upsertIndex picks, so the rebuild reproduces the lost index
             val keyedI =
-              if (mode == "id" && !haveIndex && !srcEmpty)
+              if (mode == "id" && !haveIndex && srcIds.nonEmpty)
                 operators.Dedup.keepFirst(src, col("id"),
                   Seq(col("__seq").desc, md5(col("text")).desc))
               else src
-            val idc = if (mode == "id") "id" else "__plid"
             // an all-filtered batch has nothing to index — pins still
             // advance so a later batch keeps the same keying contract
-            if (!srcEmpty) {
-              if (haveIndex)
-                search.InvertedIndex.upsertIndex(spark, t, keyedI, idc, "text",
-                  buckets, uax29 = uax)
-              else {
-                search.InvertedIndex.writeIndex(
-                  search.InvertedIndex.postings(
-                    keyedI.drop("__seq"), idc, "text", uax29 = uax),
-                  t, buckets, force = true)
-                search.InvertedIndex.persistNorms(spark, t)
-              }
-            }
+            if (srcIds.nonEmpty)
+              search.InvertedIndex.updateIndex(spark, t, keyedI,
+                if (mode == "id") "id" else "__plid", "text", buckets,
+                uax29 = uax, live = haveIndex)
             // pinned once (a pin from before the buckets line gains it)
             if (tablePin.forall(_.size < 2))
               search.Swap.writeState(fs, tablePinP, Seq(t, s"buckets=$buckets"))
           }
-          search.Swap.writeState(fs, manifestP, (seen.toSeq ++ fresh).sorted)
-          search.Swap.clearState(fs, pendingP) // claim consumed
           System.err.println(
-            s"ingest: ${fresh.size} shard(s) → $batchDir" +
+            s"ingest: ${b.shards.size} shard(s) → $batchDir" +
               table.map(t => s", index '$t' updated").getOrElse(""))
           } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(written)
         }
@@ -1503,9 +1289,7 @@ object Cli {
       // text→vector bridge (feed the output to the embedding tier). JSONL
       // rows of {"id", "emb"} via --out, sample printed otherwise.
       case "embed" =>
-        val (keyed, idc) =
-          if (!docs.where(col("id").isNotNull).isEmpty) (docs, "id")
-          else (Corpus.withFileLineId(docs, "__id"), "__id")
+        val (keyed, idc) = keyedById(docs)
         deliver(operators.FeatureHash.hashedEmbeddings(keyed, idc, "text",
           dim = intFlag("--dim", 64),
           md5Parity = a.flags.contains("--md5"), uax29 = uax),
@@ -1533,91 +1317,75 @@ object Cli {
         // curation modes need no table; index build/query/follow do
         def table = flag("--table").getOrElse(sys.error("ann needs --table T"))
         val dim = intFlag("--dim", 64)
+        // --query-text, embedded like the documents, answered off the
+        // probed buckets of the table, re-registered first (a previous
+        // invocation's tables survive only as warehouse dirs). --filter: a
+        // SQL predicate over the index row columns; --widen N: re-probe
+        // starved filtered queries at N buckets
+        def annQuery(qt: String, project: DataFrame => DataFrame, dimQ: Int,
+                     uaxQ: Boolean): Unit = {
+          import spark.implicits._
+          search.AnnIndex.registerIvfIndex(spark, table)
+          val q = project(Seq(("__query", qt)).toDF("id", "text"))
+          deliver(search.AnnIndex.ivfKnnIndexed(spark, table,
+            operators.FeatureHash.hashedEmbeddings(q, "id", "text", dimQ,
+              uax29 = uaxQ),
+            "id", "emb", k = intFlag("--topk", 10),
+            nprobe = intFlag("--nprobe", 3),
+            filter = flag("--filter").map(expr),
+            widenTo = intFlag("--widen", 0))
+            .select(col("neighbor_id").as("id"), col("cos"), col("rank")),
+            ranked = false)
+        }
         // --follow DIR: incremental semantic index over a drop directory —
         // each invocation embeds (feature-hash) ONLY shards that arrived
         // since the last one and upserts them into the persisted IVF
         // index (centroids frozen from the first batch; rebuild without
-        // --follow on your refit cadence). Same manifest/id-mode state as
-        // index --follow; --query-text afterwards answers off the index.
+        // --follow on your refit cadence). Same resume loop and id-mode
+        // pin as index --follow; --query-text afterwards answers off the
+        // index.
         flag("--follow") match { case Some(stateDir) =>
-          val hconf = spark.sparkContext.hadoopConfiguration
-          val manifestP = new org.apache.hadoop.fs.Path(stateDir, "manifest")
-          val fs = manifestP.getFileSystem(hconf)
+          val fs = search.Follow.stateFs(spark, stateDir)
           // the embedding space is index-wide: a batch embedded under a
           // different tokenizer/dim would silently mix incomparable
           // vectors (dim mismatches are caught by __meta; tokenization
           // drift is not). Omitted flags adopt the pinned values, so
           // maintenance/query invocations don't repeat the build dials.
-          val cfg = pinnedSettings(fs, stateDir, "ann --follow", Seq(
-            ("tokenizer", flag("--tokenizer"), "unicode"),
-            ("analyzed", if (analyzed) Some("true") else None, "false"),
-            ("fixMojibake", if (fixMoji) Some("true") else None, "false"),
+          val cfg = search.Follow.pins(fs, stateDir, "ann --follow", textPins ++ Seq(
             ("dim", flag("--dim"), "64"),
             ("step", flag("--step"), "100"),
             ("buckets", flag("--buckets"), "16")))
           val uaxF = cfg("tokenizer") == "unicode"
           val dimF = cfg("dim").toInt
-          val seen: Set[String] = search.Swap.readState(fs, manifestP)
-            .getOrElse(Nil).filter(_.nonEmpty).toSet
-          val fresh = expandShardPaths(hconf, a.paths).filterNot(seen)
           val haveIndex = search.AnnIndex.recoverIvfIndex(spark, table)
-          // keyed on the idmode pin: an empty first shard extends the
-          // manifest without building anything and must not brick the dir
-          if (!haveIndex && fs.exists(
-              new org.apache.hadoop.fs.Path(stateDir, "idmode"))) sys.error(
-            s"ann --follow: manifest at $stateDir records ${seen.size} " +
-              s"embedded shard(s) but no index survives under '$table' — " +
-              "refusing to start fresh over a manifest that would skip " +
-              "them; delete the manifest to re-embed from scratch")
-          if (fresh.isEmpty) System.err.println("ann --follow: no new shards")
-          else {
+          search.Follow.run(spark, "ann --follow", stateDir, a.paths,
+              lostTable = Option.when(!haveIndex)(table)) { b =>
             // same pinned text projections as the indexing tier — every
             // batch must embed identically-normalized text
-            val df = readProjected(spark, fresh,
-              cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val ids = idPresence(df)
-            val empty = ids.isEmpty
-            val mode = pinnedIdMode(fs, stateDir, ids, "ann --follow")
-            val (keyed, idc) =
-              if (mode == "id") (df, "id")
-              else (Corpus.withFileLineId(df, "__id", fullPath = true), "__id")
-            val emb = operators.FeatureHash.hashedEmbeddings(keyed, idc,
-              "text", dimF, uax29 = uaxF)
-            // empty batch: skip the upsert's corpus-scale live rewrite
-            if (empty) ()
-            else if (haveIndex)
-              search.AnnIndex.upsertIvfIndex(spark, table, emb, "id", "emb")
-            else
-              search.AnnIndex.writeIvfIndex(emb, "id", "emb",
-                step = cfg("step").toInt, table = table,
-                buckets = cfg("buckets").toInt, force = true,
-                hashedIds = true)
-            search.Swap.writeState(fs, manifestP, (seen.toSeq ++ fresh).sorted)
+            keyedBatch(spark, stateDir, b.shards, cfg, "ann --follow")
+              .foreach { case (keyed, idc) =>
+                val emb = operators.FeatureHash.hashedEmbeddings(keyed, idc,
+                  "text", dimF, uax29 = uaxF)
+                if (haveIndex)
+                  search.AnnIndex.upsertIvfIndex(spark, table, emb, "id", "emb")
+                else
+                  search.AnnIndex.writeIvfIndex(emb, "id", "emb",
+                    step = cfg("step").toInt, table = table,
+                    buckets = cfg("buckets").toInt, force = true,
+                    hashedIds = true)
+              }
             System.err.println(
-              s"ann --follow: ${fresh.size} new shard(s) embedded into $table")
+              s"ann --follow: ${b.shards.size} new shard(s) embedded into $table")
           }
-          flag("--query-text").foreach { qt =>
-            import spark.implicits._
-            search.AnnIndex.registerIvfIndex(spark, table)
-            // fold the query under the PINNED projections, not the session
-            // flags: documents were embedded under cfg("analyzed") /
-            // cfg("fixMojibake"), and a query-only invocation that omits
-            // --analyzed (the documented adopt-the-pin maintenance
-            // workflow) must still embed an identically-normalized query —
-            // same column kernels as readProjected, same order (mojibake
-            // repair before analysis)
-            val q = textProjections(Seq(("__query", qt)).toDF("id", "text"),
-              cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val qEmb = operators.FeatureHash.hashedEmbeddings(q, "id",
-              "text", dimF, uax29 = uaxF)
-            deliver(search.AnnIndex.ivfKnnIndexed(spark, table, qEmb,
-              "id", "emb", k = intFlag("--topk", 10),
-              nprobe = intFlag("--nprobe", 3),
-              filter = flag("--filter").map(expr),
-              widenTo = intFlag("--widen", 0))
-              .select(col("neighbor_id").as("id"), col("cos"), col("rank")),
-              ranked = false)
-          }
+          // fold the query under the PINNED projections, not the session
+          // flags: documents were embedded under cfg("analyzed") /
+          // cfg("fixMojibake"), and a query-only invocation that omits
+          // --analyzed (the documented adopt-the-pin maintenance workflow)
+          // must still embed an identically-normalized query — same
+          // column kernels as readProjected, same order (mojibake repair
+          // before analysis)
+          flag("--query-text").foreach(qt => annQuery(qt, textProjections(_,
+            cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean), dimF, uaxF))
         case None =>
         // persisted-tier curation reads off the SAVED table (no corpus
         // paths touched): --profile = per-bucket mass+coherence;
@@ -1651,9 +1419,7 @@ object Cli {
         case None =>
         flag("--query-text") match {
           case None =>
-            val (keyed, idc) =
-              if (!docs.where(col("id").isNotNull).isEmpty) (docs, "id")
-              else (Corpus.withFileLineId(docs, "__id"), "__id")
+            val (keyed, idc) = keyedById(docs)
             val emb = operators.FeatureHash.hashedEmbeddings(keyed, idc,
               "text", dim, uax29 = uax)
             (flag("--select-diverse"), flag("--cluster-sample")) match {
@@ -1677,25 +1443,7 @@ object Cli {
                 System.err.println(s"ann index written to table $table (dim=$dim)")
             }
           case Some(qt) =>
-            import spark.implicits._
-            // a previous CLI invocation's tables survive only as warehouse
-            // dirs — re-register before querying (bucket count and dim
-            // come from the index's own __meta table)
-            search.AnnIndex.registerIvfIndex(spark, table)
-            val q = Seq(("__query", foldQuery(qt)))
-              .toDF("id", "text")
-            val qEmb = operators.FeatureHash.hashedEmbeddings(q, "id",
-              "text", dim, uax29 = uax)
-            // --filter: a SQL predicate over the index row columns (id,
-            // bucket, and any keep metadata a library build persisted);
-            // --widen N: re-probe starved filtered queries at N buckets
-            deliver(search.AnnIndex.ivfKnnIndexed(spark, table, qEmb,
-              "id", "emb", k = intFlag("--topk", 10),
-              nprobe = intFlag("--nprobe", 3),
-              filter = flag("--filter").map(expr),
-              widenTo = intFlag("--widen", 0))
-              .select(col("neighbor_id").as("id"), col("cos"), col("rank")),
-              ranked = false)
+            annQuery(foldQuery(qt), identity, dim, uax)
         }
         }
         }

@@ -218,6 +218,29 @@ object InvertedIndex {
         .select(live.columns.map(col): _*).unionByName(fresh))
   }
 
+  /** Heal `table`'s crash state BEFORE deciding whether an index exists:
+    * after a crash mid-swap plus a JVM restart, the live postings sit
+    * under the swap's debris directories with no catalog entry, and
+    * treating that as "first run" would overwrite the table. Returns
+    * whether a live index exists after recovery.
+    */
+  def heal(spark: SparkSession, table: String, buckets: Int): Boolean =
+    Swap.heal(spark, table, registerIndex(spark, _, buckets))
+
+  /** Put `docs` into `table`: [[upsertIndex]] into the `live` index (what
+    * the caller's [[heal]] found), else a new index written through
+    * [[writeIndex]] (over an existing one only with `force`) with its
+    * norms persisted.
+    */
+  def updateIndex(spark: SparkSession, table: String, docs: DataFrame,
+                  idCol: String, contentCol: String, buckets: Int,
+                  uax29: Boolean, live: Boolean, force: Boolean = true): Unit =
+    if (live) upsertIndex(spark, table, docs, idCol, contentCol, buckets, uax29)
+    else {
+      writeIndex(postings(docs, idCol, contentCol, uax29), table, buckets, force)
+      persistNorms(spark, table)
+    }
+
   /** Shared rewrite-and-swap core of [[compactIndex]] / [[refreshIndex]]:
     * heal any half-finished prior swap, write `build(live)` through
     * [[writeIndex]] into the staging table, rename-aside. `build` receives

@@ -218,7 +218,7 @@ object Corpus {
     // a crash between create and rename leaves an orphan temp; sweep them
     // here so they neither linger forever nor mask anything
     outFs.listStatus(outPath)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".__tmp"))
+      .filter(st => st.isFile && st.getPath.getName.contains(".__tmp"))
       .foreach(st => outFs.delete(st.getPath, false))
     val existing = outFs.listStatus(outPath)
       .filter(_.isFile).map(_.getPath.getName).toSet
@@ -234,7 +234,10 @@ object Corpus {
         val out = new Path(outDirStr, name)
         val fs = out.getFileSystem(c)
         if (!fs.exists(out)) { // idempotent task retry
-          val tmp = new Path(outDirStr, name + ".__tmp")
+          // attempt-unique: a retried or speculative attempt of this task
+          // must not truncate, or publish, another attempt's partial file
+          val tmp = new Path(outDirStr, name + ".__tmp." +
+            org.apache.spark.TaskContext.get().taskAttemptId())
           val os = fs.create(tmp, true)
           try {
             val buf = new Array[Byte](1 << 20)

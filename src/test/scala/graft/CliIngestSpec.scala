@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.search.InvertedIndex
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** CLI `ingest --follow`: the composed incremental pipeline (quality gate
   * → dedup vs durable hash state → decontamination → durable batch dirs →
   * index upsert) driven end-to-end through [[Cli.run]] — per-invocation
@@ -229,6 +231,80 @@ class CliIngestSpec extends SparkTestBase {
     // null keys are never blocklist members
     assert(nRows("out_anti") === 2L)
     assert(nRows("out_bc") === 2L)
+  }
+
+  /** Every file under `d` with its size and modification time. */
+  private def listing(d: String): Seq[String] = {
+    val s = Files.walk(Paths.get(d))
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+        s"$p ${Files.size(p)} ${Files.getLastModifiedTime(p)}").toList.sorted
+    finally s.close()
+  }
+
+  private def rows(paths: Seq[String]): Seq[String] =
+    graft.sources.Corpus.readJsonl(spark, paths).collect()
+      .map(_.toString).toSeq.sorted
+
+  /** decontaminate --follow over two batches (the first holds a null-text
+    * doc) against one-shot decontaminate over all shards with `oneShot`
+    * flags; then a call with no new shards, which must write nothing.
+    */
+  private def followMatchesOneShot(bench: Seq[String], b1: Seq[String],
+                                   b2: Seq[String], follow: Seq[String],
+                                   oneShot: Seq[String]): Unit = {
+    val root = Files.createTempDirectory("cli_decon_follow").toString
+    writeShard(s"$root/bench", "b.jsonl", bench)
+    Files.createDirectories(Paths.get(s"$root/drop/d1"))
+    Files.write(Paths.get(s"$root/drop/d1", "s1.jsonl"),
+      (b1.map(t => s"""{"text":"$t"}""") :+ """{"text":null,"id":"n1"}""")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    def run(): Unit = Cli.run(spark, Array("decontaminate", s"$root/drop/*",
+      "--bench", s"$root/bench/b.jsonl", "--follow", s"$root/state") ++ follow)
+    run()
+    writeShard(s"$root/drop/d2", "s2.jsonl", b2)
+    run()
+    val batches = new java.io.File(s"$root/state/data").listFiles()
+      .filter(_.getName.startsWith("batch-")).map(_.toString).toSeq
+    assert(batches.size === 2)
+    Cli.run(spark, Array("decontaminate", s"$root/drop/*",
+      "--bench", s"$root/bench/b.jsonl", "--out", s"$root/one") ++ oneShot)
+    val union = rows(batches)
+    assert(union === rows(Seq(s"$root/one")))
+    assert(union.exists(r => r.startsWith("[null,") && r.contains(",n1,")),
+      "the null-text doc survives")
+    val before = listing(s"$root/state")
+    run()
+    assert(listing(s"$root/state") === before)
+  }
+
+  test("decontaminate --follow: exact batches equal one-shot decontaminate") {
+    followMatchesOneShot(Seq(good2), Seq(good, good2), Seq(varied("ga"), good2, junk),
+      follow = Nil, oneShot = Nil)
+  }
+
+  test("decontaminate --follow --threshold: fuzzy batches equal one-shot decontaminate") {
+    val leak = "which year did the treaty of westphalia end the thirty years war in europe"
+    val t = "cli_decon_follow_mh"
+    try followMatchesOneShot(Seq(leak),
+      Seq("a clean training document about cooking pasta at home tonight", leak),
+      Seq(leak.replace("europe", "asia"), "too short",
+        "another clean doc that shares no shingles with the benchmark suite"),
+      follow = Seq("--threshold", "0.5"),
+      oneShot = Seq("--minhash-table", t, "--threshold", "0.5"))
+    finally graft.search.Swap.drop(spark, t, s"${t}__meta")
+  }
+
+  test("decontaminate --follow refuses a state dir of the old checkpoint layout") {
+    val root = Files.createTempDirectory("cli_decon_ckpt").toString
+    writeShard(s"$root/bench", "b.jsonl", Seq(good2))
+    writeShard(s"$root/drop/d1", "s1.jsonl", Seq(good))
+    Files.createDirectories(Paths.get(s"$root/state/ckpt"))
+    val e = intercept[RuntimeException] {
+      Cli.run(spark, Array("decontaminate", s"$root/drop/*",
+        "--bench", s"$root/bench/b.jsonl", "--follow", s"$root/state"))
+    }
+    assert(e.getMessage.contains("ckpt"), e.getMessage)
+    assert(!Files.exists(Paths.get(s"$root/state/data")))
   }
 
   test("--conf sets session dials before dispatch; malformed pair is loud") {

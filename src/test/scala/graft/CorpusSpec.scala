@@ -212,6 +212,23 @@ class CorpusSpec extends SparkTestBase {
     assert(Corpus.readJsonl(spark, Seq(s"$out/*.json.gz")).count() === 2)
   }
 
+  test("consolidateShards sweeps an attempt's stale tmp and never publishes it") {
+    val in = Files.createTempDirectory("cons_attempt")
+    val out = Files.createTempDirectory("cons_attempt_out")
+    mkShards("p", 0 until 2, in)
+    // another attempt's partial file, left by a killed executor
+    val stale = out.resolve("p.00000-00001.json.gz.__tmp.7")
+    Files.write(stale, "partial".getBytes)
+    val written = Corpus.consolidateShards(spark, in.toString, out.toString, factor = 2)
+    assert(written === Seq("p.00000-00001.json.gz"))
+    assert(!Files.exists(stale))
+    assert(Files.list(out).toArray.map(_.toString).forall(!_.contains(".__tmp")))
+    val concatenated = (0 until 2).flatMap(n =>
+      Files.readAllBytes(in.resolve(f"p.$n%05d.json.gz"))).toArray
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(out.resolve("p.00000-00001.json.gz")), concatenated))
+  }
+
   test("consolidateShards refuses outDir == inDir") {
     val in = Files.createTempDirectory("cons_same")
     writeShard(in, "p.00000.json.gz", Seq("""{"text":"x"}"""))

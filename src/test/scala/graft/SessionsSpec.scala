@@ -12,7 +12,7 @@ import graft.functions.expressions.IntersectionSize
   * and test plans under the same confs, rules and extensions, and reuses
   * its generated classes. The source guards beside it keep the other
   * one-place rules: one builder, one probe listener, one state-file
-  * commit.
+  * commit, one resume loop.
   */
 class SessionsSpec extends SparkTestBase {
 
@@ -105,6 +105,12 @@ class SessionsSpec extends SparkTestBase {
         }
       }
     assert(found === Nil, "commit state files through Swap.writeState")
+  }
+
+  test("no resume loop outside Follow: manifest, pending claim and shard expansion") {
+    val loop = """"(manifest|pending)"|expandShardPaths""".r
+    assert(offenders(Seq("src/main"), loop, "Follow.scala") === Nil,
+      "run incremental modes through graft.search.Follow.run")
   }
 
   test("no SparkListener in graft.tools outside the shared ProbeListener") {

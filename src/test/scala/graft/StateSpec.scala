@@ -220,6 +220,23 @@ class StateSpec extends SparkTestBase {
         .groupBy("phrase").agg(sum("n_docs")))) +
       ("report" -> rows(spark.read.json(s"$root/report"))))
 
+  private val decontaminate = Cmd("decontaminate", None,
+    batch = (root, n) => {
+      if (n == 1) {
+        writeJsonl(root.resolve("bench"), "b.jsonl", "alpha beta")
+        writeJsonl(root.resolve("drop/d1"), "s.jsonl", "alpha beta", "gamma")
+      } else writeJsonl(root.resolve("drop/d2"), "s.jsonl",
+        "delta", "alpha beta")
+      Cli.run(spark, Array("decontaminate", dropGlob(root), "--bench",
+        s"$root/bench/b.jsonl", "--follow", s"$root/state"))
+    },
+    result = root => {
+      val state = root.resolve("state")
+      stateFiles(state) ++ walk(state.resolve("data"))
+        .filter(_.getFileName.toString.startsWith("batch-"))
+        .map(b => s"rows ${b.getFileName}" -> jsonlRows(b))
+    })
+
   private val dedup = Cmd("dedup", None,
     batch = (root, n) => {
       if (n == 1) writeJsonl(root.resolve("in1"), "a.jsonl",
@@ -238,7 +255,7 @@ class StateSpec extends SparkTestBase {
     val cmds = Seq(ingest,
       follow("index", "state_idx", textIndex, "--buckets", "4"),
       follow("ann", "state_ann", annIndex, "--step", "1", "--buckets", "4"),
-      contaminate, dedup)
+      contaminate, decontaminate, dedup)
     val covered = cmds.flatMap(crashTest).toSet
     assert(covered === Swap.Point.state.toSet,
       "a state point no command reaches is not crash-tested")
