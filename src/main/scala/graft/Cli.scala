@@ -698,22 +698,21 @@ object Cli {
             : Seq[Seq[String]] = {
           requireBenchCols(cols, "a used field")
           val used = cols.map(c => trim(col(c).cast("string")))
-          val rows = bench
+          val rows = Sessions.gatherCapped(bench
             .select(used: _*)
             // null/blank RAW values drop before the collect so they
             // neither count against the cap nor reach the driver; the
             // post-fold filter below catches analyzer-stripped values
             .where(used.map(c => c.isNotNull && length(c) > 0)
-              .reduce(_ && _))
-            .limit(benchCap + 1).collect()
-          require(rows.length <= benchCap, s"contaminate: benchmark " +
+              .reduce(_ && _)), benchCap)
+          require(rows.nonEmpty, s"contaminate: benchmark " +
             s"exceeds $benchCap rows — benchmark corpora must be " +
             "benchmark-sized (they broadcast into the corpus scan)")
           // exclusion runs AFTER the fold: the analyzer can strip a
           // punctuation-only value to "" (the match-everything empty
           // phrase under uax29), and a blank field silently weakens the
           // ALL-fields conjunction — drop the row either way
-          rows.map(r => cols.indices.map(i => fold(r.getString(i))))
+          rows.get.map(r => cols.indices.map(i => fold(r.getString(i))))
             .filter(_.forall(_.trim.nonEmpty)).map(_.toSeq).toSeq
         }
         // --follow STATE: INCREMENTAL contamination tracking over a drop

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The engine's session: `local`, the one builder, and
   * [[tune]], the session-level optimizer tuning for the engine's
@@ -150,5 +150,15 @@ object Sessions {
     // not touch).
     spark.conf.set("spark.sql.limit.initialNumPartitions", "1024")
     spark
+  }
+
+  /** The engine's one capped driver gather: every row of `df`, or None
+    * when it has more than `cap` rows. One `limit(cap + 1).collect()` job
+    * over the contractually bounded side frame, ramped once over every
+    * partition by [[tune]]'s `limit.initialNumPartitions`.
+    */
+  def gatherCapped(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length > cap) None else Some(rows)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** Exact-hash deduplication, decontamination and overlap analysis
   * (reference wimbd/text_and_url_overlaps and its helper_scripts — SURVEY
   * §2.4 J1-J6, §2.1 S11, §2.3 A11).
@@ -93,9 +95,9 @@ object Dedup {
     // so dropping preserves semantics)
     val df = df0.na.drop()
     val fastCap = math.min(cap, 1 << 22)
-    val fast = df.limit(fastCap + 1).collect()
-    if (fast.length <= fastCap) {
-      val a = fast.map(_.getLong(0)); java.util.Arrays.sort(a); Some(a)
+    val fast = Sessions.gatherCapped(df, fastCap)
+    if (fast.nonEmpty) {
+      val a = fast.get.map(_.getLong(0)); java.util.Arrays.sort(a); Some(a)
     } else if (cap <= fastCap) None
     else {
       // big-but-maybe-allowed: persist so the sizing count and the

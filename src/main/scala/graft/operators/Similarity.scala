@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import graft.Sessions
 import graft.functions.expressions.DotProduct
 
 /** Embedding similarity search over an `array<float>` column: brute-force
@@ -547,12 +548,12 @@ object Similarity {
       if (!hashedIds) col(idCol).cast("long")
       else xxhash64(col(idCol).cast("string"))
     val centCap = 1 << 16
-    val rows = sample.select(centKey.as("cid"), col("bv"))
-      .limit(centCap + 1).collect()
-    require(rows.length <= centCap,
+    val rows = Sessions.gatherCapped(
+      sample.select(centKey.as("cid"), col("bv")), centCap)
+    require(rows.nonEmpty,
       s"$op: step=$step yields more than $centCap sampled centroids " +
         "on this corpus — raise step (or the cap)")
-    val cents = rows
+    val cents = rows.get
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     if (cents.isEmpty && !b.isEmpty) sys.error(
       s"$op: step=$step selected ZERO centroids on this corpus — " +
@@ -783,13 +784,10 @@ object Similarity {
       centroids: DataFrame): Option[Array[(Long, Array[Double])]] = {
     val cap = intConf(centroids.sparkSession, MaxGatheredCentroidsConf,
       MaxGatheredCentroidsDefault)
-    val centRows = centroids
+    Sessions.gatherCapped(centroids
       .select(col("centroid_id").cast("long").as("cid"), col("cv"))
-      .where(col("cv").isNotNull)
-      .limit(cap + 1).collect()
-    if (centRows.length > cap) None
-    else Some(
-      centRows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1))
+      .where(col("cv").isNotNull), cap)
+      .map(_.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1))
   }
 
   /** Query-side IVF probe selection as ONE codegen scan projection
@@ -935,13 +933,13 @@ object Similarity {
     requireIntegralId(base, idCol, op,
       "hash ids to a long upstream (the hashedIds/xxhash64 pattern) — " +
         "a fractional id would truncate into a colliding centroid bucket")
-    val rows = b.where(col(idCol) % step === 0 && col("bv").isNotNull)
-      .select(col(idCol).cast("long"), col("bv"))
-      .limit(maxCentroids + 1).collect()
-    require(rows.length <= maxCentroids,
+    val rows = Sessions.gatherCapped(
+      b.where(col(idCol) % step === 0 && col("bv").isNotNull)
+        .select(col(idCol).cast("long"), col("bv")), maxCentroids)
+    require(rows.nonEmpty,
       s"$op: step=$step yields more than $maxCentroids sampled " +
         "centroids on this corpus — raise step (or maxCentroids)")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    rows.get.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
   }
 
   def clusterProfile(base: DataFrame, idCol: String, vecCol: String,
@@ -1206,11 +1204,12 @@ object Similarity {
     // K = n/step rows land on the driver AND are re-inlined as a plan
     // literal by pqEncode — collect through a limit so a step miscalibrated
     // for the corpus size fails fast instead of OOMing the driver
-    val rows = sampled.select(col(idCol).cast("long"), col("bv"))
-      .limit(maxSample + 1).collect()
+    val rows = Sessions.gatherCapped(
+      sampled.select(col(idCol).cast("long"), col("bv")), maxSample)
+    require(rows.nonEmpty, codebookOverCap(step, maxSample))
     // requires/sort/slicing all live in codebookFromRows — ONE copy of
     // the derivation whichever side of the collect the caller is on
-    codebookFromRows(rows.map(r => (r.getLong(0),
+    codebookFromRows(rows.get.map(r => (r.getLong(0),
       if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)),
       m, step, maxSample)
   }
@@ -1226,9 +1225,7 @@ object Similarity {
   private[graft] def codebookFromRows(rows: Array[(Long, Array[Double])],
                                       m: Int, step: Int,
                                       maxSample: Int): Array[Array[Array[Double]]] = {
-    require(rows.length <= maxSample,
-      s"pqCodebook: step=$step yields more than $maxSample codebook rows " +
-        s"on this corpus — raise step (or maxSample)")
+    require(rows.length <= maxSample, codebookOverCap(step, maxSample))
     val sample = rows.sortBy(_._1).map(_._2)
     require(sample.nonEmpty, "empty codebook sample — lower step")
     val dim = sample.head.length
@@ -1236,6 +1233,10 @@ object Similarity {
     val sub = dim / m
     Array.tabulate(m)(j => sample.map(v => v.slice(j * sub, (j + 1) * sub)))
   }
+
+  private def codebookOverCap(step: Int, maxSample: Int): String =
+    s"pqCodebook: step=$step yields more than $maxSample codebook rows " +
+      s"on this corpus — raise step (or maxSample)"
 
   /** k-means-refined PQ codebook (the FAISS training default, vs
     * [[pqCodebook]]'s raw deterministic sample): per subspace, `iters`
@@ -1252,14 +1253,13 @@ object Similarity {
   def pqCodebookKmeans(base: DataFrame, idCol: String, vecCol: String,
                        m: Int, k: Int, step: Int, iters: Int = 5,
                        maxSample: Int = 8192): Array[Array[Array[Double]]] = {
-    val rows = unitProject(base.where(col(idCol) % step === 0), idCol, idCol,
-        vecCol, "bv")
-      .select(col(idCol).cast("long"), col("bv"))
-      .limit(maxSample + 1).collect()
-    require(rows.length <= maxSample,
+    val rows = Sessions.gatherCapped(
+      unitProject(base.where(col(idCol) % step === 0), idCol, idCol,
+        vecCol, "bv").select(col(idCol).cast("long"), col("bv")), maxSample)
+    require(rows.nonEmpty,
       s"pqCodebookKmeans: step=$step yields more than $maxSample sample " +
         s"rows on this corpus — raise step (or maxSample)")
-    val sample = rows.sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
+    val sample = rows.get.sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     require(sample.length >= k,
       s"pqCodebookKmeans: k=$k exceeds the ${sample.length}-row sample — lower step")
     val dim = sample.head.length

@@ -332,6 +332,19 @@ object AnnIndex {
 
   // ---- build ----
 
+  /** The IVF builds' one capped gather of a `(centroid_id, cv)` selection,
+    * and whether `__centroids` must be written distributed. A truncated
+    * all-rows collect might still fit after the null drop, so it retries
+    * non-null-only (the exact cap semantics of the former assignment-side
+    * gather); `__centroids` then falls back to a distributed write because
+    * the full null-bearing sample is unknown. None over the cap either way.
+    */
+  private def gatherSelection(selection: DataFrame, cap: Int)
+      : Option[(Array[org.apache.spark.sql.Row], Boolean)] =
+    graft.Sessions.gatherCapped(selection, cap).map((_, false)).orElse(
+      graft.Sessions.gatherCapped(selection.where(col("cv").isNotNull), cap)
+        .map((_, true)))
+
   /** Build the IVF index and persist it bucketed by the centroid bucket.
     * Deterministic sample centroids (id ≡ 0 mod `step` — swap in
     * [[Similarity.kmeansCentroids]] upstream by pre-assigning if needed);
@@ -394,21 +407,12 @@ object AnnIndex {
     val cap = math.max(1, Similarity.intConf(spark,
       Similarity.MaxGatheredCentroidsConf,
       Similarity.MaxGatheredCentroidsDefault))
-    var selRows = selection.limit(cap + 1).collect()
-    // a truncated all-rows collect might still fit after the null drop —
-    // retry non-null-only (the exact cap semantics of the former
-    // assignment-side gather); `__centroids` then falls back to a
-    // distributed write because the full null-bearing sample is unknown
-    var centsDistributed = false
-    if (selRows.length > cap) {
-      selRows = selection.where(col("cv").isNotNull).limit(cap + 1).collect()
-      if (selRows.length > cap) sys.error(
+    val (selRows, centsDistributed) = gatherSelection(selection, cap)
+      .getOrElse(sys.error(
         "writeIvfIndex: centroid selection exceeds the gather cap " +
           s"(${Similarity.MaxGatheredCentroidsConf}, default " +
           s"${Similarity.MaxGatheredCentroidsDefault} rows) — it must be " +
-          "index-sized (broadcast to every probe)")
-      centsDistributed = true
-    }
+          "index-sized (broadcast to every probe)"))
     require(selRows.nonEmpty,
       s"writeIvfIndex: step=$step selected ZERO centroids on this corpus " +
         "— lower step (the hashedIds filter is probabilistic: ~1/step)")
@@ -608,17 +612,12 @@ object AnnIndex {
     val centCap = math.max(1, Similarity.intConf(spark,
       Similarity.MaxGatheredCentroidsConf,
       Similarity.MaxGatheredCentroidsDefault))
-    var selRows = selection.limit(centCap + 1).collect()
-    var centsDistributed = false
-    if (selRows.length > centCap) {
-      selRows = selection.where(col("cv").isNotNull)
-        .limit(centCap + 1).collect()
-      require(selRows.length <= centCap,
-        s"writeIvfPqIndex: step=$step yields more than $centCap sampled " +
-          s"centroids on this corpus — raise step (or the " +
-          s"${Similarity.MaxGatheredCentroidsConf} dial)")
-      centsDistributed = true
-    }
+    val gathered = gatherSelection(selection, centCap)
+    require(gathered.nonEmpty,
+      s"writeIvfPqIndex: step=$step yields more than $centCap sampled " +
+        s"centroids on this corpus — raise step (or the " +
+        s"${Similarity.MaxGatheredCentroidsConf} dial)")
+    val (selRows, centsDistributed) = gathered.get
     val centArr = selRows.filter(!_.isNullAt(1))
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     if (centArr.isEmpty && (selRows.nonEmpty || !b.isEmpty)) sys.error(

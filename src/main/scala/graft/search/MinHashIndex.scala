@@ -140,12 +140,10 @@ object MinHashIndex {
     val rowsB = bandRowsWith(p, bench, benchId, benchText)
       .select(col("id").as("__idb"), col("band"), col("band_key"))
       .localCheckpoint(true)
-    val keys = rowsB.select("band_key").distinct()
-      .limit(maxPruneKeys + 1).collect().map(_.getString(0))
-    val idx =
-      if (keys.length <= maxPruneKeys)
-        spark.table(table).where(col("band_key").isin(keys.toIndexedSeq: _*))
-      else spark.table(table)
+    val keys = graft.Sessions.gatherCapped(
+      rowsB.select("band_key").distinct(), maxPruneKeys)
+    val idx = keys.fold(spark.table(table))(ks => spark.table(table)
+      .where(col("band_key").isin(ks.map(_.getString(0)).toIndexedSeq: _*)))
     idx.join(broadcast(rowsB), Seq("band", "band_key"))
       .select(col("id").as("id_a"), col("__idb").as("id_b")).distinct()
   }

@@ -124,12 +124,14 @@ object PromptTemplates {
     val phrases = frames.iterator.flatMap { case (df, ts) =>
       val cols = ts.zipWithIndex.map { case (t, i) =>
         renderColumn(t.template).as(s"__p$i") }
-      val rows = df.select(cols.toSeq: _*).limit(budget / ts.length + 1).collect()
-      require(rows.length.toLong * ts.length <= budget,
+      val cap = budget / ts.length
+      val gathered = graft.Sessions.gatherCapped(df.select(cols.toSeq: _*), cap)
+      require(gathered.nonEmpty,
         s"contaminationFromTemplates: rendered prompts exceed the remaining " +
           s"broadcast budget ($maxPrompts total) — benchmark frames " +
-          s"must stay benchmark-sized; got >${rows.length - 1} rows x " +
+          s"must stay benchmark-sized; got >$cap rows x " +
           s"${ts.length} template(s) for ${ts.map(_.name).mkString(", ")}")
+      val rows = gathered.get
       budget -= rows.length * ts.length
       ts.zipWithIndex.flatMap { case (t, i) =>
         rows.iterator.map(r => (t.name, foldPhrase(r.getString(i))))

@@ -85,6 +85,12 @@ final class ProbeListener private (spark: SparkSession, traceJobs: Boolean)
     val sec = (System.nanoTime() - t0) / 1e9
     (r, sec, counts() - before)
   }
+
+  /** Stops counting: removes both listeners [[ProbeListener.attach]] added. */
+  def detach(): Unit = {
+    spark.sparkContext.removeSparkListener(this)
+    spark.listenerManager.unregister(scans)
+  }
 }
 
 object ProbeListener {

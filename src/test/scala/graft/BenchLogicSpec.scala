@@ -1,184 +1,35 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.graft.Listeners
 
-/** The bench's stall-window detector (pure logic — no Spark session):
-  * round-over-round comparison must re-measure exactly the queries whose
-  * scored min is both ≥1 s and >2× the previous committed value, and the
-  * previous-round parse must survive absent/corrupt artifacts.
+import graft.tools.ProbeListener
+
+/** The bench's scoring rules (pure logic) and its timing loop over the
+  * shared session: counts that repeat exactly, and no probe left behind.
   */
-class BenchLogicSpec extends AnyFunSuite {
-
-  test("parsePrevQueries extracts the flat queries map from a bench line") {
-    val line = """{"metric":"total","value":95.9,"unit":"sec","queries":{"q1_agg":0.213,"t_unigram_lm":3.467,"d_minhash_lsh":0.778},"derived":{"topk3_docs_per_sec":8511.0},"samples":{"q1_agg":[0.3,0.21,0.22]},"sf":"/root/testdata/sf0.1"}"""
-    val got = Bench.parsePrevQueries(line)
-    assert(got === Map("q1_agg" -> 0.213, "t_unigram_lm" -> 3.467,
-      "d_minhash_lsh" -> 0.778))
-  }
-
-  test("parsePrevQueries tolerates whitespace after the colons (seeded trend files)") {
-    // the r16 debut bug: a pretty-printed seed wrote `"queries": {` and
-    // the exact-string opener silently ignored the whole file
-    val pretty = """{"queries": {"a": 0.5, "b" : 1.25}}"""
-    assert(Bench.parsePrevQueries(pretty) === Map("a" -> 0.5, "b" -> 1.25))
-  }
-
-  test("parsePrevQueries degrades to empty on corrupt or missing input") {
-    assert(Bench.parsePrevQueries("") === Map.empty)
-    assert(Bench.parsePrevQueries("{\"metric\":\"total\"}") === Map.empty)
-    assert(Bench.parsePrevQueries("{\"queries\":{") === Map.empty)
-    // non-numeric value rows are skipped, not thrown on
-    assert(Bench.parsePrevQueries("""{"queries":{"a":1.5,"b":oops}}""")
-      === Map("a" -> 1.5))
-  }
-
-  test("elevated/needsRemeasure: >2x reference AND >0.2s above it — no 1s floor") {
-    // the r12 casualty: 3.467 s vs 0.521 s previous — re-measure
-    assert(Bench.needsRemeasure(3.467, Some(0.521)))
-    // genuine slow query holding trend: no re-measure
-    assert(!Bench.needsRemeasure(3.4, Some(3.1)))
-    // the r15 casualty class: five SUB-SECOND t_* queries at 5.5–8.4x
-    // (t_fineweb 0.103 → 0.867) sat under the old >=1 s floor, unmarked
-    // and unclassified — the relative gate fires on them
-    assert(Bench.elevated(0.867, Some(0.103)))
-    assert(Bench.needsRemeasure(0.9, Some(0.1)))
-    // 2x of a tiny value is scheduling jitter, not signal: the 0.2 s
-    // absolute delta keeps it out (0.25 vs 0.1 = 2.5x but only +0.15 s)
-    assert(!Bench.elevated(0.25, Some(0.1)))
-    // exactly 2x is trend drift, not a stall
-    assert(!Bench.needsRemeasure(2.0, Some(1.0)))
-    // >2x but the delta is exactly 0.2: still jitter-scale
-    assert(!Bench.elevated(0.3, Some(0.1)))
-    // new query this round (no previous value): nothing to compare
-    assert(!Bench.needsRemeasure(5.0, None))
-    // zero/garbage previous value must not divide into a re-measure storm
-    assert(!Bench.needsRemeasure(5.0, Some(0.0)))
-  }
+class BenchLogicSpec extends SparkTestBase {
 
   test("warmupShaped: strictly-decreasing samples, >=1.5x AND >0.2s first-to-last") {
-    // the r13 casualty: p8_model 3.52 -> 2.16 -> 1.83, scored 1.83 —
-    // under the 2x stall trigger but plainly still warming up
-    assert(Bench.warmupShaped(1.83, List(3.52, 2.16, 1.83)))
+    // p8_model 3.52 -> 2.16 -> 1.83: plainly still warming up
+    assert(Bench.warmupShaped(List(3.52, 2.16, 1.83)))
     // two-sample variant fires too
-    assert(Bench.warmupShaped(1.2, List(2.0, 1.2)))
+    assert(Bench.warmupShaped(List(2.0, 1.2)))
     // non-monotone samples: interference noise, not warmup — median/min
     // scoring owns it
-    assert(!Bench.warmupShaped(1.8, List(3.5, 1.8, 2.2)))
+    assert(!Bench.warmupShaped(List(3.5, 1.8, 2.2)))
     // shallow decrease (< 1.5x first/last): trend, not warmup
-    assert(!Bench.warmupShaped(1.4, List(1.9, 1.5, 1.4)))
-    // r16: sub-second warmup shapes fire too (the old >=1 s floor is
-    // gone) — a 0.9→0.4 decay earns its steady-state sample
-    assert(Bench.warmupShaped(0.4, List(0.9, 0.6, 0.4)))
+    assert(!Bench.warmupShaped(List(1.9, 1.5, 1.4)))
+    // sub-second warmup shapes fire too: a 0.9→0.4 decay earns its
+    // steady-state sample
+    assert(Bench.warmupShaped(List(0.9, 0.6, 0.4)))
     // …but a 0.25→0.1 decay is jitter-scale (delta <= 0.2 s), not warmup
-    assert(!Bench.warmupShaped(0.1, List(0.25, 0.15, 0.1)))
+    assert(!Bench.warmupShaped(List(0.25, 0.15, 0.1)))
     // equal adjacent samples are NOT strictly decreasing
-    assert(!Bench.warmupShaped(1.5, List(3.0, 3.0, 1.5)))
+    assert(!Bench.warmupShaped(List(3.0, 3.0, 1.5)))
     // degenerate inputs never fire
-    assert(!Bench.warmupShaped(1.5, Nil))
-    assert(!Bench.warmupShaped(1.5, List(1.5)))
-    assert(!Bench.warmupShaped(1.0, List(2.0, 0.0)))
-  }
-
-  test("mergeHistory appends run scores into a bounded per-query window") {
-    val old = Map("a" -> List(0.1, 0.9), "gone" -> List(0.5))
-    val run = Map("a" -> 0.8, "new" -> 3.0)
-    val m = Bench.mergeHistory(old, run)
-    // an inflated run enters the window but the min reference still
-    // reads the fast sample (the t_* ratchet guard)…
-    assert(m("a") === List(0.1, 0.9, 0.8))
-    assert(m("a").min === 0.1)
-    // removed queries keep their entry (no aging without evidence),
-    // new ones enter as a one-sample window
-    assert(m("gone") === List(0.5))
-    assert(m("new") === List(3.0))
-    // …but unlike the permanent min-ratchet, a one-off outlier AGES OUT:
-    // after TrendHistoryWindow further runs at the true steady state the
-    // anomalous sample falls off the window and stops flagging every
-    // normal run elevated
-    val steady = (1 to Bench.TrendHistoryWindow)
-      .foldLeft(Map("a" -> List(0.01))) { (h, _) =>
-        Bench.mergeHistory(h, Map("a" -> 0.5))
-      }
-    assert(steady("a").length === Bench.TrendHistoryWindow)
-    assert(steady("a").min === 0.5)
-  }
-
-  test("parseHistory round-trips the bounded window; legacy files degrade") {
-    val json = """{"sf":"/x/sf0.1","queries":{"a":0.1,"b":2.0},""" +
-      """"history":{"a":[0.1,0.9],"b":[2.0]}}"""
-    assert(Bench.parseHistory(json) ===
-      Map("a" -> List(0.1, 0.9), "b" -> List(2.0)))
-    // pre-history trend file: empty (caller seeds from the queries min)
-    assert(Bench.parseHistory("""{"sf":"/x","queries":{"a":0.1}}""")
-      === Map.empty)
-    // the queries parser must stop at ITS object and never read history
-    assert(Bench.parsePrevQueries(json) === Map("a" -> 0.1, "b" -> 2.0))
-    // corrupt arrays are skipped, not fatal
-    assert(Bench.parseHistory("""{"history":{"a":[oops],"b":[1.5]}}""")
-      === Map("b" -> List(1.5)))
-  }
-
-  test("all-time best: parses, min-merges without decay, advisory fires only past 2x+0.2s") {
-    val json = """{"sf":"/x","queries":{"a":0.4},""" +
-      """"history":{"a":[0.4,0.5]},"best":{"a":0.1,"b":3.0}}"""
-    assert(Bench.parseBest(json) === Map("a" -> 0.1, "b" -> 3.0))
-    // pre-best trend file: empty (caller seeds from the legacy queries min)
-    assert(Bench.parseBest("""{"queries":{"a":0.1}}""") === Map.empty)
-    // min-merge: never rises, keys union, no aging
-    assert(Bench.mergeBest(Map("a" -> 0.1, "b" -> 3.0),
-      Map("a" -> 0.5, "c" -> 1.0))
-      === Map("a" -> 0.1, "b" -> 3.0, "c" -> 1.0))
-    // the drift advisory mirrors elevated()'s thresholds against the
-    // never-decaying reference: 2x AND 0.2s absolute
-    assert(Bench.driftedFromBest(0.5, Some(0.1)))
-    assert(!Bench.driftedFromBest(0.5, Some(0.3)))  // 1.7x
-    assert(!Bench.driftedFromBest(0.15, Some(0.05))) // 3x but 0.1s delta
-    assert(!Bench.driftedFromBest(0.5, None))
-    assert(!Bench.driftedFromBest(0.5, Some(0.0)))  // degenerate ref
-    // scenario the best reference exists for: a persistent slowdown that
-    // aged its fast samples out of the window — the window min equals
-    // the slow plateau (gate quiet), the all-time best still remembers
-    val plateau = (1 to Bench.TrendHistoryWindow)
-      .foldLeft(Map("q" -> List(0.1))) { (h, _) =>
-        Bench.mergeHistory(h, Map("q" -> 0.9)) }
-    assert(plateau("q").min === 0.9) // window forgot 0.1
-    assert(!Bench.elevated(0.95, Some(plateau("q").min)))
-    assert(Bench.driftedFromBest(0.95,
-      Bench.mergeBest(Map("q" -> 0.1), Map("q" -> 0.9)).get("q")))
-  }
-
-  test("parseSf reads the scale-factor marker; trend files from another sf are ignored") {
-    assert(Bench.parseSf("""{"sf":"/root/testdata/sf0.1","queries":{}}""")
-      === Some("/root/testdata/sf0.1"))
-    assert(Bench.parseSf("""{"sf" : "/x/sf0.001"}""") === Some("/x/sf0.001"))
-    // hand-seeded file without the marker: accepted (stamped on next write)
-    assert(Bench.parseSf("""{"queries":{"a":1.0}}""") === None)
-  }
-
-  test("parseWatchList reads the previous artifact's stall_class keys") {
-    val line = """{"metric":"total","value":78.2,"queries":{"a":1.0},"stall_class":{"t_fineweb":"real","e21_indexed_wildcard":"stall"},"sf":"x"}"""
-    assert(Bench.parseWatchList(line)
-      === Set("t_fineweb", "e21_indexed_wildcard"))
-    // empty/absent stall_class (the r15 artifact) → empty watch list
-    assert(Bench.parseWatchList("""{"queries":{"a":1.0},"stall_class":{}}""")
-      === Set.empty)
-    assert(Bench.parseWatchList("""{"queries":{"a":1.0}}""") === Set.empty)
-    assert(Bench.parseWatchList("") === Set.empty)
-  }
-
-  test("stall re-measure replaces the score only when it clears the gate itself") {
-    // the symmetric-gate contract (pure re-statement of the main-loop
-    // fold): stall-flagged score t, re-measure `again` —
-    def fold(t: Double, again: Double, prev: Option[Double]): Double =
-      if (Bench.needsRemeasure(t, prev) && Bench.needsRemeasure(again, prev)) t
-      else math.min(t, again)
-    // stall window passed: re-measure back on trend, trust it
-    assert(fold(3.4, 0.5, Some(0.52)) === 0.5)
-    // flaky regression: re-measure faster but STILL >2x previous — keep
-    // the full scored magnitude, don't report the best case
-    assert(fold(3.4, 1.5, Some(0.52)) === 3.4)
-    // real steady regression: both elevated, score unchanged
-    assert(fold(3.4, 3.2, Some(0.52)) === 3.4)
+    assert(!Bench.warmupShaped(Nil))
+    assert(!Bench.warmupShaped(List(1.5)))
+    assert(!Bench.warmupShaped(List(2.0, 0.0)))
   }
 
   test("failed samples never score: needsThirdSample / scoreSamples") {
@@ -202,85 +53,28 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(Bench.scoreSamples(List((0.04, false), (0.06, false), (0.05, false))) === 0.06)
   }
 
-  test("warmup-triggered re-measure takes the min even when the stall gate also fired") {
-    // pure re-statement of the main-loop fold with the warm branch first:
-    // strictly-decreasing samples mean LATER = truer, so a warm query
-    // adopts the steady-state re-measure even if that value would not
-    // clear the 2x-previous stall gate on its own
-    def fold(t: Double, ss: List[Double], again: Double, prev: Option[Double]): Double = {
-      val stall = Bench.needsRemeasure(t, prev)
-      val warm = Bench.warmupShaped(t, ss)
-      if (warm) math.min(t, again)
-      else if (stall && Bench.needsRemeasure(again, prev)) t
-      else math.min(t, again)
+  test("run times named queries with their costs and detaches its probe") {
+    def probes(): Int =
+      Listeners.names(spark).count(_.startsWith(classOf[ProbeListener].getName))
+    // the helper sees both listeners a probe attaches
+    val p = ProbeListener.attach(spark)
+    assert(probes() === 2)
+    p.detach()
+    assert(probes() === 0)
+    val sf = "/root/testdata/sf0.001"
+    val names = Seq("q1_agg", "a1_stats")
+    val first = Bench.run(spark, sf, names)
+    val second = Bench.run(spark, sf, names)
+    assert(first.map(_._1) === names)
+    (first ++ second).foreach { case (n, t) =>
+      assert(t.costs.jobs > 0, n)
+      assert(t.samples.length >= 2 && t.samples.contains(t.score), n)
     }
-    // warm AND stall-flagged, steady state still >2x prev: warm wins, the
-    // recorded regression is the steady 1.3s, not the inflated 2.16
-    assert(fold(2.16, List(3.52, 2.16), 1.3, Some(0.5)) === 1.3)
-    // warm but the re-measure is slower (noise): min keeps the score
-    assert(fold(2.16, List(3.52, 2.16), 2.4, Some(0.5)) === 2.16)
-    // not warm (flat samples): the symmetric stall gate still protects
-    // against best-casing a flaky regression
-    assert(fold(3.4, List(3.4, 3.5), 1.5, Some(0.52)) === 3.4)
-  }
-
-  test("parseLoadavg reads the 1-minute field and degrades to 0.0") {
-    assert(Bench.parseLoadavg("0.52 0.60 0.70 1/234 9876\n") === 0.52)
-    assert(Bench.parseLoadavg("17.03 12.1 8.0") === 17.03)
-    assert(Bench.parseLoadavg("") === 0.0)
-    assert(Bench.parseLoadavg("garbage here") === 0.0)
-  }
-
-  test("inflation is wall/base with degenerate baselines degrading to 1.0") {
-    assert(math.abs(Bench.inflation(0.3, 0.1) - 3.0) < 1e-9)
-    assert(Bench.inflation(0.1, 0.1) === 1.0)
-    assert(Bench.inflation(0.1, 0.0) === 1.0)
-    assert(Bench.inflation(0.0, 0.1) === 1.0)
-  }
-
-  test("runInflation is the median marker, robust to one stall window") {
-    // one stall window among quiet markers: the run reads quiet
-    assert(Bench.runInflation(Seq(1.0, 1.05, 4.0, 1.02, 0.98)) === 1.02)
-    // a loaded host lifts every marker and the median with it
-    assert(Bench.runInflation(Seq(2.1, 2.4, 2.2)) === 2.2)
-    assert(Bench.runInflation(Nil) === 1.0)
-  }
-
-  test("scoredSampleIndex finds the sample the score was copied from") {
-    // >=1s min scoring: score 2.59 came from sample index 2
-    assert(Bench.scoredSampleIndex(2.59, List(4.26, 6.01, 2.59)) === 2)
-    // sub-second median
-    assert(Bench.scoredSampleIndex(0.4, List(0.5, 0.3, 0.4)) === 2)
-    // not-a-sample (caller bug / rounded value) → -1, which classification
-    // maps to "unmarked" rather than a wrong marker
-    assert(Bench.scoredSampleIndex(2.6, List(4.26, 6.01, 2.59)) === -1)
-  }
-
-  test("classifyElevated: stall/real/ambiguous/unmarked thresholds") {
-    // the r14 d_kcenter_select case: had the scored 2.59 s sample carried
-    // a 3x-inflated calibration marker, the artifact alone would have
-    // said "stall" — no forensic round-trip
-    assert(Bench.classifyElevated(Some(3.1)) === "stall")
-    assert(Bench.classifyElevated(Some(1.5)) === "stall")
-    // quiet host adjacent to the scored sample: the elevation is real
-    assert(Bench.classifyElevated(Some(1.0)) === "real")
-    assert(Bench.classifyElevated(Some(1.24)) === "real")
-    // between the thresholds the artifact honestly can't decide
-    assert(Bench.classifyElevated(Some(1.3)) === "ambiguous")
-    assert(Bench.classifyElevated(None) === "unmarked")
-  }
-
-  test("calibrationWork runs and scales roughly linearly in iters") {
-    // smoke: the volatile-sink loop must not be elided — 64M iterations
-    // take measurably longer than 1k (JIT-warmed first)
-    def wall(n: Long): Double = {
-      val t0 = System.nanoTime(); Bench.calibrationWork(n)
-      (System.nanoTime() - t0) / 1e9
-    }
-    (1 to 3).foreach(_ => wall(8L * 1000 * 1000)) // warm the loop
-    val small = (1 to 3).map(_ => wall(1000L)).min
-    val big = (1 to 3).map(_ => wall(64L * 1000 * 1000)).min
-    assert(big > small * 10,
-      s"calibration loop looks elided: big=$big small=$small")
+    assert(first.map { case (n, t) => n -> t.costs.jobs } ===
+      second.map { case (n, t) => n -> t.costs.jobs })
+    val e = intercept[IllegalArgumentException](
+      Bench.run(spark, sf, Seq("q1_agg", "no_such_query")))
+    assert(e.getMessage.contains("unknown query name(s): no_such_query"))
+    assert(probes() === 0)
   }
 }

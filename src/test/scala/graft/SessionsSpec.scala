@@ -12,7 +12,7 @@ import graft.functions.expressions.IntersectionSize
   * and test plans under the same confs, rules and extensions, and reuses
   * its generated classes. The source guards beside it keep the other
   * one-place rules: one builder, one probe listener, one state-file
-  * commit, one resume loop.
+  * commit, one resume loop, one capped gather.
   */
 class SessionsSpec extends SparkTestBase {
 
@@ -111,6 +111,14 @@ class SessionsSpec extends SparkTestBase {
     val loop = """"(manifest|pending)"|expandShardPaths""".r
     assert(offenders(Seq("src/main"), loop, "Follow.scala") === Nil,
       "run incremental modes through graft.search.Follow.run")
+  }
+
+  test("no capped gather outside Sessions.gatherCapped") {
+    // `limit(cap + 1).collect()` is the capped gather's shape; ordered
+    // top-k plans (`orderBy(..).limit(k)`) run as TakeOrderedAndProject
+    val gather = """\.limit\([^()]*\+\s*1\)\s*\.collect\(\)""".r
+    assert(offenders(Seq("src/main"), gather, "Sessions.scala") === Nil,
+      "gather capped side frames through Sessions.gatherCapped")
   }
 
   test("no SparkListener in graft.tools outside the shared ProbeListener") {
