@@ -463,8 +463,7 @@ object Similarity {
     * `step` (a deterministic sample — swap in k-means outputs when
     * available); every vector is assigned to its nearest centroid.
     * Vectors carry their unit form so probing never recomputes norms.
-    */
-  /** `keep`: extra `base` columns carried through the assignment
+    * `keep`: extra `base` columns carried through the assignment
     * projection verbatim (the persisted-index metadata hook — see
     * [[graft.search.AnnIndex.writeIvfIndex]]); still one scan, no join.
     */
@@ -669,13 +668,6 @@ object Similarity {
   private[graft] val CoarseGateConf = "graft.ann.coarseGate"
   private[graft] val CoarseProbesConf = "graft.ann.coarseProbes"
 
-  /** The gated assignment kernel column over `bv`: flat below the gate,
-    * nested above it. Every consumer of driver-side centroid arrays
-    * (ivfAssign → semanticDedup / clusterBalancedSample / AnnIndex
-    * builds, kmeansCentroids' Lloyd rounds, ivfKnnWith, clusterProfile)
-    * routes through here, so the ≫10⁴-centroid regime gets the
-    * sub-linear probe without per-call-site wiring.
-    */
   /** Read an integer session dial loudly — a garbage value set outside
     * the CLI's validated `--conf` path would otherwise surface as a bare
     * NumberFormatException that names neither the key nor the value.
@@ -688,6 +680,13 @@ object Similarity {
       sys.error(s"session conf $key must be an integer, got '$raw'") }
   }
 
+  /** The gated assignment kernel column over `bv`: flat below the gate,
+    * nested above it. Every consumer of driver-side centroid arrays
+    * (ivfAssign → semanticDedup / clusterBalancedSample / AnnIndex
+    * builds, kmeansCentroids' Lloyd rounds, ivfKnnWith, clusterProfile)
+    * routes through here, so the ≫10⁴-centroid regime gets the
+    * sub-linear probe without per-call-site wiring.
+    */
   private def autoBestColumn(spark: org.apache.spark.sql.SparkSession,
                              cents: Array[(Long, Array[Double])]): Column = {
     val gate = intConf(spark, CoarseGateConf, 4096)
@@ -899,26 +898,6 @@ object Similarity {
       .select(col(idCol), col("bucket"), col("rank").cast("long").as("rank"))
   }
 
-  /** Embedding-cluster profile — the unlabeled-mixture card (DoReMi-style
-    * domain discovery without source labels): every vector assigned to its
-    * nearest deterministic IVF centroid, per-cluster mass and coherence
-    * reported. Feed the (centroid_id → weight) choices into
-    * [[graft.operators.Analyses.mixturePlan]] keyed on the cluster id to
-    * mix by embedding domain instead of named source.
-    *
-    * Scale shape: identical to [[ivfAssign]] — the assignment argmax is
-    * ONE codegen'd projection probing the broadcast centroid table
-    * ([[graft.functions.expressions.BestCentroid]]); the only shuffle is
-    * the cluster-count-sized partial agg. Zero/null-direction vectors are
-    * excluded from the profile (they have no nearest centroid).
-    *
-    * The centroid count is n/`step`, a CALLER dial — and the centroids are
-    * broadcast, so a step miscalibrated for the corpus size would grow the
-    * broadcast (and every executor's copy) linearly with n. `maxCentroids`
-    * enforces the "index-sized" contract: the sample is counted first
-    * (a one-column scan with an early-abort limit) and a too-small step
-    * fails fast with the step to use instead of OOMing mid-broadcast.
-    */
   /** The caller-capped centroid-sample gather [[clusterProfile]] and
     * [[kmeansCentroids]] share: integral-id guard, null-unit seeds
     * dropped, ONE limit-capped collect doubling as the too-small-step
@@ -942,6 +921,26 @@ object Similarity {
     rows.get.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
   }
 
+  /** Embedding-cluster profile — the unlabeled-mixture card (DoReMi-style
+    * domain discovery without source labels): every vector assigned to its
+    * nearest deterministic IVF centroid, per-cluster mass and coherence
+    * reported. Feed the (centroid_id → weight) choices into
+    * [[graft.operators.Analyses.mixturePlan]] keyed on the cluster id to
+    * mix by embedding domain instead of named source.
+    *
+    * Scale shape: identical to [[ivfAssign]] — the assignment argmax is
+    * ONE codegen'd projection probing the broadcast centroid table
+    * ([[graft.functions.expressions.BestCentroid]]); the only shuffle is
+    * the cluster-count-sized partial agg. Zero/null-direction vectors are
+    * excluded from the profile (they have no nearest centroid).
+    *
+    * The centroid count is n/`step`, a CALLER dial — and the centroids are
+    * broadcast, so a step miscalibrated for the corpus size would grow the
+    * broadcast (and every executor's copy) linearly with n. `maxCentroids`
+    * enforces the "index-sized" contract: the sample is counted first
+    * (a one-column scan with an early-abort limit) and a too-small step
+    * fails fast with the step to use instead of OOMing mid-broadcast.
+    */
   def clusterProfile(base: DataFrame, idCol: String, vecCol: String,
                      step: Int, maxCentroids: Int = 8192): DataFrame = {
     val b = unitProject(base, idCol, idCol, vecCol, "bv")

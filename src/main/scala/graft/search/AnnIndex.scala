@@ -1,8 +1,11 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType,
+  StructField, StructType}
 
 import graft.operators.Similarity
 
@@ -16,7 +19,7 @@ import graft.operators.Similarity
   * lists) plus file-bucketing by `bucket` within. A kNN query reads ONLY
   * its `nprobe` probed lists' directories (catalog partition pruning,
   * spec-asserted on the pruned path count like the text index's term
-  * lookups), and — the r18 point of the layout — maintenance rewrites
+  * lookups), and — the point of the layout — maintenance rewrites
   * ONLY the lists an append batch touches ([[compactIvfIndex]]/
   * [[upsertIvfIndex]] fold per-partition instead of relaying out the
   * whole table). At 100 TB of vectors that is the difference between a
@@ -61,6 +64,25 @@ object AnnIndex {
       "writeIvfIndex/writeIvfPqIndex")
     live
   }
+
+  /** A LocalRelation over rows already on the driver. */
+  private def localFrame(spark: SparkSession, rows: Array[Row],
+                         schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private def badQueryDim(table: String, dim: Int): String =
+    s"query frame contains a null or non-$dim-dimensional embedding " +
+      s"(table $table was built over $dim-dimensional vectors)"
+
+  /** EVERY row of `df` checked (query frames and ingest batches are small
+    * by contract): a single mismatched or null vector would dot to null
+    * and silently return arbitrary neighbors or land in an arbitrary
+    * bucket.
+    */
+  private def requireRowDims(df: DataFrame, vecCol: String, table: String,
+                             dim: Int): Unit =
+    require(df.where(col(vecCol).isNull || size(col(vecCol)) =!= dim)
+      .limit(1).count() == 0, badQueryDim(table, dim))
 
   /** The persisted-layout writer shared by both tiers' builds, the
     * balance-guard rewrites, and the maintenance fold's staging write:
@@ -107,8 +129,7 @@ object AnnIndex {
       metaDimOf(spark, table))._1
 
   /** The one-row `__meta` dimension, if the completion record exists —
-    * read ONCE per query call and threaded down (the dim validation and
-    * the PQ residual flag each paid their own one-row head() job before).
+    * read ONCE per query call and threaded down.
     */
   private def metaDimOf(spark: SparkSession, table: String): Option[Int] =
     if (spark.catalog.tableExists(s"${table}__meta"))
@@ -117,23 +138,20 @@ object AnnIndex {
 
   /** One collected probe pass returning the LocalRelation probe frame
     * AND its driver rows plus the distinct asked query ids. The kernel
-    * arm folds the per-query dimension validation (formerly its own
-    * limit-count scan job) and the asked-id set (formerly
-    * [[widenStarved]]'s own distinct-collect job) into the SAME collect
-    * via `explode_outer` + a size column — one job where the former
-    * shape paid three; the literal bucket-prune list is read from the
-    * same rows instead of a distinct() job over the LocalRelation.
-    * A persisted index whose centroid table exceeds the gather cap
-    * (external writer, older step choice) stays QUERYABLE through the
-    * join+window fallback: broadcast hash join either way, just the Q×C
-    * window shuffle instead of the kernel — that arm keeps its former
-    * jobs (askedIds = None; callers that need the set collect it).
+    * arm folds the per-query dimension validation and the asked-id set
+    * (for [[widenStarved]]) into the SAME collect via `explode_outer` +
+    * a size column — one job; the literal bucket-prune list is read from
+    * the same rows. A persisted index whose centroid table exceeds the
+    * gather cap (external writer, older step choice) stays QUERYABLE
+    * through the join+window fallback: broadcast hash join either way,
+    * just the Q×C window shuffle instead of the kernel, plus its own
+    * dim-check scan (askedIds = None; callers that need the set collect
+    * it).
     */
   private def probeRowsOf(spark: SparkSession, table: String,
                           queries: DataFrame, idCol: String, vecCol: String,
                           nprobe: Int, metaDim: Option[Int])
-      : (DataFrame, Array[org.apache.spark.sql.Row], Option[Array[Any]],
-         Option[Long]) = {
+      : (DataFrame, Array[Row], Option[Array[Any]], Option[Long]) = {
     val centTable = spark.table(s"${table}__centroids")
     Similarity.gatherCentroidFrameOpt(centTable) match {
       case Some(cents) =>
@@ -150,31 +168,16 @@ object AnnIndex {
         // own dimensionality — same number by the build contract, and
         // it saves the plain tier a one-row __meta job per call
         metaDim.orElse(cents.headOption.map(_._2.length)).foreach { dim =>
-          require(!raw.exists(_.getInt(3) != dim),
-            s"query frame contains a null or non-$dim-dimensional " +
-              s"embedding (table $table was built over $dim-dimensional " +
-              "vectors)")
+          require(!raw.exists(_.getInt(3) != dim), badQueryDim(table, dim))
         }
-        val schema = org.apache.spark.sql.types.StructType(
-          outer.schema.fields.take(3))
         val rows = raw.filter(!_.isNullAt(2)).map(r =>
-          org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2)))
+          Row(r.get(0), r.get(1), r.get(2)))
         val asked = raw.map(_.get(0)).distinct
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+        (localFrame(spark, rows, StructType(outer.schema.fields.take(3))),
           rows, Some(asked), Some(cents.length.toLong))
       case None =>
-        metaDim.orElse(metaDimOf(spark, table)).foreach { dim =>
-          // EVERY row checked (query frames are small by contract): a
-          // single mismatched or null vector would dot to null and
-          // silently return arbitrary/empty neighbors for that query
-          val bad = queries
-            .where(col(vecCol).isNull || size(col(vecCol)) =!= dim)
-            .limit(1).count()
-          require(bad == 0,
-            s"query frame contains a null or non-$dim-dimensional " +
-              s"embedding (table $table was built over $dim-dimensional " +
-              "vectors)")
-        }
+        metaDim.orElse(metaDimOf(spark, table))
+          .foreach(requireRowDims(queries, vecCol, table, _))
         val q = Similarity.unitProject(queries, idCol, "query_id", vecCol,
           "qv")
         val wq = Window.partitionBy("query_id")
@@ -189,8 +192,7 @@ object AnnIndex {
           .select(col("query_id"), col("qv"),
             col("centroid_id").cast("long").as("bucket"))
         val rows = frame.collect()
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          frame.schema), rows, None, None)
+        (localFrame(spark, rows, frame.schema), rows, None, None)
     }
   }
 
@@ -266,12 +268,6 @@ object AnnIndex {
       spark.table(s"${table}__centroids").where(col("cv").isNotNull).count())
   }
 
-  // The per-query dimension validation (a mismatched dot product
-  // evaluates to null and would return arbitrary rows instead of
-  // erroring) lives inside [[probeRowsOf]] (folded into the probe
-  // collect on the kernel arm — one job instead of its own scan) and
-  // [[assignNewWithMeta]]; both skip it for pre-meta indices.
-
   // ---- bucket balance (the measured 1000× hot-bucket failure mode) ----
 
   /** Session dial for the build-time balance guard: an index whose
@@ -332,232 +328,290 @@ object AnnIndex {
 
   // ---- build ----
 
-  /** The IVF builds' one capped gather of a `(centroid_id, cv)` selection,
+  /** The IVF build's one capped gather of a `(centroid_id, cv)` selection,
     * and whether `__centroids` must be written distributed. A truncated
     * all-rows collect might still fit after the null drop, so it retries
-    * non-null-only (the exact cap semantics of the former assignment-side
-    * gather); `__centroids` then falls back to a distributed write because
-    * the full null-bearing sample is unknown. None over the cap either way.
+    * non-null-only; `__centroids` then falls back to a distributed write
+    * because the full null-bearing sample is unknown. None over the cap
+    * either way.
     */
   private def gatherSelection(selection: DataFrame, cap: Int)
-      : Option[(Array[org.apache.spark.sql.Row], Boolean)] =
+      : Option[(Array[Row], Boolean)] =
     graft.Sessions.gatherCapped(selection, cap).map((_, false)).orElse(
       graft.Sessions.gatherCapped(selection.where(col("cv").isNotNull), cap)
         .map((_, true)))
+
+  private type Codebook = Array[Array[Array[Double]]]
+
+  /** The PQ tier's encoding parameters (see [[writeIvfPqIndex]]). */
+  private case class PqCodes(m: Int, codeStep: Int, resid: Boolean)
+
+  /** `<table>__codebook`: the m × K codebook rows, ONE file (not
+    * defaultParallelism shards).
+    */
+  private def writeCodebook(spark: SparkSession, table: String,
+                            cb: Codebook): Unit = {
+    import spark.implicits._
+    cb.zipWithIndex.flatMap { case (ks, j) =>
+      ks.zipWithIndex.map { case (c, k) => (j, k, c.toSeq) }
+    }.toSeq.toDF("sub", "code", "centroid")
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).format("parquet")
+      .saveAsTable(s"${table}__codebook")
+  }
+
+  /** The one persisted IVF build behind [[writeIvfIndex]] and
+    * [[writeIvfPqIndex]]: select → assign → write → guard → stamp. The
+    * tiers differ only in how assigned `(id, bucket, bv, keep…)` rows
+    * become index rows: `pq = None` persists the unit vectors, `Some`
+    * encodes them to m-byte codes and adds `__codebook`.
+    *
+    * Rejection: a centroid sample over the gather cap
+    * (`graft.ann.maxGatheredCentroids`), empty (step too large for the
+    * corpus — with `hashedIds` the ~1/step hash filter is probabilistic,
+    * so small corpora can select nothing) or of null-direction rows only
+    * throws IllegalArgumentException before any drop or write, so a
+    * rejected force rebuild leaves the old index whole instead of
+    * persisting an empty one.
+    *
+    * Force-rebuild crash contract: the writes (index, `__centroids`,
+    * `__codebook`, `__meta`) are not one atomic commit, so the old side
+    * tables are DROPPED immediately before the index overwrite and
+    * `__meta` is written LAST as the completion record — a crash in any
+    * window leaves side state absent (queries and [[registerIvfIndex]]
+    * fail loudly at the missing table) rather than a complete-looking
+    * index silently probing OLD centroids against the new assignment, or
+    * ADC-decoding new codes against the old codebook. Re-run the same
+    * build to converge, or build under a fresh table name and switch
+    * readers. Steady-state maintenance ([[compactIvfIndex]]/
+    * [[upsertIvfIndex]]) has no such window — it swaps rename-aside and
+    * never touches the centroid side.
+    */
+  private def buildIvf(entry: String, base: DataFrame, idCol: String,
+                       vecCol: String, step: Int, table: String,
+                       buckets: Int, force: Boolean, hashedIds: Boolean,
+                       keep: Seq[String], pq: Option[PqCodes]): Unit = {
+    val spark = base.sparkSession
+    requireKeepNames(keep)
+    require(step > 0, s"$entry: ivf step must be positive, got $step")
+    val cap = math.max(1, Similarity.intConf(spark,
+      Similarity.MaxGatheredCentroidsConf,
+      Similarity.MaxGatheredCentroidsDefault))
+    def rejected(why: String): String =
+      s"$entry: step=$step $why (gather cap $cap rows, session dial " +
+        s"${Similarity.MaxGatheredCentroidsConf})"
+    val b = Similarity.unitProjectKeep(base, idCol, "id", vecCol, "bv", keep)
+    // hashedIds (non-numeric ids: CLI corpora, UUID keys): select ~1/step
+    // of the vectors by id hash and use the hash AS the (long) bucket id,
+    // so the index schema is id-type-independent; an xxhash collision
+    // merely merges two buckets — probing and assignment stay consistent
+    // because both go through the same mapping
+    val centroidId =
+      if (!hashedIds) col("id").cast("long")
+      else xxhash64(col("id").cast("string"))
+    val selection = b
+      .where(if (!hashedIds) col("id") % step === 0
+        else pmod(xxhash64(col("id").cast("string")), lit(step.toLong)) === 0)
+      .select(centroidId.as("centroid_id"), col("bv").as("cv"))
+    // ONE capped collect of the (index-sized by contract) selection scan:
+    // the driver rows serve the kernel broadcast, the `__centroids`
+    // write, the balance guard's centroid count, `__meta`'s ncents and,
+    // when `codeStep == step`, the PQ codebook sample (the same rows).
+    // Null-cv rows (zero/null vectors) STAY in `__centroids` (the side
+    // table lists the full sample; every reader drops them) but are
+    // excluded from the kernel array.
+    val gathered = gatherSelection(selection, cap)
+    require(gathered.nonEmpty,
+      rejected("selects more centroid rows than the cap — raise step"))
+    val (selRows, centsDistributed) = gathered.get
+    require(selRows.nonEmpty, rejected("selected ZERO centroids on this " +
+      "corpus — lower step" + (if (hashedIds) " (the hashedIds filter is " +
+        "probabilistic: ~1/step)" else "")))
+    val centArr = selRows.filter(!_.isNullAt(1))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    require(centArr.nonEmpty, rejected("selected only zero/null-direction " +
+      "centroid rows on this corpus — lower step"))
+    val dim = centArr.head._2.length
+    val sampleCents =
+      if (centsDistributed) selection
+      else localFrame(spark, selRows, selection.schema)
+    val resid = pq.exists(_.resid)
+
+    /** The tier's row encoder: assigned rows and the centroid frame they
+      * were assigned against → the index rows and, for PQ, the codebook
+      * they were encoded with. `prior` (the guard rewrite) is the first
+      * encode's codebook, reused verbatim when codes do not depend on
+      * the assignment (residual-free PQ): the re-encode then reproduces
+      * bit-identical codes and `__codebook` is not rewritten.
+      */
+    def encode(assigned: DataFrame, cents: DataFrame,
+               prior: Option[Codebook]): (DataFrame, Option[Codebook]) =
+      pq match {
+        case None => (assigned, None)
+        case Some(p) =>
+          // what the codes ENCODE: the unit vectors themselves, or
+          // (residual mode) unit − assigned centroid, the centroid
+          // arriving via one broadcast join of the centroid frame
+          val enc =
+            if (!resid) assigned
+            else assigned.join(
+                broadcast(cents.select(col("centroid_id"),
+                  col("cv").as("__cv"))),
+                assigned("bucket") === col("centroid_id"), "left")
+              .select(col("id") +: col("bucket") +:
+                zip_with(col("bv"), col("__cv"), (a, b) => a - b).as("bv") +:
+                keep.map(col): _*)
+          val cb = prior.filter(_ => !resid).getOrElse(
+            if (!resid && p.codeStep == step && !centsDistributed)
+              Similarity.codebookFromRows(selRows.map(r => (r.getLong(0),
+                  if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)),
+                p.m, p.codeStep, 8192)
+            else Similarity.codebookFromUnit(
+              enc.where(col("id") % p.codeStep === 0), "id", p.m,
+              p.codeStep, 8192))
+          (Similarity.pqEncodeOnUnit(graft.Par.fanOut(enc), cb)
+            .select(col("id") +: col("bucket") +: col("codes") +:
+              keep.map(col): _*), Some(cb))
+      }
+
+    val (rows, codebook) = encode(
+      Similarity.assignWithCentroidArray(b, "id", centArr, keep)
+        .select(col("id") +: col("bucket") +: col("bv") +: keep.map(col): _*),
+      sampleCents, None)
+    // force-rebuild: drop the OLD side tables immediately before the
+    // index overwrite (not earlier — a rejected sample or a failed
+    // codebook derivation above must leave a working old index whole).
+    // __codebook goes too: a plain rebuild would otherwise leave a
+    // previous PQ build's table to be re-registered against bv rows.
+    if (force) dropSideTables(spark, table)
+    writeIndexRows(rows, buckets, table,
+      if (force) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+    // ONE file for the local branch: a LocalRelation write otherwise
+    // round-robins the index-sized rows into defaultParallelism tiny
+    // shards, and scanning those back inflates every later gather into a
+    // multi-partition executeTake; the distributed over-cap branch keeps
+    // its scan parallelism
+    (if (centsDistributed) sampleCents else sampleCents.coalesce(1))
+      .write.mode(SaveMode.Overwrite).format("parquet")
+      .saveAsTable(s"${table}__centroids")
+    var nCents: Long =
+      if (centsDistributed)
+        spark.table(s"${table}__centroids").where(col("cv").isNotNull).count()
+      else centArr.length.toLong
+    codebook.foreach(writeCodebook(spark, table, _))
+
+    // ---- balance guard: rerun a degenerate centroid selection ----
+    // Runs BEFORE writeMeta so the crash contract holds through the
+    // guard's rewrite too. The id-mod-step sample is deterministic but
+    // BLIND to vector structure: a sample of (near-)identical vectors
+    // funnels the whole corpus into a handful of buckets, and probing
+    // then reads corpus-sized buckets (the measured 18× query cliff). On
+    // gross imbalance, reseed DECORRELATED from id arithmetic (salted-hash
+    // ~1/step sample — the original failure was step dividing an id
+    // period) and Lloyd-refine (2 rounds, each one corpus scan) to also
+    // escape value-coincident samples, then rewrite. A same-seeded kmeans
+    // alone could NOT recover: identical seeds tie-break every row into
+    // the lowest id and the other centroids never move.
+    // The DECISION phase (balance check, reseed gather, Lloyd rounds,
+    // checkpoint of the refined centroids) is read-only and BEST-EFFORT:
+    // the pre-guard build is already complete and consistent, so no
+    // exception here may abort the build before writeMeta — an
+    // over-gather-cap reseed (a supported config whose indexes stay
+    // queryable via the join fallback) or anything unexpected warns and
+    // keeps the index.
+    val guardCents: Option[(DataFrame, Long)] = try {
+      val guard = balanceGuardRatio(spark)
+      if (guard > 0 && balanceRatioWith(spark, table, nCents) > guard) {
+        val reseed = b
+          .where(pmod(xxhash64(concat(col("id").cast("string"),
+            lit("#graft-balance-reseed"))), lit(step.toLong)) === 0)
+          .where(col("bv").isNotNull)
+          .select(centroidId.as("centroid_id"), col("bv").as("cv"))
+        val seeds = Similarity.gatherCentroidFrameOpt(reseed)
+          .getOrElse(Array.empty[(Long, Array[Double])])
+        if (seeds.isEmpty) {
+          System.err.println(s"$entry: balance guard found a degenerate " +
+            s"id-mod-$step sample but the reseed selected zero or " +
+            "over-gather-cap vectors — index kept; adjust step")
+          None
+        } else {
+          val refined = Similarity.lloydRefine(b, "id", seeds, iters = 2)
+          import spark.implicits._
+          Some((refined.toSeq
+            .map { case (cid, v) => (cid, v.toSeq) }
+            .toDF("centroid_id", "cv").localCheckpoint(true),
+            refined.length.toLong))
+        }
+      } else None
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"$entry: balance guard aborted ($e) — index " +
+          "kept as built")
+        None
+    }
+    // The REWRITE phase is the opposite: once the index overwrite begins,
+    // exceptions PROPAGATE — swallowing one after the index write but
+    // before the centroids write would let writeMeta stamp a mismatched
+    // index complete (unstamped, it fails loudly and a re-run converges).
+    guardCents.foreach { case (cents2, nRefined) =>
+      try {
+        // __centroids dropped BEFORE the index overwrite: a crash inside
+        // the rewrite then leaves the centroid side ABSENT and every query
+        // throws at the missing table. Without the drop, refined buckets
+        // would probe the STALE sample, and because the query-side dim
+        // check tolerates a missing __meta (pre-meta indices), that index
+        // would be silently QUERYABLE and wrong. Residual codes depend on
+        // the assignment, so the residual codebook is retrained and
+        // joins the same drop-before-overwrite window.
+        Swap.drop(spark, s"${table}__centroids")
+        if (resid) Swap.drop(spark, s"${table}__codebook")
+        val (rows2, codebook2) = encode(assignUnit(b, cents2, keep), cents2,
+          codebook)
+        writeIndexRows(rows2, buckets, table, SaveMode.Overwrite)
+        cents2.write.mode(SaveMode.Overwrite).format("parquet")
+          .saveAsTable(s"${table}__centroids")
+        if (resid) codebook2.foreach(writeCodebook(spark, table, _))
+        // the rewritten side table holds the refined (all non-null) set
+        nCents = nRefined
+      } finally
+        Bridge.releaseLocalCheckpoint(cents2)
+      val after = bucketBalanceRatio(spark, table)
+      System.err.println(s"$entry: balance guard rewrote $table (max " +
+        s"bucket over the guard ratio from the id-mod-$step sample; after " +
+        s"reseed+kmeans: ${math.round(after * 10) / 10.0}x)")
+      if (after > balanceGuardRatio(spark))
+        System.err.println(s"$entry: $table is still " +
+          s"${math.round(after * 10) / 10.0}x after the guard rewrite — " +
+          "the corpus itself is heavily clustered; raise nprobe for " +
+          "recall or lower step for more, smaller buckets")
+    }
+    // the completion record, LAST — past the guard's possible rewrite
+    writeMeta(spark, table, buckets, dim, step, hashedIds,
+      m = pq.map(_.m).getOrElse(0), ncents = nCents, resid = resid)
+  }
 
   /** Build the IVF index and persist it bucketed by the centroid bucket.
     * Deterministic sample centroids (id ≡ 0 mod `step` — swap in
     * [[Similarity.kmeansCentroids]] upstream by pre-assigning if needed);
     * `buckets` is the table's file-bucket count (≈ centroid count or a
-    * divisor; pruning selects file buckets by hash(bucket id)). Fails
-    * fast when the centroid selection comes up EMPTY (step too large for
-    * the corpus — with `hashedIds` the ~1/step hash filter is
-    * probabilistic, so small corpora can select nothing), which would
-    * otherwise persist an empty index without a word.
-    *
-    * Force-rebuild crash contract: the writes (index, `__centroids`,
-    * `__meta`) are not one atomic commit, so the old side tables are
-    * DROPPED immediately before the index overwrite and `__meta` is
-    * written LAST as the completion record — a crash in any window
-    * leaves side state absent (queries and [[registerIvfIndex]] fail
-    * loudly at the missing table) rather than a complete-looking index
-    * silently probing OLD centroids against the new assignment. Re-run
-    * the same build to converge, or build under a fresh table name and
-    * switch readers. Steady-state maintenance
-    * ([[compactIvfIndex]]/[[upsertIvfIndex]]) has no such window — it
-    * swaps rename-aside and never touches the centroid side.
-    */
-  /** `keep`: extra columns of `base` persisted verbatim alongside each
+    * divisor; pruning selects file buckets by hash(bucket id)).
+    * `keep`: extra columns of `base` persisted verbatim alongside each
     * (id, bucket, bv) row — filterable metadata for [[ivfKnnIndexed]]'s
     * `filter` (language, source, license, …). Denormalized into the index
     * like `dl` in postings: the filter then runs at the PRUNED SCAN
     * (parquet pushdown composing with bucket pruning), no metadata join
     * at query time and no corpus join at build time (the columns ride
-    * the one assignment scan projection).
+    * the one assignment scan projection). `hashedIds`: sample and bucket
+    * by xxhash64 of the id, for non-numeric ids. Rejection rule, balance
+    * guard and force-rebuild crash contract: [[buildIvf]].
     */
   def writeIvfIndex(base: DataFrame, idCol: String, vecCol: String,
                     step: Int, table: String, buckets: Int,
                     force: Boolean = false,
                     hashedIds: Boolean = false,
-                    keep: Seq[String] = Nil): Unit = {
-    val spark = base.sparkSession
-    requireKeepNames(keep)
-    val b = Similarity.unitProjectKeep(base, idCol, "id", vecCol, "bv", keep)
-    val selection =
-      if (!hashedIds)
-        b.where(col("id") % step === 0)
-          .select(col("id").cast("long").as("centroid_id"), col("bv").as("cv"))
-      else
-        // non-numeric ids (CLI corpora, UUID keys): select ~1/step of the
-        // vectors by id hash and use the hash AS the (long) bucket id, so
-        // the index schema is id-type-independent; an xxhash collision
-        // merely merges two buckets — probing and assignment stay
-        // consistent because both go through the same mapping
-        b.where(pmod(xxhash64(col("id").cast("string")), lit(step.toLong)) === 0)
-          .select(xxhash64(col("id").cast("string")).as("centroid_id"),
-            col("bv").as("cv"))
-    // ONE capped collect of the (index-sized by contract) selection scan
-    // replaces the former localCheckpoint materialization + limit(1)
-    // probe + assignment-side re-gather + two post-write count() jobs:
-    // the driver rows serve the kernel broadcast, the `__centroids`
-    // write, the balance guard's centroid count and `__meta`'s ncents.
-    // Null-cv rows (zero/null vectors) STAY in `__centroids` (the side
-    // table lists the full sample; every reader drops them) but are
-    // excluded from the kernel array, exactly like the former gather.
-    val cap = math.max(1, Similarity.intConf(spark,
-      Similarity.MaxGatheredCentroidsConf,
-      Similarity.MaxGatheredCentroidsDefault))
-    val (selRows, centsDistributed) = gatherSelection(selection, cap)
-      .getOrElse(sys.error(
-        "writeIvfIndex: centroid selection exceeds the gather cap " +
-          s"(${Similarity.MaxGatheredCentroidsConf}, default " +
-          s"${Similarity.MaxGatheredCentroidsDefault} rows) — it must be " +
-          "index-sized (broadcast to every probe)"))
-    require(selRows.nonEmpty,
-      s"writeIvfIndex: step=$step selected ZERO centroids on this corpus " +
-        "— lower step (the hashedIds filter is probabilistic: ~1/step)")
-    val centArr = selRows.filter(!_.isNullAt(1))
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    require(centArr.nonEmpty,
-      s"writeIvfIndex: step=$step selected only zero/null-direction " +
-        "centroid rows on this corpus — lower step")
-    val dim = centArr.head._2.length
-    locally {
-      // force-rebuild: drop the OLD side tables immediately before the
-      // index overwrite (not earlier — a failed centroid require above
-      // must leave a working old index whole). From here on the old
-      // index is gone either way, and a crash in any window leaves the
-      // side tables ABSENT (queries throw loudly at the missing
-      // __centroids/__meta) instead of silently probing old centroid ids
-      // against the new assignment. __codebook: a previous PQ build's
-      // table that this build would otherwise leave to be re-registered
-      // against bv-carrying rows.
-      if (force) dropSideTables(spark, table)
-      writeIndexRows(
-        Similarity.assignWithCentroidArray(b, "id", centArr, keep)
-          .select(col("id") +: col("bucket") +: col("bv") +:
-            keep.map(col): _*),
-        buckets, table,
-        if (force) SaveMode.Overwrite else SaveMode.ErrorIfExists)
-      if (centsDistributed)
-        selection.write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${table}__centroids")
-      else
-        // ONE file: a LocalRelation write otherwise round-robins the
-        // index-sized rows into defaultParallelism shards of ~2 KB, and
-        // the tiny-file scan back inflates every later gather into a
-        // multi-partition executeTake (r19; also plain file hygiene —
-        // guide §6: small files hurt twice)
-        spark.createDataFrame(java.util.Arrays.asList(selRows: _*),
-            selection.schema)
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${table}__centroids")
-      var nCents: Long =
-        if (centsDistributed)
-          spark.table(s"${table}__centroids")
-            .where(col("cv").isNotNull).count()
-        else centArr.length.toLong
-      // ---- balance guard: rerun a degenerate centroid selection ----
-      // Runs BEFORE writeMeta so the force-rebuild crash contract holds
-      // through the guard's rewrite too: a crash between the guard's
-      // index overwrite and its centroids overwrite leaves the build
-      // without its completion record (__meta absent/stale) — detectably
-      // unfinished — instead of a complete-looking index probing OLD
-      // centroid ids against reseeded buckets (silent zero neighbors).
-      // The id-mod-step sample is deterministic but BLIND to vector
-      // structure: a sample of (near-)identical vectors funnels the whole
-      // corpus into a handful of buckets, and probing then reads
-      // corpus-sized buckets (the measured 18× query cliff). On gross
-      // imbalance, reseed DECORRELATED from id arithmetic (salted-hash
-      // ~1/step sample — the original failure was step dividing an id
-      // period) and Lloyd-refine (2 rounds, each one corpus scan) to also
-      // escape value-coincident samples, then rewrite. A same-seeded
-      // kmeans alone could NOT recover: identical seeds tie-break every
-      // row into the lowest id and the other centroids never move.
-      // The DECISION phase (balance check, reseed gather, Lloyd rounds,
-      // checkpoint of the refined centroids) is read-only and BEST-EFFORT:
-      // the pre-guard build is already complete and consistent, so no
-      // exception here may abort the function before writeMeta below
-      // bricks it — an over-gather-cap reseed (a supported config whose
-      // indexes stay queryable via the join fallback) or anything
-      // unexpected warns and keeps the index. The REWRITE phase is the
-      // opposite: once the index overwrite begins, exceptions PROPAGATE —
-      // swallowing one after the index write but before the centroids
-      // write would let writeMeta stamp a mismatched index complete,
-      // exactly the silent state the crash contract forbids (unstamped,
-      // it fails loudly and a re-run converges).
-      val guardCents: Option[(DataFrame, Long)] = try {
-        val guard = balanceGuardRatio(spark)
-        // the centroid count is already on the driver (nCents) — the
-        // balance check is one column-pruned max/total agg, not the
-        // former agg + side-table count pair
-        if (guard > 0 && balanceRatioWith(spark, table, nCents) > guard) {
-          val reseed = b
-            .where(pmod(xxhash64(concat(col("id").cast("string"),
-              lit("#graft-balance-reseed"))), lit(step.toLong)) === 0)
-            .where(col("bv").isNotNull)
-            .select((if (!hashedIds) col("id").cast("long")
-              else xxhash64(col("id").cast("string"))).as("centroid_id"),
-              col("bv").as("cv"))
-          val seeds = Similarity.gatherCentroidFrameOpt(reseed)
-            .getOrElse(Array.empty[(Long, Array[Double])])
-          if (seeds.isEmpty) {
-            System.err.println("writeIvfIndex: balance guard found a " +
-              s"degenerate id-mod-$step sample but the reseed selected " +
-              "zero or over-gather-cap vectors — index kept; adjust step")
-            None
-          } else {
-            val refined = Similarity.lloydRefine(b, "id", seeds, iters = 2)
-            import spark.implicits._
-            Some((refined.toSeq
-              .map { case (cid, v) => (cid, v.toSeq) }
-              .toDF("centroid_id", "cv").localCheckpoint(true),
-              refined.length.toLong))
-          }
-        } else None
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"writeIvfIndex: balance guard aborted " +
-            s"($e) — index kept as built")
-          None
-      }
-      guardCents.foreach { case (cents2, nRefined) =>
-        try {
-          // __centroids dropped BEFORE the index overwrite: a crash
-          // anywhere inside the rewrite then leaves the centroid side
-          // ABSENT and every query throws loudly at the missing table.
-          // Without the drop, a crash between the two writes would leave
-          // refined buckets probing the STALE centroid sample — and
-          // because requireQueryDim tolerates a missing __meta (pre-meta
-          // indices) and the query path never reads it otherwise, that
-          // index would be silently QUERYABLE and wrong, not unfinished.
-          Swap.drop(spark, s"${table}__centroids")
-          writeIndexRows(assignUnit(b, cents2, keep), buckets, table,
-            SaveMode.Overwrite)
-          cents2.write.mode(SaveMode.Overwrite).format("parquet")
-            .saveAsTable(s"${table}__centroids")
-          // the rewritten side table holds the refined (all non-null)
-          // set — its count rode along from the driver-side Lloyd output
-          nCents = nRefined
-        } finally
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(cents2)
-        val after = bucketBalanceRatio(spark, table)
-        System.err.println(s"writeIvfIndex: balance guard rewrote $table " +
-          s"(max bucket over the guard ratio from the id-mod-$step " +
-          s"sample; after reseed+kmeans: ${math.round(after * 10) / 10.0}x)")
-        if (after > balanceGuardRatio(spark))
-          System.err.println(s"writeIvfIndex: $table is still " +
-            s"${math.round(after * 10) / 10.0}x after the guard rewrite — " +
-            "the corpus itself is heavily clustered; raise nprobe for " +
-            "recall or lower step for more, smaller buckets")
-      }
-      // the completion record, LAST (see the force-rebuild crash contract
-      // in the scaladoc) — also past the guard's possible rewrite above
-      writeMeta(spark, table, buckets, dim, step, hashedIds, m = 0,
-        ncents = nCents)
-    }
-  }
+                    keep: Seq[String] = Nil): Unit =
+    buildIvf("writeIvfIndex", base, idCol, vecCol, step, table, buckets,
+      force, hashedIds, keep, pq = None)
 
   /** The memory-side completion of the persisted tier — IVF-PQ as tables
     * (FAISS `IVFx,PQy`, persisted): the index rows store m-byte PQ CODES
@@ -568,20 +622,15 @@ object AnnIndex {
     * assignment and single-normalize encode arithmetic as
     * [[Similarity.ivfPqKnn]], so the persisted path reproduces it row for
     * row (spec-asserted; the same oracle replay). Numeric ids only (the
-    * codebook sample is id-mod-`codeStep`); an empty centroid or codebook
-    * sample fails fast inside the assignment/codebook derivation.
-    */
-  /** `keep` as in [[writeIvfIndex]]: metadata columns persisted verbatim
-    * alongside the (id, bucket, codes) rows for [[ivfPqKnnIndexed]]'s
-    * `filter` — they ride the assignment/encode scan, no build join.
-    */
-  /** `encodeResidual` (FAISS's IVFPQ default, off here): codes encode
+    * codebook sample is id-mod-`codeStep`). `keep` as in
+    * [[writeIvfIndex]], for [[ivfPqKnnIndexed]]'s `filter`.
+    *
+    * `encodeResidual` (FAISS's IVFPQ default, off here): codes encode
     * `unit − centroid(bucket)` instead of the unit vector itself, and the
     * codebook is trained on the residual sample — the classic recall-
     * at-same-m trade. The cost is coupling: codes now DEPEND on the
     * bucket assignment, so the balance guard's recovery must re-derive
-    * the codebook and every code (the residual-free tier's bit-identity
-    * shortcut does not apply), and [[ivfPqKnnIndexed]] adds the bucket
+    * the codebook and every code, and [[ivfPqKnnIndexed]] adds the bucket
     * centroid back before the ADC dot (one broadcast join of the
     * index-sized centroid table into the probe frame). Graded against
     * the residual-free default by the `ann_recall_ivfpq_resid` driver
@@ -592,215 +641,12 @@ object AnnIndex {
                       codeStep: Int = 50, force: Boolean = false,
                       keep: Seq[String] = Nil,
                       encodeResidual: Boolean = false): Unit = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    requireKeepNames(keep)
-    require(step > 0, s"ivf step must be positive, got $step")
     Similarity.requireIntegralId(base, idCol, "writeIvfPqIndex",
       "hash ids to a long upstream (e.g. xxhash64(id)) — the PQ build " +
         "has no hashedIds arm")
-    val b = Similarity.unitProjectKeep(base, idCol, idCol, vecCol, "bv", keep)
-    val selection = b.where(col(idCol) % step === 0)
-      .select(col(idCol).cast("long").as("centroid_id"), col("bv").as("cv"))
-    // ONE capped collect of the centroid selection, exactly as in
-    // [[writeIvfIndex]]: it serves the assignment kernel, the
-    // `__centroids` write, the balance guard's count, `__meta`'s ncents
-    // AND — when `codeStep == step`, the driver queries' configuration —
-    // the PQ codebook sample (the id-mod-codeStep rows are the SAME
-    // set), replacing the former whole-corpus `.cache()` + separate
-    // codebook-sample collect with two plain scans and zero cache.
-    val centCap = math.max(1, Similarity.intConf(spark,
-      Similarity.MaxGatheredCentroidsConf,
-      Similarity.MaxGatheredCentroidsDefault))
-    val gathered = gatherSelection(selection, centCap)
-    require(gathered.nonEmpty,
-      s"writeIvfPqIndex: step=$step yields more than $centCap sampled " +
-        s"centroids on this corpus — raise step (or the " +
-        s"${Similarity.MaxGatheredCentroidsConf} dial)")
-    val (selRows, centsDistributed) = gathered.get
-    val centArr = selRows.filter(!_.isNullAt(1))
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    if (centArr.isEmpty && (selRows.nonEmpty || !b.isEmpty)) sys.error(
-      s"writeIvfPqIndex: step=$step selected ZERO centroids on this " +
-        "corpus — lower step")
-    val bucketType = base.schema(base.schema.fieldIndex(idCol)).dataType
-    val assigned = Similarity.assignWithCentroidArray(b, idCol, centArr, keep)
-      .select(col(idCol) +: col("bv") +:
-        col("bucket").cast(bucketType).as("bucket") +: keep.map(col): _*)
-    /** The frame whose `bv` is what the codes ENCODE: the unit vectors
-      * themselves, or (residual mode) unit − assigned centroid, the
-      * centroid arriving via one broadcast join of the sample frame.
-      */
-    def encodable(rows: DataFrame,
-                  cents: DataFrame): DataFrame =
-      if (!encodeResidual) rows
-      else rows.join(
-          broadcast(cents.select(col("centroid_id"), col("cv").as("__cv"))),
-          rows("bucket") === col("centroid_id"), "left")
-        .select(col("id") +: col("bucket") +:
-          zip_with(col("bv"), col("__cv"), (a, b) => a - b).as("bv") +:
-          keep.map(col): _*)
-    locally {
-      val sampleCents =
-        if (centsDistributed) selection
-        else spark.createDataFrame(java.util.Arrays.asList(selRows: _*),
-          selection.schema)
-      val encBase = encodable(
-        assigned.select(col(idCol).as("id") +: col("bucket") +:
-          col("bv") +: keep.map(col): _*), sampleCents)
-      val codebook =
-        if (!encodeResidual && codeStep == step && !centsDistributed)
-          Similarity.codebookFromRows(
-            selRows.map(r => (r.getLong(0),
-              if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)),
-            m, codeStep, 8192)
-        else Similarity.codebookFromUnit(
-          encBase.where(col("id") % codeStep === 0), "id", m, codeStep, 8192)
-      // same force-rebuild crash contract as [[writeIvfIndex]]: old side
-      // tables dropped just before the index overwrite (after the
-      // failure-prone codebook derivation, so a failed rebuild attempt
-      // leaves a working old index whole), new meta written last — a
-      // crash mid-rebuild leaves queries throwing at a missing
-      // __centroids/__codebook, never ADC-decoding new codes against the
-      // OLD codebook (silent garbage neighbors)
-      if (force) dropSideTables(spark, table)
-      writeIndexRows(
-        Similarity.pqEncodeOnUnit(graft.Par.fanOut(encBase), codebook)
-          // LONG bucket: prunedIndex probes with long literals, and an
-          // int-typed column would be wrapped in a Cast that silently
-          // defeats list pruning (int-id corpora assign int buckets)
-          .select(col("id") +:
-            col("bucket").cast("long").as("bucket") +:
-            col("codes") +: keep.map(col): _*),
-        buckets, table,
-        if (force) SaveMode.Overwrite else SaveMode.ErrorIfExists)
-      // local branch coalesced to ONE file (see writeIvfIndex's
-      // `__centroids` write); the distributed over-cap branch keeps its
-      // scan parallelism
-      (if (centsDistributed) sampleCents else sampleCents.coalesce(1))
-        .write.mode(SaveMode.Overwrite).format("parquet")
-        .saveAsTable(s"${table}__centroids")
-      var nCents: Long =
-        if (centsDistributed)
-          spark.table(s"${table}__centroids")
-            .where(col("cv").isNotNull).count()
-        else centArr.length.toLong
-      codebook.zipWithIndex.flatMap { case (ks, j) =>
-        ks.zipWithIndex.map { case (c, k) => (j, k, c.toSeq) }
-      }.toSeq.toDF("sub", "code", "centroid")
-        .coalesce(1) // m×K rows — one file, not defaultParallelism shards
-        .write.mode(SaveMode.Overwrite).format("parquet")
-        .saveAsTable(s"${table}__codebook")
-      // ---- balance guard: rerun a degenerate centroid selection ----
-      // Same failure mode and same recover-don't-warn posture as
-      // [[writeIvfIndex]]'s guard (see there for the measured 18× query
-      // cliff): a degenerate id-mod-step centroid sample funnels the
-      // corpus into a handful of buckets and probing reads corpus-sized
-      // code runs. Recovery cost depends on the encoding mode. DEFAULT
-      // (residual-free) codes encode the unit vector itself and the
-      // codebook samples those same unit vectors, so NEITHER depends on
-      // the bucket assignment: the rewrite changes only `bucket`, the
-      // re-encode reproduces bit-identical codes, and `__codebook` stays
-      // valid verbatim (not rewritten — one fewer crash window).
-      // RESIDUAL mode couples codes to the assignment (code = f(unit −
-      // centroid)), so recovery re-derives EVERYTHING: new residuals,
-      // a RETRAINED codebook, re-encoded codes — and `__codebook` joins
-      // `__centroids` in the drop-before-overwrite crash window (a crash
-      // leaves both side tables absent → loud, never new codes decoding
-      // against the stale residual codebook).
-      // DECISION phase (balance check, reseed gather, Lloyd rounds):
-      // read-only + best-effort, must never abort a complete build before
-      // writeMeta stamps it. REWRITE phase: exceptions PROPAGATE — a
-      // swallowed failure between the index overwrite and the centroids
-      // overwrite would let writeMeta stamp a mismatched index complete
-      // (unstamped, it fails loudly and a re-run converges).
-      val guardCents: Option[(DataFrame, Long)] = try {
-        val guard = balanceGuardRatio(spark)
-        if (guard > 0 && balanceRatioWith(spark, table, nCents) > guard) {
-          val reseed = assigned
-            .where(pmod(xxhash64(concat(col(idCol).cast("string"),
-              lit("#graft-balance-reseed"))), lit(step.toLong)) === 0)
-            .where(col("bv").isNotNull)
-            .select(col(idCol).cast("long").as("centroid_id"),
-              col("bv").as("cv"))
-          val seeds = Similarity.gatherCentroidFrameOpt(reseed)
-            .getOrElse(Array.empty[(Long, Array[Double])])
-          if (seeds.isEmpty) {
-            System.err.println("writeIvfPqIndex: balance guard found a " +
-              s"degenerate id-mod-$step sample but the reseed selected " +
-              "zero or over-gather-cap vectors — index kept; adjust step")
-            None
-          } else {
-            val refined = Similarity.lloydRefine(
-              assigned.select(col(idCol).as("id"), col("bv")), "id",
-              seeds, iters = 2)
-            Some((refined.toSeq
-              .map { case (cid, v) => (cid, v.toSeq) }
-              .toDF("centroid_id", "cv").localCheckpoint(true),
-              refined.length.toLong))
-          }
-        } else None
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"writeIvfPqIndex: balance guard aborted " +
-            s"($e) — index kept as built")
-          None
-      }
-      guardCents.foreach { case (cents2, nRefined) =>
-        try {
-          // __centroids dropped before the index overwrite, exactly as in
-          // [[writeIvfIndex]]'s guard: a crash anywhere inside the
-          // rewrite leaves the centroid side ABSENT (queries throw
-          // loudly) instead of a silently queryable index probing the
-          // stale sample against refined buckets. Residual mode also
-          // drops __codebook here — its contents are assignment-coupled
-          // and about to be retrained (see the guard comment above).
-          Swap.drop(spark, s"${table}__centroids")
-          if (encodeResidual) Swap.drop(spark, s"${table}__codebook")
-          val reassigned = Similarity.assignWithCentroidFrame(
-            assigned.select(col(idCol).as("id") +: col("bv") +:
-              keep.map(col): _*),
-            "id", cents2, "writeIvfPqIndex.guard", keep)
-          val encBase2 = encodable(reassigned
-            .select(col("id") +: col("bucket") +: col("bv") +:
-              keep.map(col): _*), cents2)
-          val codebook2 =
-            if (!encodeResidual) codebook
-            else Similarity.codebookFromUnit(
-              encBase2.where(col("id") % codeStep === 0), "id", m,
-              codeStep, 8192)
-          writeIndexRows(
-            Similarity.pqEncodeOnUnit(graft.Par.fanOut(encBase2), codebook2)
-              .select(col("id") +: col("bucket").cast("long").as("bucket") +:
-                col("codes") +: keep.map(col): _*),
-            buckets, table, SaveMode.Overwrite)
-          cents2.write.mode(SaveMode.Overwrite).format("parquet")
-            .saveAsTable(s"${table}__centroids")
-          if (encodeResidual)
-            codebook2.zipWithIndex.flatMap { case (ks, j) =>
-              ks.zipWithIndex.map { case (c, k) => (j, k, c.toSeq) }
-            }.toSeq.toDF("sub", "code", "centroid")
-              .write.mode(SaveMode.Overwrite).format("parquet")
-              .saveAsTable(s"${table}__codebook")
-          nCents = nRefined
-        } finally
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(cents2)
-        val after = bucketBalanceRatio(spark, table)
-        System.err.println(s"writeIvfPqIndex: balance guard rewrote $table " +
-          s"(max bucket over the guard ratio from the id-mod-$step " +
-          s"sample; after reseed+kmeans: ${math.round(after * 10) / 10.0}x)")
-        if (after > balanceGuardRatio(spark))
-          System.err.println(s"writeIvfPqIndex: $table is still " +
-            s"${math.round(after * 10) / 10.0}x after the guard rewrite — " +
-            "the corpus itself is heavily clustered; raise nprobe for " +
-            "recall or lower step for more, smaller buckets")
-      }
-      // the completion record, LAST — past the guard's possible rewrite,
-      // exactly like [[writeIvfIndex]]'s crash contract
-      writeMeta(spark, table, buckets,
-        dim = codebook.map(_.head.length).sum, step = step, hashed = false,
-        m = m, ncents = nCents, resid = encodeResidual)
-    }
+    buildIvf("writeIvfPqIndex", base, idCol, vecCol, step, table, buckets,
+      force, hashedIds = false, keep,
+      pq = Some(PqCodes(m, codeStep, encodeResidual)))
   }
 
   /** Re-register a saved ANN index whose catalog entries were lost (the
@@ -816,23 +662,6 @@ object AnnIndex {
 
   // ---- maintenance ----
 
-  /** Assign NEW vectors against the saved index's (frozen) centroids —
-    * the append half of continuous maintenance: assignment given fixed
-    * centroids depends only on the row itself, so arriving vectors only
-    * ever APPEND (id, bucket, bv) rows — or (id, bucket, codes) rows on
-    * a PQ-tier table (m > 0 in `__meta`), where arrivals are encoded
-    * against the frozen `__codebook` the same way. Run inside
-    * `foreachBatch` with a parquet append (exactly the
-    * [[InvertedIndex.postingsStream]] recipe) — a multi-trigger loop
-    * should hold a [[streamAssigner]] instead, which reads the frozen
-    * sides once for the stream instead of per batch — query the union
-    * `table ∪ appends`, and fold the appends back into the bucketed
-    * layout with [[compactIvfIndex]] periodically; [[upsertIvfIndex]]
-    * serves BOTH tiers through this one entry point. Frozen centroids
-    * (and the PQ codebook) drift as the distribution moves — refit
-    * (rebuild via [[writeIvfIndex]]/[[writeIvfPqIndex]]) on the cadence
-    * you'd re-train any IVF index.
-    */
   /** Reserved names a `keep` column may not use: the index schemas
     * themselves (plain and PQ), the query-side aliases the probe join
     * would make ambiguous (query_id/qv — an ambiguity that would surface
@@ -879,6 +708,23 @@ object AnnIndex {
     cb
   }
 
+  /** Assign NEW vectors against the saved index's (frozen) centroids —
+    * the append half of continuous maintenance: assignment given fixed
+    * centroids depends only on the row itself, so arriving vectors only
+    * ever APPEND (id, bucket, bv) rows — or (id, bucket, codes) rows on
+    * a PQ-tier table (m > 0 in `__meta`), where arrivals are encoded
+    * against the frozen `__codebook` the same way. Run inside
+    * `foreachBatch` with a parquet append (exactly the
+    * [[InvertedIndex.postingsStream]] recipe) — a multi-trigger loop
+    * should hold a [[streamAssigner]] instead, which reads the frozen
+    * sides once for the stream instead of per batch — query the union
+    * `table ∪ appends`, and fold the appends back into the bucketed
+    * layout with [[compactIvfIndex]] periodically; [[upsertIvfIndex]]
+    * serves BOTH tiers through this one entry point. Frozen centroids
+    * (and the PQ codebook) drift as the distribution moves — refit
+    * (rebuild via [[writeIvfIndex]]/[[writeIvfPqIndex]]) on the cadence
+    * you'd re-train any IVF index.
+    */
   def assignNew(spark: SparkSession, table: String, vectors: DataFrame,
                 idCol: String, vecCol: String): DataFrame =
     assignNewWithMeta(spark, table, vectors, idCol, vecCol,
@@ -890,7 +736,7 @@ object AnnIndex {
     * head() job before (three meta jobs per streamed micro-batch).
     */
   private def metaRowOf(spark: SparkSession,
-                        table: String): Option[org.apache.spark.sql.Row] =
+                        table: String): Option[Row] =
     if (spark.catalog.tableExists(s"${table}__meta"))
       Some(spark.table(s"${table}__meta").head())
     else None
@@ -898,19 +744,10 @@ object AnnIndex {
   private def assignNewWithMeta(spark: SparkSession, table: String,
                                 vectors: DataFrame, idCol: String,
                                 vecCol: String,
-                                meta: Option[org.apache.spark.sql.Row])
+                                meta: Option[Row])
       : DataFrame = {
-    meta.map(_.getAs[Int]("dim")).foreach { dim =>
-      // EVERY row checked (ingest batches are bounded by contract): a
-      // single mismatched or null vector would dot to null and silently
-      // land in an arbitrary bucket
-      val bad = vectors
-        .where(col(vecCol).isNull || size(col(vecCol)) =!= dim)
-        .limit(1).count()
-      require(bad == 0,
-        s"query frame contains a null or non-$dim-dimensional embedding " +
-          s"(table $table was built over $dim-dimensional vectors)")
-    }
+    meta.map(_.getAs[Int]("dim"))
+      .foreach(requireRowDims(vectors, vecCol, table, _))
     // keep columns come from the index's own schema, so appends ALWAYS
     // match the live table — keep-bearing indexes upsert/compact like
     // bare ones, and the incoming frame must simply carry the columns
@@ -986,28 +823,14 @@ object AnnIndex {
         val cvLocal =
           if (!resid) None
           else {
-            val schema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("centroid_id",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("__cv",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType), nullable = true)))
-            val rows = cents.map { case (cid, cv) =>
-              org.apache.spark.sql.Row(cid, cv.toSeq) }
-            Some(spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), schema))
+            val schema = StructType(Seq(
+              StructField("centroid_id", LongType, nullable = false),
+              StructField("__cv", ArrayType(DoubleType), nullable = true)))
+            Some(localFrame(spark,
+              cents.map { case (cid, cv) => Row(cid, cv.toSeq) }, schema))
           }
         (batch: DataFrame) => {
-          dim.foreach { d =>
-            // EVERY row checked, exactly as assignNew (batch-sized scan)
-            val bad = batch
-              .where(col(vecCol).isNull || size(col(vecCol)) =!= d)
-              .limit(1).count()
-            require(bad == 0,
-              s"query frame contains a null or non-$d-dimensional " +
-                s"embedding (table $table was built over $d-dimensional " +
-                "vectors)")
-          }
+          dim.foreach(requireRowDims(batch, vecCol, table, _))
           // same output order as [[assignUnit]] — (id, bucket, bv, keep…)
           val assigned = Similarity.assignWithCentroidArray(
               Similarity.unitProjectKeep(batch, idCol, "id", vecCol, "bv",
@@ -1194,7 +1017,7 @@ object AnnIndex {
       Swap.replaceParts(spark, table, touched.toSeq)(
         writeIndexRows(merged, metaBuckets, _, SaveMode.ErrorIfExists))
     } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(appendsP)
+      Bridge.releaseLocalCheckpoint(appendsP)
   }
 
   /** Partition-pruning predicate over the touched list ids (null = the
@@ -1220,9 +1043,8 @@ object AnnIndex {
   def upsertIvfIndex(spark: SparkSession, table: String, vectors: DataFrame,
                      idCol: String, vecCol: String): Unit = {
     // ONE meta read serves the bucket count and assignNew's dim/PQ/
-    // residual flags (formerly up to four one-row head() jobs per call).
-    // No meta = not a completed index — upserting into one is an error
-    // (the pre-r18 path threw the same way via its direct meta read)
+    // residual flags. No meta = not a completed index — upserting into
+    // one is an error
     val meta = metaRowOf(spark, table)
     require(meta.nonEmpty,
       s"upsertIvfIndex: ${table}__meta is missing — $table is not a " +
@@ -1238,9 +1060,8 @@ object AnnIndex {
       val live = perListTable(spark, table)
       // lists holding rows the batch REPLACES (id column + partition
       // value only — column-pruned, output bounded by the batch) UNIONED
-      // with the lists receiving new rows: ONE distinct-collect job where
-      // the former shape paid two (r19; the semi-join's broadcast build is
-      // shared within the single execution)
+      // with the lists receiving new rows: ONE distinct-collect job (the
+      // semi-join's broadcast build is shared within the single execution)
       val touched = live.join(broadcast(incoming), Seq("id"), "left_semi")
         .select(col(PartCol))
         .unionByName(appendsP.select(col(PartCol)))
@@ -1252,7 +1073,7 @@ object AnnIndex {
       Swap.replaceParts(spark, table, touched.toSeq)(
         writeIndexRows(merged, buckets, _, SaveMode.ErrorIfExists))
     } finally
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(appends)
+      Bridge.releaseLocalCheckpoint(appends)
   }
 
   /** Heal ANN-index crash state, in this JVM or after a restart: the
@@ -1274,6 +1095,95 @@ object AnnIndex {
 
   // ---- calibration ----
 
+  /** Exact top-k ground truth for a calibration sweep, off the index's
+    * STORED unit forms and, with `filter`, among the passing rows only:
+    * the queries broadcast into one corpus scan (the shape of
+    * [[widenStarved]]'s exhaustive arm), collected to a LocalRelation
+    * (|queries| × k) that every swept setting reuses. Returns the
+    * projected queries too.
+    */
+  private def exactTruth(spark: SparkSession, idx: DataFrame,
+                         queries: DataFrame, idCol: String, vecCol: String,
+                         k: Int, filter: Option[Column])
+      : (DataFrame, DataFrame) = {
+    val q = Similarity.unitProject(queries, idCol, "query_id", vecCol, "qv")
+      .where(col("qv").isNotNull)
+    val eligible = filter.foldLeft(idx.where(col("bv").isNotNull))(_ where _)
+    val exactDf = topK(
+      excludeSelf(broadcast(q).join(eligible), q, idx)
+        .select(col("query_id"), col("id"),
+          Similarity.dot(col("qv"), col("bv")).as("cos")), k)
+    (q, localFrame(spark, exactDf.collect(), exactDf.schema))
+  }
+
+  /** The probed candidates both sweeps' fast arms share. Probe sets are
+    * nested prefixes of the centroid ranking, so ONE ranked probe collect
+    * at `nMax` (validated against the gathered centroids' dimensionality)
+    * and ONE scan of the probed lists — pruned, filtered by `filter`,
+    * scored by the kernel dot and checkpointed as (query_id, prank, id,
+    * cos) — serve every swept setting: the rows at `prank < n` ARE
+    * [[knnPass]]'s candidates at `nprobe = n`. Returns the ranked rows
+    * (a null-probe row for a query with none), the non-null probe rows
+    * and the candidates, which the caller releases.
+    */
+  private def rankedCandidates(spark: SparkSession, table: String,
+                               queries: DataFrame, idCol: String,
+                               vecCol: String,
+                               cents: Array[(Long, Array[Double])],
+                               nMax: Int, filter: Option[Column])
+      : (Array[Row], Array[Row], DataFrame) = {
+    val szCol = "__graft_qdim"
+    val qp = Similarity.unitProjectKeep(
+      queries.withColumn(szCol, coalesce(size(col(vecCol)), lit(-1))),
+      idCol, "query_id", vecCol, "qv", Seq(szCol))
+    val ranked = Similarity.probeTopCentroidsRankedOuter(qp, cents, nMax,
+      Seq(szCol))
+    val raw = ranked.collect()
+    cents.headOption.map(_._2.length).foreach { dim =>
+      require(!raw.exists(_.getInt(4) != dim), badQueryDim(table, dim))
+    }
+    val probeRows = raw.filter(!_.isNullAt(3))
+    val probesLocal = localFrame(spark,
+      probeRows.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3))),
+      StructType(ranked.schema.fields.take(4)))
+    val idxp0 = prunedIndex(spark, table,
+      probeRows.map(_.getLong(3)).distinct)
+    val idxp = filter.map(idxp0.where).getOrElse(idxp0)
+    val cand = excludeSelf(broadcast(probesLocal).join(idxp, Seq("bucket")),
+        probesLocal, idxp)
+      .select(col("query_id"), col("prank"), col("id"),
+        Similarity.dot(col("qv"), col("bv")).as("cos"))
+      .localCheckpoint(eager = true)
+    (raw, probeRows, cand)
+  }
+
+  /** Top-k over the checkpointed candidates a probe of `n` lists sees. */
+  private def candTopK(cand: DataFrame, n: Int, k: Int): DataFrame =
+    topK(cand.where(col("prank") < n)
+      .select(col("query_id"), col("id"), col("cos")), k)
+
+  /** Mean recall@k of `got` against `exact`, rounded to 4 places (0.0
+    * when no query has a ground-truth row).
+    */
+  private def meanRecall(got: DataFrame, exact: DataFrame): Double = {
+    val r = Similarity.recallAtK(got, exact)
+      .agg(round(avg("recall"), 4)).head()
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+  }
+
+  /** A sweep's (setting, mean_recall, cost) rows with the cheapest
+    * (smallest) setting meeting `target` marked in `pick`.
+    */
+  private def withPick(spark: SparkSession, swept: Seq[(Long, Double, Long)],
+                       target: Double, dial: String,
+                       cost: String): DataFrame = {
+    val minMeeting = swept.collect { case (n, r, _) if r >= target => n }
+      .minOption
+    import spark.implicits._
+    swept.map { case (n, r, c) => (n, r, c, minMeeting.contains(n)) }
+      .toDF(dial, "mean_recall", cost, "pick")
+  }
+
   /** Recall-targeted probe calibration off a saved plain-IVF table — the
     * measuring stick behind every nprobe choice, as an operator instead
     * of ops-note guidance: sweep the `nprobes` dial on `queries`, score
@@ -1283,13 +1193,13 @@ object AnnIndex {
     * bucket sizes summed — the (nprobe/lists) read cost the dial
     * controls), and mark the cheapest setting meeting `targetRecall`.
     * One row per swept value: (nprobe, mean_recall, cand_rows, pick).
-    * The sweep is a driver loop over a bounded dial list; each step is
-    * one probed read (|queries| × k output) — the whole calibration
-    * costs ~|nprobes| probed query batches plus the one exact scan,
-    * which is why it runs on a SAMPLE of queries, not the workload.
-    * Plain tier only (PQ recall folds quantization loss into the same
-    * comparison — run [[Similarity.recallAtK]] against a PQ query path
-    * directly for that regime).
+    * The whole calibration costs one ranked probe collect, one candidate
+    * scan, one per-bucket size collect and one recall job per setting,
+    * plus the one exact scan — which is why it runs on a SAMPLE of
+    * queries, not the workload. Plain tier only (PQ recall folds
+    * quantization loss into the same comparison — run
+    * [[Similarity.recallAtK]] against a PQ query path directly for that
+    * regime).
     */
   def calibrateProbes(spark: SparkSession, table: String, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
@@ -1301,122 +1211,55 @@ object AnnIndex {
     require(idx.columns.contains("bv"),
       s"calibrateProbes: $table carries no unit vectors (a PQ codes " +
         "table?) — calibrate on the plain IVF tier")
-    // exact ground truth off the STORED unit forms: queries broadcast
-    // into one corpus scan (the same shape as widenStarved's exhaustive
-    // arm), collected to a LocalRelation (|queries| × k) and reused by
-    // every swept setting
-    val q = Similarity.unitProject(queries, idCol, "query_id", vecCol, "qv")
-      .where(col("qv").isNotNull)
-    val exactDf = topK(
-      excludeSelf(broadcast(q).join(idx.where(col("bv").isNotNull)), q, idx)
-        .select(col("query_id"), col("id"),
-          Similarity.dot(col("qv"), col("bv")).as("cos")), k)
-    val exactRows = exactDf.collect()
-    val exact = spark.createDataFrame(
-      java.util.Arrays.asList(exactRows: _*), exactDf.schema)
+    val (_, exact) = exactTruth(spark, idx, queries, idCol, vecCol, k, None)
     val sorted = nprobes.distinct.sorted
+    // per-bucket row counts — the cost model's table (bucket count ≤ the
+    // centroid count by construction)
+    val sizes = idx.where(col("bucket").isNotNull)
+      .groupBy("bucket").agg(count(lit(1)).as("__bn"))
     val swept = Similarity.gatherCentroidFrameOpt(
         spark.table(s"${table}__centroids")) match {
       case Some(cents) =>
-        // fast arm (r18): probe sets are nested prefixes of the centroid
-        // ranking, so ONE ranked probe collect at max(nprobes) and ONE
-        // candidate scan/checkpoint serve every swept setting — the
-        // former loop re-ran the full probe+prune+score pipeline (and a
-        // second probe pass for the cost sum) per setting. Per-setting
-        // work is now one topK+recall job over the checkpointed
-        // candidates; the cost sum is driver arithmetic over the probe
-        // rows and a collected per-bucket size map (index-sized by the
-        // gather-cap contract here). Results are identical: candidates
-        // at prank < n ARE knnPass(n)'s candidates, scored by the same
-        // kernel dot, ranked by the same topK.
-        val nMax = sorted.last
-        val metaDim = cents.headOption.map(_._2.length)
-        val szCol = "__graft_qdim"
-        val withSz = queries.withColumn(szCol,
-          coalesce(size(col(vecCol)), lit(-1)))
-        val qp = Similarity.unitProjectKeep(withSz, idCol, "query_id",
-          vecCol, "qv", Seq(szCol))
-        val ranked = Similarity.probeTopCentroidsRankedOuter(qp, cents,
-          nMax, Seq(szCol))
-        val raw = ranked.collect()
-        metaDim.foreach { dim =>
-          require(!raw.exists(_.getInt(4) != dim),
-            s"query frame contains a null or non-$dim-dimensional " +
-              s"embedding (table $table was built over $dim-dimensional " +
-              "vectors)")
-        }
-        val probeRows = raw.filter(!_.isNullAt(3))
-        val probesSchema = org.apache.spark.sql.types.StructType(
-          ranked.schema.fields.take(4))
-        val probesLocal = spark.createDataFrame(
-          java.util.Arrays.asList(probeRows.map(r =>
-            org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2),
-              r.get(3))): _*), probesSchema)
-        val idxp = prunedIndex(spark, table,
-          probeRows.map(_.getLong(3)).distinct)
-        val cand = excludeSelf(
-            broadcast(probesLocal).join(idxp, Seq("bucket")),
-            probesLocal, idxp)
-          .select(col("query_id"), col("prank"), col("id"),
-            Similarity.dot(col("qv"), col("bv")).as("cos"))
-          .localCheckpoint(eager = true)
-        // per-bucket row counts — the cost model's table, collected once
-        // (bucket count ≤ the gathered centroid count by construction)
-        val sizeMap = try {
-          idx.where(col("bucket").isNotNull)
-            .groupBy("bucket").agg(count(lit(1)).as("__bn"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        } catch { case e: Throwable =>
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(cand)
-          throw e
-        }
-        try sorted.map { n =>
-          val rec = Similarity.recallAtK(
-            topK(cand.where(col("prank") < n)
-              .select(col("query_id"), col("id"), col("cos")), k), exact)
-            .agg(round(avg("recall"), 4)).head()
-          val meanRecall = if (rec.isNullAt(0)) 0.0 else rec.getDouble(0)
-          val candRows = probeRows.iterator.filter(_.getInt(2) < n)
-            .map(r => sizeMap.getOrElse(r.getLong(3), 0L)).sum
-          (n.toLong, meanRecall, candRows)
-        } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(cand)
+        // the cost sum is driver arithmetic over the probe rows and the
+        // collected size map
+        val (_, probeRows, cand) = rankedCandidates(spark, table, queries,
+          idCol, vecCol, cents, sorted.last, None)
+        try {
+          val sizeMap = sizes.collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          sorted.map { n =>
+            (n.toLong, meanRecall(candTopK(cand, n, k), exact),
+              probeRows.iterator.filter(_.getInt(2) < n)
+                .map(r => sizeMap.getOrElse(r.getLong(3), 0L)).sum)
+          }
+        } finally Bridge.releaseLocalCheckpoint(cand)
       case None =>
         // over-gather-cap centroid table: the per-setting loop through
         // the public query path (join+window probe fallback inside)
-        val sizes = idx.where(col("bucket").isNotNull)
-          .groupBy("bucket").agg(count(lit(1)).as("__bn"))
-          .localCheckpoint(true)
+        val sizesP = sizes.localCheckpoint(true)
         try sorted.map { n =>
-          val rec = Similarity.recallAtK(
+          val rec = meanRecall(
             ivfKnnIndexed(spark, table, queries, idCol, vecCol, k, n), exact)
-            .agg(round(avg("recall"), 4)).head()
-          val meanRecall = if (rec.isNullAt(0)) 0.0 else rec.getDouble(0)
           val cand = probeBucketsOf(spark, table, queries, idCol, vecCol, n)
-            .join(broadcast(sizes), "bucket").agg(sum("__bn")).head()
-          (n.toLong, meanRecall,
-            if (cand.isNullAt(0)) 0L else cand.getLong(0))
-        } finally org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(sizes)
+            .join(broadcast(sizesP), "bucket").agg(sum("__bn")).head()
+          (n.toLong, rec, if (cand.isNullAt(0)) 0L else cand.getLong(0))
+        } finally Bridge.releaseLocalCheckpoint(sizesP)
     }
-    val minMeeting = swept.collect {
-      case (n, r, _) if r >= targetRecall => n
-    }.minOption
-    import spark.implicits._
-    swept.map { case (n, r, c) => (n, r, c, minMeeting.contains(n)) }
-      .toDF("nprobe", "mean_recall", "cand_rows", "pick")
+    withPick(spark, swept, targetRecall, "nprobe", "cand_rows")
   }
 
-  /** The widenTo companion to [[calibrateProbes]] — the other dial the
-    * r17 verdict asked to calibrate: for a FIXED `nprobe` under a
-    * selective `filter`, sweep the widen dial and report, per setting,
-    * the mean filtered recall@k against the exact filtered ranking over
-    * the index's own stored vectors and the number of queries still
-    * SHORT of k rows (the silent-starvation count the dial exists to
-    * drive to zero). `widenTos` entries ≤ nprobe mean "widen off";
-    * values ≥ the centroid count take the exhaustive arm (recall 1.0 by
-    * construction — the exhaustive filtered pass IS the ground truth).
-    * The cheapest (smallest) setting meeting `targetRecall` is marked.
-    * Output: (widen, mean_recall, n_short, pick). Plain tier only, like
-    * [[calibrateProbes]].
+  /** The widenTo companion to [[calibrateProbes]]: for a FIXED `nprobe`
+    * under a selective `filter`, sweep the widen dial and report, per
+    * setting, the mean filtered recall@k against the exact filtered
+    * ranking over the index's own stored vectors and the number of
+    * queries still SHORT of k rows (the silent-starvation count the dial
+    * exists to drive to zero). `widenTos` entries ≤ nprobe mean "widen
+    * off"; values ≥ the centroid count take the exhaustive arm (recall
+    * 1.0 by construction — the exhaustive filtered pass IS the ground
+    * truth). The cheapest (smallest) setting meeting `targetRecall` is
+    * marked. Output: (widen, mean_recall, n_short, pick). Rows per
+    * setting equal `ivfKnnIndexed(…, widenTo = w).collect()`. Plain tier
+    * only, like [[calibrateProbes]].
     */
   def calibrateWiden(spark: SparkSession, table: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
@@ -1428,144 +1271,45 @@ object AnnIndex {
     require(idx.columns.contains("bv"),
       s"calibrateWiden: $table carries no unit vectors (a PQ codes " +
         "table?) — calibrate on the plain IVF tier")
-    val q = Similarity.unitProject(queries, idCol, "query_id", vecCol, "qv")
-      .where(col("qv").isNotNull)
-    // exact FILTERED ground truth off the stored unit forms
-    val eligible = idx.where(col("bv").isNotNull).where(filter)
-    val exactDf = topK(
-      excludeSelf(broadcast(q).join(eligible), q, idx)
-        .select(col("query_id"), col("id"),
-          Similarity.dot(col("qv"), col("bv")).as("cos")), k)
-    val exactRows = exactDf.collect()
-    val exact = spark.createDataFrame(
-      java.util.Arrays.asList(exactRows: _*), exactDf.schema)
+    val (q, exact) = exactTruth(spark, idx, queries, idCol, vecCol, k,
+      Some(filter))
     val sortedW = widenTos.distinct.sorted
     val swept = Similarity.gatherCentroidFrameOpt(
         spark.table(s"${table}__centroids")) match {
       case Some(cents) =>
-        // fast arm (r18): the base nprobe pass is IDENTICAL across every
-        // swept widen value, and probed widen passes are prefix
-        // extensions of the same centroid ranking — so one ranked probe
-        // collect at the largest probed dial and one filtered candidate
-        // scan serve the base AND every probed widen arm; only the
-        // exhaustive arm (w ≥ centroid count) pays its own scan, exactly
-        // as in the query path. The former loop re-ran the whole
-        // ivfKnnIndexed pipeline (base pass included) per setting.
-        // Result rows per setting are identical to the former
-        // ivfKnnIndexed(…, widenTo = w).collect().
-        // the gathered array IS the non-null centroid set (gather-cap
-        // contract) — its length and dimensionality replace the former
-        // __meta reads
+        // the base nprobe pass is identical across every swept widen
+        // value and probed widen passes are prefix extensions of the same
+        // ranking, so the shared candidates serve the base AND every
+        // probed widen arm; only the exhaustive arm (w ≥ the centroid
+        // count — the gathered array IS the non-null centroid set) pays
+        // its own scan, exactly as in the query path
         val nCents = cents.length.toLong
-        val metaDim = cents.headOption.map(_._2.length)
         val probedWs = sortedW.filter(w => w > nprobe && w < nCents)
-        val pMax = (nprobe +: probedWs).max
-        val szCol = "__graft_qdim"
-        val withSz = queries.withColumn(szCol,
-          coalesce(size(col(vecCol)), lit(-1)))
-        val qp = Similarity.unitProjectKeep(withSz, idCol, "query_id",
-          vecCol, "qv", Seq(szCol))
-        val ranked = Similarity.probeTopCentroidsRankedOuter(qp, cents,
-          pMax, Seq(szCol))
-        val raw = ranked.collect()
-        metaDim.foreach { dim =>
-          require(!raw.exists(_.getInt(4) != dim),
-            s"query frame contains a null or non-$dim-dimensional " +
-              s"embedding (table $table was built over $dim-dimensional " +
-              "vectors)")
-        }
-        val probeRows = raw.filter(!_.isNullAt(3))
-        val probesSchema = org.apache.spark.sql.types.StructType(
-          ranked.schema.fields.take(4))
-        val probesLocal = spark.createDataFrame(
-          java.util.Arrays.asList(probeRows.map(r =>
-            org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2),
-              r.get(3))): _*), probesSchema)
-        val idxp = prunedIndex(spark, table,
-          probeRows.map(_.getLong(3)).distinct).where(filter)
-        val cand = excludeSelf(
-            broadcast(probesLocal).join(idxp, Seq("bucket")),
-            probesLocal, idxp)
-          .select(col("query_id"), col("prank"), col("id"),
-            Similarity.dot(col("qv"), col("bv")).as("cos"))
-          .localCheckpoint(eager = true)
+        val (raw, _, cand) = rankedCandidates(spark, table, queries, idCol,
+          vecCol, cents, (nprobe +: probedWs).max, Some(filter))
         try {
-          val baseDf = topK(cand.where(col("prank") < nprobe)
-            .select(col("query_id"), col("id"), col("cos")), k)
+          val baseDf = candTopK(cand, nprobe, k)
           val baseRows = baseDf.collect()
-          val outSchema = baseDf.schema
-          val asked = raw.map(_.get(0)).distinct.toSet
           val nAsked = raw.filter(!_.isNullAt(1)).map(_.get(0))
             .distinct.length.toLong
-          val satisfiedQ = baseRows.groupBy(_.get(0))
-            .collect { case (qid, rs) if rs.length >= k => qid }.toSet
-          val starved = asked.diff(satisfiedQ)
+          val starved = raw.map(_.get(0)).distinct.toSet
+            .diff(fullKIds(baseRows, k))
           val keptRows = baseRows.filterNot(r => starved(r.get(0)))
-          // the same StarvedIsinCap switch as widenStarved and the
-          // exhaustive arm below: past the cap a literal IN list bloats
-          // the driver-side expression tree — broadcast-semi-join the
-          // starved ids instead (result-identical)
-          def starvedOnly(df: DataFrame): DataFrame = {
-            val starvedSeq = starved.toSeq
-            if (starvedSeq.size <= StarvedIsinCap)
-              df.where(col("query_id").isInCollection(starvedSeq))
-            else {
-              val sf = org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("__starved_id",
-                  df.schema("query_id").dataType)))
-              val sdf = spark.createDataFrame(java.util.Arrays.asList(
-                starvedSeq.map(org.apache.spark.sql.Row(_)): _*), sf)
-              df.join(broadcast(sdf),
-                col("query_id") === col("__starved_id"), "left_semi")
-            }
-          }
-          def rowsFor(w: Int): Array[org.apache.spark.sql.Row] =
+          def rowsFor(w: Int): Array[Row] =
             if (w <= nprobe || starved.isEmpty) baseRows
-            else if (w < nCents) {
-              val widened = topK(starvedOnly(cand.where(col("prank") < w))
-                .select(col("query_id"), col("id"), col("cos")), k)
-                .collect()
-              keptRows ++ widened
-            } else {
-              // exhaustive arm — its own filtered scan, as in the
-              // query path's widenStarved
-              val starvedSeq = starved.toSeq
-              val starvedQ =
-                if (starvedSeq.size <= StarvedIsinCap)
-                  queries.where(col(idCol).isin(starvedSeq: _*))
-                else {
-                  val sf = org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("__starved_id",
-                      queries.schema(idCol).dataType)))
-                  val sdf = spark.createDataFrame(java.util.Arrays.asList(
-                    starvedSeq.map(org.apache.spark.sql.Row(_)): _*), sf)
-                  queries.join(broadcast(sdf),
-                    col(idCol) === col("__starved_id"), "left_semi")
-                }
-              val q2 = Similarity.unitProject(starvedQ, idCol, "query_id",
-                vecCol, "qv").where(col("qv").isNotNull)
-              val idx1 = spark.table(table).where(col("bucket").isNotNull)
-                .where(filter)
-              val widened = topK(
-                excludeSelf(broadcast(q2).join(idx1), q2, idx1)
-                  .select(col("query_id"), col("id"),
-                    Similarity.dot(col("qv"), col("bv")).as("cos")), k)
-                .collect()
-              keptRows ++ widened
-            }
+            else keptRows ++ (
+              if (w < nCents)
+                candTopK(starvedRows(cand, "query_id", starved.toSeq), w, k)
+              else exhaustivePass(spark, table,
+                starvedRows(queries, idCol, starved.toSeq), idCol, vecCol,
+                k, Some(filter), Similarity.dot(col("qv"), col("bv")))
+            ).collect()
           sortedW.map { w =>
             val rows = rowsFor(w)
-            val local = spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), outSchema)
-            val rec = Similarity.recallAtK(local, exact)
-              .agg(round(avg("recall"), 4)).head()
-            val meanRecall = if (rec.isNullAt(0)) 0.0 else rec.getDouble(0)
-            val satisfied = rows.groupBy(_.get(0))
-              .count { case (_, rs) => rs.length >= k }
-            (w.toLong, meanRecall, nAsked - satisfied)
+            (w.toLong, meanRecall(localFrame(spark, rows, baseDf.schema),
+              exact), nAsked - fullKIds(rows, k).size)
           }
-        } finally
-          org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(cand)
+        } finally Bridge.releaseLocalCheckpoint(cand)
       case None =>
         // over-gather-cap centroid table: the per-setting loop through
         // the public query path (join+window probe fallback inside)
@@ -1574,32 +1318,15 @@ object AnnIndex {
           val res = ivfKnnIndexed(spark, table, queries, idCol, vecCol, k,
             nprobe, filter = Some(filter), widenTo = w)
           val rows = res.collect() // |queries| × k bounded by contract
-          val local = spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), res.schema)
-          val rec = Similarity.recallAtK(local, exact)
-            .agg(round(avg("recall"), 4)).head()
-          val meanRecall = if (rec.isNullAt(0)) 0.0 else rec.getDouble(0)
-          val satisfied = rows.groupBy(_.get(0))
-            .count { case (_, rs) => rs.length >= k }
-          (w.toLong, meanRecall, nAsked - satisfied)
+          (w.toLong, meanRecall(localFrame(spark, rows, res.schema), exact),
+            nAsked - fullKIds(rows, k).size)
         }
     }
-    val minMeeting = swept.collect {
-      case (w, r, _) if r >= targetRecall => w
-    }.minOption
-    import spark.implicits._
-    swept.map { case (w, r, s) => (w, r, s, minMeeting.contains(w)) }
-      .toDF("widen", "mean_recall", "n_short", "pick")
+    withPick(spark, swept, targetRecall, "widen", "n_short")
   }
 
   // ---- query ----
 
-  /** kNN off the saved index: rank the query against the centroid side
-    * table (broadcast — index-sized), take its `nprobe` best buckets, and
-    * scan ONLY those buckets of the index table.
-    * Output matches [[Similarity.ivfKnn]] row for row on the same
-    * parameters (differential-tested): (query_id, neighbor_id, cos, rank).
-    */
   /** Self-match exclusion ONLY when the id types agree — comparing a
     * string query id against a numeric index id coerces to null, and a
     * null predicate would silently drop EVERY candidate for every query.
@@ -1613,15 +1340,13 @@ object AnnIndex {
     else joined
 
   /** One probe→prune→filter→score→top-k pass, shared by the plain and PQ
-    * query tiers (they differ only in `scoreOf`: dot against the stored
+    * query tiers (they differ only in `score`: dot against the stored
     * unit vector vs against the codebook-decoded codes) and by the
-    * starved-query widen re-pass below.
-    */
-  /** `withCv`: thread the probed bucket's centroid vector into the
-    * candidate rows as `__cv` (one broadcast join of the index-sized
-    * centroid table into the |queries|×nprobe probe frame) — the
-    * residual-PQ score needs it to add the centroid back before the ADC
-    * dot.
+    * starved-query widen re-pass below. `withCv`: thread the probed
+    * bucket's centroid vector into the candidate rows as `__cv` (one
+    * broadcast join of the index-sized centroid table into the
+    * |queries|×nprobe probe frame) — the residual-PQ score needs it to
+    * add the centroid back before the ADC dot.
     */
   private def knnPass(spark: SparkSession, table: String, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int, nprobe: Int,
@@ -1647,7 +1372,7 @@ object AnnIndex {
     val probesCv =
       if (!withCv) probes else withCentroidCv(spark, table, probes)
     // the literal bucket-prune list comes from the already-collected
-    // probe rows — the former distinct() job over the LocalRelation
+    // probe rows
     val probeBuckets = probeRows.map(_.getLong(2)).distinct
     val idx0 = prunedIndex(spark, table, probeBuckets)
     val idx = filter.map(idx0.where).getOrElse(idx0)
@@ -1672,6 +1397,60 @@ object AnnIndex {
         .select(col("centroid_id"), col("cv").as("__cv"))),
       df("bucket") === col("centroid_id"), joinType).drop("centroid_id")
 
+  /** Starved-id count above which [[starvedRows]] switches from isin
+    * literals to a LocalRelation join.
+    */
+  private[graft] val StarvedIsinCap = 1000
+
+  /** Rows of `df` whose `idCol` is among the `starved` query ids (with
+    * `in = false`: is not). The starved set is usually a handful of ids,
+    * where isin literals are the cheapest plan; but a large query batch
+    * under a selective filter can starve thousands, and an isin that
+    * size bloats the driver-side expression tree — so past
+    * [[StarvedIsinCap]] the same semantics run as a broadcast semi/anti
+    * join against a LocalRelation of the ids.
+    */
+  private def starvedRows(df: DataFrame, idCol: String, starved: Seq[Any],
+                          in: Boolean = true): DataFrame =
+    if (starved.size <= StarvedIsinCap) {
+      val hit = col(idCol).isin(starved: _*)
+      df.where(if (in) hit else !hit)
+    } else {
+      val ids = localFrame(df.sparkSession, starved.map(Row(_)).toArray,
+        StructType(Seq(StructField("__starved_id", df.schema(idCol).dataType))))
+      df.join(broadcast(ids), col(idCol) === col("__starved_id"),
+        if (in) "left_semi" else "left_anti")
+    }
+
+  /** The query ids among `rows` (query_id first) holding at least `k`
+    * rows.
+    */
+  private def fullKIds(rows: Array[Row], k: Int): Set[Any] =
+    rows.groupBy(_.get(0)).collect { case (q, rs) if rs.length >= k => q }
+      .toSet
+
+  /** Top-k of `queries` over EVERY list of the (filtered) index: when a
+    * widen covers every non-null-cv centroid's bucket, the probe would
+    * select the whole assigned table, so scan it directly with the
+    * queries broadcast. Null-bucket rows (zero/null vectors) are excluded
+    * exactly as the probe join excludes them; null-unit queries likewise
+    * return nothing. `withCv`: the residual score's centroid joins the
+    * CANDIDATE rows here (no probe frame exists on this path).
+    */
+  private def exhaustivePass(spark: SparkSession, table: String,
+                             queries: DataFrame, idCol: String,
+                             vecCol: String, k: Int, filter: Option[Column],
+                             score: Column,
+                             withCv: Boolean = false): DataFrame = {
+    val q = Similarity.unitProject(queries, idCol, "query_id", vecCol, "qv")
+      .where(col("qv").isNotNull)
+    val idx0 = spark.table(table).where(col("bucket").isNotNull)
+    val idx1 = filter.map(idx0.where).getOrElse(idx0)
+    val idx = if (!withCv) idx1 else withCentroidCv(spark, table, idx1)
+    topK(excludeSelf(broadcast(q).join(idx), q, idx)
+      .select(col("query_id"), col("id"), score.as("cos")), k)
+  }
+
   /** Starved-query recall widening for FILTERED kNN (`widenTo` dial): a
     * selective predicate can leave a query with fewer than `k` passing
     * candidates inside its `nprobe` probed buckets — a silent shortfall
@@ -1687,9 +1466,8 @@ object AnnIndex {
     * collected ONCE to a LocalRelation — detection and the returned rows
     * share it, so the base pruned scan never re-executes. When the
     * effective widenTo covers EVERY centroid ("pass a large value for
-    * exhaustive over the filtered corpus"), the widened pass skips probe
-    * selection entirely and scans the filtered index with the starved
-    * queries broadcast — same candidate set as probing all buckets, but
+    * exhaustive over the filtered corpus"), the widened pass is
+    * [[exhaustivePass]] — same candidate set as probing all buckets, but
     * no |starved| × centroids probe frame ever materializes on the
     * driver (probeBucketsOf's LocalRelation carries the full query
     * vector per probe row and is sized for nprobe, not for a 2^16-
@@ -1710,39 +1488,15 @@ object AnnIndex {
     // queries frame is small by contract (it broadcasts into the probe
     // join), so the starved-set arithmetic is a driver-side set diff —
     // the id set rode along with the base pass's probe collect when the
-    // kernel arm ran (askedIds), else one distinct-collect as before
+    // kernel arm ran (askedIds), else one distinct-collect
     val asked = askedIds.map(_.toSet).getOrElse(
       queries.select(col(idCol)).distinct().collect()
         .map(_.get(0)).toSet)
     val baseRows = base.collect()
-    val baseLocal = spark.createDataFrame(
-      java.util.Arrays.asList(baseRows: _*), base.schema)
-    val satisfied = baseRows.groupBy(_.get(0))
-      .collect { case (q, rs) if rs.length >= k => q }.toSet
-    val starved = asked.diff(satisfied)
+    val baseLocal = localFrame(spark, baseRows, base.schema)
+    val starved = asked.diff(fullKIds(baseRows, k)).toSeq
     if (starved.isEmpty) return baseLocal
-    // bounded-literal guard: the starved set is usually a handful of ids
-    // (isin = the cheapest plan), but a large query batch under a
-    // selective filter can starve thousands — an isin that size bloats
-    // the driver-side expression tree, so past the cap the same
-    // semantics run as semi/anti-joins against a LocalRelation of the
-    // starved ids (mirroring the gather-cap pattern elsewhere)
-    val starvedSeq = starved.toSeq
-    val (starvedQ, keptBase) =
-      if (starvedSeq.size <= StarvedIsinCap)
-        (queries.where(col(idCol).isin(starvedSeq: _*)),
-          baseLocal.where(!col("query_id").isin(starvedSeq: _*)))
-      else {
-        val sf = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__starved_id",
-            queries.schema(idCol).dataType)))
-        val sdf = spark.createDataFrame(java.util.Arrays.asList(
-          starvedSeq.map(org.apache.spark.sql.Row(_)): _*), sf)
-        (queries.join(broadcast(sdf),
-            col(idCol) === col("__starved_id"), "left_semi"),
-          baseLocal.join(broadcast(sdf),
-            col("query_id") === col("__starved_id"), "left_anti"))
-      }
+    val starvedQ = starvedRows(queries, idCol, starved)
     // centroid count: rode along with the kernel probe gather when that
     // arm ran, else the __meta completion record (one one-row read)
     val nCents = nCentsHint.getOrElse(centroidCountOf(spark, table))
@@ -1750,32 +1504,19 @@ object AnnIndex {
       if (widenTo < nCents)
         knnPass(spark, table, starvedQ, idCol, vecCol, k, widenTo, filter,
           score, withCv, metaDim)
-      else {
-        // exhaustive: every non-null-cv centroid's bucket would be
-        // probed, which is the whole assigned table — scan it directly.
-        // Null-bucket rows (zero/null vectors) are excluded exactly as
-        // the probe join excludes them; null-unit QUERIES likewise
-        // return nothing, as they would with zero probe rows.
-        val q = Similarity.unitProject(starvedQ, idCol, "query_id",
-          vecCol, "qv").where(col("qv").isNotNull)
-        val idx0 = spark.table(table).where(col("bucket").isNotNull)
-        val idx1 = filter.map(idx0.where).getOrElse(idx0)
-        // residual score: here the centroid joins the CANDIDATE rows
-        // (no probe frame exists on the exhaustive path)
-        val idx =
-          if (!withCv) idx1 else withCentroidCv(spark, table, idx1)
-        topK(excludeSelf(broadcast(q).join(idx), q, idx)
-          .select(col("query_id"), col("id"), score.as("cos")), k)
-      }
-    keptBase.unionByName(widened)
+      else exhaustivePass(spark, table, starvedQ, idCol, vecCol, k, filter,
+        score, withCv)
+    starvedRows(baseLocal, "query_id", starved, in = false)
+      .unionByName(widened)
   }
 
-  /** Starved-id count above which [[widenStarved]] switches from isin
-    * literals to LocalRelation joins (see there).
-    */
-  private[graft] val StarvedIsinCap = 1000
-
-  /** `filter`: metadata predicate over columns persisted via
+  /** kNN off the saved index: rank the query against the centroid side
+    * table (broadcast — index-sized), take its `nprobe` best buckets, and
+    * scan ONLY those buckets of the index table.
+    * Output matches [[Similarity.ivfKnn]] row for row on the same
+    * parameters (differential-tested): (query_id, neighbor_id, cos, rank).
+    *
+    * `filter`: metadata predicate over columns persisted via
     * [[writeIvfIndex]]'s `keep` (e.g. `col("label") < 5`) — top-k among
     * the index rows SATISFYING it (exact filtered-kNN semantics within
     * the probed buckets; queries with fewer passing candidates return
@@ -1810,12 +1551,11 @@ object AnnIndex {
     * side-table-loaded) codebook before the asymmetric-distance dot — the
     * scan per query batch is (probed buckets) × m bytes, both dials
     * independent. Output matches [[Similarity.ivfPqKnn]] on the same
-    * parameters.
-    */
-  /** `filter` / `widenTo` as in [[ivfKnnIndexed]]: a predicate over
-    * `keep` columns persisted at build, applied at the pruned scan
-    * (pushdown composes with bucket pruning) — exact filtered top-k among
-    * the probed codes; starved queries optionally re-probed at `widenTo`.
+    * parameters. `filter` / `widenTo` as in [[ivfKnnIndexed]]: a
+    * predicate over `keep` columns persisted at build, applied at the
+    * pruned scan (pushdown composes with bucket pruning) — exact
+    * filtered top-k among the probed codes; starved queries optionally
+    * re-probed at `widenTo`.
     */
   def ivfPqKnnIndexed(spark: SparkSession, table: String, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,

@@ -368,6 +368,53 @@ class AnnIndexSpec extends SparkTestBase {
       s"${table}__centroids", s"${table}__meta", s"${table}__codebook")
   }
 
+  test("a rejected force rebuild leaves the old index whole (both tiers)") {
+    // the rejection rule: an over-cap centroid sample throws before any
+    // drop or write, so the old index and every side table still answer
+    // queries with the same rows
+    val queries = emb.where(col("vec_id") % 100 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .toSet
+    def check(table: String, sides: Seq[String])(build: () => Unit)(
+        knn: () => org.apache.spark.sql.DataFrame): Unit = {
+      val all = table +: sides.map(table + _)
+      graft.search.Swap.drop(spark, all: _*)
+      try {
+        build()
+        val before = rows(knn())
+        assert(before.nonEmpty)
+        spark.conf.set(Similarity.MaxGatheredCentroidsConf, "1")
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains("step=50") &&
+          e.getMessage.contains("gather cap 1") &&
+          e.getMessage.contains(Similarity.MaxGatheredCentroidsConf),
+          e.getMessage)
+        spark.conf.unset(Similarity.MaxGatheredCentroidsConf)
+        all.foreach(t => assert(spark.catalog.tableExists(t), t))
+        assert(rows(knn()) === before)
+      } finally {
+        spark.conf.unset(Similarity.MaxGatheredCentroidsConf)
+        graft.search.Swap.drop(spark, all: _*)
+      }
+    }
+    check("annidx_reject", Seq("__centroids", "__meta")) { () =>
+      AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
+        table = "annidx_reject", buckets = 4, force = true)
+    } { () =>
+      AnnIndex.ivfKnnIndexed(spark, "annidx_reject", queries, "vec_id",
+        "embedding", k = 5, nprobe = 3)
+    }
+    check("annidx_pq_reject", Seq("__centroids", "__meta", "__codebook")) {
+      () =>
+        AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 50,
+          m = 8, table = "annidx_pq_reject", buckets = 4, force = true)
+    } { () =>
+      AnnIndex.ivfPqKnnIndexed(spark, "annidx_pq_reject", queries,
+        "vec_id", "embedding", k = 5, nprobe = 3)
+    }
+  }
+
   test("balance guard reruns a degenerate centroid sample; no-ops on the fixture") {
     // the measured 1000x failure mode: every id-mod-step row carries the
     // SAME vector, so the whole corpus ties into the lowest centroid id —

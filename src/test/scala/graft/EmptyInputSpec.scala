@@ -216,13 +216,17 @@ class EmptyInputSpec extends SparkTestBase {
       .count() === 0)
     val noRank = Seq.empty[(Long, Long)].toDF("doc_id", "rank")
     assert(Searcher.rrfFuse(Seq(noRank, noRank), topK = 5).count() === 0)
-    // an empty corpus selects zero centroids — the build FAILS FAST
-    // instead of persisting an empty index without a word
+    // an empty corpus selects zero centroids — both tiers' builds FAIL
+    // FAST instead of persisting an empty index without a word
     graft.search.Swap.drop(spark, "empty_ann_idx",
       "empty_ann_idx__centroids", "empty_ann_idx__meta")
     intercept[IllegalArgumentException] {
       AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 10,
         table = "empty_ann_idx", buckets = 2, force = true)
+    }
+    intercept[IllegalArgumentException] {
+      AnnIndex.writeIvfPqIndex(emb, "vec_id", "embedding", step = 10,
+        m = 2, table = "empty_ann_idx", buckets = 2, force = true)
     }
     // EMPTY QUERIES against a real index → empty result, no throw
     val two = Seq((0L, Array.fill(4)(1.0f)), (1L, Array.fill(4)(0.5f)))
