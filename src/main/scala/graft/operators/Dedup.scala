@@ -64,13 +64,13 @@ object Dedup {
 
   /** J3: decontaminate corpus `b` against corpus `a` — drop every b-doc
     * whose key appears anywhere in `a` (reference decontaminate.py:10-22).
-    * The blocklist side is distinct-projected before the anti join so AQE
-    * can broadcast it when small.
+    * The blocklist side is projected to its key and NOT distinct-ed: a
+    * left-anti join's result does not depend on duplicate right-side rows,
+    * and the distinct cost a shuffle job plus a broadcast job per call
+    * where the bare projection broadcasts in one when small.
     */
-  def decontaminate(b: DataFrame, bKey: Column, a: DataFrame, aKey: Column): DataFrame = {
-    val block = a.select(aKey.as("__block_h")).distinct()
-    b.join(block, bKey === col("__block_h"), "left_anti")
-  }
+  def decontaminate(b: DataFrame, bKey: Column, a: DataFrame, aKey: Column): DataFrame =
+    b.join(a.select(aKey.as("__block_h")), bKey === col("__block_h"), "left_anti")
 
   /** The shared inline-hash cap for the repeated-sentence twins: the
     * batch operator ([[removeRepeatedSentences]]) and the streaming twin
@@ -1111,10 +1111,14 @@ object Dedup {
     }
   }
 
-  /** Append the (distinct) keys of `docs` to the state table. */
+  /** Append the keys of `docs` to the state table, as they come: one
+    * write job, no distinct. Callers pass [[dedupIncremental]] survivors,
+    * which are unique by `key` already, and a duplicate state key would
+    * only repeat a row the anti join ignores (a replayed append repeats
+    * the batch's keys the same way).
+    */
   def appendHashState(docs: DataFrame, key: Column, statePath: String): Unit =
-    docs.select(key.as("h")).distinct()
-      .write.mode("append").parquet(statePath)
+    docs.select(key.as("h")).write.mode("append").parquet(statePath)
 
   /** One ingestion cycle: dedup the snapshot against state, MATERIALIZE the
     * survivors (eager localCheckpoint — the anti join must evaluate against

@@ -218,8 +218,8 @@ object NgramQueries extends QueryPack {
       // all the membership checks need). The blocklist side of BOTH
       // operators is the checkpointed hash frame, not a bench re-scan —
       // a Bloom filter over the distinct hashes is bit-identical
-      // (duplicate adds are idempotent), and decontaminate distincts its
-      // blocklist anyway
+      // (duplicate adds are idempotent), and decontaminate's anti join
+      // ignores duplicate blocklist rows
       val keptApprox = graft.operators.Dedup.decontaminateApprox(
         d, md5(col("text")), benchHashes, col("__bh"),
         expectedItems = 1000L, fpp = 0.001)

@@ -74,15 +74,20 @@ object AnnIndex {
     s"query frame contains a null or non-$dim-dimensional embedding " +
       s"(table $table was built over $dim-dimensional vectors)"
 
+  /** True for a row whose `vecCol` is null or not `dim`-dimensional. */
+  private def badDim(vecCol: String, dim: Int): Column =
+    col(vecCol).isNull || size(col(vecCol)) =!= dim
+
   /** EVERY row of `df` checked (query frames and ingest batches are small
     * by contract): a single mismatched or null vector would dot to null
     * and silently return arbitrary neighbors or land in an arbitrary
-    * bucket.
+    * bucket. `isEmpty` plans a CollectLimit root: a `limit(1).count()`
+    * plans a LimitExec whose generated counter is named after a global id,
+    * so every call compiled its classes again.
     */
   private def requireRowDims(df: DataFrame, vecCol: String, table: String,
                              dim: Int): Unit =
-    require(df.where(col(vecCol).isNull || size(col(vecCol)) =!= dim)
-      .limit(1).count() == 0, badQueryDim(table, dim))
+    require(df.where(badDim(vecCol, dim)).isEmpty, badQueryDim(table, dim))
 
   /** The persisted-layout writer shared by both tiers' builds, the
     * balance-guard rewrites, and the maintenance fold's staging write:
@@ -197,15 +202,17 @@ object AnnIndex {
   }
 
   /** The index table pruned to the probed buckets: the bucket ids reach
-    * the scan as a LITERAL `IN` (a join key can't prune file buckets);
-    * the list is bounded by |queries| × nprobe by construction.
+    * the scan as a [[Bridge.inSet]] (a join key can't prune file buckets,
+    * and a literal `IN` compiles per probe set); the list is bounded by
+    * |queries| × nprobe by construction.
     */
   private def prunedIndex(spark: SparkSession, table: String,
                           probeBuckets: Array[Long]): DataFrame =
-    // the same literal list prunes PARTITION directories: the probed
-    // lists are the only paths listed/read
-    perListTable(spark, table).where(col("bucket").isin(probeBuckets: _*))
-      .where(col(PartCol).isin(probeBuckets: _*))
+    // the same list prunes PARTITION directories: the probed lists are
+    // the only paths listed/read
+    perListTable(spark, table)
+      .where(Bridge.inSet(col("bucket"), probeBuckets, LongType))
+      .where(Bridge.inSet(col(PartCol), probeBuckets, LongType))
 
   /** Per-query top-k over (query_id, id, cos) candidates — self-match
     * excluded upstream; ties break neighbor-id-ascending, cos round(4)
@@ -741,18 +748,25 @@ object AnnIndex {
       Some(spark.table(s"${table}__meta").head())
     else None
 
+  /** [[assignNew]] under a `meta` row already read. With `dimFlag`, the
+    * caller has flagged each null or wrong-dimension vector in that
+    * boolean column (nulling the vector) and checks the flags itself, so
+    * no separate scan checks them here; the column is carried through to
+    * the output after the keep columns.
+    */
   private def assignNewWithMeta(spark: SparkSession, table: String,
                                 vectors: DataFrame, idCol: String,
                                 vecCol: String,
-                                meta: Option[Row])
+                                meta: Option[Row],
+                                dimFlag: Option[String] = None)
       : DataFrame = {
-    meta.map(_.getAs[Int]("dim"))
+    if (dimFlag.isEmpty) meta.map(_.getAs[Int]("dim"))
       .foreach(requireRowDims(vectors, vecCol, table, _))
     // keep columns come from the index's own schema, so appends ALWAYS
     // match the live table — keep-bearing indexes upsert/compact like
     // bare ones, and the incoming frame must simply carry the columns
     // (missing ones fail loudly at the projection, naming the column)
-    val keep = keepOf(spark, table)
+    val keep = keepOf(spark, table) ++ dimFlag
     val assigned = assignUnit(
       Similarity.unitProjectKeep(vectors, idCol, "id", vecCol, "bv", keep),
       spark.table(s"${table}__centroids"), keep)
@@ -1023,9 +1037,10 @@ object AnnIndex {
   /** Partition-pruning predicate over the touched list ids (null = the
     * default partition a null-bucket row lands in).
     */
-  private def touchedCond(touched: Array[Any]): Column = {
+  private def touchedCond(touched: Seq[Any]): Column = {
     val ids = touched.collect { case l: java.lang.Long => l.longValue() }
-    val base = if (ids.isEmpty) lit(false) else col(PartCol).isin(ids: _*)
+    val base =
+      if (ids.isEmpty) lit(false) else Bridge.inSet(col(PartCol), ids, LongType)
     if (touched.contains(null)) base || col(PartCol).isNull else base
   }
 
@@ -1037,8 +1052,11 @@ object AnnIndex {
     * the lists holding the arrivals' new rows or their ids' OLD rows (an
     * updated vector can change buckets, so the old rows' lists come from
     * an id-only column-pruned probe scan of the live table — a cheap
-    * read, never a rewrite). Incoming frame is ingest-batch-sized — it
-    * broadcasts into both the probe and the anti-join.
+    * read, never a rewrite). The incoming frame is ingest-batch-sized: its
+    * checkpointed `(id, bucket, dim flag)` rows are gathered once, which
+    * checks the dimensions and gives the new rows' lists, and the ids go
+    * back as a [[Bridge.inSet]] into both the probe and the anti-join,
+    * which costs no job.
     */
   def upsertIvfIndex(spark: SparkSession, table: String, vectors: DataFrame,
                      idCol: String, vecCol: String): Unit = {
@@ -1050,26 +1068,36 @@ object AnnIndex {
       s"upsertIvfIndex: ${table}__meta is missing — $table is not a " +
         "completed IVF index (build it with writeIvfIndex/writeIvfPqIndex)")
     val buckets = meta.get.getAs[Int]("buckets")
-    val appends = assignNewWithMeta(spark, table, vectors, idCol, vecCol,
-        meta)
+    val dim = meta.get.getAs[Int]("dim")
+    // the dimension check rides the checkpoint: a bad vector is flagged
+    // and nulled in the same projection, so it assigns no bucket and the
+    // embedding is computed once per row
+    val flag = "__graft_bad_dim"
+    val flagged = vectors.withColumn(flag, badDim(vecCol, dim))
+      .withColumn(vecCol, when(!col(flag), col(vecCol)))
+    val appends = assignNewWithMeta(spark, table, flagged, idCol, vecCol,
+        meta, Some(flag))
       .localCheckpoint(eager = true)
     try {
-      val incoming = appends.select(col("id")).distinct()
+      val arrivals = appends.select(col("id"), col("bucket"), col(flag))
+        .collect()
+      require(!arrivals.exists(_.getBoolean(2)), badQueryDim(table, dim))
       Swap.heal(spark, table)
-      val appendsP = appends.withColumn(PartCol, col("bucket"))
+      val incoming = Bridge.inSet(col("id"), arrivals.map(_.get(0)),
+        appends.schema("id").dataType)
       val live = perListTable(spark, table)
       // lists holding rows the batch REPLACES (id column + partition
-      // value only — column-pruned, output bounded by the batch) UNIONED
-      // with the lists receiving new rows: ONE distinct-collect job (the
-      // semi-join's broadcast build is shared within the single execution)
-      val touched = live.join(broadcast(incoming), Seq("id"), "left_semi")
-        .select(col(PartCol))
-        .unionByName(appendsP.select(col(PartCol)))
-        .distinct().collect()
-        .map(r => if (r.isNullAt(0)) null else r.getLong(0))
+      // value only — column-pruned, output bounded by the batch) plus the
+      // lists receiving new rows
+      val replaced = live.where(incoming).select(col(PartCol)).collect()
+      def list(r: Row, i: Int): Any =
+        if (r.isNullAt(i)) null else r.getAs[Number](i).longValue
+      val touched = (replaced.map(list(_, 0)) ++ arrivals.map(list(_, 1)))
+        .distinct
+      // a null id matches no arrival, as in an anti join
       val merged = live.where(touchedCond(touched))
-        .join(broadcast(incoming), Seq("id"), "left_anti")
-        .unionByName(appendsP)
+        .where(col("id").isNull || !incoming)
+        .unionByName(appends.drop(flag).withColumn(PartCol, col("bucket")))
       Swap.replaceParts(spark, table, touched.toSeq)(
         writeIndexRows(merged, buckets, _, SaveMode.ErrorIfExists))
     } finally

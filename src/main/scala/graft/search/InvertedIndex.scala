@@ -1,7 +1,9 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** A positions-aware inverted index as a Spark-native TABLE — the
   * reference's other answer to phrase search: where `wimbd/es/__init__.py`
@@ -210,8 +212,10 @@ object InvertedIndex {
     val one = graft.operators.Dedup.keepFirst(docs, col(idCol),
       Seq(md5(col(contentCol)).desc, lit(1)))
     // ingest-batch-sized by contract — broadcast so the anti join never
-    // shuffles the corpus-scale live postings on doc_id
-    val incoming = broadcast(one.select(col(idCol).as("doc_id")).distinct())
+    // shuffles the corpus-scale live postings on doc_id. Taken from `docs`,
+    // not `one`: the anti join ignores repeated ids, so the broadcast side
+    // needs neither keepFirst's window nor a distinct
+    val incoming = broadcast(docs.select(col(idCol).as("doc_id")))
     val fresh = postings(one, idCol, contentCol, uax29)
     replaceIndex(spark, table, buckets)(
       live => live.join(incoming, Seq("doc_id"), "left_anti")
@@ -230,16 +234,14 @@ object InvertedIndex {
   /** Put `docs` into `table`: [[upsertIndex]] into the `live` index (what
     * the caller's [[heal]] found), else a new index written through
     * [[writeIndex]] (over an existing one only with `force`) with its
-    * norms persisted.
+    * norms, observed in the write, persisted.
     */
   def updateIndex(spark: SparkSession, table: String, docs: DataFrame,
                   idCol: String, contentCol: String, buckets: Int,
                   uax29: Boolean, live: Boolean, force: Boolean = true): Unit =
     if (live) upsertIndex(spark, table, docs, idCol, contentCol, buckets, uax29)
-    else {
-      writeIndex(postings(docs, idCol, contentCol, uax29), table, buckets, force)
-      persistNorms(spark, table)
-    }
+    else saveNorms(spark, table, writeIndexNormed(
+      postings(docs, idCol, contentCol, uax29), table, buckets, force))
 
   /** Shared rewrite-and-swap core of [[compactIndex]] / [[refreshIndex]]:
     * heal any half-finished prior swap, write `build(live)` through
@@ -253,15 +255,19 @@ object InvertedIndex {
     // library writeIndex caller) stays bare — normsOf recovers on demand
     // either way, so absence is always safe and staleness is impossible.
     // The row is dropped BEFORE the swap (a crash in the window leaves it
-    // absent-and-recoverable, never stale) and rewritten after.
+    // absent-and-recoverable, never stale) and rewritten after, from the
+    // values observed in the staging write.
     val hadNorms = spark.catalog.tableExists(s"${table}__norms") || {
       val (p, fs) = normsSidePath(spark, table)
       fs.exists(p)
     }
     if (hadNorms) Swap.drop(spark, s"${table}__norms")
+    var norms: Option[DataFrame] = None
     Swap.replaceTable(spark, table)((live, staging) =>
-      writeIndex(build(live), staging, buckets))
-    if (hadNorms) persistNorms(spark, table)
+      if (hadNorms)
+        norms = Some(writeIndexNormed(build(live), staging, buckets, force = false))
+      else writeIndex(build(live), staging, buckets))
+    norms.foreach(saveNorms(spark, table, _))
   }
 
   /** Per-term document frequency and total term frequency — the ES
@@ -583,29 +589,65 @@ object InvertedIndex {
 
   /** [[corpusNorms]] recovered from an existing postings table (one
     * index-wide aggregate) — for indices built before norms were persisted
-    * alongside them. Identical row — n_docs = distinct docs, avgdl = mean
-    * dl, total_tf = Σtf — EXCEPT on corpora containing zero-token
-    * documents: such docs emit no postings rows and are invisible here,
-    * so n_docs undercounts and avgdl overcounts relative to the
-    * build-time scan, shifting BM25's idf/length normalization slightly.
-    * Prefer the persisted norms row whenever the index has one.
+    * alongside them. Identical row — n_docs = documents, avgdl = mean dl,
+    * total_tf = Σtf — EXCEPT on corpora containing zero-token documents:
+    * such docs emit no postings rows and are invisible here, so n_docs
+    * undercounts and avgdl overcounts relative to the build-time scan,
+    * shifting BM25's idf/length normalization slightly. Prefer the
+    * persisted norms row whenever the index has one.
     */
   def corpusNormsFromPostings(postings: DataFrame): DataFrame =
-    postings.groupBy("doc_id").agg(first("dl").as("dl"), sum("tf").as("tf"))
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl").cast("double")).as("avgdl"),
-        coalesce(sum("tf"), lit(0L)).as("total_tf"))
+    normsRow(postings.agg(normsAggs.head, normsAggs.tail: _*))
 
-  /** Persist the norms row alongside a saved index as `<table>__norms` —
-    * the build-time constant BM25/MLT/significant-terms/PMI all need, so
-    * NO query pays an index-wide aggregate for it (the 100× Zipf
-    * rehearsal attributed ~9 s of every MLT query to exactly that pass
-    * over 27.6M postings). Canonically `corpusNormsFromPostings` of the
-    * LIVE table — one definition, so persisted and recovered norms can
-    * never disagree — and rewritten by every index-mutating path
-    * ([[replaceIndex]] drops it BEFORE the swap and rewrites after: a
-    * crash in the window leaves norms ABSENT, which [[normsOf]] recovers,
-    * never silently stale).
+  /** The norms aggregates over postings rows, in position-0 marker form:
+    * a document with at least one token has exactly one posting whose
+    * first position is 0, so counting those rows and summing their `dl`
+    * gives n_docs and Σdl with no per-document grouping (doc ids are
+    * unique within an index: every writer keeps one row per id), and
+    * total_tf sums every row's tf. The values are exact integers, so
+    * [[normsRow]]'s avgdl equals `avg(dl)` bit for bit. The recomputed
+    * ([[corpusNormsFromPostings]]) and the observed ([[writeIndexNormed]])
+    * norms share this one list.
     */
+  private def normsAggs: Seq[Column] = {
+    val marker = get(col("positions"), lit(0)) === 0
+    Seq(count(when(marker, lit(1))).as("n_docs"),
+      sum(when(marker, col("dl").cast("long"))).as("sum_dl"),
+      sum(col("tf").cast("long")).as("sum_tf"))
+  }
+
+  private val normsAggSchema = StructType(Seq("n_docs", "sum_dl", "sum_tf")
+    .map(StructField(_, LongType)))
+
+  /** The one-row norms frame (n_docs, avgdl, total_tf) of [[normsAggs]]'
+    * values. */
+  private def normsRow(aggs: DataFrame): DataFrame =
+    aggs.select(col("n_docs"),
+      when(col("n_docs") > 0,
+        col("sum_dl").cast("double") / col("n_docs").cast("double")).as("avgdl"),
+      coalesce(col("sum_tf"), lit(0L)).as("total_tf"))
+
+  /** [[writeIndex]] that returns the norms row of the postings it wrote,
+    * computed by [[normsAggs]] observed inside the write job: no pass over
+    * the written table. The observed values arrive with the write's
+    * completion event; the listener bus is drained so they are in, and if
+    * the write planned no observation (never seen) the row is recomputed
+    * from the table.
+    */
+  private def writeIndexNormed(postings: DataFrame, table: String,
+                               buckets: Int, force: Boolean): DataFrame = {
+    val spark = postings.sparkSession
+    val obs = Observation()
+    writeIndex(postings.observe(obs, normsAggs.head, normsAggs.tail: _*),
+      table, buckets, force)
+    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    obs.future.value.flatMap(_.toOption) match {
+      case Some(r) => normsRow(spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(r.toSeq)), normsAggSchema))
+      case None => corpusNormsFromPostings(spark.table(table))
+    }
+  }
+
   /** Warehouse path + filesystem of the `<table>__norms` side table —
     * the ONE place the catalog-forgot-but-dir-survives contract resolves
     * a norms location (persist/drop/read and the rewrite-if-present
@@ -618,7 +660,25 @@ object InvertedIndex {
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
-  def persistNorms(spark: SparkSession, table: String): Unit = {
+  /** Persist the norms row alongside a saved index as `<table>__norms` —
+    * the build-time constant BM25/MLT/significant-terms/PMI all need, so
+    * NO query pays an index-wide aggregate for it (the 100× Zipf
+    * rehearsal attributed ~9 s of every MLT query to exactly that pass
+    * over 27.6M postings). Here it is [[corpusNormsFromPostings]] of the
+    * LIVE table, one index-wide aggregate: for callers that wrote the
+    * index themselves through [[writeIndex]]. The index-mutating paths
+    * ([[updateIndex]], [[replaceIndex]]) observe the same aggregates
+    * inside their write instead and pay only the one-row write;
+    * [[replaceIndex]] drops the row BEFORE the swap and rewrites it after,
+    * so a crash in the window leaves norms ABSENT, which [[normsOf]]
+    * recovers, never silently stale.
+    */
+  def persistNorms(spark: SparkSession, table: String): Unit =
+    saveNorms(spark, table, corpusNormsFromPostings(spark.table(table)))
+
+  /** Write the one-row `norms` frame as `<table>__norms`. */
+  private def saveNorms(spark: SparkSession, table: String,
+                        norms: DataFrame): Unit = {
     val nt = s"${table}__norms"
     // the in-memory catalog may have forgotten the side table while its
     // warehouse dir survives — an Overwrite saveAsTable then fails on the
@@ -627,8 +687,7 @@ object InvertedIndex {
       val (p, fs) = normsSidePath(spark, table)
       if (fs.exists(p)) fs.delete(p, true)
     }
-    corpusNormsFromPostings(spark.table(table))
-      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(nt)
+    norms.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(nt)
   }
 
   /** The norms row for a SAVED index: the persisted `<table>__norms` when

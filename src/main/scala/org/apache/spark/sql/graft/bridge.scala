@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is private[sql], so this
@@ -12,6 +14,20 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c IN values` (nulls dropped; `c` cast to the values' type `dt`) as
+    * an `InSet`, which generated code reads by reference. A literal `IN`
+    * (`isin` below the optimizer's InSet threshold, 10 values) inlines
+    * each long literal and one comparison per value, so every new value
+    * list or list length compiles new classes. Partition and bucket
+    * pruning read an InSet like an `IN`, and it costs no job, where a
+    * broadcast of the same values as a LocalRelation runs one.
+    */
+  def inSet(c: Column, values: Iterable[Any], dt: DataType): Column = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    column(InSet(expression(c.cast(dt)),
+      values.filter(_ != null).map(toCatalyst).toSet))
+  }
 
   /** Release the storage blocks behind an eagerly `localCheckpoint`-ed
     * Dataset. `Dataset.unpersist()` is a no-op there — the checkpoint RDD's

@@ -891,9 +891,61 @@ class AnnIndexSpec extends SparkTestBase {
       // replaying the same batch converges (idempotent contract intact)
       AnnIndex.upsertIvfIndex(spark, table, moved, "vec_id", "embedding")
       assert(spark.table(table).count() === 20L)
+      // a batch with a null or short vector is refused whole, before the
+      // live table is touched
+      val bad = Seq((1L, Option(unitAt(0))), (30L, Option(unitAt(0).take(3))),
+        (31L, None)).toDF("vec_id", "embedding")
+      Seq(bad, bad.where(col("vec_id") =!= 30L)).foreach { b =>
+        val e = intercept[IllegalArgumentException] {
+          AnnIndex.upsertIvfIndex(spark, table, b, "vec_id", "embedding")
+        }
+        assert(e.getMessage.contains("null or non-8-dimensional"), e.getMessage)
+      }
+      assert(spark.table(table).count() === 20L)
+      assert(spark.table(table).where(col("id") === 1L).head()
+        .getSeq[Double](spark.table(table).columns.indexOf("bv"))
+        .indexOf(1.0) === 1)
     } finally graft.search.Swap.drop(spark, table,
       s"${table}__centroids", s"${table}__meta",
       s"${table}__compacting", s"${table}__old")
+  }
+
+  test("a new probe set compiles no classes and reads only its lists") {
+    import spark.implicits._
+    val table = "annidx_probe_codegen"
+    graft.search.Swap.drop(spark, table, s"${table}__centroids",
+      s"${table}__meta")
+    AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
+      table = table, buckets = 4, force = true)
+    try {
+      // query vectors arrive as local rows, like the CLI's --query-text:
+      // a filter literal over the corpus would compile on its own
+      val cands = emb.where(col("vec_id") % 50 === 7).orderBy("vec_id")
+        .limit(20).collect().map(r => r.getAs[Long]("vec_id") ->
+          r.getSeq[Any](r.fieldIndex("embedding")).map(_.toString.toDouble))
+      def query(v: Seq[Double]) = Seq(("q", v)).toDF("id", "embedding")
+      def probes(v: Seq[Double]): Set[Long] = AnnIndex.probeBucketsOf(
+          spark, table, query(v), "id", "embedding", 3)
+        .select("bucket").collect().map(_.getLong(0)).toSet
+      val withProbes = cands.map { case (_, v) => v -> probes(v) }
+      val (v1, v2) = withProbes.combinations(2).collectFirst {
+        case Array((a, pa), (b, pb)) if (pa & pb).isEmpty => (a, b)
+      }.getOrElse(fail("no two fixture queries with disjoint probe sets"))
+      def knn(v: Seq[Double]) = AnnIndex.ivfKnnIndexed(spark, table,
+        query(v), "id", "embedding", k = 5, nprobe = 3)
+      knn(v1).collect() // compiles this read's classes once
+      val probe = graft.tools.ProbeListener.attach(spark)
+      val (rows, _, cost) = try probe.measure(knn(v2).collect())
+        finally probe.detach()
+      assert(rows.length === 5)
+      assert(cost.compiles === 0L, cost)
+      // each read lists only its own 3 lists' files, one file per list
+      assert(knn(v1).inputFiles.length === 3)
+      assert(knn(v2).inputFiles.length === 3)
+      assert(knn(v1).inputFiles.toSet.intersect(knn(v2).inputFiles.toSet)
+        .isEmpty)
+    } finally graft.search.Swap.drop(spark, table,
+      s"${table}__centroids", s"${table}__meta")
   }
 
   test("registerIvfIndex re-registers a stranded per-list index (partitioned DDL)") {

@@ -331,4 +331,45 @@ class CliIngestSpec extends SparkTestBase {
       "--quality", "none"))
     assert(corpusTexts(state) === before)
   }
+
+  test("a steady ingest + ann --follow batch stays inside its job budget") {
+    val (drop, state) = freshDirs()
+    val annState = s"${new java.io.File(state).getParent}/annstate"
+    val (t, at) = ("cli_budget_idx", "cli_budget_ann")
+    val bench = Files.createTempDirectory("cli_budget_bench").toString
+    writeShard(bench, "bench.jsonl", Seq(varied("bz")))
+    dropTable(t)
+    search.Swap.drop(spark, at, s"${at}__centroids", s"${at}__meta")
+    def batch(k: Int): Unit = {
+      // a fresh doc, a repeat of an earlier batch's doc and a bench doc,
+      // with corpus ids, in two shards like the benchmark's batches (one
+      // shard would add a fan-out shuffle to each scan)
+      writeShard(s"$drop/d$k", "s1.jsonl",
+        Seq(varied(s"n${k}x"), varied("n1x")), ids = Seq(s"a$k", s"b$k"))
+      writeShard(s"$drop/d$k", "s2.jsonl", Seq(varied("bz")), ids = Seq(s"c$k"))
+      Cli.run(spark, Array("ingest", s"$drop/*", "--follow", state,
+        "--bench", s"$bench/bench.jsonl", "--table", t, "--buckets", "4"))
+    }
+    def ann(): Unit = Cli.run(spark, Array("ann", s"$drop/*", "--table", at,
+      "--follow", annState, "--buckets", "4", "--step", "1"))
+    try {
+      (1 to 2).foreach { k => batch(k); ann() }
+      val probe = graft.tools.ProbeListener.attach(spark,
+        traceJobs = sys.env.contains("GRAFT_PROBE_JOBS"))
+      val (ingest, annC) = try (probe.measure(batch(3))._3,
+          probe.measure(ann())._3)
+        finally probe.detach()
+      // parent of this budget: 19 ingest jobs, 14 ann --follow jobs and 4
+      // compiles per steady batch
+      assert(ingest.jobs <= 13, ingest)
+      assert(annC.jobs <= 8, annC)
+      assert(annC.compiles === 0, annC)
+      assert(hits(t, "n3x1 n3x2") === 1L)
+      assert(hits(t, "bz1 bz2") === 0L)
+      assert(spark.table(at).count() === 9L)
+    } finally {
+      dropTable(t)
+      search.Swap.drop(spark, at, s"${at}__centroids", s"${at}__meta")
+    }
+  }
 }

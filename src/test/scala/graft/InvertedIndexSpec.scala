@@ -602,6 +602,64 @@ class InvertedIndexSpec extends SparkTestBase {
     assert(fromPost.getLong(2) === fromDocs.getLong(2))
   }
 
+  test("norms in position-0 marker form == the groupBy(doc_id) reference, observed and recomputed") {
+    // the former definition, kept here as the reference: one row per
+    // document, then the corpus aggregate
+    def reference(post: org.apache.spark.sql.DataFrame) =
+      post.groupBy("doc_id").agg(first("dl").as("dl"), sum("tf").as("tf"))
+        .agg(count(lit(1)).as("n_docs"),
+          avg(col("dl").cast("double")).as("avgdl"),
+          coalesce(sum("tf"), lit(0L)).as("total_tf")).head()
+    // a doc whose first term repeats, a one-token doc, a doc with no
+    // token under the unicode tokenizer (one empty token under the
+    // whitespace one), and odd lengths so avgdl is not a round number
+    val v1 = Seq((1L, "alpha beta alpha gamma alpha"), (2L, "one"),
+      (3L, ""), (4L, "x y z x y z q")).toDF("doc_id", "text")
+    val v2 = Seq((1L, "alpha alpha"), (5L, "new doc here")).toDF("doc_id", "text")
+    for (uax <- Seq(false, true)) {
+      val table = s"ii_spec_marker_norms_$uax"
+      def drop(): Unit = Seq(table, s"${table}__norms", s"${table}__compacting",
+        s"${table}__old").foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      def check(what: String): Unit = {
+        val live = InvertedIndex.readIndex(spark, table)
+        val ref = reference(live)
+        assert(InvertedIndex.corpusNormsFromPostings(live).head() === ref,
+          s"recomputed, $what, uax29=$uax")
+        assert(spark.table(s"${table}__norms").head() === ref,
+          s"persisted, $what, uax29=$uax")
+      }
+      drop()
+      try {
+        val post = InvertedIndex.postings(v1, "doc_id", "text", uax)
+        assert(InvertedIndex.corpusNormsFromPostings(post).head() ===
+          reference(post))
+        InvertedIndex.updateIndex(spark, table, v1, "doc_id", "text",
+          buckets = 4, uax29 = uax, live = false)
+        check("build")
+        InvertedIndex.upsertIndex(spark, table, v2, "doc_id", "text",
+          buckets = 4, uax29 = uax)
+        check("upsert")
+        InvertedIndex.compactIndex(spark, table, InvertedIndex.postings(
+          Seq((6L, "six six six")).toDF("doc_id", "text"), "doc_id", "text",
+          uax), buckets = 4)
+        check("compact")
+        InvertedIndex.refreshIndex(spark, table, v1, v1.where(col("doc_id") > 2),
+          "doc_id", "text", buckets = 4, uax29 = uax)
+        check("refresh")
+        // an emptied index observes n_docs 0 and a null avgdl
+        InvertedIndex.refreshIndex(spark, table, v1, v1.limit(0),
+          "doc_id", "text", buckets = 4, uax29 = uax)
+        InvertedIndex.refreshIndex(spark, table, v2, v2.limit(0),
+          "doc_id", "text", buckets = 4, uax29 = uax)
+        InvertedIndex.refreshIndex(spark, table,
+          Seq((6L, "six six six")).toDF("doc_id", "text"), v1.limit(0),
+          "doc_id", "text", buckets = 4, uax29 = uax)
+        check("emptied")
+        assert(spark.table(s"${table}__norms").head().getLong(0) === 0L)
+      } finally drop()
+    }
+  }
+
   test("persisted norms: build-time row == recovery, rewritten by refresh, absent → fallback") {
     val table = "ii_spec_norms"
     Seq(table, s"${table}__norms", s"${table}__compacting", s"${table}__old")

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Compare the per-query job and task counts of two Bench records.
+"""Compare the per-query job, task and compile counts of two Bench records.
 
     python3 tools/cost_diff.py A B
 
@@ -11,11 +11,16 @@ prints each difference and each query present on one side only, and exits
 1 if there is any (0 when the counts agree on every query; 2 on an
 unreadable input). Jobs and tasks repeat exactly across runs at a fixed SF
 and slot count, so a difference is a change of plan, not noise.
+
+Each query's `compiles` difference is printed too, marked "(info)": it
+shows which plans stopped (or started) paying codegen while timed, but it
+depends on what ran before in the JVM, so it never changes the exit code.
 """
 import json
 import sys
 
 FIELDS = ("jobs", "tasks")
+INFO_FIELDS = ("compiles",)
 
 
 def load(path):
@@ -41,19 +46,21 @@ def load(path):
 
 
 def diff(a, b):
-    """Lines describing every difference between two costs objects."""
-    out = []
+    """Lines describing every difference between two costs objects: the
+    ones that fail the comparison, then the informational ones."""
+    out, info = [], []
     for q in sorted(set(a) | set(b)):
         if q not in b:
             out.append(f"{q}: only in A")
         elif q not in a:
             out.append(f"{q}: only in B")
         else:
-            for f in FIELDS:
-                va, vb = a[q].get(f), b[q].get(f)
-                if va != vb:
-                    out.append(f"{q}: {f} {va} -> {vb}")
-    return out
+            for fields, into, tag in ((FIELDS, out, ""), (INFO_FIELDS, info, " (info)")):
+                for f in fields:
+                    va, vb = a[q].get(f), b[q].get(f)
+                    if va != vb:
+                        into.append(f"{q}: {f} {va} -> {vb}{tag}")
+    return out, info
 
 
 def main(argv):
@@ -65,8 +72,8 @@ def main(argv):
     except (OSError, ValueError) as e:
         print(f"cost_diff: {e}", file=sys.stderr)
         return 2
-    lines = diff(a, b)
-    for line in lines:
+    lines, info = diff(a, b)
+    for line in lines + info:
         print(line)
     n = len(set(a) | set(b))
     if lines:
