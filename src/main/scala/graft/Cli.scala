@@ -32,7 +32,10 @@ import graft.sources.Corpus
   *                                      // off the persisted band-row index
   *     [--follow DIR [--threshold J]]   // incremental: each invocation
   *                                      // decontaminates only NEW shards
-  *                                      // (manifest → DIR/data/batch-*)
+  *                                      // (manifest → DIR/data/batch-*);
+  *                                      // J = fuzzy, one band probe per doc
+  *                                      // (--threshold is refused without
+  *                                      // --minhash-table or --follow)
   *   runMain graft.Cli contaminate PATH... --bench PATH [--out DIR]
   *     [--field COL]                    // phrase column (default text)
   *     [--per-phrase]                   // per-phrase count rows, not the card
@@ -225,39 +228,27 @@ object Cli {
       // full-path synthetic row key: stable across replays, no basename
       // collisions across drop-dir batches
       val keyed =
-        if (quality == "none" && hashState.isEmpty && fuzzyT.isEmpty) docs
+        if (quality == "none" && hashState.isEmpty) docs
         else Corpus.withFileLineId(docs, "__iid", fullPath = true)
       val gated =
         if (quality == "none") keyed
-        else (if (quality == "gopher") operators.TextQuality.gopherFilter(
-            keyed, "__iid", "text", passthrough = corpusCols)
-          else operators.TextQuality.fineWebFilter(
-            keyed, "__iid", "text", passthrough = corpusCols))
-          .where(col("keep")).select(("__iid" +: corpusCols).map(col): _*)
+        else operators.TextQuality.gate(keyed, "__iid", "text",
+          fineWeb = quality == "fineweb")
       val deduped = hashState.fold(gated)(h => operators.Dedup
         .dedupIncremental(gated, md5(col("text")), Seq(col("__iid")), h))
-      var benchCkpt: Option[DataFrame] = None
       val cleaned =
         if (benchPaths.isEmpty) deduped
         else {
           val bench = readProjected(spark, benchPaths, fixMojibake, analyzed)
           fuzzyT match {
-            case Some(t) =>
-              // benchmark-sized localCheckpoint: the synthetic file-line
-              // id must not rebuild per consumer — released after the
-              // batch write consumes it
-              val bk = Corpus.withFileLineId(bench, "__bid").localCheckpoint(true)
-              benchCkpt = Some(bk)
-              operators.Dedup.decontaminateFuzzy(deduped, bk,
-                "__iid", "__bid", "text", "text", t, uax29 = uax)
+            case Some(t) => operators.Dedup.decontaminateFuzzy(deduped, "text",
+              bench, "text", t, uax29 = uax)
             case None => operators.Dedup.decontaminate(deduped,
               md5(col("text")), bench, md5(col("text")))
           }
         }
-      try Corpus.writeJsonl(cleaned.select(corpusCols.map(col): _*),
+      Corpus.writeJsonl(cleaned.select(corpusCols.map(col): _*),
         batchDir, force = true)
-      finally benchCkpt.foreach(
-        org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint)
     }
     batchDir
   }
@@ -585,6 +576,11 @@ object Cli {
               s"$cmdF: ${b.shards.size} new shard(s) decontaminated into $dir")
           }
         case None =>
+        // the one-shot fuzzy mode is the persisted index: without it the
+        // exact anti join below would run and ignore the threshold
+        require(flag("--threshold").isEmpty || flag("--minhash-table").nonEmpty,
+          "decontaminate --threshold J is fuzzy decontamination, which runs " +
+            "with --minhash-table T or --follow DIR")
         (flag("--spans"), flag("--minhash-table")) match {
           case (Some(k), _) =>
             deliver(operators.Dedup.removeContaminatedSpans(

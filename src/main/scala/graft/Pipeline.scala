@@ -210,12 +210,10 @@ object Pipeline {
   /** Fuzzy decontamination: drop train docs that near-match any benchmark
     * doc (exact-hash [[decontaminate]] only catches verbatim leaks).
     */
-  def decontaminateFuzzy(train: DataFrame, bench: DataFrame,
-                         trainId: String, benchId: String,
-                         trainText: String, benchText: String,
+  def decontaminateFuzzy(train: DataFrame, trainText: String,
+                         bench: DataFrame, benchText: String,
                          threshold: Double = 0.8): DataFrame =
-    Dedup.decontaminateFuzzy(train, bench, trainId, benchId,
-      trainText, benchText, threshold)
+    Dedup.decontaminateFuzzy(train, trainText, bench, benchText, threshold)
 
   /** Substring-level dedup: rewrite documents dropping every duplicated
     * k-token span occurrence after the first.

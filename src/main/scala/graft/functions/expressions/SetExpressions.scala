@@ -128,3 +128,17 @@ case class LongSetContains(child: Expression,
   protected override def withNewChildInternal(newChild: Expression): LongSetContains =
     copy(child = newChild)
 }
+
+object LongSetContains {
+  /** Broadcast `sorted` (ascending) once and return the membership probe
+    * over it: long-typed key column → [[LongSetContains]] column. Every
+    * column the probe builds shares the one broadcast.
+    */
+  def probe(spark: org.apache.spark.sql.SparkSession,
+            sorted: Array[Long]): org.apache.spark.sql.Column =>
+      org.apache.spark.sql.Column = {
+    val bc = spark.sparkContext.broadcast(sorted)
+    key => org.apache.spark.sql.graft.Bridge.column(
+      LongSetContains(org.apache.spark.sql.graft.Bridge.expression(key), bc))
+  }
+}

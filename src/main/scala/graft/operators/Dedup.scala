@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.functions.TextFunctions
+import graft.functions.expressions.LongSetContains
 
 /** Exact-hash deduplication, decontamination and overlap analysis
   * (reference wimbd/text_and_url_overlaps and its helper_scripts — SURVEY
@@ -72,11 +74,9 @@ object Dedup {
   def decontaminate(b: DataFrame, bKey: Column, a: DataFrame, aKey: Column): DataFrame =
     b.join(a.select(aKey.as("__block_h")), bKey === col("__block_h"), "left_anti")
 
-  /** The shared inline-hash cap for the repeated-sentence twins: the
-    * batch operator ([[removeRepeatedSentences]]) and the streaming twin
-    * ([[graft.streaming.StreamOps.removeRepeatedSentencesStream]]) MUST
-    * fall back at the same set size or their per-row decisions drift —
-    * one definition so the caps can't diverge by literal drift. 4M longs
+  /** The inline-hash cap of the sentence rewrite: up to this many hashes
+    * [[removeRepeatedSentences]] probes a broadcast sorted array, and
+    * [[removeSentences]] gathers its set with one capped collect. 4M longs
     * = 32 MB broadcast, comfortably executor-sized.
     */
   private[graft] val MaxInlineHashes: Int = 1 << 22
@@ -145,11 +145,8 @@ object Dedup {
     val sorted = gatherSortedLongs(distinctH, maxKeys).getOrElse(sys.error(
       s"decontaminateBroadcast: blocklist exceeds $maxKeys distinct keys — " +
         "use decontaminate (anti join) or decontaminateApprox (Bloom)"))
-    val bc = spark.sparkContext.broadcast(sorted)
-    val probe = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.expressions.LongSetContains(
-        org.apache.spark.sql.graft.Bridge.expression(bKey.cast("long")), bc))
-    b.where(!coalesce(probe, lit(false)))
+    val probe = LongSetContains.probe(spark, sorted)
+    b.where(!coalesce(probe(bKey.cast("long")), lit(false)))
   }
 
   /** J3 at Bloom scale (the Dolma-pipeline posture): drop every b-doc whose
@@ -179,25 +176,66 @@ object Dedup {
   }
 
   /** Fuzzy decontamination (the GPT-3/Llama posture: benchmark leakage
-    * rarely survives verbatim): drop every train doc that is a MinHash
-    * NEAR-duplicate of any benchmark doc — exact-hash J3 catches only
-    * verbatim copies. Candidates come from a cross-corpus LSH band join
-    * with the (tiny) benchmark side broadcast, verified by exact shingle
-    * Jaccard ≥ `threshold`; the train corpus is never shuffled — inline
-    * signatures, broadcast bucket probe, broadcast anti join on the
-    * contaminated-id set.
+    * rarely survives verbatim): drop every train row that is a MinHash
+    * NEAR-duplicate of any benchmark row — exact shingle Jaccard ≥
+    * `threshold` against a benchmark row sharing one of its LSH band
+    * buckets. Exact-hash J3 catches only verbatim copies.
+    *
+    * One pass, decided per row, so neither side needs an id. Each
+    * benchmark row yields its signature and distinct shingles in one
+    * projection; its band keys (`band|band_key`) group into ONE
+    * key → bucket-of-shingle-arrays frame, broadcast once and reused by
+    * every band's left join. Each train row computes its inline signature
+    * and shingles, probes one bucket per band, and is dropped when a
+    * bucket member verifies. The train side is scanned once and never
+    * shuffled, and the operator is stateless: a streaming `train` runs it
+    * unchanged, re-evaluating the (benchmark-sized) bucket frame per
+    * micro-batch. Rows with null text or fewer than `w` tokens have no
+    * shingles and survive. `md5Parity` selects the portable signature
+    * hash ([[MinHash.md5Strategy]]'s values) over xxhash64.
     */
-  def decontaminateFuzzy(train: DataFrame, bench: DataFrame,
-                         trainId: String, benchId: String,
-                         trainText: String, benchText: String,
+  def decontaminateFuzzy(train: DataFrame, trainText: String,
+                         bench: DataFrame, benchText: String,
                          threshold: Double, w: Int = 5, k: Int = 8,
-                         bands: Int = 4,
-                         hash: MinHash.HashFn = MinHash.xxhashStrategy,
+                         bands: Int = 4, md5Parity: Boolean = false,
                          uax29: Boolean = false): DataFrame = {
-    val hits = MinHash.crossNearDuplicates(train, bench, trainId, trainText,
-        benchId, benchText, threshold, w, k, bands, hash, uax29)
-      .select(col("id_a").as("__contaminated")).distinct()
-    train.join(broadcast(hits), train(trainId) === col("__contaminated"), "left_anti")
+    def bandKeys(sig: Column): Seq[Column] =
+      MinHash.bandKeyCols(sig, k, bands).zipWithIndex
+        .map { case (key, b) => concat(lit(s"$b|"), key) }
+    // a one-row Generate keeps the signature filter above the kernel (a
+    // pushed filter would inline and re-run it)
+    val bt = spanTokens(benchText, uax29)
+    val buckets = bench
+      .select(explode(array(struct(
+        MinHash.sigArrayCol(bt, w, k, md5Parity).as("sig"),
+        array_distinct(TextFunctions.ngrams(bt, w)).as("sh")))).as("r"))
+      .where(col("r.sig").isNotNull)
+      .select(explode(array(bandKeys(col("r.sig")): _*)).as("key"),
+        col("r.sh").as("sh"))
+      .groupBy("key").agg(collect_list(col("sh")).as("bucket"))
+
+    val tt = spanTokens(trainText, uax29)
+    val keyed = bandKeys(col("__sig")).zipWithIndex.foldLeft(train
+        .withColumn("__sh", array_distinct(TextFunctions.ngrams(tt, w)))
+        .withColumn("__sig", MinHash.sigArrayCol(tt, w, k, md5Parity))) {
+      case (cur, (key, b)) => cur.withColumn(s"__bk$b", key)
+    }
+    val probed = (0 until bands).foldLeft(keyed) { (cur, b) =>
+      cur.join(broadcast(buckets.select(col("key").as(s"__pk$b"),
+        col("bucket").as(s"__m$b"))), col(s"__bk$b") === col(s"__pk$b"), "left")
+    }
+    // the score and rounding of MinHash.jaccardFromArraysCross
+    val hit = (0 until bands).map { b =>
+      coalesce(exists(col(s"__m$b"), m => {
+        val ni = org.apache.spark.sql.graft.Bridge.column(
+          graft.functions.expressions.IntersectionSize(
+            org.apache.spark.sql.graft.Bridge.expression(col("__sh")),
+            org.apache.spark.sql.graft.Bridge.expression(m))).cast("long")
+        round(ni / (size(col("__sh")).cast("long") + size(m).cast("long") - ni), 6) >=
+          threshold
+      }), lit(false))
+    }.reduce(_ || _)
+    probed.where(!hit).select(train.columns.toSeq.map(c => col(s"`$c`")): _*)
   }
 
   /** Per-key dataset-membership BITMASK counts: `(mask, n_keys)` plus the
@@ -637,12 +675,8 @@ object Dedup {
         drop.select(col("__drop_id").cast("long")), 1 << 26)
     gathered match {
       case Some(sorted) =>
-        val bc = docs.sparkSession.sparkContext.broadcast(sorted)
-        val probe = org.apache.spark.sql.graft.Bridge.column(
-          graft.functions.expressions.LongSetContains(
-            org.apache.spark.sql.graft.Bridge.expression(
-              docs(idCol).cast("long")), bc))
-        docs.where(!coalesce(probe, lit(false)))
+        val probe = LongSetContains.probe(docs.sparkSession, sorted)
+        docs.where(!coalesce(probe(docs(idCol).cast("long")), lit(false)))
       case None =>
         docs.join(drop, docs(idCol) === col("__drop_id"), "left_anti")
     }
@@ -702,8 +736,9 @@ object Dedup {
 
   // ---- sub-document dedup: spans and units --------------------------------
 
-  /** Tokenization for span operators: whitespace split (oracle-matching
-    * default) or the UAX-29 tokenizer the n-gram commands use.
+  /** Tokenization for span operators and [[decontaminateFuzzy]]:
+    * whitespace split (oracle-matching default) or the UAX-29 tokenizer
+    * the n-gram commands use.
     */
   private def spanTokens(textCol: String, uax29: Boolean): Column =
     if (uax29) graft.functions.TextFunctions.tokenize(col(textCol))
@@ -827,6 +862,59 @@ object Dedup {
           .otherwise(size(split(col("text_dedup"), " ")).cast("long")))
   }
 
+  /** The over-threshold sentence hash set [[removeRepeatedSentences]]
+    * cuts: xxhash64 of every sentence appearing in more than `maxDf`
+    * distinct documents — one column `h`. Boilerplate-sized (tiny);
+    * compute it in batch and hand it to [[removeSentences]] to clean
+    * documents that arrive later, streaming ones included.
+    */
+  def repeatedSentenceHashes(docs: DataFrame, idCol: String,
+                             textCol: String, maxDf: Long = 1L): DataFrame = {
+    require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
+    val sents = TextFunctions.sentenceSplit(col(textCol))
+    graft.Par.fanOut(docs)
+      .select(col(idCol).as("__id"), posexplode(sents).as(Seq("__idx", "__s")))
+      .select(col("__id"), xxhash64(col("__s")).as("h"))
+      .groupBy("h").agg(count_distinct(col("__id")).as("__df"))
+      .where(col("__df") > maxDf).select("h")
+  }
+
+  /** Drop from every document each sentence whose xxhash64 is in
+    * `hashes` (column `h`, e.g. [[repeatedSentenceHashes]] of an earlier
+    * corpus; duplicates allowed). Output and per-row decision are
+    * [[removeRepeatedSentences]]' given the same set.
+    *
+    * Stateless per row: the set is gathered to the driver once, broadcast
+    * as a sorted long array and probed by a codegen binary search inside
+    * the rewrite projection — no join, no shuffle — so a streaming `docs`
+    * runs it unchanged in Append mode. The set reaches every executor
+    * whole in any formulation; beyond `maxInlineHashes` only the gather
+    * changes (a per-partition stream instead of one collect), so a costly
+    * `hashes` plan is worth checkpointing first.
+    */
+  def removeSentences(docs: DataFrame, idCol: String, textCol: String,
+                      hashes: DataFrame,
+                      maxInlineHashes: Int = MaxInlineHashes): DataFrame = {
+    val h = hashes.select(col("h"))
+    dropSentences(docs, idCol, textCol,
+      gatherSortedLongs(h, maxInlineHashes).getOrElse(streamSortedLongs(h)))
+  }
+
+  /** The sentence rewrite against a sorted hash array: the one
+    * probe-and-project of [[removeSentences]] and
+    * [[removeRepeatedSentences]]' in-cap branch.
+    */
+  private def dropSentences(docs: DataFrame, idCol: String, textCol: String,
+                            sorted: Array[Long]): DataFrame = {
+    val sents = TextFunctions.sentenceSplit(col(textCol))
+    val probe = LongSetContains.probe(docs.sparkSession, sorted)
+    val kept = filter(sents, s => !probe(xxhash64(s)))
+    docs.select(col(idCol),
+      concat_ws(" ", kept).as("text_clean"),
+      coalesce(size(sents), lit(0)).cast("long").as("n_sentences"),
+      coalesce(size(kept), lit(0)).cast("long").as("n_sentences_kept"))
+  }
+
   /** RefinedWeb-style repeated-sentence removal: drop from every document
     * each sentence whose EXACT content appears in more than `maxDf`
     * DISTINCT documents — boilerplate surgery (cookie banners, nav text,
@@ -838,97 +926,58 @@ object Dedup {
     * fully-boilerplate document comes out empty, and null/empty text rows
     * pass through with zero counts.
     *
-    * Scale shape: ONE checkpointed exploded (id, idx, hash) frame feeds
-    * the df count, which shuffles (xxhash64, id) pairs only — sentence
-    * TEXT never shuffles; the over-threshold hash set is a vanishing
-    * fraction (boilerplate by definition repeats, so its DISTINCT
-    * sentence count is tiny) and folds to a broadcast sorted long array
-    * probed by a codegen binary search in the rebuild scan — the SAME
-    * plan as the streaming twin, with no rewrite join (its sort-merge
+    * Scale shape: the df count shuffles (xxhash64, id) pairs only —
+    * sentence TEXT never shuffles; the over-threshold hash set is a
+    * vanishing fraction (boilerplate by definition repeats, so its
+    * DISTINCT sentence count is tiny) and folds to a broadcast sorted long
+    * array probed by a codegen binary search in the rebuild scan — the
+    * [[removeSentences]] rewrite, with no rewrite join (its sort-merge
     * arms would carry the corpus text as shuffle payload). Beyond
-    * `maxInlineHashes` the join formulation takes over. A 64-bit hash
-    * collision can only over-remove (the conservative direction for
-    * boilerplate).
+    * `maxInlineHashes` a join formulation over one checkpointed exploded
+    * (id, idx, hash) frame takes over. A 64-bit hash collision can only
+    * over-remove (the conservative direction for boilerplate).
     */
-  /** The over-threshold sentence hash set [[removeRepeatedSentences]]
-    * cuts: xxhash64 of every sentence appearing in more than `maxDf`
-    * distinct documents — one column `h`. Boilerplate-sized (tiny);
-    * compute it in batch and feed it to the streaming twin
-    * ([[graft.streaming.StreamOps.removeRepeatedSentencesStream]]) as its
-    * static side.
-    */
-  def repeatedSentenceHashes(docs: DataFrame, idCol: String,
-                             textCol: String, maxDf: Long = 1L): DataFrame = {
-    require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    val sents = graft.functions.TextFunctions.sentenceSplit(col(textCol))
-    graft.Par.fanOut(docs)
-      .select(col(idCol).as("__id"), posexplode(sents).as(Seq("__idx", "__s")))
-      .select(col("__id"), xxhash64(col("__s")).as("h"))
-      .groupBy("h").agg(count_distinct(col("__id")).as("__df"))
-      .where(col("__df") > maxDf).select("h")
-  }
-
   def removeRepeatedSentences(docs: DataFrame, idCol: String,
                               textCol: String, maxDf: Long = 1L,
                               maxInlineHashes: Int = MaxInlineHashes): DataFrame = {
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    val spark = docs.sparkSession
-    val sents = graft.functions.TextFunctions.sentenceSplit(col(textCol))
-    // the over-threshold set is boilerplate-sized by definition: fold it
-    // to a broadcast sorted long array probed by a codegen binary search
-    // inside the rebuild projection — the SAME plan the streaming twin
-    // runs, and the rewrite pass becomes one clean corpus scan with NO
-    // join (the removal join's sort-merge arms shuffle the corpus TEXT as
-    // payload once the per-doc drop list outgrows a broadcast — measured
-    // 0.22 GB at the 100× rehearsal on keys that are only ids).
-    //
-    // On this dominant path the exploded frame is read exactly ONCE (the
-    // df-count agg feeding the gather) and the rebuild re-splits `docs`
-    // directly — so the gather runs straight off the corpus scan with NO
-    // localCheckpoint: materializing every (id, idx, hash) row to block
-    // storage bought nothing here and cost ~3× the sf0.1 wall clock
-    // (r13's one >2× bench entry). Only the rare over-cap fallback needs
-    // the exploded frame twice (agg + removal join); it builds the
-    // checkpoint THEN, paying one extra split pass for the sizing agg —
-    // strictly cheaper than charging every in-cap run the checkpoint.
-    val gathered = gatherSortedLongs(
-      repeatedSentenceHashes(docs, idCol, textCol, maxDf), maxInlineHashes)
-    if (gathered.isDefined) {
-      val sorted = gathered.get
-      val bc = spark.sparkContext.broadcast(sorted)
-      def probe(x: Column): Column =
-        org.apache.spark.sql.graft.Bridge.column(
-          graft.functions.expressions.LongSetContains(
-            org.apache.spark.sql.graft.Bridge.expression(xxhash64(x)), bc))
-      val kept = filter(sents, s => !probe(s))
-      docs.select(col(idCol),
-        concat_ws(" ", kept).as("text_clean"),
-        coalesce(size(sents), lit(0)).cast("long").as("n_sentences"),
-        coalesce(size(kept), lit(0)).cast("long").as("n_sentences_kept"))
-    } else {
-      // over-cap fallback: ONE exploded (id, idx, hash) frame feeds BOTH
-      // the (re-run) df-count agg and the removal join — lazily
-      // checkpointed because Spark does not plan-share identical
-      // subtrees, so without it the corpus would be scanned and
-      // sentence-split twice more (the split is the operator's dominant
-      // per-row cost at scale)
-      val ex = graft.Par.fanOut(docs)
-        .select(col(idCol).as("__id"), posexplode(sents).as(Seq("__idx", "__s")))
-        .select(col("__id"), col("__idx"), xxhash64(col("__s")).as("__h"))
-        .localCheckpoint(eager = false)
-      val repeated = ex.groupBy("__h")
-        .agg(count_distinct(col("__id")).as("__df"))
-        .where(col("__df") > maxDf).select("__h")
-      val removed = ex.join(repeated.select(col("__h")), Seq("__h"), "left_semi")
-        .groupBy("__id").agg(sort_array(collect_list(col("__idx"))).as("__drop"))
-      val dropArr = coalesce(col("__drop"), array().cast("array<int>"))
-      docs.join(removed, docs(idCol) === removed("__id"), "left")
-        .select(col(idCol),
-          concat_ws(" ",
-            filter(sents, (_, i) => !exists(dropArr, d => d === i))).as("text_clean"),
-          coalesce(size(sents), lit(0)).cast("long").as("n_sentences"),
-          (coalesce(size(sents), lit(0)) - size(dropArr)).cast("long")
-            .as("n_sentences_kept"))
+    // On the dominant in-cap path the exploded frame is read exactly ONCE
+    // (the df-count agg feeding the gather) and the rewrite re-splits
+    // `docs` directly — so the gather runs straight off the corpus scan
+    // with NO localCheckpoint: materializing every (id, idx, hash) row to
+    // block storage bought nothing here and cost ~3× the sf0.1 wall clock.
+    // Only the rare over-cap fallback needs the exploded frame twice (agg
+    // + removal join); it builds the checkpoint THEN, paying one extra
+    // split pass for the sizing agg — strictly cheaper than charging every
+    // in-cap run the checkpoint.
+    gatherSortedLongs(repeatedSentenceHashes(docs, idCol, textCol, maxDf),
+        maxInlineHashes) match {
+      case Some(sorted) => dropSentences(docs, idCol, textCol, sorted)
+      case None =>
+        // over-cap fallback: ONE exploded (id, idx, hash) frame feeds BOTH
+        // the (re-run) df-count agg and the removal join — lazily
+        // checkpointed because Spark does not plan-share identical
+        // subtrees, so without it the corpus would be scanned and
+        // sentence-split twice more (the split is the operator's dominant
+        // per-row cost at scale)
+        val sents = TextFunctions.sentenceSplit(col(textCol))
+        val ex = graft.Par.fanOut(docs)
+          .select(col(idCol).as("__id"), posexplode(sents).as(Seq("__idx", "__s")))
+          .select(col("__id"), col("__idx"), xxhash64(col("__s")).as("__h"))
+          .localCheckpoint(eager = false)
+        val repeated = ex.groupBy("__h")
+          .agg(count_distinct(col("__id")).as("__df"))
+          .where(col("__df") > maxDf).select("__h")
+        val removed = ex.join(repeated.select(col("__h")), Seq("__h"), "left_semi")
+          .groupBy("__id").agg(sort_array(collect_list(col("__idx"))).as("__drop"))
+        val dropArr = coalesce(col("__drop"), array().cast("array<int>"))
+        docs.join(removed, docs(idCol) === removed("__id"), "left")
+          .select(col(idCol),
+            concat_ws(" ",
+              filter(sents, (_, i) => !exists(dropArr, d => d === i))).as("text_clean"),
+            coalesce(size(sents), lit(0)).cast("long").as("n_sentences"),
+            (coalesce(size(sents), lit(0)) - size(dropArr)).cast("long")
+              .as("n_sentences_kept"))
     }
   }
 

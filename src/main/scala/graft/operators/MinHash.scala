@@ -115,8 +115,9 @@ object MinHash {
 
   /** Per-band LSH keys from a signature array — byte-identical to
     * [[bandRows]]'s `band_key` (md5 over the "|"-joined band slice) but as
-    * plain columns with NO explode: the shape stateless streaming consumers
-    * need (one column per band instead of `bands` rows per doc). Keys from
+    * plain columns with NO explode: the shape per-row probes need
+    * ([[Dedup.decontaminateFuzzy]]: one column per band instead of
+    * `bands` rows per doc). Keys from
     * a NULL signature hash the empty slice; they can never match a
     * [[bandRows]] key because null-signature docs are filtered there.
     */
@@ -289,42 +290,4 @@ object MinHash {
     if (hash eq md5Strategy) signaturesInline(docs, idCol, textCol, w, k, md5Parity = true, uax29)
     else if (hash eq xxhashStrategy) signaturesInline(docs, idCol, textCol, w, k, md5Parity = false, uax29)
     else signatures(shingleBag(docs, idCol, textCol, w, uax29), k, hash)
-
-  /** Cross-corpus candidate pairs: (a-id, b-id) sharing at least one LSH
-    * band bucket — the fuzzy-match analogue of the J3 hash blocklist. The
-    * b side (a benchmark / blocklist corpus) is tiny relative to a, so its
-    * band rows broadcast: the train side is never shuffled — signatures
-    * are inline per-row, the bucket match is a broadcast hash join.
-    */
-  def crossLshCandidates(a: DataFrame, b: DataFrame,
-                         idColA: String, textColA: String,
-                         idColB: String, textColB: String,
-                         w: Int = 5, k: Int = 8, bands: Int = 4,
-                         hash: HashFn = xxhashStrategy,
-                         uax29: Boolean = false): DataFrame = {
-    val rowsA = bandRows(inlineSig(a, idColA, textColA, w, k, hash, uax29), k, bands)
-    val rowsB = bandRows(inlineSig(b, idColB, textColB, w, k, hash, uax29), k, bands)
-      .select(col("id").as("__idb"), col("band"), col("band_key"))
-    rowsA.join(broadcast(rowsB), Seq("band", "band_key"))
-      .select(col("id").as("id_a"), col("__idb").as("id_b")).distinct()
-  }
-
-  /** Cross-corpus near-duplicate pairs with exact-Jaccard verification —
-    * candidates from [[crossLshCandidates]], scored against each corpus's
-    * own shingle sets.
-    */
-  def crossNearDuplicates(a: DataFrame, b: DataFrame,
-                          idColA: String, textColA: String,
-                          idColB: String, textColB: String,
-                          threshold: Double, w: Int = 5, k: Int = 8,
-                          bands: Int = 4, hash: HashFn = xxhashStrategy,
-                          uax29: Boolean = false): DataFrame = {
-    val cand = crossLshCandidates(a, b, idColA, textColA, idColB, textColB,
-      w, k, bands, hash, uax29)
-    jaccardFromArraysCross(cand,
-      shingleArrays(a, idColA, textColA, w, uax29),
-      shingleArrays(b, idColB, textColB, w, uax29),
-      keepZero = threshold <= 0)
-      .where(col("jaccard") >= threshold)
-  }
 }

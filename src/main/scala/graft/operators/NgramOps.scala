@@ -118,11 +118,9 @@ object NgramOps {
         top.filter(_.getLong(1) >= ckt)
       }
     val hs = candidates.map(_.getLong(0)); java.util.Arrays.sort(hs)
-    val bc = docs.sparkSession.sparkContext.broadcast(hs)
-    val probe = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.expressions.LongSetContains(
-        org.apache.spark.sql.graft.Bridge.expression(xxhash64(col("ngram"))), bc))
-    val rec = grams.where(probe)
+    val probe = graft.functions.expressions.LongSetContains.probe(
+      docs.sparkSession, hs)
+    val rec = grams.where(probe(xxhash64(col("ngram"))))
       .groupBy("ngram").agg(count(lit(1)).as("cnt")).collect()
     if (rec.length != candidates.length) // candidate-hash collision: exact split unknowable from hashes
       return topKStrings(docs, textCol, n, k, uax29)

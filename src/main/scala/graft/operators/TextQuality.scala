@@ -677,6 +677,32 @@ object TextQuality {
         col("end_punct_line_frac") >= minEndPunctLineFrac)
   }
 
+  /** The quality gate as a filter: the rows of `docs` (all its columns)
+    * that [[gopherFilter]], or [[fineWebFilter]] with `fineWeb`, keeps.
+    * A per-row projection plus a filter, so batch and streaming `docs`
+    * take it unchanged.
+    */
+  def gate(docs: DataFrame, idCol: String, textCol: String,
+           fineWeb: Boolean = false): DataFrame = {
+    val cols = docs.columns.toSeq
+    // the gates GENERATE signal columns; an input column sharing a name
+    // would be silently overwritten (keep) or ambiguous (n_words, ...)
+    val reserved = Set("keep", "n_words", "mean_word_len", "alpha_word_ratio",
+      "n_stopwords", "avg_word_len", "ellipsis_line_frac", "bullet_line_frac",
+      "short_line_frac", "end_punct_line_frac", "dup_line_frac",
+      "dup_line_char_frac") ++
+      Seq(2, 3, 4).map(n => s"top${n}gram_char_frac") ++
+      (5 to 10).map(n => s"dup${n}gram_char_frac")
+    val clash = cols.filter(c => reserved(c) && c != idCol && c != textCol)
+    require(clash.isEmpty,
+      s"gate: input columns ${clash.mkString(", ")} collide " +
+        "with the gate's generated signal columns — rename them upstream")
+    val sig =
+      if (fineWeb) fineWebFilter(docs, idCol, textCol, passthrough = cols)
+      else gopherFilter(docs, idCol, textCol, passthrough = cols)
+    sig.where(col("keep")).select(cols.map(col): _*)
+  }
+
   /** Per-document vocabulary coverage against a FIXED vocabulary shipped
     * inside the plan (a tokenizer's wordlist, a pruned LM vocab): token
     * count, in-vocabulary count, OOV fraction. The "how much of my corpus

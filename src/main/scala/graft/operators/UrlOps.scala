@@ -97,14 +97,10 @@ object UrlOps {
       // so driver and scan sides agree bit for bit
       val sorted = blocked.toDF("d").select(xxhash64(col("d"))).collect()
         .map(_.getLong(0)).sorted
-      val bc = spark.sparkContext.broadcast(sorted)
-      def probe(c: Column): Column =
-        org.apache.spark.sql.graft.Bridge.column(
-          graft.functions.expressions.LongSetContains(
-            org.apache.spark.sql.graft.Bridge.expression(xxhash64(c)), bc))
+      val probe = graft.functions.expressions.LongSetContains.probe(spark, sorted)
       val parts = split(host, "\\.")
       val hit = exists(sequence(lit(1), size(parts)),
-        i => probe(concat_ws(".", slice(parts, i, size(parts)))))
+        i => probe(xxhash64(concat_ws(".", slice(parts, i, size(parts))))))
       // null/absent hosts probe to null — kept, matching the when-chain
       // path and the join shape this replaces
       df.where(!coalesce(hit, lit(false)))

@@ -67,8 +67,8 @@ object DedupScaleQueries extends QueryPack {
 
   // the j8 fuzzy-decontamination replay — shared verbatim by the per-call
   // pipeline (j8) and the persisted band-row index path (j16)
-  /** the sentence-dedup replay — shared by the batch operator and its
-    * streaming twin (both must produce the identical final state) */
+  /** the sentence-dedup replay — shared by d_sentence_dedup and
+    * d_sentence_stream (both must produce the identical final state) */
   private lazy val sentenceDedupSql: String =
     """WITH u AS (SELECT doc_id,
       |  regexp_replace(text, '([^ ]+( [^ ]+){6}) ', '\1. ', 'g') AS text2
@@ -172,8 +172,8 @@ object DedupScaleQueries extends QueryPack {
       val bench = d.where(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("bid"),
           concat(col("text"), lit(" extra token")).as("btext"))
-      graft.operators.Dedup.decontaminateFuzzy(d, bench, "doc_id", "bid",
-          "text", "btext", threshold = 0.5, W, K, BANDS, MinHash.md5Strategy)
+      graft.operators.Dedup.decontaminateFuzzy(d, "text", bench, "btext",
+          threshold = 0.5, W, K, BANDS, md5Parity = true)
         .select("doc_id").orderBy("doc_id")
     }),
 
@@ -199,10 +199,10 @@ object DedupScaleQueries extends QueryPack {
     }),
 
     // the same contamination battery INCREMENTALLY: the corpus arrives as
-    // a file stream in real micro-batches through the stateless
-    // decontaminateFuzzyStream (inline signature + per-band broadcast
-    // bucket joins — no stream-side shuffle) and the surviving set must be
-    // exactly j8's batch decision
+    // a file stream in real micro-batches through j8's own stateless
+    // operator (inline signature + per-band broadcast bucket joins — no
+    // stream-side shuffle) and the surviving set must be exactly j8's
+    // batch decision
     "j17_stream_decontaminate" -> ((s, dir) => {
       StageTimer.start("j17_stream_decontaminate")
       val d = docs(s, dir)
@@ -219,9 +219,9 @@ object DedupScaleQueries extends QueryPack {
       StageTimer.mark("j17_stream_decontaminate", "setup")
       val in = s.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", 1).json(s"$tmp/src")
-      val q = graft.streaming.StreamOps.decontaminateFuzzyStream(
-          in, "text", bench, "bid", "btext", threshold = 0.5, W, K, BANDS,
-          MinHash.md5Strategy)
+      val q = graft.operators.Dedup.decontaminateFuzzy(
+          in, "text", bench, "btext", threshold = 0.5, W, K, BANDS,
+          md5Parity = true)
         .select("doc_id")
         .writeStream.format("parquet")
         .option("path", s"$tmp/out")
@@ -393,8 +393,9 @@ object DedupScaleQueries extends QueryPack {
 
     // the sentence-boilerplate surgery INCREMENTALLY: the repeated-hash
     // set comes from one batch pass, then the corpus arrives as a file
-    // stream (real micro-batches) through the stateless rewrite — the
-    // final state must equal d_sentence_dedup's batch output exactly
+    // stream (real micro-batches) through the stateless removeSentences
+    // rewrite — the final state must equal d_sentence_dedup's batch
+    // output exactly
     "d_sentence_stream" -> ((s, dir) => {
       StageTimer.start("d_sentence_stream")
       val d = docs(s, dir).withColumn("text",
@@ -408,7 +409,7 @@ object DedupScaleQueries extends QueryPack {
       StageTimer.mark("d_sentence_stream", "setup")
       val in = s.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", 1).json(s"$tmp/src")
-      val q = graft.streaming.StreamOps.removeRepeatedSentencesStream(
+      val q = graft.operators.Dedup.removeSentences(
           in, "doc_id", "text", boiler)
         .writeStream.format("parquet")
         .option("path", s"$tmp/out")
@@ -460,9 +461,7 @@ object DedupScaleQueries extends QueryPack {
     // stage replayed in SQL (docs ≡ 0 mod 97 double as the benchmark)
     "r_ingest_pipeline" -> ((s, dir) => {
       val d = docs(s, dir)
-      val gated = TextQuality.gopherFilter(d, "doc_id", "text",
-          passthrough = Seq("text"))
-        .where(col("keep")).select("doc_id", "text")
+      val gated = TextQuality.gate(d.select("doc_id", "text"), "doc_id", "text")
       val deduped = graft.operators.Dedup.keepFirst(gated,
         md5(col("text")), Seq(col("doc_id")))
       graft.operators.Dedup.decontaminate(deduped, md5(col("text")),

@@ -8,6 +8,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * has no streaming (SURVEY §2.8); this is the Spark-native extension
   * surface: a landing directory of JSONL/parquet events becomes an
   * incremental pipeline with the same schema and aggregates as EventOps.
+  *
+  * Only operators that need streaming state or event-time windows live
+  * here. A stateless per-row decision (quality gate, exact and fuzzy
+  * decontamination, sentence-boilerplate removal) is one operator in
+  * `graft.operators` that batch and streaming frames both call.
   */
 object StreamOps {
 
@@ -313,204 +318,28 @@ object StreamOps {
     withWm.drop("__h")
   }
 
-  /** Streaming decontamination — the incremental twin of
-    * Dedup.decontaminate (J3): drop every incoming document whose text hash
-    * appears in the static benchmark blocklist, via a stateless
-    * stream-static left-anti join (the blocklist is a batch frame, loaded
-    * once per micro-batch plan; small lists broadcast). The ingest-time
-    * guard a training pipeline puts in front of the corpus store.
-    *
-    * `blocklist` must expose the hash column named `h` (the
-    * Dedup.duplicateHashes / textHash convention).
-    */
-  def decontaminateStream(docs: DataFrame, textCol: String,
-                          blocklist: DataFrame): DataFrame =
-    docs.withColumn("__h", md5(col(textCol)))
-      .join(blocklist.select(col("h").as("__block_h")).distinct(),
-        col("__h") === col("__block_h"), "left_anti")
-      .drop("__h")
-
-  /** Streaming repeated-sentence boilerplate removal — the incremental
-    * twin of [[graft.operators.Dedup.removeRepeatedSentences]] under the
-    * static-blocklist posture (like [[decontaminateStream]] vs J3): the
-    * over-threshold sentence hash set comes from a BATCH pass
-    * ([[graft.operators.Dedup.repeatedSentenceHashes]], boilerplate-sized
-    * by definition) and every incoming document is rewritten against it.
-    *
-    * Fully STATELESS: the hash set folds to one broadcast sorted long
-    * array probed by a codegen'd binary search, and the rewrite is a
-    * per-row sentence-split + array filter + rejoin — no stream-side
-    * shuffle or state, so Append mode works and per-batch decisions
-    * equal the batch operator's given the same hash set.
-    * Output matches the batch twin: (idCol, text_clean, n_sentences,
-    * n_sentences_kept).
-    */
-  def removeRepeatedSentencesStream(docs: DataFrame, idCol: String,
-                                    textCol: String,
-                                    boilerplate: DataFrame,
-                                    maxInlineHashes: Int =
-                                      graft.operators.Dedup.MaxInlineHashes): DataFrame = {
-    // the hash set is boilerplate-sized by definition — collect it ONCE,
-    // broadcast a sorted long array, and probe via a codegen'd binary
-    // search inside the per-row rewrite: the stream plan is then a pure
-    // projection (no per-micro-batch re-aggregation of the static side,
-    // no join). The set must reach every executor whole either way (any
-    // formulation broadcasts it), so there is no cheaper over-cap shape —
-    // beyond `maxInlineHashes` the only change is HOW the driver gathers
-    // it: toLocalIterator (one partition in memory at a time) instead of
-    // collect's single all-rows buffer, probing identically afterwards.
-    // The branch is decided by a capped COUNT first so the driver never
-    // commits to materializing a set it hasn't sized.
-    val spark = docs.sparkSession
-    val sents = graft.functions.TextFunctions.sentenceSplit(col(textCol))
-    def project(src: DataFrame, keptArr: org.apache.spark.sql.Column): DataFrame =
-      src.select(col(idCol),
-        concat_ws(" ", keptArr).as("text_clean"),
-        coalesce(size(sents), lit(0)).cast("long").as("n_sentences"),
-        coalesce(size(keptArr), lit(0)).cast("long").as("n_sentences_kept"))
-    // this caller materializes the WHOLE set either way (it is broadcast
-    // afterwards), so persist the distinct once: the over-cap fallback
-    // then streams the cached blocks instead of re-running the (expensive
-    // by definition) distinct from scratch. unpersist after the gather —
-    // `sorted` is already a driver array by then.
-    val distinctH = boilerplate.select(col("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted: Array[Long] =
-      try graft.operators.Dedup.gatherSortedLongs(distinctH, maxInlineHashes)
-        .getOrElse(graft.operators.Dedup.streamSortedLongs(distinctH))
-      finally distinctH.unpersist(blocking = false)
-    val bc = spark.sparkContext.broadcast(sorted)
-    def probe(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      org.apache.spark.sql.graft.Bridge.column(
-        graft.functions.expressions.LongSetContains(
-          org.apache.spark.sql.graft.Bridge.expression(xxhash64(x)), bc))
-    project(docs, filter(sents, x => !probe(x)))
-  }
-
-  /** Streaming FUZZY decontamination — the incremental twin of
-    * [[graft.operators.Dedup.decontaminateFuzzy]] (J8): drop every incoming
-    * document that is a MinHash near-duplicate (exact shingle Jaccard ≥
-    * `threshold`) of any benchmark document, not just a verbatim copy.
-    *
-    * Fully STATELESS — the stream side never shuffles and never
-    * aggregates. Per row: inline signature + distinct-shingle array
-    * (codegen'd projections), then one broadcast stream-static equi-join
-    * PER BAND against the benchmark's band-key buckets. The benchmark side
-    * is pre-grouped to ONE row per (band, band_key) whose payload is the
-    * bucket's bench shingle arrays, so the left joins cannot duplicate
-    * stream rows, and exact-Jaccard verification runs inside an `exists`
-    * lambda over the matched bucket — per-row work is bounded by actual
-    * band collisions, exactly like the batch candidate join. A doc is
-    * dropped when any band's bucket holds a verified match: the same
-    * decision `decontaminateFuzzy` makes in batch, one micro-batch at a
-    * time.
-    *
-    * `hash` must be one of the two inline strategies (xxhash default /
-    * md5Strategy) — a custom [[graft.operators.MinHash.HashFn]] needs the
-    * explode+groupBy signature path, which is not stateless.
-    *
-    * The benchmark subplan is re-evaluated every micro-batch; persist
-    * `bench` (it is benchmark-sized, i.e. tiny) for long-running streams.
-    */
-  def decontaminateFuzzyStream(docs: DataFrame, textCol: String,
-                               bench: DataFrame, benchId: String,
-                               benchText: String, threshold: Double,
-                               w: Int = 5, k: Int = 8, bands: Int = 4,
-                               hash: graft.operators.MinHash.HashFn =
-                                 graft.operators.MinHash.xxhashStrategy,
-                               uax29: Boolean = false): DataFrame = {
-    import graft.operators.MinHash
-    import graft.functions.TextFunctions
-    val md5Parity =
-      if (hash eq MinHash.md5Strategy) true
-      else if (hash eq MinHash.xxhashStrategy) false
-      else throw new IllegalArgumentException(
-        "decontaminateFuzzyStream needs an inline strategy (xxhashStrategy or md5Strategy)")
-
-    // static side: one row per (band, band_key); bucket = that key's bench
-    // docs' distinct-shingle arrays (null-signature bench docs drop out in
-    // signaturesInline / shingleArrays, so empty-slice stream keys never hit)
-    val sigB = MinHash.signaturesInline(bench, benchId, benchText, w, k, md5Parity, uax29)
-    // persist: the per-band joins below each filter this frame, so the
-    // bench signature pipeline would otherwise re-evaluate `bands` times
-    // per micro-batch (persisting the CALLER's bench frame cannot cache
-    // this derived aggregation). Benchmark-sized; lives with the stream.
-    val prep = MinHash.bandRows(sigB, k, bands)
-      .join(MinHash.shingleArrays(bench, benchId, benchText, w, uax29), "id")
-      .groupBy("band", "band_key").agg(collect_list(col("sh")).as("bucket"))
-      .persist()
-
-    val toks = if (uax29) TextFunctions.tokenize(col(textCol)) else split(col(textCol), " ")
-    val keys = MinHash.bandKeyCols(MinHash.sigArrayCol(toks, w, k, md5Parity), k, bands)
-    val out = docs.columns.toSeq
-    var cur = docs.withColumn("__sh", array_distinct(TextFunctions.ngrams(toks, w)))
-    keys.zipWithIndex.foreach { case (kc, b) => cur = cur.withColumn(s"__bk$b", kc) }
-    (0 until bands).foreach { b =>
-      cur = cur.join(
-        broadcast(prep.where(col("band") === b)
-          .select(col("band_key").as(s"__pk$b"), col("bucket").as(s"__m$b"))),
-        col(s"__bk$b") === col(s"__pk$b"), "left")
-    }
-    val hit = (0 until bands).map { b =>
-      coalesce(exists(col(s"__m$b"), m => {
-        // same score and rounding as MinHash.jaccardFromArraysCross
-        val ni = org.apache.spark.sql.graft.Bridge.column(
-          graft.functions.expressions.IntersectionSize(
-            org.apache.spark.sql.graft.Bridge.expression(col("__sh")),
-            org.apache.spark.sql.graft.Bridge.expression(m))).cast("long")
-        round(ni / (size(col("__sh")).cast("long") + size(m).cast("long") - ni), 6) >= threshold
-      }), lit(false))
-    }.reduce(_ || _)
-    cur.where(!hit).select(out.map(col): _*)
-  }
-
-  /** Streaming quality gate — the stateless incremental twin of the
-    * Gopher/FineWeb batch gates: every micro-batch is filtered by the same
-    * codegen'd signal columns (pure projections compose with streaming
-    * for free — that is the point of keeping gates shuffle-free).
-    */
-  def qualityGateStream(docs: DataFrame, idCol: String, textCol: String,
-                        fineWeb: Boolean = false): DataFrame = {
-    val cols = docs.columns.toSeq
-    // the gates GENERATE signal columns; an input column sharing a name
-    // would be silently overwritten (keep) or ambiguous (n_words, ...)
-    val reserved = Set("keep", "n_words", "mean_word_len", "alpha_word_ratio",
-      "n_stopwords", "avg_word_len", "ellipsis_line_frac", "bullet_line_frac",
-      "short_line_frac", "end_punct_line_frac", "dup_line_frac",
-      "dup_line_char_frac") ++
-      Seq(2, 3, 4).map(n => s"top${n}gram_char_frac") ++
-      (5 to 10).map(n => s"dup${n}gram_char_frac")
-    val clash = cols.filter(c => reserved(c) && c != idCol && c != textCol)
-    require(clash.isEmpty,
-      s"qualityGateStream: input columns ${clash.mkString(", ")} collide " +
-        "with the gate's generated signal columns — rename them upstream")
-    val sig =
-      if (fineWeb)
-        graft.operators.TextQuality.fineWebFilter(docs, idCol, textCol,
-          passthrough = cols)
-      else graft.operators.TextQuality.gopherFilter(docs, idCol, textCol,
-        passthrough = cols)
-    sig.where(col("keep")).select(cols.map(col): _*)
-  }
-
-  /** The COMPOSED streaming ingestion gate — the one-call twin of CLI
+  /** The COMPOSED streaming ingestion gate — the one-call form of CLI
     * `ingest --follow`'s per-batch semantics (and of the batch
     * `r_ingest_pipeline` oracle): quality gate → exact dedup →
     * decontamination (exact, or MinHash-fuzzy with `threshold`), one
     * micro-batch at a time. Text-less docs drop in every mode, matching
-    * the CLI. Stage state: the quality gate and both decontamination
-    * modes are stateless; dedup keeps forever-state unless `watermarkCol`
-    * bounds the horizon — at 100 TB pair it with the durable hash-state
-    * pattern (CLI `ingest`) instead of unbounded stream state.
+    * the CLI. The gate and both decontamination modes are the batch
+    * operators ([[graft.operators.TextQuality.gate]],
+    * [[graft.operators.Dedup.decontaminate]],
+    * [[graft.operators.Dedup.decontaminateFuzzy]]), stateless per row;
+    * dedup keeps forever-state unless `watermarkCol` bounds the horizon —
+    * at 100 TB pair it with the durable hash-state pattern (CLI `ingest`)
+    * instead of unbounded stream state.
     */
   def ingestStream(docs: DataFrame, idCol: String, textCol: String,
                    bench: Option[DataFrame] = None,
-                   benchId: String = "id", benchText: String = "text",
+                   benchText: String = "text",
                    threshold: Option[Double] = None,
                    fineWeb: Boolean = false,
                    watermarkCol: Option[(String, String)] = None,
                    uax29: Boolean = false): DataFrame = {
-    val gated = qualityGateStream(docs.where(col(textCol).isNotNull),
+    import graft.operators.{Dedup, TextQuality}
+    val gated = TextQuality.gate(docs.where(col(textCol).isNotNull),
       idCol, textCol, fineWeb)
     val deduped = dedupStream(gated, textCol, watermarkCol)
     (bench, threshold) match {
@@ -518,11 +347,10 @@ object StreamOps {
         "ingestStream: threshold needs a benchmark frame")
       case (None, None) => deduped
       case (Some(b), Some(t)) =>
-        decontaminateFuzzyStream(deduped, textCol, b, benchId, benchText,
-          t, uax29 = uax29)
+        Dedup.decontaminateFuzzy(deduped, textCol, b, benchText, t,
+          uax29 = uax29)
       case (Some(b), None) =>
-        decontaminateStream(deduped, textCol,
-          b.select(md5(col(benchText)).as("h")))
+        Dedup.decontaminate(deduped, md5(col(textCol)), b, md5(col(benchText)))
     }
   }
 

@@ -307,6 +307,43 @@ class CliIngestSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$root/state/data")))
   }
 
+  test("one-shot decontaminate refuses --threshold without --minhash-table or --follow") {
+    val root = Files.createTempDirectory("cli_decon_threshold").toString
+    writeShard(s"$root/bench", "b.jsonl", Seq(good2))
+    writeShard(s"$root/corpus", "c.jsonl", Seq(good, good2))
+    val e = intercept[IllegalArgumentException] {
+      Cli.run(spark, Array("decontaminate", s"$root/corpus/*",
+        "--bench", s"$root/bench/b.jsonl", "--threshold", "0.5",
+        "--out", s"$root/out"))
+    }
+    assert(e.getMessage.contains("--minhash-table") &&
+      e.getMessage.contains("--follow"), e.getMessage)
+    assert(!Files.exists(Paths.get(s"$root/out")))
+  }
+
+  test("a steady decontaminate --follow --threshold batch stays inside its job budget") {
+    val root = Files.createTempDirectory("cli_decon_budget").toString
+    val leak = "which year did the treaty of westphalia end the thirty years war in europe"
+    writeShard(s"$root/bench", "b.jsonl", Seq(leak, good2))
+    def batch(k: Int): Unit = {
+      // a fresh doc, a near-dup leak and an exact leak, in two shards
+      writeShard(s"$root/drop/d$k", "s1.jsonl",
+        Seq(varied(s"n${k}x"), leak.replace("europe", s"asia$k")))
+      writeShard(s"$root/drop/d$k", "s2.jsonl", Seq(good2))
+      Cli.run(spark, Array("decontaminate", s"$root/drop/*",
+        "--bench", s"$root/bench/b.jsonl", "--follow", s"$root/state",
+        "--threshold", "0.5"))
+    }
+    (1 to 2).foreach(batch)
+    val probe = graft.tools.ProbeListener.attach(spark,
+      traceJobs = sys.env.contains("GRAFT_PROBE_JOBS"))
+    val c = try probe.measure(batch(3))._3 finally probe.detach()
+    // parent of this budget: 13 jobs per steady batch (benchmark
+    // checkpoint, candidate join, verification, anti join)
+    assert(c.jobs <= 3, c)
+    assert(corpusTexts(s"$root/state") === (1 to 3).map(k => varied(s"n${k}x")).sorted)
+  }
+
   test("--conf sets session dials before dispatch; malformed pair is loud") {
     val root = Files.createTempDirectory("cli_conf").toString
     writeShard(s"$root/corpus", "c.jsonl", Seq(good))

@@ -279,7 +279,7 @@ class CorpusPrepSpec extends SparkTestBase {
   }
 
   test("decontaminateFuzzy drops near-matches of benchmark docs, exact-hash misses them") {
-    import graft.operators.{Dedup, MinHash}
+    import graft.operators.Dedup
     val train = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "one two three four five six seven eight nine"),
@@ -293,13 +293,26 @@ class CorpusPrepSpec extends SparkTestBase {
     ).toDF("bid", "btext")
     val exact = Dedup.decontaminate(train, md5(col("text")), bench, md5(col("btext")))
     assert(exact.count() === 3) // verbatim check sees no leak
-    val fuzzy = Dedup.decontaminateFuzzy(train, bench, "id", "bid", "text", "btext",
+    val fuzzy = Dedup.decontaminateFuzzy(train, "text", bench, "btext",
       threshold = 0.4, w = 3, k = 8, bands = 4)
     assert(fuzzy.select("id").as[Long].collect().sorted.toSeq === Seq(2L, 3L))
-    val pairs = MinHash.crossNearDuplicates(train, bench, "id", "text", "bid", "btext",
-      threshold = 0.4, w = 3, k = 8, bands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L)))
+  }
+
+  test("decontaminateFuzzy decides per row: duplicate and null train ids") {
+    import graft.operators.Dedup
+    val leak = "alpha beta gamma delta epsilon zeta eta theta"
+    val clean = "one two three four five six seven eight nine"
+    // id 1 holds a leak and a clean row; both null-id rows are checked too
+    val train = Seq[(java.lang.Long, String)](
+      (1L, leak), (1L, clean), (null, "intro " + leak), (null, clean),
+      (2L, null)).toDF("id", "text")
+    val bench = Seq("intro alpha beta gamma delta epsilon zeta eta theta")
+      .toDF("btext")
+    val kept = Dedup.decontaminateFuzzy(train, "text", bench, "btext",
+        threshold = 0.4, w = 3, k = 8, bands = 4)
+      .collect().map(r => (Option(r.get(0)), Option(r.getString(1)))).toSet
+    assert(kept === Set((Some(1L), Some(clean)), (None, Some(clean)),
+      (Some(2L), None)))
   }
 
   test("winnowOverlapPairs surfaces shared token runs (winnowing guarantee)") {

@@ -944,10 +944,10 @@ class DedupScaleSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .toSet
       assert(got === expected, s"trial $trial maxDf $maxDf")
-      // and the streaming twin agrees given the batch hash set
+      // and removeSentences agrees given the batch hash set
       val boiler = graft.operators.Dedup.repeatedSentenceHashes(
         docs.toDF("doc_id", "text"), "doc_id", "text", maxDf)
-      val streamGot = graft.streaming.StreamOps.removeRepeatedSentencesStream(
+      val streamGot = graft.operators.Dedup.removeSentences(
           docs.toDF("doc_id", "text"), "doc_id", "text", boiler)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .toSet

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, MinHash}
+import graft.operators.Dedup
 import graft.search.MinHashIndex
 
 /** Persisted MinHash band-row index: differential against the per-call
@@ -28,9 +28,8 @@ class MinHashIndexSpec extends SparkTestBase {
       val b = bench(docs)
       val indexed = MinHashIndex.decontaminateIndexed(spark, table, docs,
         "doc_id", "text", b, "bid", "btext", threshold = 0.5)
-      val direct = Dedup.decontaminateFuzzy(docs, b, "doc_id", "bid",
-        "text", "btext", threshold = 0.5, w = 5, k = 8, bands = 4,
-        MinHash.md5Strategy)
+      val direct = Dedup.decontaminateFuzzy(docs, "text", b, "btext",
+        threshold = 0.5, w = 5, k = 8, bands = 4, md5Parity = true)
       def ids(df: org.apache.spark.sql.DataFrame) =
         df.select("doc_id").collect().map(_.getLong(0)).toSet
       val got = ids(indexed)
@@ -66,9 +65,8 @@ class MinHashIndexSpec extends SparkTestBase {
       val got = MinHashIndex.decontaminateIndexed(spark, table, docs,
           "doc_id", "text", b, "bid", "btext", threshold = 0.5)
         .select("doc_id").collect().map(_.getLong(0)).toSet
-      val want = Dedup.decontaminateFuzzy(docs, b, "doc_id", "bid",
-          "text", "btext", threshold = 0.5, w = 5, k = 8, bands = 4,
-          MinHash.md5Strategy)
+      val want = Dedup.decontaminateFuzzy(docs, "text", b, "btext",
+          threshold = 0.5, w = 5, k = 8, bands = 4, md5Parity = true)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(got === want)
       // catalog forgets the tables (JVM restart); the warehouse files
@@ -130,9 +128,8 @@ class MinHashIndexSpec extends SparkTestBase {
       val got = MinHashIndex.decontaminateIndexed(spark, table, docs,
           "doc_id", "text", b, "bid", "btext", threshold = 0.5)
         .select("doc_id").collect().map(_.getLong(0)).toSet
-      val want = Dedup.decontaminateFuzzy(docs, b, "doc_id", "bid",
-          "text", "btext", threshold = 0.5, w = 5, k = 8, bands = 4,
-          MinHash.md5Strategy)
+      val want = Dedup.decontaminateFuzzy(docs, "text", b, "btext",
+          threshold = 0.5, w = 5, k = 8, bands = 4, md5Parity = true)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(got === want)
     } finally graft.search.Swap.drop(spark, table, s"${table}__meta",

@@ -148,6 +148,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming sentence-boilerplate removal matches the batch twin per row") {
+    import graft.operators.Dedup
     implicit val sqlCtx = spark.sqlContext
     val rows = Seq(
       (1L, "Unique opening here. Accept our cookies now! Real content one."),
@@ -155,13 +156,14 @@ class StreamingSpec extends SparkTestBase {
       (3L, "Accept our cookies now! Totally distinct text."),
       (4L, ""))
     val batchDf = rows.toDF("doc_id", "text")
-    val boiler = graft.operators.Dedup.repeatedSentenceHashes(
-      batchDf, "doc_id", "text")
-    val expected = graft.operators.Dedup.removeRepeatedSentences(
-        batchDf, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    val boiler = Dedup.repeatedSentenceHashes(batchDf, "doc_id", "text")
+    def rows4(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    val expected = rows4(Dedup.removeRepeatedSentences(batchDf, "doc_id", "text"))
+    // the one operator on a batch frame makes the batch decision
+    assert(rows4(Dedup.removeSentences(batchDf, "doc_id", "text", boiler)) === expected)
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.removeRepeatedSentencesStream(
+    val q = Dedup.removeSentences(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", boiler)
       .writeStream.format("memory").queryName("sent_clean")
       .outputMode(OutputMode.Append).start()
@@ -175,7 +177,7 @@ class StreamingSpec extends SparkTestBase {
     assert(got === expected)
     // the over-cap FALLBACK branch (maxInlineHashes = 0 forces it) must
     // make the same per-row decisions under streaming execution
-    val q3 = StreamOps.removeRepeatedSentencesStream(
+    val q3 = Dedup.removeSentences(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", boiler,
         maxInlineHashes = 0)
       .writeStream.format("memory").queryName("sent_fallback")
@@ -187,7 +189,7 @@ class StreamingSpec extends SparkTestBase {
     q3.stop()
     assert(fb === expected)
     // an EMPTY boilerplate set rewrites nothing
-    val q2 = StreamOps.removeRepeatedSentencesStream(
+    val q2 = Dedup.removeSentences(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text",
         boiler.where(org.apache.spark.sql.functions.lit(false)))
       .writeStream.format("memory").queryName("sent_noop")
@@ -218,24 +220,30 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val block = Seq("bench question one", "bench question two").toDF("text")
       .select(org.apache.spark.sql.functions.md5($"text").as("h"))
+    def decon(docs: org.apache.spark.sql.DataFrame) =
+      graft.operators.Dedup.decontaminate(docs,
+        org.apache.spark.sql.functions.md5($"text"), block, $"h")
+    val rows = Seq((1L, "clean doc"), (2L, "bench question one"),
+      (3L, "bench question two"), (4L, "another clean"))
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.decontaminateStream(
-        input.toDF().toDF("doc_id", "text"), "text", block)
+    val q = decon(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("decon").outputMode(OutputMode.Append).start()
-    input.addData((1L, "clean doc"), (2L, "bench question one"))
+    input.addData(rows.take(2): _*)
     q.processAllAvailable()
-    input.addData((3L, "bench question two"), (4L, "another clean"))
+    input.addData(rows.drop(2): _*)
     q.processAllAvailable()
     val kept = spark.table("decon").collect().map(_.getLong(0)).toSet
     q.stop()
     assert(kept === Set(1L, 4L))
+    // the same operator on a batch frame
+    assert(decon(rows.toDF("doc_id", "text")).collect().map(_.getLong(0)).toSet === kept)
   }
 
   test("streaming fuzzy decontamination matches the batch decision") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val benchText = "which year did the treaty of westphalia end the thirty years war in europe"
-    val bench = Seq((100L, benchText)).toDF("bid", "btext")
+    val bench = Seq(benchText).toDF("btext")
     val nearDup = "which year did the treaty of westphalia end the thirty years war in asia"
     val docs = Seq(
       (1L, "a perfectly clean training document about cooking pasta at home tonight"),
@@ -244,9 +252,9 @@ class StreamingSpec extends SparkTestBase {
       (4L, "too short"),          // < w tokens: no shingles, must pass through
       (5L, "another clean doc that shares no shingles with the benchmark suite"))
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.decontaminateFuzzyStream(
-        input.toDF().toDF("doc_id", "text"), "text",
-        bench, "bid", "btext", threshold = 0.5)
+    val q = graft.operators.Dedup.decontaminateFuzzy(
+        input.toDF().toDF("doc_id", "text"), "text", bench, "btext",
+        threshold = 0.5)
       .writeStream.format("memory").queryName("fdecon").outputMode(OutputMode.Append).start()
     input.addData(docs.take(3): _*)
     q.processAllAvailable()
@@ -255,10 +263,9 @@ class StreamingSpec extends SparkTestBase {
     val kept = spark.table("fdecon").collect().map(_.getLong(0)).toSet
     q.stop()
     assert(kept === Set(1L, 4L, 5L))
-    // exactly the batch operator's surviving set on the same corpus
+    // the same operator on a batch frame of the same corpus
     val batch = graft.operators.Dedup.decontaminateFuzzy(
-        docs.toDF("doc_id", "text"), bench, "doc_id", "bid", "text", "btext",
-        threshold = 0.5)
+        docs.toDF("doc_id", "text"), "text", bench, "btext", threshold = 0.5)
       .collect().map(_.getLong(0)).toSet
     assert(batch === kept)
   }
@@ -272,7 +279,7 @@ class StreamingSpec extends SparkTestBase {
       ("the" +: (1 to 58).map(i => s"$seed$i") :+ "and").mkString(" ")
     val leak = varied("bench")
     val nearLeak = varied("bench").replace("bench58", "changed")
-    val bench = Seq((100L, leak)).toDF("bid", "btext")
+    val bench = Seq(leak).toDF("btext")
     val docs = Seq(
       (1L, varied("al")),        // clean, survives
       (2L, "tiny junk"),         // fails the quality gate
@@ -283,7 +290,7 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[(Long, String)]
     val q = StreamOps.ingestStream(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        bench = Some(bench), benchId = "bid", benchText = "btext",
+        bench = Some(bench), benchText = "btext",
         threshold = Some(0.5))
       .writeStream.format("memory").queryName("ingest_stream")
       .outputMode(OutputMode.Append).start()
@@ -296,13 +303,11 @@ class StreamingSpec extends SparkTestBase {
     assert(kept === Set(1L, 6L))
     // the batch composition (r_ingest_pipeline's stages) on the same corpus
     val d = docs.toDF("doc_id", "text")
-    val gated = graft.operators.TextQuality.gopherFilter(d, "doc_id", "text",
-        passthrough = Seq("text"))
-      .where(col("keep")).select("doc_id", "text")
+    val gated = graft.operators.TextQuality.gate(d, "doc_id", "text")
     val deduped = graft.operators.Dedup.keepFirst(gated, md5(col("text")),
       Seq(col("doc_id")))
-    val batch = graft.operators.Dedup.decontaminateFuzzy(deduped, bench,
-        "doc_id", "bid", "text", "btext", threshold = 0.5)
+    val batch = graft.operators.Dedup.decontaminateFuzzy(deduped, "text",
+        bench, "btext", threshold = 0.5)
       .collect().map(_.getLong(0)).toSet
     assert(batch === kept)
   }
@@ -312,13 +317,13 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     // bench rows with < w tokens have no shingles → no band rows: the
     // broadcast side is empty either way and every stream doc must pass
-    val empty = Seq.empty[(Long, String)].toDF("bid", "btext")
-    val subW = Seq((100L, "too short bench")).toDF("bid", "btext")
+    val empty = Seq.empty[String].toDF("btext")
+    val subW = Seq("too short bench").toDF("btext")
     for ((bench, tag) <- Seq((empty, "empty"), (subW, "subw"))) {
       val input = MemoryStream[(Long, String)]
-      val q = StreamOps.decontaminateFuzzyStream(
-          input.toDF().toDF("doc_id", "text"), "text",
-          bench, "bid", "btext", threshold = 0.5)
+      val q = graft.operators.Dedup.decontaminateFuzzy(
+          input.toDF().toDF("doc_id", "text"), "text", bench, "btext",
+          threshold = 0.5)
         .writeStream.format("memory").queryName(s"fdecon_$tag")
         .outputMode(OutputMode.Append).start()
       input.addData((1L, "a clean training document about cooking pasta at home"),
@@ -335,7 +340,7 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[(Long, String)]
     val good = (1 to 80).map(i => if (i % 10 == 0) "the" else s"w${i}xyz")
       .mkString(" ") // > 50 distinct-ish words, stopwords present, no repetition
-    val q = StreamOps.qualityGateStream(
+    val q = graft.operators.TextQuality.gate(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text")
       .writeStream.format("memory").queryName("qgate").outputMode(OutputMode.Append).start()
     input.addData((1L, good), (2L, "way too short"))
@@ -343,11 +348,11 @@ class StreamingSpec extends SparkTestBase {
     val kept = spark.table("qgate").collect().map(_.getLong(0)).toSet
     q.stop()
     assert(kept === Set(1L))
-    // the stream twin applies exactly the batch gate's decision
+    // the same operator on a batch frame makes the same decision
     import spark.implicits._
-    val batch = graft.operators.TextQuality.gopherFilter(
+    val batch = graft.operators.TextQuality.gate(
       Seq((1L, good), (2L, "way too short")).toDF("doc_id", "text"),
-      "doc_id", "text").where($"keep").collect().map(_.getLong(0)).toSet
+      "doc_id", "text").collect().map(_.getLong(0)).toSet
     assert(batch === kept)
   }
 
