@@ -109,7 +109,7 @@ object Cli {
     val flags = scala.collection.mutable.Map.empty[String, Seq[String]]
     val paths = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
-    val boolFlags = Set("--force", "--approx", "--with-locations", "--json", "--u64", "--docs", "--divergence", "--analyzed", "--fix-mojibake", "--md5", "--broadcast", "--per-phrase", "--lucene-slop", "--profile")
+    val boolFlags = Set("--force", "--approx", "--with-locations", "--json", "--u64", "--docs", "--divergence", "--analyzed", "--fix-mojibake", "--md5", "--broadcast", "--per-phrase", "--lucene-slop", "--profile", "--rebuild-index")
     while (i < argv.length) {
       val a = argv(i)
       if (a.startsWith("--")) {
@@ -581,6 +581,9 @@ object Cli {
         require(flag("--threshold").isEmpty || flag("--minhash-table").nonEmpty,
           "decontaminate --threshold J is fuzzy decontamination, which runs " +
             "with --minhash-table T or --follow DIR")
+        require(flag("--spans").isEmpty || flag("--minhash-table").isEmpty,
+          "decontaminate --spans K cuts contaminated spans and --minhash-table T " +
+            "drops near-duplicate documents: give one of them")
         (flag("--spans"), flag("--minhash-table")) match {
           case (Some(k), _) =>
             deliver(operators.Dedup.removeContaminatedSpans(

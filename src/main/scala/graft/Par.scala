@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graft.Bridge
 
 /** Parallelism helper for CPU-heavy operators fed by small scans.
@@ -26,8 +27,13 @@ import org.apache.spark.sql.graft.Bridge
   * `df.rdd.getNumPartitions` probe forced a throwaway physical planning of
   * every frame it touched.
   *
-  * Other frames (a shuffle above the scan, local data, RDDs, caches,
-  * bucketed tables) have no listing that alone decides their
+  * Local data (a LocalRelation, which the optimizer folds projections
+  * and filters into) is left alone: its scan already spreads n rows over
+  * min(n, `defaultParallelism`) partitions, so a repartition would only
+  * add a shuffle job.
+  *
+  * Other frames (a shuffle above the scan, RDDs, caches, bucketed
+  * tables) have no listing that alone decides their
   * partitioning, so they fall back to the optimizer's size estimate
   * divided by `maxPartitionBytes`. Frames with UNKNOWN size (the conservative
   * Long.Max default, e.g. localCheckpoint scans) are treated as large —
@@ -36,7 +42,12 @@ import org.apache.spark.sql.graft.Bridge
   * not overflow into a spurious repartition.
   */
 object Par {
-  def fanOut(df: DataFrame): DataFrame = {
+  def fanOut(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case _: LocalRelation => df
+    case _ => fanOutScan(df)
+  }
+
+  private def fanOutScan(df: DataFrame): DataFrame = {
     val target = BigInt(df.sparkSession.sparkContext.defaultParallelism)
     val planned: BigInt = Bridge.plannedScanPartitions(df).map(BigInt(_)).getOrElse {
       val bytesPerSplit = Bridge.filesMaxPartitionBytes(df.sparkSession).max(1L)

@@ -1,7 +1,8 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, BinaryExpression, Expression, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -141,4 +142,70 @@ object LongSetContains {
     key => org.apache.spark.sql.graft.Bridge.column(
       LongSetContains(org.apache.spark.sql.graft.Bridge.expression(key), bc))
   }
+}
+
+/** The rows a driver-held table files under `child`'s value, read from a
+  * BROADCAST hash map: the rows of one key as an array of structs, empty
+  * for an absent or null key. `inline` over it is an inner equi-join
+  * against rows the driver already holds, with no exchange and no job (a
+  * `broadcast(LocalRelation)` join runs one to collect its build side).
+  * Generated code holds the expression by reference, so the table's
+  * contents never enter the source and a new table compiles nothing; for
+  * the same reason it is never folded to a literal, even on a constant
+  * key. Keys are `LongType` (boxed) or `StringType` (`UTF8String`) values;
+  * equality/canonicalization keys on the broadcast id, like
+  * [[LongSetContains]].
+  */
+case class KeyedRows(child: Expression,
+                     table: org.apache.spark.broadcast.Broadcast[
+                       java.util.HashMap[AnyRef, ArrayData]],
+                     rowType: StructType)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case LongType | StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"graft_keyed_rows needs a long or string key, got ${other.sql}")
+  }
+  override def dataType: DataType = ArrayType(rowType, containsNull = false)
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "graft_keyed_rows"
+
+  def lookup(key: AnyRef): ArrayData = {
+    val rows = if (key == null) null else table.value.get(key)
+    if (rows == null) KeyedRows.none else rows
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    lookup(child.eval(input).asInstanceOf[AnyRef])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("keyedRows", this, classOf[KeyedRows].getName)
+    val k = child.genCode(ctx)
+    val boxed = if (child.dataType == LongType) s"java.lang.Long.valueOf(${k.value})"
+      else k.value.toString
+    ev.copy(code = code"""
+      ${k.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        $ref.lookup(${k.isNull} ? null : (Object) $boxed);""",
+      isNull = FalseLiteral)
+  }
+
+  override def equals(other: Any): Boolean = other match {
+    case e: KeyedRows =>
+      (this eq e) || (child == e.child && table.id == e.table.id)
+    case _ => false
+  }
+  override def hashCode(): Int =
+    java.util.Objects.hash(classOf[KeyedRows], child,
+      java.lang.Long.valueOf(table.id))
+
+  protected override def withNewChildInternal(newChild: Expression): KeyedRows =
+    copy(child = newChild)
+}
+
+object KeyedRows {
+  private val none: ArrayData = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    Array.empty[Any])
 }

@@ -764,6 +764,9 @@ object Similarity {
   private[graft] val MaxGatheredCentroidsConf = "graft.ann.maxGatheredCentroids"
   private[graft] val MaxGatheredCentroidsDefault: Int = 1 << 16
 
+  private[graft] def maxGatheredCentroids(spark: org.apache.spark.sql.SparkSession): Int =
+    intConf(spark, MaxGatheredCentroidsConf, MaxGatheredCentroidsDefault)
+
   /** ONE limit-capped driver gather of an index-sized `(centroid_id, cv)`
     * frame for the probe/assignment kernels: null-cv rows dropped (no
     * direction — never comparable), ascending-id sort (the kernels'
@@ -781,8 +784,7 @@ object Similarity {
     */
   private[graft] def gatherCentroidFrameOpt(
       centroids: DataFrame): Option[Array[(Long, Array[Double])]] = {
-    val cap = intConf(centroids.sparkSession, MaxGatheredCentroidsConf,
-      MaxGatheredCentroidsDefault)
+    val cap = maxGatheredCentroids(centroids.sparkSession)
     Sessions.gatherCapped(centroids
       .select(col("centroid_id").cast("long").as("cid"), col("cv"))
       .where(col("cv").isNotNull), cap)

@@ -137,27 +137,38 @@ object AnnIndex {
     * read ONCE per query call and threaded down.
     */
   private def metaDimOf(spark: SparkSession, table: String): Option[Int] =
-    if (spark.catalog.tableExists(s"${table}__meta"))
-      Some(spark.table(s"${table}__meta").head().getAs[Int]("dim"))
-    else None
+    metaRowOf(spark, table).map(_.getAs[Int]("dim"))
+
+  /** `<table>__centroids` for a driver gather: its rows read on the driver
+    * by [[Swap.readLocal]] (no job) while they fit the gather cap, else
+    * the catalog table, which [[Similarity.gatherCentroidFrameOpt]]
+    * refuses and the distributed arms scan.
+    */
+  private def centroidsOf(spark: SparkSession, table: String): DataFrame = {
+    val name = s"${table}__centroids"
+    Swap.readLocal(spark, name, Similarity.maxGatheredCentroids(spark))
+      .getOrElse(spark.table(name))
+  }
 
   /** One collected probe pass returning the LocalRelation probe frame
-    * AND its driver rows plus the distinct asked query ids. The kernel
-    * arm folds the per-query dimension validation and the asked-id set
-    * (for [[widenStarved]]) into the SAME collect via `explode_outer` +
-    * a size column — one job; the literal bucket-prune list is read from
-    * the same rows. A persisted index whose centroid table exceeds the
-    * gather cap (external writer, older step choice) stays QUERYABLE
-    * through the join+window fallback: broadcast hash join either way,
-    * just the Q×C window shuffle instead of the kernel, plus its own
-    * dim-check scan (askedIds = None; callers that need the set collect
-    * it).
+    * AND its driver rows plus the distinct asked query ids and the
+    * gathered centroids. The centroids are read on the driver
+    * ([[centroidsOf]], no job); the kernel arm folds the per-query
+    * dimension validation and the asked-id set (for [[widenStarved]])
+    * into the ONE collect via `explode_outer` + a size column; the
+    * bucket-prune list is read from the same rows. A persisted index whose
+    * centroid table exceeds the gather cap (external writer, older step
+    * choice) stays QUERYABLE through the join+window fallback: broadcast
+    * hash join, the Q×C window shuffle instead of the kernel, plus its
+    * own dim-check scan (askedIds and centroids None; callers that need
+    * the set collect it).
     */
   private def probeRowsOf(spark: SparkSession, table: String,
                           queries: DataFrame, idCol: String, vecCol: String,
                           nprobe: Int, metaDim: Option[Int])
-      : (DataFrame, Array[Row], Option[Array[Any]], Option[Long]) = {
-    val centTable = spark.table(s"${table}__centroids")
+      : (DataFrame, Array[Row], Option[Array[Any]],
+        Option[Array[(Long, Array[Double])]]) = {
+    val centTable = centroidsOf(spark, table)
     Similarity.gatherCentroidFrameOpt(centTable) match {
       case Some(cents) =>
         val szCol = "__graft_qdim"
@@ -179,7 +190,7 @@ object AnnIndex {
           Row(r.get(0), r.get(1), r.get(2)))
         val asked = raw.map(_.get(0)).distinct
         (localFrame(spark, rows, StructType(outer.schema.fields.take(3))),
-          rows, Some(asked), Some(cents.length.toLong))
+          rows, Some(asked), Some(cents))
       case None =>
         metaDim.orElse(metaDimOf(spark, table))
           .foreach(requireRowDims(queries, vecCol, table, _))
@@ -258,19 +269,14 @@ object AnnIndex {
       r.schema.fieldNames.contains("resid") && r.getAs[Boolean]("resid"))
 
   /** Non-null centroid count of a saved index — from `__meta`'s `ncents`
-    * (one one-row read) when present; pre-ncents indices fall back to
-    * counting the side table.
+    * (one one-row read on the driver) when present; pre-ncents indices
+    * fall back to counting the side table.
     */
   private[graft] def centroidCountOf(spark: SparkSession,
                                      table: String): Long = {
-    val meta = s"${table}__meta"
-    val fromMeta =
-      if (spark.catalog.tableExists(meta)) {
-        val r = spark.table(meta).head()
-        if (r.schema.fieldNames.contains("ncents"))
-          Some(r.getAs[Long]("ncents"))
-        else None
-      } else None
+    val fromMeta = metaRowOf(spark, table)
+      .filter(_.schema.fieldNames.contains("ncents"))
+      .map(_.getAs[Long]("ncents"))
     fromMeta.getOrElse(
       spark.table(s"${table}__centroids").where(col("cv").isNotNull).count())
   }
@@ -700,13 +706,13 @@ object AnnIndex {
     spark.table(table).columns.toSeq
       .filterNot(Set("id", "bucket", "bv", "codes", PartCol))
 
-  /** The `__codebook` side table gathered to the [m][K][sub] driver
-    * array [[Similarity.pqEncodeOnUnit]]/ADC consume — m × K × d/m
-    * doubles, tiny by construction.
+  /** The `__codebook` side table read on the driver ([[Swap.readLocal]],
+    * no job) into the [m][K][sub] array [[Similarity.pqEncodeOnUnit]]/ADC
+    * consume — m × K × d/m doubles, tiny by construction.
     */
   private[graft] def loadCodebook(spark: SparkSession,
                                   table: String): Array[Array[Array[Double]]] = {
-    val cbRows = spark.table(s"${table}__codebook").collect()
+    val cbRows = Swap.readLocal(spark, s"${table}__codebook").get.collect()
     val mSub = cbRows.map(_.getInt(0)).max + 1
     val kCodes = cbRows.map(_.getInt(1)).max + 1
     val cb = Array.ofDim[Array[Double]](mSub, kCodes)
@@ -737,15 +743,15 @@ object AnnIndex {
     assignNewWithMeta(spark, table, vectors, idCol, vecCol,
       metaRowOf(spark, table))
 
-  /** The one-row `__meta` record, if the completion record exists —
-    * read ONCE per maintenance call and threaded down: the dim check,
-    * the PQ flag and the residual flag each paid their own one-row
-    * head() job before (three meta jobs per streamed micro-batch).
+  /** The one-row `__meta` record, if the completion record exists (is
+    * cataloged) — read on the driver ([[Swap.readLocal]], no job) ONCE
+    * per call and threaded down to the dim check, the PQ flag and the
+    * residual flag.
     */
   private def metaRowOf(spark: SparkSession,
                         table: String): Option[Row] =
     if (spark.catalog.tableExists(s"${table}__meta"))
-      Some(spark.table(s"${table}__meta").head())
+      Some(Swap.readLocal(spark, s"${table}__meta").get.head())
     else None
 
   /** [[assignNew]] under a `meta` row already read. With `dimFlag`, the
@@ -769,7 +775,7 @@ object AnnIndex {
     val keep = keepOf(spark, table) ++ dimFlag
     val assigned = assignUnit(
       Similarity.unitProjectKeep(vectors, idCol, "id", vecCol, "bv", keep),
-      spark.table(s"${table}__centroids"), keep)
+      centroidsOf(spark, table), keep)
     // PQ tier (m > 0 in __meta): encode the arrivals against the FROZEN
     // codebook, exactly as assignment uses the frozen centroids — both
     // depend only on the row itself, so the PQ tier appends/upserts/
@@ -818,8 +824,7 @@ object AnnIndex {
   def streamAssigner(spark: SparkSession, table: String, idCol: String,
                      vecCol: String): DataFrame => DataFrame = {
     val meta = metaRowOf(spark, table)
-    Similarity.gatherCentroidFrameOpt(
-        spark.table(s"${table}__centroids")) match {
+    Similarity.gatherCentroidFrameOpt(centroidsOf(spark, table)) match {
       case None =>
         batch => assignNewWithMeta(spark, table, batch, idCol, vecCol, meta)
       case Some(cents) =>
@@ -1013,8 +1018,9 @@ object AnnIndex {
     // dial: a staging table written with a different count than recovery
     // re-registers from __meta would silently mis-prune every later read.
     // An explicitly passed value must agree.
-    val metaBuckets =
-      spark.table(s"${table}__meta").head().getAs[Int]("buckets")
+    val metaBuckets = metaRowOf(spark, table)
+      .getOrElse(sys.error(s"compactIvfIndex: ${table}__meta is missing"))
+      .getAs[Int]("buckets")
     require(buckets == -1 || buckets == metaBuckets,
       s"compactIvfIndex: buckets=$buckets but $table was built with " +
         s"$metaBuckets (recorded in ${table}__meta) — omit the parameter")
@@ -1116,7 +1122,7 @@ object AnnIndex {
     val meta = s"${table}__meta"
     Seq(meta, s"${table}__centroids", s"${table}__codebook")
       .foreach(n => Swap.heal(spark, n, Swap.register(spark, _, None)))
-    lazy val buckets = spark.table(meta).head().getAs[Int]("buckets")
+    lazy val buckets = metaRowOf(spark, table).get.getAs[Int]("buckets")
     spark.catalog.tableExists(meta) &&
       Swap.heal(spark, table, Swap.register(spark, _, Some("bucket" -> buckets)))
   }
@@ -1245,8 +1251,7 @@ object AnnIndex {
     // centroid count by construction)
     val sizes = idx.where(col("bucket").isNotNull)
       .groupBy("bucket").agg(count(lit(1)).as("__bn"))
-    val swept = Similarity.gatherCentroidFrameOpt(
-        spark.table(s"${table}__centroids")) match {
+    val swept = Similarity.gatherCentroidFrameOpt(centroidsOf(spark, table)) match {
       case Some(cents) =>
         // the cost sum is driver arithmetic over the probe rows and the
         // collected size map
@@ -1302,8 +1307,7 @@ object AnnIndex {
     val (q, exact) = exactTruth(spark, idx, queries, idCol, vecCol, k,
       Some(filter))
     val sortedW = widenTos.distinct.sorted
-    val swept = Similarity.gatherCentroidFrameOpt(
-        spark.table(s"${table}__centroids")) match {
+    val swept = Similarity.gatherCentroidFrameOpt(centroidsOf(spark, table)) match {
       case Some(cents) =>
         // the base nprobe pass is identical across every swept widen
         // value and probed widen passes are prefix extensions of the same
@@ -1370,11 +1374,14 @@ object AnnIndex {
   /** One probe→prune→filter→score→top-k pass, shared by the plain and PQ
     * query tiers (they differ only in `score`: dot against the stored
     * unit vector vs against the codebook-decoded codes) and by the
-    * starved-query widen re-pass below. `withCv`: thread the probed
-    * bucket's centroid vector into the candidate rows as `__cv` (one
-    * broadcast join of the index-sized centroid table into the
-    * |queries|×nprobe probe frame) — the residual-PQ score needs it to
-    * add the centroid back before the ADC dot.
+    * starved-query widen re-pass below. The collected probe rows join the
+    * pruned index by bucket from the driver ([[Bridge.keyedRows]]): no
+    * broadcast job, and no probe value enters generated code. `withCv`:
+    * each candidate row also carries its bucket's centroid vector as
+    * `__cv` — the residual-PQ score needs it to add the centroid back
+    * before the ADC dot — from the gathered centroids in the probe rows,
+    * or through [[withCentroidCv]] on the pruned rows when the centroid
+    * table is over the gather cap.
     */
   private def knnPass(spark: SparkSession, table: String, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int, nprobe: Int,
@@ -1384,9 +1391,10 @@ object AnnIndex {
     knnPassWithAsked(spark, table, queries, idCol, vecCol, k, nprobe,
       filter, score, withCv, metaDim)._1
 
-  /** [[knnPass]] that also surfaces the asked-query-id set when the
-    * kernel probe arm collected it for free — [[widenStarved]]'s
-    * starved-set diff then skips its own distinct-collect job.
+  /** [[knnPass]] that also surfaces the asked-query-id set and the
+    * centroid count when the kernel probe arm gathered them for free —
+    * [[widenStarved]]'s starved-set diff then skips its own
+    * distinct-collect job.
     */
   private def knnPassWithAsked(spark: SparkSession, table: String,
                       queries: DataFrame,
@@ -1395,19 +1403,23 @@ object AnnIndex {
                       score: Column, withCv: Boolean = false,
                       metaDim: Option[Int] = None)
       : (DataFrame, Option[Array[Any]], Option[Long]) = {
-    val (probes, probeRows, asked, nCents) = probeRowsOf(spark, table,
+    val (probes, probeRows, asked, cents) = probeRowsOf(spark, table,
       queries, idCol, vecCol, nprobe, metaDim)
-    val probesCv =
-      if (!withCv) probes else withCentroidCv(spark, table, probes)
-    // the literal bucket-prune list comes from the already-collected
-    // probe rows
-    val probeBuckets = probeRows.map(_.getLong(2)).distinct
-    val idx0 = prunedIndex(spark, table, probeBuckets)
-    val idx = filter.map(idx0.where).getOrElse(idx0)
-    (topK(excludeSelf(broadcast(probesCv).join(idx, Seq("bucket")),
+    val cvOf = cents.filter(_ => withCv).map(_.toMap)
+    val (rows, schema) = cvOf match {
+      case None => (probeRows.toSeq, probes.schema)
+      case Some(cv) => (probeRows.toSeq.flatMap(r => cv.get(r.getLong(2))
+          .map(v => Row(r.get(0), r.get(1), r.get(2), v.toSeq))),
+        probes.schema.add("__cv", ArrayType(DoubleType)))
+    }
+    val probed = Bridge.keyedRows(spark, rows, schema, "bucket")
+    val idx0 = prunedIndex(spark, table, probeRows.map(_.getLong(2)).distinct)
+    val idx1 = filter.map(idx0.where).getOrElse(idx0)
+    val idx = if (withCv && cvOf.isEmpty) withCentroidCv(spark, table, idx1) else idx1
+    (topK(excludeSelf(idx.select(col("*"), inline(probed(col("bucket")))),
         probes, idx)
       .select(col("query_id"), col("id"), score.as("cos")), k), asked,
-      nCents)
+      cents.map(_.length.toLong))
   }
 
   /** The frozen-centroid `__cv` join shared by every residual-PQ

@@ -2,8 +2,11 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode,
   SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** A positions-aware inverted index as a Spark-native TABLE — the
   * reference's other answer to phrase search: where `wimbd/es/__init__.py`
@@ -26,8 +29,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * corpus-sized.
   *
   * Every multi-phrase surface here is SET-ORIENTED: the phrase (or pair)
-  * list becomes a broadcast `(phrase, slot, term)` frame joined against the
-  * pruned postings read ONCE, and the per-(phrase, doc) match decision runs
+  * list becomes `(term, phrase, slot)` rows joined against the pruned
+  * postings read ONCE, and the per-(phrase, doc) match decision runs
   * inside one aggregate — so the logical plan is O(1) in the number of
   * phrases (asserted in InvertedIndexSpec at 500 phrases). That is what
   * lets [[contaminationIndexed]] absorb the reference's real benchmark
@@ -58,7 +61,6 @@ object InvertedIndex {
     val toks =
       if (uax29) graft.functions.TextFunctions.tokenize(col(textCol))
       else split(col(textCol), " ")
-    import org.apache.spark.sql.graft.Bridge
     val perDoc = Bridge.column(graft.functions.expressions.TermPostings(
       Bridge.expression(col("__toks"))))
     // dl is projected per DOCUMENT, below the explode: an expression next
@@ -692,18 +694,16 @@ object InvertedIndex {
 
   /** The norms row for a SAVED index: the persisted `<table>__norms` when
     * present (catalog-registered, or surviving in the warehouse after an
-    * in-memory-catalog restart), else recovered from `post` with one
-    * index-wide aggregate. Values are identical either way (one canonical
-    * definition); only the cost differs.
+    * in-memory-catalog restart), read on the driver by [[Swap.readLocal]]
+    * (no job, and the latest commit of any session), else recovered from
+    * `post` with one index-wide aggregate. Values are identical either way
+    * (one canonical definition); only the cost differs.
     */
   def normsOf(spark: SparkSession, table: String, post: DataFrame): DataFrame = {
     val nt = s"${table}__norms"
-    if (spark.catalog.tableExists(nt)) spark.table(nt)
-    else {
-      val (p, fs) = normsSidePath(spark, table)
-      if (fs.exists(p)) spark.read.parquet(p.toString)
-      else corpusNormsFromPostings(post)
-    }
+    val (p, fs) = normsSidePath(spark, table)
+    if (spark.catalog.tableExists(nt) || fs.exists(p)) Swap.readLocal(spark, nt).get
+    else corpusNormsFromPostings(post)
   }
 
   /** BM25 ranked retrieval straight off the index — the relevance scoring
@@ -718,25 +718,32 @@ object InvertedIndex {
     *
     * Plan shape: postings filtered to the query terms (bucket-pruned on a
     * saved index, df-sized rows carrying their own `dl` norm — no corpus
-    * join), df counts via a window-free self-agg broadcast back, one
-    * groupBy(doc) and a TakeOrderedAndProject for the top-k. Scores are
-    * rounded so ranking ties break identically everywhere (oracle parity).
+    * join) and read ONCE: df is a count over a window partitioned by
+    * term, which a saved index's bucket layout already satisfies (no
+    * Exchange). The norms row joins every candidate from the driver
+    * ([[Bridge.keyedRows]]: no broadcast job, and n_docs reaches
+    * generated code as data, not as a literal that compiles per value).
+    * Then one groupBy(doc) and a TakeOrderedAndProject for the top-k.
+    * Scores are rounded so ranking ties break identically everywhere
+    * (oracle parity).
     */
   def bm25TopK(postings: DataFrame, norms: DataFrame, terms: Seq[String],
                k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     val weights = terms.groupBy(identity).map { case (t, g) => t -> g.size }
-    val cand = postings.where(col("term").isin(weights.keys.toSeq: _*))
+    val nrm = norms.select(lit(0L).as("__k"), col("n_docs"), col("avgdl"))
+    val withNorms = Bridge.keyedRows(postings.sparkSession, nrm.collect(),
+      nrm.schema, "__k")
+    val cand = postings.where(Bridge.inSet(col("term"), weights.keys, StringType))
       .select("term", "doc_id", "tf", "dl")
-    val dfByTerm = cand.groupBy("term").agg(count(lit(1)).as("df"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+      .select(col("*"), inline(withNorms(lit(0L))))
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfNorm = col("tf") * (lit(k1) + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
     val mult = element_at(typedLit(weights), col("term")).cast("double")
-    cand.join(broadcast(dfByTerm), Seq("term"))
-      .crossJoin(broadcast(norms.select("n_docs", "avgdl")))
-      .groupBy("doc_id")
+    cand.groupBy("doc_id")
       .agg(round(sum(idf * tfNorm * mult), 6).as("score"))
       .orderBy(desc("score"), asc("doc_id")).limit(k)
   }
@@ -860,11 +867,8 @@ object InvertedIndex {
     }
   }
 
-  /** The broadcast (phrase, slot, term) side of every batch phrase query:
-    * phrase p's i-th token becomes one row, so a term repeated inside a
-    * phrase gets one row per slot and the postings join below naturally
-    * fans its single posting row out to every slot that needs it.
-    * Duplicate phrases are collapsed (one output row per distinct phrase).
+  /** The tokenized distinct phrases of a batch phrase query (one output
+    * row per distinct phrase).
     */
   private def parsePhrases(phrases: Seq[String],
                            uax29: Boolean): Seq[(String, Seq[String])] = {
@@ -878,28 +882,35 @@ object InvertedIndex {
     byPhrase
   }
 
-  private def phraseSlots(spark: SparkSession,
-                          byPhrase: Seq[(String, Seq[String])]): DataFrame = {
-    import spark.implicits._
-    byPhrase.flatMap { case (p, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (p, i, t, ts.size) }
-    }.toDF("phrase", "__slot", "term", "__n_slots")
-  }
+  private val slotSchema = StructType(Seq(StructField("term", StringType),
+    StructField("phrase", StringType), StructField("__slot", IntegerType),
+    StructField("__n_slots", IntegerType)))
 
-  /** One (phrase, doc) row per candidate document: the pruned postings
-    * read joins the broadcast slot frame ONCE, and an aggregate collects
-    * each phrase's slot position-arrays in slot order. `__s` is complete
-    * (the doc contains every phrase term) iff size(__s) == __n_slots —
-    * everything downstream decides the match from `__s` alone. This is
-    * the single plan shape shared by [[phraseHits]] and
-    * [[countContainingSlop]]: O(1) plan operators however many phrases.
+  /** One (phrase, doc) row per candidate document. Phrase p's i-th token
+    * is one (term, phrase, slot) row, so a term repeated inside a phrase
+    * gets one row per slot; the pruned postings read (the terms as an
+    * `InSet`) joins those rows ONCE by term from the driver
+    * ([[Bridge.keyedRows]]: no broadcast job, and neither the rows nor
+    * the phrase arity enter generated code), fanning each posting row out
+    * to every slot that needs it, and an aggregate collects each phrase's
+    * slot position-arrays in slot order. `__s` is complete (the doc
+    * contains every phrase term) iff size(__s) == __n_slots — everything
+    * downstream decides the match from `__s` alone. This is the single
+    * plan shape shared by [[phraseHits]] and [[countContainingSlop]]:
+    * O(1) plan operators however many phrases.
     */
-  private def phraseCandidates(postings: DataFrame, slots: DataFrame,
-                               allTerms: Seq[String], needDl: Boolean): DataFrame = {
+  private def phraseCandidates(postings: DataFrame,
+                               byPhrase: Seq[(String, Seq[String])],
+                               needDl: Boolean): DataFrame = {
+    val slots = Bridge.keyedRows(postings.sparkSession,
+      byPhrase.flatMap { case (p, ts) =>
+        ts.zipWithIndex.map { case (t, i) => Row(t, p, i, ts.size) }
+      }, slotSchema, "term")
     val cols = Seq("term", "doc_id", "positions") ++ (if (needDl) Seq("dl") else Nil)
-    val base = postings.where(col("term").isin(allTerms: _*))
+    val base = postings
+      .where(Bridge.inSet(col("term"), byPhrase.flatMap(_._2).distinct, StringType))
       .select(cols.map(col): _*)
-      .join(broadcast(slots), Seq("term"))
+      .select(col("*"), inline(slots(col("term"))))
     val aggs = Seq(
       sort_array(collect_list(struct(col("__slot"), col("positions")))).as("__s"),
       first("__n_slots").as("__n_slots")) ++
@@ -907,9 +918,30 @@ object InvertedIndex {
     base.groupBy("phrase", "doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  private def phraseList(spark: SparkSession, phrases: Seq[String]): DataFrame = {
-    import spark.implicits._
-    phrases.distinct.toDF("phrase")
+  /** One (phrase, occurrences, n_docs) row per distinct phrase of
+    * `phrases`: the occurrence total and the document count of its
+    * (phrase, doc_id, occurrences) `hits` rows, 0 and 0 without any. The
+    * zero rows join the hits in the same aggregate, a union where a left
+    * join of the phrase list cost a shuffle and a join stage.
+    * `distinctDocs` counts a document once however many of its rows hit
+    * (a phrase's prefix expansions); otherwise each hit row is one
+    * document.
+    */
+  private def perPhrase(hits: DataFrame, phrases: Seq[String],
+                        distinctDocs: Boolean): DataFrame = {
+    val spark = hits.sparkSession
+    val zeros = spark.createDataFrame(
+      java.util.Arrays.asList(phrases.distinct.map(p => Row(p, null, 0L, 0L)): _*),
+      StructType(Seq(StructField("phrase", StringType),
+        StructField("doc_id", hits.schema("doc_id").dataType),
+        StructField("occurrences", LongType), StructField("__hit", LongType))))
+    val nDocs =
+      if (distinctDocs) count_distinct(col("doc_id")) else sum("__hit")
+    hits.select(col("phrase"), col("doc_id"),
+        col("occurrences").cast("long").as("occurrences"), lit(1L).as("__hit"))
+      .unionByName(zeros)
+      .groupBy("phrase")
+      .agg(sum("occurrences").as("occurrences"), nDocs.as("n_docs"))
   }
 
   /** Phrase hits from the index, set-oriented over the whole phrase list:
@@ -924,20 +956,15 @@ object InvertedIndex {
     *
     * Nothing here is corpus-sized, no subtree is stamped per phrase, and
     * nothing is pinned in executor storage: a 10k-phrase benchmark batch
-    * is the same 6-operator plan as a 2-phrase lookup. One row per
-    * DISTINCT phrase (see the contract note on [[termStats]]).
+    * is the same plan as a 2-phrase lookup — one scan stage, the (phrase,
+    * doc) aggregate and the per-phrase one ([[perPhrase]]), so a saved
+    * index answers in three Spark jobs. One row per DISTINCT phrase (see
+    * the contract note on [[termStats]]).
     */
   def phraseHits(postings: DataFrame, phrases: Seq[String],
-                 uax29: Boolean = true): DataFrame = {
-    val spark = postings.sparkSession
-    val perPhrase = phraseOccurrences(postings, parsePhrases(phrases, uax29))
-      .groupBy("phrase")
-      .agg(sum("occurrences").as("occurrences"), count(lit(1)).as("n_docs"))
-    phraseList(spark, phrases).join(perPhrase, Seq("phrase"), "left")
-      .select(col("phrase"),
-        coalesce(col("occurrences"), lit(0L)).as("occurrences"),
-        coalesce(col("n_docs"), lit(0L)).as("n_docs"))
-  }
+                 uax29: Boolean = true): DataFrame =
+    perPhrase(phraseOccurrences(postings, parsePhrases(phrases, uax29)),
+      phrases, distinctDocs = false)
 
   /** The row-level core under [[phraseHits]] and [[docsContainingPhrase]]:
     * one (phrase, doc_id, occurrences) row per containing document,
@@ -946,10 +973,7 @@ object InvertedIndex {
     */
   private def phraseOccurrences(postings: DataFrame,
                                 byPhrase: Seq[(String, Seq[String])]): DataFrame = {
-    val spark = postings.sparkSession
-    val allTerms = byPhrase.flatMap(_._2).distinct
-    val grouped = phraseCandidates(postings, phraseSlots(spark, byPhrase),
-        allTerms, needDl = false)
+    val grouped = phraseCandidates(postings, byPhrase, needDl = false)
       .withColumn("__sh", transform(col("__s"), s =>
         transform(s("positions"), x => x - s("__slot"))))
     val starts = aggregate(
@@ -973,7 +997,7 @@ object InvertedIndex {
     * order — exactly ES's cap-and-order contract, extra matching terms
     * silently dropped. The expanded phrases then run through the SAME
     * single set-oriented plan as [[phraseHits]] (one pruned postings join
-    * against one broadcast slot frame, O(1) operators in phrase count),
+    * against the driver-held slot rows, O(1) operators in phrase count),
     * and per-doc rows fold back to the ORIGINAL phrases: occurrences sum
     * exactly across expansions (one start position matches at most one
     * expansion — the terms differ at the same slot), `n_docs` dedups
@@ -1007,7 +1031,7 @@ object InvertedIndex {
 
     // expanded token sequences, keyed by their joined form; the key →
     // original mapping is many-to-many ("x a" and "x ab" both reach
-    // expansion "x ab") and tiny — it folds results back by broadcast
+    // expansion "x ab") and tiny — it folds results back from the driver
     val mapping: Seq[(String, String)] = byPhrase.flatMap { case (p, ts) =>
       byPrefix.getOrElse(ts.last, Nil).map { t =>
         ((ts.init :+ t).mkString(" "), p)
@@ -1016,21 +1040,17 @@ object InvertedIndex {
     val expanded: Seq[(String, Seq[String])] = mapping.map(_._1).distinct
       .map(k => k -> k.split(" ").toSeq)
 
-    val perPhrase =
-      if (expanded.isEmpty) {
-        spark.emptyDataset[(String, Long, Long)]
-          .toDF("phrase", "occurrences", "n_docs")
-      } else {
-        phraseOccurrences(postings, expanded)
-          .join(broadcast(mapping.toDF("phrase", "__orig")), Seq("phrase"))
-          .groupBy(col("__orig").as("phrase"))
-          .agg(sum("occurrences").as("occurrences"),
-            count_distinct(col("doc_id")).as("n_docs"))
-      }
-    phraseList(spark, phrases).join(perPhrase, Seq("phrase"), "left")
-      .select(col("phrase"),
-        coalesce(col("occurrences"), lit(0L)).as("occurrences"),
-        coalesce(col("n_docs"), lit(0L)).as("n_docs"))
+    if (expanded.isEmpty)
+      phrases.distinct.map(p => (p, 0L, 0L)).toDF("phrase", "occurrences", "n_docs")
+    else {
+      val origOf = Bridge.keyedRows(spark, mapping.map { case (k, p) => Row(k, p) },
+        StructType(Seq(StructField("phrase", StringType),
+          StructField("__orig", StringType))), "phrase")
+      perPhrase(phraseOccurrences(postings, expanded)
+          .select(col("*"), inline(origOf(col("phrase"))))
+          .select(col("__orig").as("phrase"), col("doc_id"), col("occurrences")),
+        phrases, distinctDocs = true)
+    }
   }
 
   /** E2 off the index — `get_documents_containing_phrases` (reference
@@ -1185,7 +1205,7 @@ object InvertedIndex {
   }
 
   /** E1-with-slop answered from the index, set-oriented like
-    * [[phraseHits]]: same broadcast slot frame, same single postings join
+    * [[phraseHits]]: same driver-held slot rows, same single postings join
     * and (phrase, doc) aggregate, with the match decided by the Lucene
     * move-distance containment kernel on stored positions + the in-index
     * `dl` norm — the IDENTICAL matcher core the scan tier's
@@ -1195,20 +1215,15 @@ object InvertedIndex {
     */
   def countContainingSlop(postings: DataFrame, phrases: Seq[String],
                           slop: Int, uax29: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    val spark = postings.sparkSession
-    val byPhrase = parsePhrases(phrases, uax29)
-    val allTerms = byPhrase.flatMap(_._2).distinct
-    val grouped = phraseCandidates(postings, phraseSlots(spark, byPhrase),
-      allTerms, needDl = true)
+    val grouped = phraseCandidates(postings, parsePhrases(phrases, uax29),
+      needDl = true)
     val hit = Bridge.column(graft.functions.expressions.PhraseSlopPositions(
       Bridge.expression(transform(col("__s"), s => s("positions"))),
       Bridge.expression(col("dl")),
       Bridge.expression(lit(slop))))
-    val perPhrase = grouped
-      .where(size(col("__s")) === col("__n_slots") && hit)
-      .groupBy("phrase").agg(count(lit(1)).as("n_docs"))
-    phraseList(spark, phrases).join(perPhrase, Seq("phrase"), "left")
-      .select(col("phrase"), coalesce(col("n_docs"), lit(0L)).as("n_docs"))
+    perPhrase(grouped.where(size(col("__s")) === col("__n_slots") && hit)
+        .select(col("phrase"), col("doc_id"), lit(0L).as("occurrences")),
+      phrases, distinctDocs = false)
+      .select(col("phrase"), col("n_docs"))
   }
 }

@@ -34,6 +34,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * artifacts) commit through here too: [[readState]], [[writeState]] (one
   * overwrite-rename, so a reader sees the old or the new content, never a
   * gap or a truncated file) and [[clearState]].
+  *
+  * An index's small side tables (`__meta`, `__norms`, `__centroids`,
+  * `__codebook`) are read back through [[readLocal]]: their committed
+  * files decoded on the driver at each call, with no Spark job and no
+  * cache, so a read never needs invalidating after a commit or a heal.
   */
 object Swap {
 
@@ -296,6 +301,71 @@ object Swap {
       meta.bucketSpec.map(b => b.bucketColumnNames.head -> b.numBuckets),
       home)
   }
+
+  /** The committed rows of the small unpartitioned table `name` (an index's
+    * `__meta`, `__norms`, `__centroids` or `__codebook`) as a driver-local
+    * frame, read with no Spark job and kept in no cache: the data files
+    * under the table's location (its catalog entry's, else
+    * `warehouse/<name>`) are listed at the call and decoded on the driver
+    * by the parquet reader a scan of the table runs in its tasks. Every
+    * call thus sees the latest commit of any session or process, and
+    * nothing needs invalidating at a commit or a heal. Projections,
+    * filters and limits over the frame fold into its local rows (no job,
+    * no generated code).
+    * None when the files hold more than `maxRows` rows, counted from
+    * their footers before anything is decoded.
+    */
+  def readLocal(spark: SparkSession, name: String,
+                maxRows: Int = Int.MaxValue): Option[DataFrame] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.{FileFormat,
+      PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val cat = spark.sessionState.catalog
+    val entry =
+      if (cat.tableExists(TableIdentifier(name)))
+        Some(cat.getTableMetadata(TableIdentifier(name)))
+      else None
+    require(entry.forall(_.partitionColumnNames.isEmpty),
+      s"Swap.readLocal: $name is partitioned")
+    val loc = entry.map(e => new Path(e.location)).getOrElse(dir(spark, name))
+    val conf = spark.sessionState.newHadoopConf()
+    val files = fsOf(spark, loc).listStatus(loc).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    val footers = files.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try (r.getRecordCount, Option(r.getFooter.getFileMetaData
+        .getKeyValueMetaData.get(ParquetSparkSchemaKey)))
+      finally r.close()
+    }
+    if (footers.map(_._1).sum > maxRows) return None
+    val schema = entry.map(_.schema).getOrElse(
+      footers.flatMap(_._2).headOption.map(s =>
+        org.apache.spark.sql.types.DataType.fromJson(s)
+          .asInstanceOf[StructType])
+        .getOrElse(sys.error(s"Swap.readLocal: no schema for $name at $loc")))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    // a row is converted before the next is read: the reader reuses it
+    val rows = files.flatMap { st =>
+      read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(st.getPath), 0, st.getLen,
+        Array.empty, st.getModificationTime, st.getLen, Map.empty))
+        .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).toList
+    }
+    Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  /** The footer key under which Spark's parquet writer records the row
+    * schema.
+    */
+  private val ParquetSparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Lines of a state file, or None if it is absent. */
   def readState(fs: FileSystem, p: Path): Option[Seq[String]] =

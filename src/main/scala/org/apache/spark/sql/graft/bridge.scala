@@ -21,12 +21,51 @@ object Bridge {
     * each long literal and one comparison per value, so every new value
     * list or list length compiles new classes. Partition and bucket
     * pruning read an InSet like an `IN`, and it costs no job, where a
-    * broadcast of the same values as a LocalRelation runs one.
+    * broadcast of the same values as a LocalRelation runs one. The set
+    * is always a `HashSet`: generated code casts the reference to the
+    * set's runtime class, and Scala's `Set1`..`Set4` would give every
+    * list length up to four a class of its own.
     */
   def inSet(c: Column, values: Iterable[Any], dt: DataType): Column = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    column(InSet(expression(c.cast(dt)),
-      values.filter(_ != null).map(toCatalyst).toSet))
+    column(InSet(expression(c.cast(dt)), scala.collection.immutable.HashSet.from(
+      values.filter(_ != null).map(toCatalyst))))
+  }
+
+  /** Driver-held `rows` of `schema`, read by their `key` field from each
+    * row of a frame, with no Spark job: the rows are filed by key in one
+    * hash map that `SparkContext.broadcast` ships (no job, where a
+    * broadcast join of the same rows as a LocalRelation runs one to
+    * collect them) and that generated code reads by reference
+    * ([[graft.functions.expressions.KeyedRows]]), so new rows compile
+    * nothing either. Returns the probe: a key column (cast to the key
+    * field's long or string type) to the matching rows' other fields as
+    * an array of structs; `inline` over it is the inner equi-join, and a
+    * null key matches nothing, as in a join.
+    */
+  def keyedRows(spark: org.apache.spark.sql.SparkSession,
+                rows: Iterable[org.apache.spark.sql.Row],
+                schema: org.apache.spark.sql.types.StructType,
+                key: String): Column => Column = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    val ki = schema.fieldIndex(key)
+    val keyType = schema(ki).dataType
+    require(keyType == LongType || keyType == StringType,
+      s"keyedRows: key $key must be long or string, not ${keyType.sql}")
+    val rest = StructType(schema.fields.patch(ki, Nil, 1))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(rest)
+    val table = new java.util.HashMap[AnyRef, org.apache.spark.sql.catalyst.util.ArrayData]()
+    rows.filter(!_.isNullAt(ki)).groupBy(_.get(ki)).foreach { case (k, rs) =>
+      val boxed: AnyRef = keyType match {
+        case LongType => java.lang.Long.valueOf(k.asInstanceOf[Number].longValue)
+        case _ => org.apache.spark.unsafe.types.UTF8String.fromString(k.toString)
+      }
+      table.put(boxed, new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        rs.map(r => toCatalyst(org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(ki, Nil, 1))))
+          .toArray[Any]))
+    }
+    val bc = spark.sparkContext.broadcast(table)
+    c => column(graft.functions.expressions.KeyedRows(expression(c.cast(keyType)), bc, rest))
   }
 
   /** Release the storage blocks behind an eagerly `localCheckpoint`-ed

@@ -321,6 +321,42 @@ class CliIngestSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$root/out")))
   }
 
+  test("decontaminate --rebuild-index is a flag, also as the last argument") {
+    val root = Files.createTempDirectory("cli_decon_rebuild").toString
+    val leak = "which year did the treaty of westphalia end the thirty years war in europe"
+    val clean = "a clean training document about cooking pasta at home tonight"
+    writeShard(s"$root/bench", "b.jsonl", Seq(leak))
+    writeShard(s"$root/corpus", "c.jsonl", Seq(clean, leak.replace("europe", "asia")))
+    val t = "cli_decon_rebuild_mh"
+    def run(out: String, extra: String*): Unit =
+      Cli.run(spark, Array("decontaminate", s"$root/corpus/*",
+        "--bench", s"$root/bench/b.jsonl", "--out", s"$root/$out",
+        "--threshold", "0.5", "--minhash-table", t) ++ extra)
+    try {
+      run("first")
+      // last on the line, the flag once took no value and ran off the end
+      run("rebuilt", "--rebuild-index")
+      assert(rows(Seq(s"$root/rebuilt")) === rows(Seq(s"$root/first")))
+      assert(graft.sources.Corpus.readJsonl(spark, Seq(s"$root/rebuilt"))
+        .select("text").collect().map(_.getString(0)).toSeq === Seq(clean))
+    } finally graft.search.Swap.drop(spark, t, s"${t}__meta")
+  }
+
+  test("one-shot decontaminate refuses --spans with --minhash-table") {
+    val root = Files.createTempDirectory("cli_decon_spans_mh").toString
+    writeShard(s"$root/bench", "b.jsonl", Seq(good2))
+    writeShard(s"$root/corpus", "c.jsonl", Seq(good, good2))
+    val e = intercept[IllegalArgumentException] {
+      Cli.run(spark, Array("decontaminate", s"$root/corpus/*",
+        "--bench", s"$root/bench/b.jsonl", "--spans", "8",
+        "--minhash-table", "cli_decon_spans_mh", "--out", s"$root/out"))
+    }
+    assert(e.getMessage.contains("--spans") &&
+      e.getMessage.contains("--minhash-table"), e.getMessage)
+    assert(!Files.exists(Paths.get(s"$root/out")))
+    assert(!spark.catalog.tableExists("cli_decon_spans_mh"))
+  }
+
   test("a steady decontaminate --follow --threshold batch stays inside its job budget") {
     val root = Files.createTempDirectory("cli_decon_budget").toString
     val leak = "which year did the treaty of westphalia end the thirty years war in europe"
@@ -397,9 +433,10 @@ class CliIngestSpec extends SparkTestBase {
           probe.measure(ann())._3)
         finally probe.detach()
       // parent of this budget: 19 ingest jobs, 14 ann --follow jobs and 4
-      // compiles per steady batch
+      // compiles per steady batch; ann --follow then read `__meta` and
+      // gathered the centroids in a job each (8), now on the driver
       assert(ingest.jobs <= 13, ingest)
-      assert(annC.jobs <= 8, annC)
+      assert(annC.jobs <= 6, annC)
       assert(annC.compiles === 0, annC)
       assert(hits(t, "n3x1 n3x2") === 1L)
       assert(hits(t, "bz1 bz2") === 0L)

@@ -1030,6 +1030,26 @@ class InvertedIndexSpec extends SparkTestBase {
     } finally dropAll()
   }
 
+  test("a steady phrase read compiles no classes for a new phrase arity") {
+    val table = "ii_arity_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    InvertedIndex.writeIndex(InvertedIndex.postings(docs, "doc_id", "text",
+      uax29 = false), table, buckets = 4, force = true)
+    try {
+      val saved = InvertedIndex.readIndex(spark, table)
+      InvertedIndex.phraseHits(saved, Seq("b a"), uax29 = false).collect()
+      val probe = graft.tools.ProbeListener.attach(spark)
+      try Seq("a" -> 2L, "a b c" -> 1L, "b b b" -> 1L, "a b c a" -> 1L,
+          "c a b c" -> 1L).foreach { case (p, want) =>
+        val (r, _, c) = probe.measure(
+          InvertedIndex.phraseHits(saved, Seq(p), uax29 = false).collect())
+        assert(r.map(_.getAs[Long]("n_docs")).toSeq === Seq(want), p)
+        // a term InSet over Scala's Set1..Set4 compiled classes per arity
+        assert(c.compiles === 0L, s"'$p': $c")
+      } finally probe.detach()
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("saved index: term-equality read prunes to the term's buckets") {
     val table = "ii_spec_idx"
     spark.sql(s"DROP TABLE IF EXISTS $table")

@@ -414,6 +414,26 @@ class PlanPropertySpec extends SparkTestBase {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
+  test("bm25 over a saved index: the df window rides the bucket layout (no Exchange)") {
+    import graft.search.InvertedIndex
+    val table = "pp_bm25_idx"
+    graft.search.Swap.drop(spark, table)
+    InvertedIndex.writeIndex(InvertedIndex.postings(docs, "doc_id", "text",
+      uax29 = false), table, buckets = 4, force = true)
+    try {
+      val post = spark.table(table)
+      val ranked = InvertedIndex.bm25TopK(post,
+        InvertedIndex.corpusNormsFromPostings(post), Seq("the", "data"), k = 5)
+      val p = plan(ranked)
+      // the postings are read once; the only exchange is the per-doc
+      // score aggregate
+      assert(p.contains("Window"), p)
+      assert(shuffles(ranked) === 1, p)
+      assert("FileScan".r.findAllIn(p).length === 1, p)
+      assert(ranked.collect().nonEmpty)
+    } finally graft.search.Swap.drop(spark, table)
+  }
+
   test("corpusDiff: hashes scan-fused (bodies never shuffle), one full-outer join") {
     val old = docs.where(col("doc_id") % 11 =!= 0)
     val nw = docs.where(col("doc_id") % 13 =!= 0)
